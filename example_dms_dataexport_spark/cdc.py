@@ -188,6 +188,7 @@ def incremental_load(
     return f"Rows affected: {n}."
 
 
+
 def merge_and_write(
     warehouse: ParquetWarehouse,
     target_table: str,
@@ -198,69 +199,52 @@ def merge_and_write(
     partition_by: list[str] | None = None,
     full_rewrite: bool = False,
     layout: dict | None = None,
-    prune_files: bool | None = None,
 ) -> int:
     """MERGE ``changes`` into ``target`` and commit to ``target_table``;
     returns the written row count. ONE code path for the merge+write,
     shared by the batch loader and the streaming foreachBatch driver.
 
-    ``prune_files`` controls the ZONE-MAP-SCOPED merge (the file-level
-    analogue of partition scoping, ref :369-408 — where the reference
-    delegates to Snowflake's micro-partition pruning): when the
-    unpartitioned target carries a zone map covering primary-key
-    columns, the change batch's PK min/max (one batch-sized agg) prunes
-    the target to only the FILES whose PK band overlaps the batch; the
-    merge joins against that subset and ``replace_files`` carries every
-    disjoint file into the new state as a hard link — I/O proportional
-    to the batch's key locality, not the table. None (default) =
-    automatic when available and it actually prunes; False = never;
-    True = require (raise if the table has no covering map). Correctness
-    is unconditional: a change row's PK lies inside the batch's range,
-    so every target file that could contain a matching row overlaps on
-    every scoped column, and disjoint files can only hold rows the
-    full-outer merge would pass through unchanged (NULL-PK rows never
-    equality-match a change). When the flat target has NO covering map
-    (or it declines), the SCAN-scoped path (``_scan_scoped_merge``)
-    still avoids the full-table rewrite: one pk-column semi-join scan
-    discovers the exact touched files — the layout-independent fallback
-    for targets unclustered on their key. ``prune_files=False``
-    disables both and forces the whole-table path.
+    The reference runs one MERGE and leaves the choice of what to
+    rewrite to Snowflake's micro-partition pruning (ref :369-408). Here
+    a chain of narrowing stages picks the candidate target FILES, the
+    merge joins only those, and one ``replace_files`` commit swaps in
+    the rewritten files while every other file hard-links through:
 
-    ``layout`` (``TableMeta.layout()``) re-applies the table's declared
-    clustering / zone-map options whenever the write is a FULL rewrite,
-    so a reload or evolution batch lands read-optimized. The
-    partition-scoped path deliberately ignores the clustering options: a
-    global range-cluster would shuffle the whole table — exactly what
-    partition scoping exists to avoid — and the zone map is dropped by
-    ``replace_partitions`` (rebuild with ``write_zonemap`` after a
-    compaction cycle).
+    1. touched partitions (``partition_by``): the batch's distinct
+       partition tuples. Partition columns must be stable per PK (a
+       pk-derived bucket or an immutable date), so a matching target
+       row can only live in a touched partition;
+    2. zone band: the batch's PK min/max plus width-bucket sub-ranges
+       (``_batch_scope``) against the table's zone map —
+       ``_zone_scoped_merge`` for flat targets, ``_hybrid_scoped_merge``
+       inside the touched partitions;
+    3. pk scan (``_scan_scoped_merge``): one semi-join of the target's
+       pk columns, restricted to the touched partitions, against the
+       batch's distinct keys finds the exact files holding a batch key
+       through ``_metadata.file_path`` — the fallback for targets
+       unclustered on their key and for partition values whose hive
+       directory names the zone stage cannot render.
 
-    With ``partition_by`` the merge is partition-scoped — the 100 TB path
-    (SURVEY §7.3a): partition columns must be stable per PK (a pk-derived
-    bucket or immutable date), so a change only touches its own
-    partition, the target scan is partition-pruned to the batch's
-    partitions, and the rewrite is proportional to the CDC batch, not
-    the table. When the partitioned table ALSO carries a zone map
-    covering a primary-key column, the scope goes one level deeper
-    (HYBRID, ``_hybrid_scoped_merge``): partition pruning picks the
-    directories, the zone map picks the files inside them, and
-    ``replace_files(partition_by=...)`` hard-links every disjoint and
-    untouched file through — a 10-row change to a 100 GB partition no
-    longer rewrites the partition, only its overlapping files.
-    ``prune_files`` governs this path too (None = automatic when it
-    prunes, True = require, False = never).
+    Each stage returns the candidate files, or None when it cannot
+    narrow; a stage runs only when the earlier ones narrowed nothing.
+    Correctness is unconditional: every stage keeps every file that
+    could hold a row matching a change (NULL-PK rows never
+    equality-match), so a carried file holds only rows the full-outer
+    merge would pass through unchanged, and inserts land in new files.
+    Emptied partitions simply have no directory in the assembled state.
 
-    ``full_rewrite`` disables the partition-scoped path for one batch
-    while KEEPING the hive partition layout on disk — the schema-
-    evolution case, where every partition dir must be rewritten to the
-    evolved layout so no reader can resolve the table schema from a
-    stale old-layout footer.
+    When no stage narrows, the whole table rewrites through
+    ``overwrite`` with the declared ``layout`` (``TableMeta.layout()``):
+    the only terminal that re-applies the clustering / zone-map options,
+    so an unprunable or reloaded table lands read-optimized. A bucketed
+    target instead replaces every file through ``replace_files``, which
+    stages through the bucket-preserving writer.
+
+    ``full_rewrite`` skips the chain for one batch while KEEPING the
+    hive partition layout on disk — the schema-evolution case, where
+    every file must be rewritten to the evolved layout so no reader can
+    resolve the table schema from a stale old-layout footer.
     """
-    if prune_files is True and full_rewrite:
-        raise ValueError(
-            "prune_files=True cannot apply to a schema-evolution batch: "
-            "every file must rewrite to the evolved layout"
-        )
     # MERGE-ON-READ FOLD: a pending _deletes sidecar no longer stalls
     # ingestion (the r11 weak mark: defer-mode GDPR serialized every
     # sync behind a manual materialize). When the merge's primary keys
@@ -268,11 +252,12 @@ def merge_and_write(
     # merge itself: (a) every sub-target masks the pending keys, so
     # rewritten files physically drop the masked rows; (b) the sidecar
     # is rewritten to pending ⊖ batch-keys, so a key the batch
-    # re-inserts stops being masked — sound because every scoped path's
-    # touched set provably covers ALL rows holding a batch pk (partition
-    # cols are stable per pk; a zone band holding a batch pk overlaps
-    # the batch's range; the scan discovery is an exact pk semi-join),
-    # so no masked row whose key leaves the sidecar survives unrewritten.
+    # re-inserts stops being masked — sound because every stage's
+    # candidate set provably covers ALL rows holding a batch pk
+    # (partition cols are stable per pk; a zone band holding a batch pk
+    # overlaps the batch's range; the scan discovery is an exact pk
+    # semi-join), so no masked row whose key leaves the sidecar
+    # survives unrewritten.
     #
     # With DIFFERENT key columns (the common compliance composition:
     # defer-mode GDPR keyed on subject_id while the CDC pks are
@@ -333,188 +318,93 @@ def merge_and_write(
             changes.sparkSession, target, target_table
         )
     # An empty batch applies nothing: short-circuit with NO commit at
-    # all — every scoped path would otherwise churn a full directory of
-    # hard links (or a whole-table rewrite) for a no-op. full_rewrite is
+    # all — a commit would otherwise churn a full directory of hard
+    # links (or a whole-table rewrite) for a no-op. full_rewrite is
     # exempt: an evolution batch may be empty yet must still rewrite
-    # every file to the evolved layout.
-    if not full_rewrite and not partition_by and changes.isEmpty():
-        return 0
+    # every file to the evolved layout. On partitioned targets the
+    # touched-partition collect doubles as the probe (zero distinct
+    # tuples <=> zero rows), saving one evaluation of the change-batch
+    # subtree per merge. Then the narrowing chain: a stage runs only
+    # when the earlier ones narrowed nothing.
+    cand = None
     if partition_by and not full_rewrite:
-        # the touched-partition collect below doubles as the empty-batch
-        # probe (zero distinct tuples <=> zero rows), so the partitioned
-        # path skips the separate isEmpty() pass — one fewer full
-        # evaluation of the change-batch subtree per merge (r20, §1.2
-        # "don't compute things you throw away"; the zone/scan paths
-        # keep the cheap isEmpty gate above)
         touched = [
             tuple(r[c] for c in partition_by)
             for r in changes.select(*partition_by).distinct().collect()
         ]
         if not touched:
             return 0
-        if prune_files is not False:
-            # HYBRID scope: partition pruning picks the dirs, the zone
-            # map picks the files inside them — the partition-scoped
-            # rewrite below is the fallback when the table carries no
-            # covering map or nothing would prune.
-            n = _hybrid_scoped_merge(
-                warehouse,
-                target_table,
-                target,
-                changes,
-                pks,
-                version_cols,
-                partition_by,
-                touched,
-                require=prune_files is True,
-                fold_minus=fold_minus,
+        cand = _hybrid_scoped_merge(
+            warehouse, target_table, changes, pks, partition_by, touched
+        )
+        if cand is None:
+            cand = _scan_scoped_merge(
+                warehouse, target_table, changes, pks, partition_by, touched
             )
-            if n is not None:
-                return n
-        # One struct-IN predicate, not an OR-chain of equality conjunctions:
-        # thousands of touched partitions would otherwise build a huge
-        # expression tree that slows analysis/codegen. Catalyst converts
-        # this to a single INSET and it still lands in PartitionFilters
-        # (verified by tests/test_partitioned_cdc.py), so the target scan
-        # stays partition-pruned. Literal fields are aliased+cast to the
-        # target's column names/types so the struct types unify.
-        # A NULL inside a tuple would make struct-IN evaluate to NULL and
-        # silently exclude that partition's target rows from the merge while
-        # replace_partitions still rewrites it — so NULL-bearing tuples get
-        # a null-safe eqNullSafe conjunction instead (rare: partition
-        # columns are normally non-null by construction).
-        non_null = [vals for vals in touched if all(v is not None for v in vals)]
-        with_null = [vals for vals in touched if any(v is None for v in vals)]
-        pred = F.lit(False)
-        if non_null:
-            pred = F.struct(*partition_by).isin(
-                [
-                    F.struct(
-                        *[
-                            F.lit(v).cast(target.schema[c].dataType).alias(c)
-                            for c, v in zip(partition_by, vals)
-                        ]
-                    )
-                    for vals in non_null
-                ]
-            )
-        for vals in with_null:
-            conj = F.lit(True)
-            for c, v in zip(partition_by, vals):
-                conj = conj & F.col(c).eqNullSafe(
-                    F.lit(v).cast(target.schema[c].dataType)
-                )
-            pred = pred | conj
+    elif not full_rewrite:
+        if changes.isEmpty():
+            return 0
+        cand = _zone_scoped_merge(warehouse, target_table, changes, pks)
+        if cand is None:
+            cand = _scan_scoped_merge(warehouse, target_table, changes, pks)
+
+    if cand is None and (
+        full_rewrite or warehouse.bucket_spec(target_table) is None
+    ):
         merged = apply_changes(
-            target.filter(pred),  # partition-pruned scan
-            changes,
-            pks=pks,
-            version_cols=version_cols,
-        )
-        merged = merged.persist()
-        n = merged.count()  # materialize before overwriting what we read
-        # AQE rebalance on the partition columns at THIS call site (r20,
-        # §6): the persisted merge result pins its pre-AQE pk-hash
-        # partitioning, so the dynamic overwrite fanned one file per
-        # cached partition per touched value (measured: 32 files per
-        # touched partition for a 3k-row merge; at cluster scale,
-        # shuffle-partitions x touched tiny files per merge). The
-        # rebalance shuffles only the batch-sized merge output and AQE
-        # sizes the files; replace_partitions itself stays
-        # no-implicit-rebalance (erase_subjects and the ANN extend own
-        # their layouts — the r19 scoping rule). No file-grain pruning
-        # contract exists on this path: replace_partitions drops the
-        # zone map and partition pruning is directory-grain.
-        warehouse.replace_partitions(
-            merged.hint("rebalance", *partition_by),
-            target_table, partition_by, touched,
-            carry_deletes_minus=fold_minus,
+            target, changes, pks=pks, version_cols=version_cols
+        ).persist()
+        n = merged.count()  # materialization also validates before the swap
+        # full_rewrite keeps the partition layout: the atomic whole-table
+        # swap also drops any pending tombstone marker with the old dir —
+        # EXCEPT under the mismatched-key fold, where the sidecar must
+        # survive the commit (carry_deletes_intact) or a crash-replay of
+        # the batch would resurrect its masked rows.
+        lay = layout or {}
+        warehouse.overwrite(
+            merged,
+            target_table,
+            partition_by=partition_by,
+            cluster_by=lay.get("cluster_by"),
+            zorder_by=lay.get("zorder_by"),
+            cluster_partitions=lay.get("cluster_partitions"),
+            stat_cols=lay.get("stat_cols"),
+            bloom_cols=lay.get("bloom_cols"),
+            carry_deletes_intact=carry_intact,
         )
         merged.unpersist()
         return n
-    if not full_rewrite and prune_files is not False:
-        n = _zone_scoped_merge(
-            warehouse,
-            target_table,
-            target,
-            changes,
-            pks,
-            version_cols,
-            require=prune_files is True,
-            fold_minus=fold_minus,
+    base = warehouse.path(target_table)
+    spark = changes.sparkSession
+    if cand is None:  # bucketed and unnarrowed: every file rewrites
+        cand = ParquetWarehouse._walk_parquet_rels(base)
+        sub_target = target
+    elif cand:
+        # the target's schema pins the partition column types (inference
+        # over a subset of dirs could differ) and skips a footer-read job
+        sub_target = (
+            spark.read.schema(target.schema)
+            .option("basePath", base)
+            .parquet(*[os.path.join(base, rel) for rel in cand])
+            .select(*target.columns)
         )
-        if n is not None:  # committed by replace_files inside the helper
-            return n
-        # no zone map (or it declined): EXACT touched-file discovery
-        # via a pk-column semi-join scan — the layout-independent
-        # rewrite-amplification fix for unclustered flat targets
-        n = _scan_scoped_merge(
-            warehouse, target_table, target, changes, pks, version_cols,
-            fold_minus=fold_minus,
+        # raw file reads bypass the read mask: drop the pending deletes
+        # here or the rewrite would resurrect them
+        sub_target = warehouse._apply_pending_deletes(
+            spark, sub_target, target_table
         )
-        if n is not None:
-            return n
+    else:  # pure-insert batch relative to every file: merge against nothing
+        sub_target = target.limit(0)
     merged = apply_changes(
-        target, changes, pks=pks, version_cols=version_cols
-    ).persist()
-    n = merged.count()  # materialization also validates before the swap
-    spec = warehouse.bucket_spec(target_table)
-    if spec is not None:
-        # BUCKETED target: the whole-table rewrite goes through the
-        # bucket-preserving staged replace (every existing file in the
-        # replaced set), or the merge silently degrades the co-located-
-        # join layout to plain parquet. Versus the old write_bucketed
-        # (rmtree + rewrite) path this (a) stages to a temp dir and
-        # swaps atomically, so `merged` can lazily read the files it
-        # replaces — no localCheckpoint materialization needed; and
-        # (b) handles pending merge-on-read deletes correctly:
-        # write_bucketed's rmtree would DESTROY a carried sidecar,
-        # letting a crash-replayed (or later) batch resurrect a pending
-        # GDPR subject — the carry-intact fold instead rides the same
-        # atomic swap, and the matched-key fold drops the sidecar with
-        # the swap exactly like the flat whole-table overwrite (the
-        # complete new state was built from the masked target, so every
-        # pending delete applied physically).
-        final = warehouse.path(target_table)
-        with warehouse._write_fence(
-            target_table,
-            lock_path=warehouse._mutation_lock_path(target_table),
-        ):
-            existing = sorted(
-                f
-                for f in os.listdir(final)
-                if f.endswith(".parquet")
-                and os.path.isfile(os.path.join(final, f))
-            )
-            warehouse._replace_files_unlocked(
-                merged,
-                target_table,
-                existing,
-                allow_pending_deletes=(dm is not None and not carry_intact),
-                carry_deletes_minus=fold_minus if carry_intact else None,
-                bucket_spec=spec,
-            )
-        merged.unpersist()
-        return n
-    # full_rewrite keeps the partition layout: the atomic whole-table
-    # swap also drops any pending tombstone marker with the old dir —
-    # EXCEPT under the mismatched-key fold, where the sidecar must
-    # survive the commit (carry_deletes_intact) or a crash-replay of
-    # the batch would resurrect its masked rows.
-    lay = layout or {}
-    warehouse.overwrite(
-        merged,
-        target_table,
-        partition_by=partition_by,
-        cluster_by=lay.get("cluster_by"),
-        zorder_by=lay.get("zorder_by"),
-        cluster_partitions=lay.get("cluster_partitions"),
-        stat_cols=lay.get("stat_cols"),
-        bloom_cols=lay.get("bloom_cols"),
-        carry_deletes_intact=carry_intact,
+        sub_target, changes, pks=pks, version_cols=version_cols
     )
-    merged.unpersist()
-    return n
+    # replace_files stages to a temp dir and swaps atomically, so the
+    # lazy merged plan may safely read the files it replaces.
+    res = warehouse.replace_files(
+        merged, target_table, cand, partition_by=partition_by,
+        carry_deletes_minus=fold_minus,
+    )
+    return res["rows_written"]
 
 
 def _is_numeric(dt) -> bool:
@@ -619,89 +509,128 @@ def _batch_scope(changes, scope_cols: list[str]):
     return ranges, subs
 
 
+def _in_layout(rel: str, partition_by: list[str] | None) -> bool:
+    """True when data file ``rel`` sits under exactly the hive dirs
+    ``partition_by`` declares (directly in the table dir when flat). A
+    table laid out otherwise on disk cannot be file-replaced under that
+    declaration: carrying its files while the merge writes the declared
+    layout would duplicate the merged rows next to their old copies."""
+    parts = rel.split("/")[:-1]
+    cols = partition_by or []
+    return len(parts) == len(cols) and all(
+        p.startswith(f"{c}=") for p, c in zip(parts, cols)
+    )
+
+
+def _touched_predicate(schema, partition_by: list[str], touched: list[tuple]):
+    """Filter selecting the ``touched`` partition tuples, typed against
+    ``schema``. One struct-IN predicate, not an OR-chain of equality
+    conjunctions: thousands of touched partitions would otherwise build
+    a huge expression tree that slows analysis/codegen; Catalyst
+    converts it to a single INSET that still lands in PartitionFilters.
+    A NULL inside a tuple would make struct-IN evaluate to NULL and
+    silently exclude that partition, so NULL-bearing tuples get a
+    null-safe eqNullSafe conjunction instead (rare: partition columns
+    are normally non-null by construction)."""
+    non_null = [vals for vals in touched if all(v is not None for v in vals)]
+    with_null = [vals for vals in touched if any(v is None for v in vals)]
+    pred = F.lit(False)
+    if non_null:
+        pred = F.struct(*partition_by).isin(
+            [
+                F.struct(
+                    *[
+                        F.lit(v).cast(schema[c].dataType).alias(c)
+                        for c, v in zip(partition_by, vals)
+                    ]
+                )
+                for vals in non_null
+            ]
+        )
+    for vals in with_null:
+        conj = F.lit(True)
+        for c, v in zip(partition_by, vals):
+            conj = conj & F.col(c).eqNullSafe(
+                F.lit(v).cast(schema[c].dataType)
+            )
+        pred = pred | conj
+    return pred
+
+
+def _zone_split(zm: dict, files: dict, changes, pks: list[str]):
+    """Split zone-map ``files`` into (overlapping, disjoint) against the
+    batch's PK band (``_batch_scope``); None when the map covers no
+    primary key or the batch has no non-NULL key to scope by."""
+    scope_cols = [c for c in pks if c in zm["stat_cols"]]
+    if not scope_cols:
+        return None
+    scope = _batch_scope(changes, scope_cols)
+    if scope is None:
+        return None
+    ranges, subs = scope
+    lead = scope_cols[0]
+    return ParquetWarehouse._split_by_subranges(
+        files,
+        lead,
+        subs if subs is not None else [ranges[lead]],
+        {c: ranges[c] for c in scope_cols[1:]},
+    )
+
+
+def _zone_scoped_merge(
+    warehouse: ParquetWarehouse,
+    target_table: str,
+    changes,
+    pks: list[str],
+) -> list[str] | None:
+    """ZONE stage for flat targets: the files whose PK band overlaps the
+    batch's. None when the table has no covering map, is versioned or
+    hive-partitioned on disk (merged without ``partition_by``), or no
+    file falls outside the band."""
+    zm = warehouse.zonemap(target_table)
+    if zm is None or os.path.isfile(warehouse._version_pointer(target_table)):
+        return None
+    if not all(_in_layout(rel, None) for rel in zm["files"]):
+        return None
+    split = _zone_split(zm, zm["files"], changes, pks)
+    if split is None or not split[1]:
+        return None
+    return split[0]
+
+
 def _hybrid_scoped_merge(
     warehouse: ParquetWarehouse,
     target_table: str,
-    target,
     changes,
     pks: list[str],
-    version_cols: list[str],
     partition_by: list[str],
     touched: list[tuple],
-    require: bool = False,
-    fold_minus=None,
-) -> int | None:
-    """HYBRID partition+file merge scope for hive-partitioned targets:
-    partition pruning picks the candidate directories (the batch's
-    ``touched`` partitions), the zone map picks the FILES inside them
-    whose primary-key band overlaps the batch, and ``replace_files``
-    commits the merge copy-on-write — every disjoint file inside a
-    touched partition AND every file of every untouched partition
-    hard-links through unchanged. This closes the remaining rewrite-
-    amplification path at 100 TB (SURVEY §7.3a refinement): the
-    partition-scoped path rewrites each touched partition ENTIRELY, so
-    a 10-row change to a 100 GB partition cost 100 GB of I/O; with
-    per-file zone stats the rewrite follows the batch's key locality
-    inside the partition, same as the flat zone-scoped path (ref
-    :369-408 — Snowflake's micro-partition pruning composes with its
-    partitioning the same way).
+) -> list[str] | None:
+    """Partition+ZONE stage for hive-partitioned targets: the zone map
+    picks the files inside the ``touched`` partitions whose PK band
+    overlaps the batch, so a 10-row change to a 100 GB partition
+    rewrites only its overlapping files, and every untouched partition
+    carries whole (Snowflake's micro-partition pruning composes with
+    its partitioning the same way).
 
-    Correctness rests on the same invariants as the callers':
-    partition columns are stable per PK (``merge_and_write``'s
-    documented contract), so a matching target row can only live in a
-    touched partition, and within those only in a file whose PK band
-    overlaps the batch (NULL-PK rows never equality-match). Emptied
-    partitions simply have no directory in the assembled state — the
-    atomic whole-table swap retires them with no tombstone protocol.
-
-    Returns the written row count when committed; None when the table
-    has no covering map, a touched partition's directory name cannot be
-    matched against the map (fall back to the partition-scoped path —
-    never guess), or pruning would not drop any file."""
-    import os
-
+    The touched partitions are addressed by their hive dir names, built
+    here with Python ``str(v)``. Spark hive-ESCAPES dir names for many
+    value types (timestamps render ':' as '%3A', Python True vs Spark
+    'true', '"#%\\'*/:=?\\{[]^' and control chars in strings), and a
+    mismatch would silently exclude the partition's files and write the
+    change rows as DUPLICATES next to the old ones. So only integer
+    values and provably escape-free strings take this stage; anything
+    else — and a touched dir that exists yet matches no map entry —
+    declines to the pk-scan stage, which reads file paths from Spark
+    and renders nothing. None also when the table has no covering map,
+    its on-disk layout does not match ``partition_by``, or pruning
+    would not drop any file."""
     zm = warehouse.zonemap(target_table)
     if zm is None:
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r} has no zone map "
-                "(declare stat_cols covering a primary-key column)"
-            )
         return None
-    scope_cols = [c for c in pks if c in zm["stat_cols"]]
-    if not scope_cols:
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r}'s zone map covers "
-                f"{zm['stat_cols']}, none of the primary keys {pks}"
-            )
+    if not all(_in_layout(rel, partition_by) for rel in zm["files"]):
         return None
-    # Layout guard: every mapped file must sit under exactly the hive
-    # dirs partition_by declares. A flat-on-disk (or differently
-    # partitioned) table carried through the hybrid would duplicate the
-    # merged rows next to their old copies — fall back (or refuse, with
-    # require) instead.
-    for rel in zm["files"]:
-        parts = rel.split("/")[:-1]
-        if len(parts) != len(partition_by) or any(
-            not p.startswith(f"{c}=") for p, c in zip(parts, partition_by)
-        ):
-            if require:
-                raise ValueError(
-                    f"prune_files=True but {target_table!r}'s on-disk "
-                    f"layout does not match partition_by={partition_by} "
-                    f"(e.g. file {rel!r})"
-                )
-            return None
-    # Value-rendering guard: the prefixes below are built with Python
-    # str(v), but Spark hive-ESCAPES dir names for many value types
-    # (timestamps render ':' as '%3A', Python True vs Spark 'true',
-    # '"#%\\'*/:=?\\{[]^' and control chars in strings) — a mismatch
-    # would silently exclude the partition's files from the merge scope
-    # and write the change rows as DUPLICATES next to the old ones.
-    # Only integer values and provably-escape-free strings are rendered
-    # identically by both; anything else falls back to the
-    # partition-scoped path (or refuses, with require).
+
     def _renderable(v) -> bool:
         if v is None:
             return True  # the exact __HIVE_DEFAULT_PARTITION__ sentinel
@@ -716,17 +645,7 @@ def _hybrid_scoped_merge(
             )
         return False  # timestamps/dates/floats/decimals: formats differ
 
-    bad = [
-        v for vals in touched for v in vals if not _renderable(v)
-    ]
-    if bad:
-        if require:
-            raise ValueError(
-                f"prune_files=True but partition value(s) {bad[:3]!r} of "
-                f"{target_table!r} have engine-specific hive dir "
-                "renderings (escaped/typed) — the hybrid scope cannot "
-                "address their directories safely"
-            )
+    if not all(_renderable(v) for vals in touched for v in vals):
         return None
     prefixes = {
         "/".join(
@@ -740,112 +659,66 @@ def _hybrid_scoped_merge(
         for rel, st in zm["files"].items()
         if os.path.dirname(rel) in prefixes
     }
-    # Formatting safety: a touched partition whose directory EXISTS on
-    # disk but matched no map entry means the hive dir-name rendering
-    # of its values disagrees with what Spark wrote (escaped special
-    # characters, non-canonical casts). Carrying those files while the
-    # merge re-emits their rows would duplicate them — fall back to the
-    # partition-scoped path instead of guessing.
     matched = {os.path.dirname(rel) for rel in cand}
-    for p in prefixes - matched:
-        if os.path.isdir(os.path.join(warehouse.path(target_table), p)):
-            if require:
-                raise ValueError(
-                    f"prune_files=True but partition dir {p!r} of "
-                    f"{target_table!r} matched no zone-map entry"
-                )
-            return None
-    scope = _batch_scope(changes, scope_cols)
-    if scope is None:
-        return None
-    ranges, subs = scope
-    lead = scope_cols[0]
-    extra = {c: ranges[c] for c in scope_cols[1:]}
-    overlap, disjoint = warehouse._split_by_subranges(
-        cand, lead, subs if subs is not None else [ranges[lead]], extra
-    )
-    untouched = len(zm["files"]) - len(cand)
-    if not disjoint and untouched == 0:
-        return None  # nothing prunes beyond the partition-scoped path
     base = warehouse.path(target_table)
-    spark = changes.sparkSession
-    if overlap:
-        sub_target = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, rel) for rel in overlap]
-        )
-        sub_target = sub_target.select(*target.columns)
-        # pending-delete fold: the raw file read bypasses the read mask,
-        # so the masked rows must be dropped here or the rewrite would
-        # resurrect them (merge_and_write's fold contract)
-        sub_target = warehouse._apply_pending_deletes(
-            spark, sub_target, target_table
-        )
-    else:  # pure inserts relative to the touched partitions' bands
-        sub_target = target.limit(0)
-    merged = apply_changes(
-        sub_target, changes, pks=pks, version_cols=version_cols
-    )
-    res = warehouse.replace_files(
-        merged, target_table, overlap, partition_by=partition_by,
-        carry_deletes_minus=fold_minus,
-    )
-    return res["rows_written"]
+    if any(os.path.isdir(os.path.join(base, p)) for p in prefixes - matched):
+        return None
+    split = _zone_split(zm, cand, changes, pks)
+    if split is None:
+        return None
+    overlap, disjoint = split
+    if not disjoint and len(cand) == len(zm["files"]):
+        return None  # nothing prunes
+    return overlap
 
 
 def _scan_scoped_merge(
     warehouse: ParquetWarehouse,
     target_table: str,
-    target,
     changes,
     pks: list[str],
-    version_cols: list[str],
-    fold_minus=None,
-) -> int | None:
-    """SCAN-scoped merge for flat targets with NO zone map (or whose
-    map declined): discover the EXACT touched-file set with one
+    partition_by: list[str] | None = None,
+    touched: list[tuple] | None = None,
+) -> list[str] | None:
+    """PK-SCAN stage: the EXACT files holding a batch key, from one
     semi-join of the target's primary-key column(s) — projected down to
     (pks, ``_metadata.file_path``), so the scan reads the pk column,
-    not the table — against the batch's distinct keys, then merge only
-    those files and commit copy-on-write through ``replace_files``.
+    not the table — against the batch's distinct keys; on partitioned
+    targets the scan is first pruned to the ``touched`` partitions.
 
     This is the layout-independent rewrite-amplification fix (the same
     touched-file discovery join Delta's MERGE runs): the zone map only
     prunes when the write layout CLUSTERS the key, but a CDC target
-    partition-free and unclustered on its pk — the common
-    retrofitted-table case — otherwise pays a FULL-TABLE rewrite per
-    batch. Cost: one pk-column scan (columnar, a few % of table bytes)
-    + rewrite I/O proportional to the touched files; at 100 TB that is
-    the difference between reading ~1 TB of pk values and rewriting a
-    handful of files vs rewriting 100 TB. The batch's distinct keys
-    broadcast (CDC batches are bounded by design — maxFilesPerTrigger /
-    the landing watermark window).
+    unclustered on its pk — the common retrofitted-table case —
+    otherwise pays a FULL-TABLE rewrite per batch. Cost: one pk-column
+    scan (columnar, a few % of table bytes) + rewrite I/O proportional
+    to the touched files. The batch's distinct keys broadcast (CDC
+    batches are bounded by design — maxFilesPerTrigger / the landing
+    watermark window). File paths come from the scan itself, so no
+    partition value is ever rendered to a dir name.
 
     Exactness: the semi-join reads the committed files themselves, so
-    the touched set has no false positives OR negatives — a file not in
-    it provably holds no matching pk (NULL pks never equality-match),
-    and inserts land in new files. Returns None (caller falls back)
-    for versioned/bucketed/hive-on-disk layouts, single-file tables,
-    empty batches, and batches that touch every file."""
-    import os
-
+    the candidate set has no false positives OR negatives — a file not
+    in it provably holds no matching pk (NULL pks never equality-match;
+    partition columns are stable per pk). None for versioned/bucketed
+    tables, on-disk layouts that do not match ``partition_by``,
+    single-file tables, and batches that touch every file."""
     base = warehouse.path(target_table)
     if os.path.isfile(warehouse._version_pointer(target_table)):
         return None
     if os.path.isfile(os.path.join(base, BUCKET_SPEC_FILE)):
         return None
-    all_rels = set()
-    for dirpath, dirs, files in os.walk(base):
-        # hidden dirs (_deletes sidecar) are not table data files
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.endswith(".parquet"):
-                rel = os.path.relpath(os.path.join(dirpath, f), base)
-                if "/" in rel:
-                    return None  # hive-on-disk without partition_by
-                all_rels.add(rel)
+    all_rels = ParquetWarehouse._walk_parquet_rels(base)
     if len(all_rels) <= 1:
         return None  # nothing to prune against
+    if not all(_in_layout(rel, partition_by) for rel in all_rels):
+        return None
     spark = changes.sparkSession
+    scan = spark.read.parquet(base)
+    if partition_by:
+        scan = scan.filter(
+            _touched_predicate(scan.schema, partition_by, touched)
+        )
     # persisted across the count AND the semi-join below — otherwise
     # every scan-scoped batch pays the key-dedup shuffle twice
     keys = changes.select(*pks).distinct().persist()
@@ -856,14 +729,15 @@ def _scan_scoped_merge(
         # completes
         n_keys = keys.count()
         if n_keys == 0:
-            return None  # empty batch (merge_and_write short-circuits too)
+            return None
         probe = (
             keys if n_keys > _SCAN_BROADCAST_KEY_CAP else F.broadcast(keys)
         )
         touched_fps = [
             r["__fp"]
-            for r in spark.read.parquet(base)
-            .select(*pks, F.col("_metadata.file_path").alias("__fp"))
+            for r in scan.select(
+                *pks, F.col("_metadata.file_path").alias("__fp")
+            )
             .join(probe, pks, "left_semi")
             .select("__fp")
             .distinct()
@@ -876,110 +750,4 @@ def _scan_scoped_merge(
     )
     if len(overlap) == len(all_rels):
         return None  # every file holds a matching key: nothing prunes
-    if overlap:
-        sub_target = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, rel) for rel in overlap]
-        )
-        sub_target = sub_target.select(*target.columns)
-        # pending-delete fold: raw file reads bypass the read mask
-        sub_target = warehouse._apply_pending_deletes(
-            spark, sub_target, target_table
-        )
-    else:  # pure-insert batch (or keys absent): merge against nothing
-        sub_target = target.limit(0)
-    merged = apply_changes(
-        sub_target, changes, pks=pks, version_cols=version_cols
-    )
-    res = warehouse.replace_files(
-        merged, target_table, overlap, carry_deletes_minus=fold_minus
-    )
-    return res["rows_written"]
-
-
-def _zone_scoped_merge(
-    warehouse: ParquetWarehouse,
-    target_table: str,
-    target,
-    changes,
-    pks: list[str],
-    version_cols: list[str],
-    require: bool = False,
-    fold_minus=None,
-) -> int | None:
-    """Attempt the zone-map-scoped merge (see ``merge_and_write``);
-    returns the written row count when it committed, None when the
-    table has no covering map or pruning would not drop any file (the
-    caller falls back to the whole-table merge). One batch-sized
-    aggregation computes the change set's per-PK-column min/max; the
-    target's zone map then splits its files into the overlapping set
-    (joined) and the disjoint set (hard-linked through untouched by
-    ``replace_files``)."""
-    import os
-
-    zm = warehouse.zonemap(target_table)
-    if zm is None or os.path.isfile(warehouse._version_pointer(target_table)):
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r} has no zone map "
-                "(declare stat_cols covering a primary-key column)"
-            )
-        return None
-    if any("/" in rel for rel in zm["files"]):
-        # hive-partitioned ON DISK but merged without partition_by
-        # (undeclared layout): replace_files needs a flat dir — fall
-        # back to the whole-table path instead of crashing mid-merge
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r} is "
-                "hive-partitioned — use partition_by scoping instead"
-            )
-        return None
-    scope_cols = [c for c in pks if c in zm["stat_cols"]]
-    if not scope_cols:
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r}'s zone map covers "
-                f"{zm['stat_cols']}, none of the primary keys {pks}"
-            )
-        return None
-    scope = _batch_scope(changes, scope_cols)
-    if scope is None:
-        return None  # empty batch or all-NULL keys: nothing to scope by
-    ranges, subs = scope
-    split = None
-    lead = scope_cols[0]
-    if subs is not None:
-        extra = {c: ranges[c] for c in scope_cols[1:]}
-        split = warehouse.zone_overlap_split_multi(
-            target_table, lead, subs, extra
-        )
-    if split is None:
-        split = warehouse.zone_overlap_split(target_table, ranges)
-    if split is None:
-        return None
-    overlap, disjoint = split
-    if not disjoint:
-        return None  # no file prunes: the plain whole-table path is equal
-    base = warehouse.path(target_table)
-    spark = changes.sparkSession
-    if overlap:
-        sub_target = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, rel) for rel in overlap]
-        )
-        # mirror the caller's (possibly source-reordered) column order
-        sub_target = sub_target.select(*target.columns)
-        # pending-delete fold: raw file reads bypass the read mask
-        sub_target = warehouse._apply_pending_deletes(
-            spark, sub_target, target_table
-        )
-    else:  # pure out-of-range insert batch: merge against nothing
-        sub_target = target.limit(0)
-    merged = apply_changes(
-        sub_target, changes, pks=pks, version_cols=version_cols
-    )
-    # replace_files stages to a temp dir and swaps atomically, so the
-    # lazy merged plan may safely read the files it replaces.
-    res = warehouse.replace_files(
-        merged, target_table, overlap, carry_deletes_minus=fold_minus
-    )
-    return res["rows_written"]
+    return overlap

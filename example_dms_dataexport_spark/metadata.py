@@ -109,7 +109,7 @@ class TableMeta:
         manifest part of the table's layout CONTRACT: full rewrites
         build it atomically with the data, and the maintenance advisor
         rebuilds it when an in-place mutation (compact / erase /
-        replace_partitions) has dropped it — without the declaration a
+        ANN-index extend) has dropped it — without the declaration a
         dropped manifest silently degrades erasure to partition-grain
         rewrites or full key scans until someone remembers
         ``write_bloom``.

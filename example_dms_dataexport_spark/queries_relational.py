@@ -3476,7 +3476,7 @@ def q131_zone_merge_prune(spark, sf_dir):
     the reference delegates to Snowflake): customer lands range-
     clustered on its PK with a zone map, a q18-style change batch
     restricted to a NARROW key band (2/5..9/20 of the keyspace) merges
-    through the automatic prune_files path, and the face returns the
+    through the merge's zone stage, and the face returns the
     final on-disk table state — hash-matched against a pure-SQL
     restatement of the same merge over the raw inputs, proving file
     pruning changes nothing but the I/O. Driver-side guards fail the

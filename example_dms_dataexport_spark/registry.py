@@ -85,70 +85,71 @@ MERGED: dict[str, str] = {
 # registration order). load_all() therefore emits the maps in an explicit
 # priority order, rotated each round so every query accumulates a recent
 # green driver row on record (README "Driver correctness window").
-# Round 20 window: the 43 faces check_freshness.py forces (the r17
-# cohort — latest green row r17, which would age past the N-2 floor
-# after r20 lands), including the three r19 single-pass rewrites the
-# r19 verdict asked the ground-truth gate to re-confirm (q69/q93/q116
-# — Next-round item 6), plus SEVEN spare-slot pre-refreshes from the
-# r18 cohort chosen to re-attest the paths this optimization round
-# touches: q18 (CDC merge internals), q119/q123/q147 (erasure-stream
-# replay guard), q38 (corpus-pipeline apply_stage guard), q24
-# (persist-face watch), q157 (lang-model relcache).
+# Round 21 window: the CDC merge faces whose path the one-pipeline
+# merge (pruner chain + one replace_files commit) rewrote, then the r20
+# carry-overs q83/q84 (tokenize-once bodies), then the 41 further faces
+# check_freshness.py forces (latest green row r18, which would age past
+# the N-2 floor after r21 lands). That fills the 50-row window exactly,
+# so the third r20 carry-over, q100, sits just past it: its r20 change
+# was reverted, its body is unchanged since its r19 green row, and that
+# row stays within the floor.
 PRIORITY = [
-    # --- forced r17 cohort (43) ---
-    "q12_part_name_parsing",
-    "q13_file_prefix_grouping",
-    "q14_json_props",
-    "q49_incremental_rollup",
-    "q53_range_join_windows",
-    "q62_funnel_stages",
-    "q64_resample_ffill",
-    "q65_trailing_hour_avg",
-    "q68_quality_audit",
-    "q69_skew_report",
-    "q74_scd2_history",
-    "q75_scd2_point_in_time",
-    "q76_snapshot_diff",
-    "q79_event_debounce",
-    "q80_bloom_semi_join",
-    "q81_bpe_merges",
-    "q87_sketch_accuracy",
-    "q89_retention_cohorts",
-    "q90_value_deciles",
-    "q91_event_path_patterns",
-    "q93_rolling_active_users",
-    "q94_value_trend_regression",
-    "q95_source_token_entropy",
-    "q96_value_outliers",
-    "q97_weekly_value_wow",
-    "q98_cross_source_dup_matrix",
-    "q108_image_decode",
-    "q109_salted_join_revenue",
-    "q111_cluster_canonical",
-    "q113_jdbc_roundtrip",
-    "q115_hybrid_retrieval",
-    "q116_source_kl_divergence",
-    "q133_group_cycle_consistency",
+    # --- re-attest the rewritten CDC merge path (7) ---
+    "q129_declared_layout_pipeline",
+    "q131_zone_merge_prune",
     "q135_stream_group_cycle",
-    "q136_bloom_point_lookup",
     "q137_hybrid_merge_prune",
-    "q138_pps_sample",
-    "q139_bloom_partitioned_erase",
     "q140_scan_scoped_merge",
     "q141_recluster_merge_prune",
-    "q142_delete_vectors",
-    "q143_repetition_filter",
-    "q150_wordpiece_merges",
-    # --- spare-slot re-attestations of r20-touched paths (7) ---
-    "q18_cdc_merge",
-    "q119_user_erasure_audit",
-    "q123_erasure_execution",
-    "q147_group_snapshot_mask",
-    "q38_cleaning_pipeline",
-    "q24_minhash_dedup_pairs",
-    "q157_lang_model_id",
+    "q144_composite_delete_fold",
+    # --- r20 carry-overs (2) ---
+    "q83_bm25_rank",
+    "q84_quality_percentile",
+    # --- forced r18 cohort (41) ---
+    "q21_quality_filter",
+    "q22_exact_dedup",
+    "q26_simhash_pairs",
+    "q27_ngram_jaccard_pairs",
+    "q28_knn_brute",
+    "q29_knn_lsh",
+    "q30_knn_ivf",
+    "q31_embedding_dup_pairs",
+    "q32_media_decode",
+    "q33_frame_sample",
+    "q122_png_decode",
+    "q37_repetition_ratio",
+    "q43_dedup_clusters",
+    "q44_decontaminate",
+    "q45_stratified_sample",
+    "q40_pii_redaction",
+    "q41_vocab_df",
+    "q118_chunk_integrity",
+    "q120_pack_efficiency",
+    "q148_dsir_importance_weights",
+    "q149_mixture_temperature",
+    "q153_binary_hamming_knn",
+    "q154_webdataset_roundtrip",
+    "q16_hourly_event_windows",
+    "q35_length_percentiles",
+    "q36_rollup_acctbal",
+    "q54_profile_orders",
+    "q59_histogram_totalprice",
+    "q60_pivot_lang_source",
+    "q63_intersect_except",
+    "q66_grouping_sets",
+    "q114_bucketed_join_revenue",
+    "q117_cdc_backlog",
+    "q124_scd2_delta_apply",
+    "q125_group_commit_join",
+    "q128_zonemap_prune",
+    "q130_zorder_multicol_prune",
+    "q126_stage_format_roundtrips",
+    "q145_maintenance_cycle",
+    "q152_metadata_stats",
+    "q158_append_files_insert",
+    # --- r20 carry-over past the window ---
+    "q100_heavy_hitters",
 ]
-
 
 def load_all():
     from . import queries_llm, queries_relational  # noqa: F401

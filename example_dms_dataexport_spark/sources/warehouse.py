@@ -536,29 +536,6 @@ class ParquetWarehouse:
             (overlapping if ok else disjoint).append(rel)
         return overlapping, disjoint
 
-    def zone_overlap_split_multi(
-        self,
-        table: str,
-        col: str,
-        subranges: list[tuple],
-        extra_ranges: dict | None = None,
-    ) -> tuple[list[str], list[str]] | None:
-        """Like ``zone_overlap_split``, but the leading column is tested
-        against a UNION of sub-ranges: a file overlaps iff its ``col``
-        band intersects ANY sub-range AND every ``extra_ranges`` column
-        overlaps its (single) range. This is what makes a SCATTERED
-        change batch prune — a batch touching the two ends of the
-        keyspace has a global [min, max] that covers every file, but
-        its per-bucket sub-ranges leave the whole middle disjoint.
-        Returns None when the map doesn't cover the columns."""
-        if os.path.isfile(self._version_pointer(table)):
-            return None
-        zm = self.zonemap(table)
-        need = [col, *(extra_ranges or {})]
-        if zm is None or any(c not in zm["stat_cols"] for c in need):
-            return None
-        return self._split_by_subranges(zm["files"], col, subranges, extra_ranges)
-
     @classmethod
     def _split_by_subranges(
         cls,
@@ -567,10 +544,16 @@ class ParquetWarehouse:
         subranges: list[tuple],
         extra_ranges: dict | None = None,
     ) -> tuple[list[str], list[str]]:
-        """Core union-of-sub-ranges overlap test over a zone-map file
-        dict (possibly a SUBSET of a table's map — the hybrid
-        partition+file merge restricts it to the touched partitions'
-        files first). Shared by ``zone_overlap_split_multi``."""
+        """Split a zone-map file dict (possibly a SUBSET of a table's
+        map — the CDC merge's partition+zone stage restricts it to the
+        touched partitions' files first) into (overlapping, disjoint):
+        a file overlaps iff its ``col`` band intersects ANY of the
+        ``subranges`` AND every ``extra_ranges`` column overlaps its
+        (single) range. Testing a UNION of sub-ranges is what makes a
+        SCATTERED change batch prune — a batch touching the two ends of
+        the keyspace has a global [min, max] that covers every file, but
+        its per-bucket sub-ranges leave the whole middle disjoint.
+        Files with an all-NULL band land on the disjoint side."""
         subs = [
             (cls._zonemap_stat(lo), cls._zonemap_stat(hi))
             for lo, hi in subranges
@@ -2641,8 +2624,8 @@ class ParquetWarehouse:
         # in-place partition mutation KEEPS the _deletes sidecar: a
         # re-inserted key would be silently masked — same refusal as
         # every other state-assembling mutation (the CDC-merge fold goes
-        # through replace_partitions, which subtracts the batch's keys
-        # from the sidecar after the commit)
+        # through replace_files, which commits the sidecar minus the
+        # batch's keys in the same swap)
         self._refuse_pending_deletes(table, "overwrite_partitions")
         self._overwrite_partitions_body(df, table, partition_by)
 
@@ -3929,13 +3912,14 @@ class ParquetWarehouse:
         table: str,
         partition_by: list[str],
         touched: list[tuple],
-        carry_deletes_minus: DataFrame | None = None,
     ) -> None:
-        """Partition-scoped replace for a merge result restricted to
-        ``touched`` partition-value tuples.
+        """Partition-scoped replace of the ``touched`` partition-value
+        tuples with ``df`` (``erase_subjects`` and the ANN-index extend
+        commit through it; the CDC merge commits through
+        ``replace_files``).
 
         Dynamic overwrite only rewrites partitions PRESENT in ``df`` — a
-        CDC batch that deletes every row of a partition leaves the stale
+        batch that removes every row of a partition leaves the stale
         directory behind, resurrecting deleted rows. The cleanup uses a
         batch-identified tombstone protocol:
 
@@ -3954,8 +3938,8 @@ class ParquetWarehouse:
         reads, never torn ones): between 2 and 3 readers skip the
         uncommitted marker and see the intact pre-batch table; between 3
         and 4 readers see the batch's upserts plus the not-yet-removed
-        emptied partitions (stale deletes) until the batch re-runs from
-        the un-advanced watermark; after 4 any read/write completes the
+        emptied partitions (stale deletes) until the batch re-runs;
+        after 4 any read/write completes the
         cleanup. The untouched partitions' files are never read or
         written.
 
@@ -3968,10 +3952,7 @@ class ParquetWarehouse:
         with self._write_fence(
             table, lock_path=self._mutation_lock_path(table)
         ):
-            self._replace_partitions_unlocked(
-                df, table, partition_by, touched,
-                carry_deletes_minus=carry_deletes_minus,
-            )
+            self._replace_partitions_unlocked(df, table, partition_by, touched)
 
     def _replace_partitions_unlocked(
         self,
@@ -3979,24 +3960,11 @@ class ParquetWarehouse:
         table: str,
         partition_by: list[str],
         touched: list[tuple],
-        carry_deletes_minus: DataFrame | None = None,
     ) -> None:
         """``replace_partitions`` body; the caller MUST hold the table's
-        mutation fence (``erase_subjects`` calls this under its own).
-
-        ``carry_deletes_minus``: the CDC-merge fold for the
-        partition-scoped path. The dynamic overwrite commits in place
-        (no whole-dir swap to ride), so the sidecar is rewritten to the
-        pending set minus the batch's keys AFTER the data commit — the
-        crash window between the two leaves the batch's re-inserted
-        keys masked (a stale pre-batch view of exactly those keys, the
-        same stale-read class as the tombstone windows above) until the
-        un-advanced watermark replays the batch; pending keys never
-        resurrect in any window because the sidecar is never dropped
-        before the data that replaces it lands."""
-        dm = self.pending_deletes(table)
-        if dm is not None and carry_deletes_minus is None:
-            self._refuse_pending_deletes(table, "replace_partitions")
+        mutation fence (``erase_subjects`` and the ANN extend call this
+        under their own)."""
+        self._refuse_pending_deletes(table, "replace_partitions")
         self._drop_zonemap(table)
         self._reconcile(table, writer=True)
         still_present = {
@@ -4021,53 +3989,7 @@ class ParquetWarehouse:
         self._overwrite_partitions_body(df, table, partition_by)
         if emptied:
             self._write_tombstone(table, batch, emptied, committed=True)
-        if dm is not None and carry_deletes_minus is not None:
-            self._subtract_pending_deletes(
-                df.sparkSession, table, dm, carry_deletes_minus
-            )
         self._reconcile(table)
-
-    def _subtract_pending_deletes(
-        self,
-        spark: SparkSession,
-        table: str,
-        dm: dict,
-        minus: DataFrame,
-    ) -> None:
-        """Rewrite the pending-delete sidecar to ``pending ⊖ minus``
-        with the same commit discipline as ``delete_keys``: the key set
-        stages into a NEW versioned sidecar dir and the atomic manifest
-        rename (or removal, when the remainder is empty) is the sole
-        commit point. Caller must hold the mutation fence."""
-        final = self.path(table)
-        kcols = self._delete_key_cols(dm)
-        remaining = (
-            spark.read.parquet(self._deletes_dir(table, dm))
-            .join(minus.select(*kcols).distinct(), kcols, "left_anti")
-            .persist()
-        )
-        try:
-            n_rem = remaining.count()
-            if n_rem == 0:
-                os.remove(os.path.join(final, DELETES_FILE))
-                return
-            ndir = f"{DELETES_DIR}-{uuid.uuid4().hex}"
-            remaining.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(final, ndir)
-            )
-            mtmp = os.path.join(
-                final, DELETES_FILE + f".tmp-{uuid.uuid4().hex}"
-            )
-            with open(mtmp, "w") as f:
-                json.dump(
-                    self._deletes_manifest(
-                        kcols, n_rem, ndir, ts=dm.get("ts")
-                    ),
-                    f,
-                )
-            os.replace(mtmp, os.path.join(final, DELETES_FILE))
-        finally:
-            remaining.unpersist()
 
     def erase_subjects(
         self,

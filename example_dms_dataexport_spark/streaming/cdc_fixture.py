@@ -97,8 +97,9 @@ def run_partitioned_cdc_fixture(
     100 TB CDC path): customer is stored hive-partitioned by a stable
     pk-derived bucket, the q18 change-set is restricted to
     ``touched_buckets`` of ``n_buckets`` partitions, and
-    ``merge_and_write`` must prune the target scan to — and rewrite
-    only — those partitions. Benchmarked per-round so rewrite-
+    ``merge_and_write`` must prune the target scan to those partitions
+    and rewrite only the files there holding a batch key (the pk-scan
+    stage, ``cdc._scan_scoped_merge``). Benchmarked per-round so rewrite-
     amplification regressions (a merge that silently rescans or
     rewrites the whole table) show up as a wall-time jump in BENCH
     deltas. Returns (rows_affected, touched_buckets, n_buckets)."""
@@ -175,9 +176,9 @@ def run_zone_cdc_fixture(
     of ``run_partitioned_cdc_fixture``; ref :369-408): customer is
     stored UNpartitioned but range-clustered on its PK with a zone map,
     the q18 change-set is restricted to a narrow PK band
-    (2/5..9/20 of the keyspace), and ``merge_and_write``'s automatic
-    prune_files path must join against only the overlapping files and
-    hard-link the rest through. Benchmarked per-round so a regression
+    (2/5..9/20 of the keyspace), and ``merge_and_write``'s zone stage
+    (``cdc._zone_scoped_merge``) must narrow the join to the
+    overlapping files and hard-link the rest through. Benchmarked per-round so a regression
     back to whole-table merge I/O shows up as a wall-time jump.
     Returns (rows_written, files_carried, files_total)."""
     import os as _os
@@ -247,7 +248,8 @@ def run_hybrid_cdc_fixture(
     n_files: int = 16,
 ) -> tuple[int, int, int]:
     """HYBRID partition+file BATCH merge at bench scale (the composition
-    of the two fixtures above; cdc._hybrid_scoped_merge): customer is
+    of the two fixtures above; the partition+zone stage,
+    cdc._hybrid_scoped_merge): customer is
     hive-partitioned on a stable pk-derived quarter bucket AND
     range-clustered on the pk within partitions with a zone map; the
     q18 change-set is restricted to a narrow key band inside ONE
@@ -330,8 +332,8 @@ def run_scan_cdc_fixture(
     workdir: str,
     n_files: int = 32,
 ) -> tuple[int, int, int]:
-    """SCAN-scoped BATCH merge at bench scale (cdc._scan_scoped_merge —
-    the layout-independent fallback): customer is stored UNCLUSTERED on
+    """SCAN-scoped BATCH merge at bench scale (the pk-scan stage,
+    cdc._scan_scoped_merge — the layout-independent fallback): customer is stored UNCLUSTERED on
     its pk (hash-scattered on nationkey, NO zone map — the
     retrofitted-table shape), and the q18-style change-set is
     restricted to ~15 customer keys. merge_and_write must discover the

@@ -269,10 +269,11 @@ def start_cdc_stream(
 
     ``partition_by`` makes every micro-batch's merge partition-scoped
     (cdc.merge_and_write): at 100 TB a continuous stream CANNOT full-
-    rewrite the target per batch, so the same pruned-merge +
-    replace_partitions path the batch loader uses is the only shape that
-    survives — per-batch cost proportional to the batch's touched
-    partitions, untouched partition files never read or written.
+    rewrite the target per batch, so the same narrowed merge + one
+    ``replace_files`` commit the batch loader uses is the only shape
+    that survives — per-batch cost proportional to the candidate files
+    inside the batch's touched partitions, untouched partition files
+    never read or written.
     """
     target_schema = warehouse.read(spark, target_table).schema
     if column_order:
@@ -293,8 +294,8 @@ def start_cdc_stream(
         _null_pk_tripwire(batch, pks, batch_id)
         changes = _with_rownum(batch)
         target = warehouse.read(spark, target_table)
-        # foreachBatch may retry a batch on failure; the atomic overwrite
-        # (or tombstoned partition replace) makes the retry idempotent.
+        # foreachBatch may retry a batch on failure; the atomic commit
+        # swap (replace_files or overwrite) makes the retry idempotent.
         merge_and_write(
             warehouse,
             target_table,

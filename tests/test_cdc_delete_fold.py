@@ -11,11 +11,10 @@ set in:
 - the sidecar is rewritten to pending ⊖ batch-keys, so a key the batch
   re-inserts SURVIVES (CDC wins over the stale tombstone) while
   non-reasserted keys stay masked;
-- the sidecar update commits atomically WITH the data on swap-based
-  paths (zone/scan/hybrid via replace_files), and strictly AFTER the
-  data on the in-place partition path — a crash between the two leaves
-  reads correct (re-inserted keys stay masked = pre-batch view) and the
-  un-advanced watermark's replay converges;
+- the sidecar update commits atomically WITH the data in the single
+  replace_files swap every narrowed merge ends in — a crash in the
+  swap leaves reads correct (re-inserted keys stay masked = pre-batch
+  view) and the un-advanced watermark's replay converges;
 - key columns ≠ merge pks (the compliance composition: subject-keyed
   GDPR deletes vs order-keyed CDC) folds DIFFERENTLY since r13: the
   sidecar is carried INTACT (an empty subtraction — no scoping proof
@@ -148,15 +147,15 @@ def test_fold_partition_scoped_and_crash_window(spark, tmp_path, monkeypatch):
     target = wh.read(spark, "t").select("pk", "bucket", "name")
     ch = _changes(spark, [("I", 10, 10, "back", "f1", 1)])
 
-    # crash BETWEEN the data commit and the sidecar subtraction: reads
+    # crash in the commit swap that carries data AND sidecar: reads
     # must stay correct (re-inserted key still masked = pre-batch view;
     # nothing resurrects), and the replay must converge
-    real = ParquetWarehouse._subtract_pending_deletes
+    real = ParquetWarehouse._commit_swap
 
     def boom(self, *a, **kw):
-        raise RuntimeError("injected crash before sidecar update")
+        raise RuntimeError("injected crash in the commit swap")
 
-    monkeypatch.setattr(ParquetWarehouse, "_subtract_pending_deletes", boom)
+    monkeypatch.setattr(ParquetWarehouse, "_commit_swap", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         merge_and_write(
             wh, "t", target, ch, pks=["pk"], version_cols=VC,
@@ -167,7 +166,7 @@ def test_fold_partition_scoped_and_crash_window(spark, tmp_path, monkeypatch):
     assert wh.pending_deletes("t")["n_keys"] == 2
 
     # replay (the watermark never advanced): converges to the folded state
-    monkeypatch.setattr(ParquetWarehouse, "_subtract_pending_deletes", real)
+    monkeypatch.setattr(ParquetWarehouse, "_commit_swap", real)
     target = wh.read(spark, "t").select("pk", "bucket", "name")
     merge_and_write(
         wh, "t", target, ch, pks=["pk"], version_cols=VC,
@@ -563,8 +562,8 @@ def test_fold_mismatched_key_whole_table_carries_sidecar(spark, tmp_path):
 def test_fold_mismatched_key_partition_crash_window(
     spark, tmp_path, monkeypatch
 ):
-    """Partition path: data commits, then the (empty) sidecar
-    subtraction runs. A crash between the two leaves the pending set
+    """Partition path: data and the intact sidecar commit in one
+    replace_files swap. A crash in the swap leaves the pending set
     intact and every subject masked; the replay converges."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite(_rows(spark), "t", partition_by=["bucket"])
@@ -573,12 +572,12 @@ def test_fold_mismatched_key_partition_crash_window(
     ch = _changes(spark, [("I", 10, 10, "v-10", "f1", 1),
                           ("U", 5, 5, "upd", "f1", 2)])
 
-    real = ParquetWarehouse._subtract_pending_deletes
+    real = ParquetWarehouse._commit_swap
 
     def boom(self, *a, **kw):
-        raise RuntimeError("injected crash before sidecar update")
+        raise RuntimeError("injected crash in the commit swap")
 
-    monkeypatch.setattr(ParquetWarehouse, "_subtract_pending_deletes", boom)
+    monkeypatch.setattr(ParquetWarehouse, "_commit_swap", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         merge_and_write(
             wh, "t", target, ch, pks=["pk"], version_cols=VC,
@@ -588,9 +587,7 @@ def test_fold_mismatched_key_partition_crash_window(
     assert 10 not in got and 20 not in got, "crash window exposed a subject"
     assert wh.pending_deletes("t")["n_keys"] == 2
 
-    monkeypatch.setattr(
-        ParquetWarehouse, "_subtract_pending_deletes", real
-    )
+    monkeypatch.setattr(ParquetWarehouse, "_commit_swap", real)
     target = wh.read(spark, "t").select("pk", "bucket", "name")
     merge_and_write(
         wh, "t", target, ch, pks=["pk"], version_cols=VC,

@@ -13,8 +13,9 @@ the partitions, rewrite I/O follows the batch's key locality. Pins:
 - emptied partitions disappear atomically (no tombstone protocol);
 - new-partition inserts create dirs while carrying everything else;
 - the maintained zone map stays exact through the hybrid commit;
-- layout guard: a flat-on-disk table merged with partition_by falls
-  back (or refuses under prune_files=True) instead of duplicating rows.
+- partition values the zone stage cannot render as hive dir names
+  narrow through the pk-scan stage instead: same content, untouched
+  partitions carried, no tombstone protocol.
 """
 
 from __future__ import annotations
@@ -186,15 +187,14 @@ def test_hybrid_without_map_falls_back_to_partition_scope(spark, tmp_path):
     assert wh.read(spark, "t").filter("pk = 4").first().val == 777
 
 
-def test_hybrid_refuses_engine_specific_partition_renderings(spark, tmp_path):
+def test_unrenderable_partition_values_scan_scoped_and_carried(spark, tmp_path):
     """Partition values whose hive dir names Spark escapes or renders
     differently than Python str() (booleans here: 'true' vs 'True')
-    must NOT take the hybrid path — building the wrong prefix would
-    silently exclude the partition's files and duplicate its rows. The
-    default falls back to the partition-scoped rewrite (correct
-    content); prune_files=True refuses loudly."""
-    import pytest
-
+    must NOT take the partition+zone stage — building the wrong prefix
+    would silently exclude the partition's files and duplicate its
+    rows. They narrow through the pk-scan stage, which takes file paths
+    from Spark: correct content, the untouched partition's files keep
+    their inodes, and no tombstone marker is involved."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     df = spark.createDataFrame(
         [(i, i % 2 == 0, i * 10) for i in range(20)],
@@ -202,19 +202,23 @@ def test_hybrid_refuses_engine_specific_partition_renderings(spark, tmp_path):
     )
     wh.overwrite(df, "t", partition_by=["flag"], stat_cols=["pk"])
     assert wh.zonemap("t") is not None
+    before = _inodes(wh.path("t"))
+    assert any(rel.startswith("flag=false/") for rel in before)
     target = wh.read(spark, "t").select("pk", "flag", "val")
     ch = spark.createDataFrame(
         [("U", 4, True, 777, "f1", 1)],
         "op string, pk long, flag boolean, val long, "
         "_dms_filename string, _dms_rownum long",
     )
-    with pytest.raises(ValueError, match="hive dir renderings"):
-        merge_and_write(wh, "t", target, ch, pks=["pk"], version_cols=VC,
-                        partition_by=["flag"], prune_files=True)
     merge_and_write(wh, "t", target, ch, pks=["pk"], version_cols=VC,
                     partition_by=["flag"])
     # NB the read-back partition column is the hive dir STRING 'true' —
-    # Spark writes booleans escaped-lowercase, which is exactly why the
-    # hybrid's str(v) prefix could never have addressed these dirs
+    # Spark writes booleans escaped-lowercase, which is exactly why a
+    # str(v) prefix could never have addressed these dirs
     got = {r.pk: (str(r.flag), r.val) for r in wh.read(spark, "t").collect()}
     assert got[4] == ("true", 777) and len(got) == 20
+    after = _inodes(wh.path("t"))
+    for rel, ino in before.items():
+        if rel.startswith("flag=false/"):
+            assert after.get(rel) == ino, f"untouched partition file {rel} rewritten"
+    assert not os.path.isfile(os.path.join(wh.path("t"), "_tombstones.json"))

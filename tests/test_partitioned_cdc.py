@@ -109,16 +109,22 @@ def test_emptied_partition_directory_removed(spark, tmp_path):
 
 
 def test_crash_between_overwrite_and_cleanup_heals(spark, tmp_path, monkeypatch):
-    # Simulate a crash AFTER the dynamic overwrite committed but BEFORE the
-    # emptied-partition cleanup ran: the tombstone marker must survive and
-    # the next reader must not resurrect the deleted rows.
+    # The tombstone protocol of replace_partitions (erase_subjects and
+    # the ANN extend commit through it). Simulate a crash AFTER the
+    # dynamic overwrite committed but BEFORE the emptied-partition
+    # cleanup ran: the tombstone marker must survive and the next reader
+    # must not resurrect the deleted rows.
     stage, store, wh, tdir = _setup(spark, tmp_path)
-    (tdir / "20240102-000000001.csv").write_text("D,2,c,0\nD,5,c,0\nD,8,c,0\n")
+    # every region-c row (ids 2,5,8) is deleted: the touched partition's
+    # replacement is empty
+    survivors = wh.read(spark, "t").filter(
+        "region = 'c' AND id NOT IN (2, 5, 8)"
+    )
 
     monkeypatch.setattr(
         ParquetWarehouse, "_reconcile", lambda self, table, writer=False: None
     )
-    incremental_load(spark, store, wh, "sch/tbl", partition_by=["region"])
+    wh.replace_partitions(survivors, "t", ["region"], [("c",)])
     monkeypatch.undo()
 
     # crash state: stale region=c dir still on disk, tombstone pending
@@ -384,13 +390,14 @@ def test_bench_fixture_matches_global_merge(spark, tmp_path):
 
 
 def test_touched_partition_rewrite_is_file_coalesced(spark, tmp_path):
-    """The partition-scoped merge's dynamic overwrite rebalances on the
-    partition columns (r20, guide §6): the persisted merge result would
-    otherwise pin its pre-AQE pk-hash partitioning and fan ONE FILE PER
-    CACHED PARTITION into every touched value dir (measured 32 files
-    per touched partition for a 3k-row merge at bench scale). Bound:
-    a small merge leaves each touched partition with a handful of
-    advisory-sized files, not shuffle-partition many."""
+    """The partitioned merge must not fan ONE FILE PER SHUFFLE
+    PARTITION into every touched value dir (a persisted merge result
+    pinned its pre-AQE pk-hash partitioning and wrote 32 files per
+    touched partition for a 3k-row merge at bench scale). The merge
+    commits its lazy result through replace_files, so AQE coalesces
+    the batch-sized output. Bound: a small merge leaves each touched
+    partition with a handful of advisory-sized files, not
+    shuffle-partition many."""
     from example_dms_dataexport_spark.cdc import merge_and_write
 
     wh = ParquetWarehouse(str(tmp_path / "wh"))

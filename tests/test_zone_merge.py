@@ -121,12 +121,12 @@ def test_replace_files_guards(spark, tmp_path):
 
 
 def test_zone_scoped_merge_matches_unpruned(spark, tmp_path):
-    """The oracle property: merge with file pruning == merge without,
-    row for row — updates, a delete, an in-range insert, and latest-wins
-    dedup all landing identically; disjoint files untouched on disk."""
+    """The oracle property: the file-pruned merge == the reference
+    apply_changes over the whole target, row for row — updates, a
+    delete, an in-range insert, and latest-wins dedup all landing
+    identically; disjoint files untouched on disk."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     _write_clustered(spark, wh, "zoned")
-    _write_clustered(spark, wh, "plain")
     changes = _changes_df(
         spark,
         [
@@ -143,14 +143,8 @@ def test_zone_scoped_merge_matches_unpruned(spark, tmp_path):
         wh, "zoned", wh.read(spark, "zoned").select(target_cols),
         changes, pks=["pk"], version_cols=VC,
     )
-    n_plain = merge_and_write(
-        wh, "plain", wh.read(spark, "plain").select(target_cols),
-        changes, pks=["pk"], version_cols=VC, prune_files=False,
-    )
     after = _parquet_inodes(wh.path("zoned"))
     zoned = sorted(map(tuple, wh.read(spark, "zoned").collect()))
-    plain = sorted(map(tuple, wh.read(spark, "plain").collect()))
-    assert zoned == plain
     # expected content from the pure operator on the full target
     expected = sorted(
         map(
@@ -166,8 +160,7 @@ def test_zone_scoped_merge_matches_unpruned(spark, tmp_path):
     untouched = [r for r in before if r in after and after[r] == before[r]]
     assert untouched, "zone-scoped merge rewrote every file"
     # the zoned write is sub-linear: fewer rows written than the table
-    assert n_zoned < n_plain
-    assert n_plain == 800  # full rewrite wrote everything
+    assert n_zoned < len(expected)
     # steady state: the map survived the merge, so the NEXT merge prunes
     assert wh.zonemap("zoned") is not None
     assert set(wh.zonemap("zoned")["files"]) == set(after)
@@ -215,10 +208,9 @@ def test_zone_scoped_merge_pure_out_of_range_inserts(spark, tmp_path):
 
 
 def test_zone_scoped_merge_fallbacks(spark, tmp_path):
-    """No map -> the SCAN-scoped path takes over (exact touched-file
-    semi-join) and prune_files=False still forces the whole-table path;
-    prune_files=True without a covering map raises; all-NULL batch keys
-    fall back safely."""
+    """No map, or a map over no primary key -> the SCAN-scoped stage
+    takes over (exact touched-file semi-join); all-NULL batch keys fall
+    back safely."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite(_target_df(spark, 50), "nomap")
     changes = _changes_df(spark, [("U", 14, 9, "x", "f", 1)])
@@ -233,24 +225,14 @@ def test_zone_scoped_merge_fallbacks(spark, tmp_path):
         assert n < 50  # scan scope: only the touched file rewrote
     assert wh.read(spark, "nomap").filter("pk = 14").first().val == 9
     assert wh.read(spark, "nomap").count() == 50
-    # prune_files=False forces the whole-table rewrite
-    n = merge_and_write(
-        wh, "nomap", wh.read(spark, "nomap"), changes,
-        pks=["pk"], version_cols=VC, prune_files=False,
-    )
-    assert n == 50
-    with pytest.raises(ValueError, match="no zone map"):
-        merge_and_write(
-            wh, "nomap", wh.read(spark, "nomap"), changes,
-            pks=["pk"], version_cols=VC, prune_files=True,
-        )
-    # map over a non-PK column only: require=True names the mismatch
+    # map over a non-PK column only: the zone stage cannot scope by it
     wh.overwrite(_target_df(spark, 50), "wrongcol", stat_cols=["val"])
-    with pytest.raises(ValueError, match="none of the primary keys"):
-        merge_and_write(
-            wh, "wrongcol", wh.read(spark, "wrongcol"), changes,
-            pks=["pk"], version_cols=VC, prune_files=True,
-        )
+    merge_and_write(
+        wh, "wrongcol", wh.read(spark, "wrongcol"), changes,
+        pks=["pk"], version_cols=VC,
+    )
+    assert wh.read(spark, "wrongcol").filter("pk = 14").first().val == 9
+    assert wh.read(spark, "wrongcol").count() == 50
     # all-NULL keys: zone declines; the scan scope treats the NULL-pk U
     # as matching nothing (insert), same semantics as the unpruned path
     _write_clustered(spark, wh, "nullk", n=30)
@@ -338,7 +320,7 @@ def test_erase_subjects_zone_pruned_copy_on_write(spark, tmp_path):
 def test_zone_scoped_merge_hive_layout_falls_back(spark, tmp_path):
     """A table hive-partitioned ON DISK but merged without partition_by
     (undeclared layout) must fall back to the whole-table path, not
-    crash in replace_files; prune_files=True names the mismatch."""
+    crash in replace_files."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     df = _target_df(spark, 100).withColumn("part", F.col("pk") % 4)
     wh.overwrite(df, "t", partition_by=["part"], stat_cols=["pk"])
@@ -348,11 +330,6 @@ def test_zone_scoped_merge_hive_layout_falls_back(spark, tmp_path):
         "op string, pk long, val long, name string, part bigint, "
         "_dms_filename string, _dms_rownum long",
     )
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        merge_and_write(
-            wh, "t", wh.read(spark, "t").select("pk", "val", "name", "part"),
-            changes, pks=["pk"], version_cols=VC, prune_files=True,
-        )
     n = merge_and_write(
         wh, "t", wh.read(spark, "t").select("pk", "val", "name", "part"),
         changes, pks=["pk"], version_cols=VC,
@@ -361,22 +338,22 @@ def test_zone_scoped_merge_hive_layout_falls_back(spark, tmp_path):
     assert wh.read(spark, "t").filter("pk = 14").first().val == 9
 
 
-def test_prune_files_require_incompatible_modes_raise(spark, tmp_path):
-    """prune_files=True must never be silently bypassed: a partitioned
-    merge whose ON-DISK layout doesn't match partition_by (here: a flat
-    table) and a schema-evolution batch both refuse it loudly."""
+def test_partition_by_on_flat_layout_falls_back_to_overwrite(spark, tmp_path):
+    """A merge declaring partition_by over a table that is FLAT on disk
+    must not file-replace under the declaration (carried flat files next
+    to newly written hive dirs would duplicate the merged rows): every
+    stage declines and the whole table rewrites in the declared layout."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     _write_clustered(spark, wh, "t", n=50)
     changes = _changes_df(spark, [("U", 14, 9, "x", "f", 1)])
-    with pytest.raises(ValueError, match="does not match partition_by"):
-        merge_and_write(
-            wh, "t", wh.read(spark, "t"), changes,
-            pks=["pk"], version_cols=VC,
-            partition_by=["val"], prune_files=True,
-        )
-    with pytest.raises(ValueError, match="evolution"):
-        merge_and_write(
-            wh, "t", wh.read(spark, "t"), changes,
-            pks=["pk"], version_cols=VC,
-            full_rewrite=True, prune_files=True,
-        )
+    n = merge_and_write(
+        wh, "t", wh.read(spark, "t"), changes,
+        pks=["pk"], version_cols=VC, partition_by=["val"],
+    )
+    assert n == 50
+    got = wh.read(spark, "t")
+    assert got.count() == 50 and got.select("pk").distinct().count() == 50
+    assert got.filter("pk = 14").first().val == 9
+    assert not any(
+        f.endswith(".parquet") for f in os.listdir(wh.path("t"))
+    ), "flat files survived next to the hive layout"
