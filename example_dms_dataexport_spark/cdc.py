@@ -356,7 +356,7 @@ def merge_and_write(
         ).persist()
         n = merged.count()  # materialization also validates before the swap
         # full_rewrite keeps the partition layout: the atomic whole-table
-        # swap also drops any pending tombstone marker with the old dir —
+        # swap also drops any pending-delete sidecar with the old dir —
         # EXCEPT under the mismatched-key fold, where the sidecar must
         # survive the commit (carry_deletes_intact) or a crash-replay of
         # the batch would resurrect its masked rows.

@@ -23,10 +23,10 @@ Scale notes (100 TB):
 - The latest-wins dedup aggregation shrinks the change-set to ≤1 row per
   PK *before* the join (ref :380-397 does the same inside the USING
   clause), with map-side partial aggregation absorbing hot-PK skew.
-- Rewrite amplification is bounded by partitioning the target and
-  overwriting only touched partitions (``partitionOverwriteMode=dynamic``,
-  see sources/warehouse.py) — not part of this operator, which is pure
-  DataFrame → DataFrame.
+- Rewrite amplification is bounded by rewriting only the target files
+  that can hold a batch key and hard-linking the rest (copy-on-write
+  ``replace_files``, see cdc.py and sources/warehouse.py) — not part of
+  this operator, which is pure DataFrame → DataFrame.
 """
 
 from __future__ import annotations

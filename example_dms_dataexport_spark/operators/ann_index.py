@@ -29,6 +29,8 @@ actually reached the scan.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -183,10 +185,12 @@ def extend_ann_index(
 
     ``mode`` picks the commit shape:
 
-    - ``"rewrite"``: read the touched list partitions, union, commit
-      through ``replace_partitions`` (tombstone-protocol atomicity).
-      Write amplification is O(touched list size) per batch — right
-      for occasional large extends.
+    - ``"rewrite"``: read the touched list partitions, union, and
+      commit copy-on-write through ``replace_files``: the touched
+      lists' files are replaced, every other list's files hard-link
+      through with their inodes intact, and the zone-map / bloom
+      manifests are maintained. Write amplification is O(touched list
+      size) per batch — right for occasional large extends.
     - ``"append"``: stage the new rows as their own parquet files and
       RENAME them into the touched partition dirs — write cost is
       O(batch), independent of list size; no existing file is opened
@@ -195,13 +199,12 @@ def extend_ann_index(
       see a torn file; a crash mid-batch leaves a PREFIX of the batch
       appended — re-entry must dedup against the index first, which
       ``start_ann_ingest_stream``'s reconciling join does). Zone-map /
-      bloom manifests are invalidated like every in-place mutation
-      (stale pruning must fail loudly, never mis-prune), and abandoned
-      staging dirs from crashed appends sweep on the next fenced
-      append. Small-file accretion is curable with the standard
+      bloom manifests extend in O(batch), and abandoned staging dirs
+      from crashed appends sweep on the next fenced append.
+      Small-file accretion is curable with the standard
       ``wh.compact(spark, name)`` leaf repack. Refused on versioned
-      tables and while merge-on-read deletes pend (same consistency
-      contract replace_partitions enforces).
+      tables; pending merge-on-read deletes mask the batch instead of
+      refusing (``append_files``). Rewrite mode refuses them.
 
     In both modes the codebooks and descriptor are untouched at the
     table root, and the append-only id contract is enforced under the
@@ -298,18 +301,25 @@ def extend_ann_index(
                     spark, new_tbl, name, partition_by=["list_id"]
                 )
             else:
+                # the touched lists' files, listed from their dirs (no
+                # Spark job; integer list ids render exactly); the
+                # staged commit makes reading them while writing safe
+                base = wh.path(name)
+                replaced = [
+                    os.path.join(f"list_id={t}", rel)
+                    for t in touched
+                    for rel in wh._walk_parquet_rels(
+                        os.path.join(base, f"list_id={t}")
+                    )
+                ]
                 cur = (
                     wh.read(spark, name)
                     .filter(F.col("list_id").isin(touched))
                     .select(*new_tbl.columns)
                 )
-                merged = cur.unionByName(new_tbl).persist()
-                try:
-                    wh._replace_partitions_unlocked(
-                        merged, name, ["list_id"], [(t,) for t in touched]
-                    )
-                finally:
-                    merged.unpersist()
+                wh._replace_files_unlocked(
+                    cur.unionByName(new_tbl), name, replaced, ["list_id"]
+                )
         return {"added": stats["n"], "touched_lists": touched}
     finally:
         new_tbl.unpersist()

@@ -2873,8 +2873,8 @@ def q119_user_erasure_audit(spark, sf_dir):
     list broadcasts (request sets are small); each table takes ONE scan
     with a left semi-flag join + conditional count — no table is read
     twice, nothing re-shuffles on the fact side. The actual deletion is
-    the same anti-join composed with warehouse.overwrite (or
-    replace_partitions for hive-partitioned targets); this face
+    the same anti-join composed with warehouse.overwrite (or the
+    copy-on-write replace_files for hive-partitioned targets); this face
     hash-verifies the counts that prove the erasure complete."""
     ev = _t(spark, sf_dir, "events")
     erase = (
@@ -2922,16 +2922,16 @@ def q123_erasure_execution(spark, sf_dir):
     """The erasure EXECUTION path q119 only audits: a real on-disk
     warehouse table (events partitioned by ``pbucket = user_id % 8`` —
     the stable coarse key an erasure-friendly 100 TB layout partitions
-    by) walks through ``erase_subjects`` — broadcast semi-join finds
-    the touched partitions, the anti-joined remainder rewrites ONLY
-    those via the tombstoned dynamic overwrite — and the result is
-    read BACK FROM DISK. The returned relation is the post-erasure
-    per-event_type profile plus ``remaining`` = the re-audit count of
-    subject rows still present (a 1-row scalar attach), which the
-    oracle pins to 0: a rewrite that misses a partition, resurrects a
-    tombstoned directory, or drops survivor rows breaks the hash.
-    Every byte flows through the partition-scoped delete protocol, not
-    an in-memory filter."""
+    by) walks through ``erase_subjects`` — a broadcast semi-join scan
+    finds the files holding subject rows, and ONLY those rewrite
+    through one copy-on-write ``replace_files`` commit — and the
+    result is read BACK FROM DISK. The returned relation is the
+    post-erasure per-event_type profile plus ``remaining`` = the
+    re-audit count of subject rows still present (a 1-row scalar
+    attach), which the oracle pins to 0: a rewrite that misses a file,
+    resurrects an emptied partition, or drops survivor rows breaks the
+    hash. Every byte flows through the on-disk delete commit, not an
+    in-memory filter."""
     import shutil
 
     from .sources.warehouse import ParquetWarehouse
@@ -4078,8 +4078,8 @@ def q139_bloom_partitioned_erase(spark, sf_dir):
     """Right-to-be-forgotten on a hive-partitioned table whose subject
     key is NOT the partition key (the realistic shape: partitioned on a
     pk-derived bucket, erased by customer id): without the bloom
-    manifest the erase rewrites every TOUCHED PARTITION entirely; with
-    it the rewrite narrows to the files that can contain a subject —
+    manifest the erase scans the key column for the files holding a
+    subject; with it the rewrite covers the files that can contain one —
     rel paths address partition dirs directly, so no hive value
     rendering is involved, and emptied partitions retire atomically.
     Driver guards pin the file grain: the bloom split must actually

@@ -6,16 +6,16 @@ Here a warehouse is a directory of parquet tables with two write modes:
 - ``overwrite``: atomic full replace — same idempotency contract as the
   reference's TRUNCATE + COPY INTO (ref :238-243); re-running a full load
   can never leave a partial table.
-- ``overwrite_partitions``: dynamic partition overwrite — only partitions
-  present in the incoming DataFrame are replaced (needs
-  ``spark.sql.sources.partitionOverwriteMode=dynamic``, set in session.py).
-  This is the 100 TB path for CDC rewrites: partition the target by a
-  stable coarse key (e.g. date or pk-bucket) and a CDC batch rewrites only
-  touched partitions (SURVEY §7.3 hard-part a).
+- ``replace_files``: copy-on-write file replace — only the named files
+  are rewritten; every other file (hive partition dirs included)
+  hard-links into the new state, which commits through the same atomic
+  swap. This is the 100 TB path for CDC merges and erasures: a batch
+  rewrites only the files that can hold its keys (SURVEY §7.3
+  hard-part a).
 
 The read→merge→overwrite cycle on one table would otherwise race with
 itself (Spark reads lazily while the job overwrites the same files), so
-``overwrite`` writes to a temp directory first and atomically swaps
+both modes write to a temp directory first and atomically swap
 (SURVEY §7.3 hard-part b).
 """
 
@@ -34,9 +34,6 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-# Pending-cleanup marker for replace_partitions (see _reconcile).
-TOMBSTONE_FILE = "_tombstones.json"
 
 # Small JSON sidecar committed atomically WITH an ``overwrite`` (written
 # into the temp dir before the swap) — e.g. the streaming rollup's
@@ -116,7 +113,6 @@ class ParquetWarehouse:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         if os.path.isfile(self._version_pointer(table)):
             return self.read_version(spark, table)
-        self._reconcile(table)
         final = self.path(table)
         spec_p = os.path.join(final, BUCKET_SPEC_FILE)
         if os.path.isfile(spec_p) and not any(
@@ -133,41 +129,6 @@ class ParquetWarehouse:
                 )
         df = spark.read.parquet(final)
         return self._apply_pending_deletes(spark, df, table)
-
-    def _tombstone_path(self, table: str) -> str:
-        return os.path.join(self.path(table), TOMBSTONE_FILE)
-
-    def _reconcile(self, table: str, writer: bool = False) -> None:
-        """Finish any interrupted ``replace_partitions`` cleanup.
-
-        The tombstone marker records the batch identity, the partition
-        directories that batch empties, and whether the batch's dynamic
-        overwrite COMMITTED. Readers apply only committed markers — a
-        marker whose batch never committed must not delete partitions
-        whose upserts are absent (that would be a torn state). Writers
-        (``writer=True``, i.e. the next ``replace_partitions`` on this
-        table) additionally DROP uncommitted markers without applying
-        them: the abandoned batch's deletes are superseded by the new
-        batch, which re-derives the merge from the un-advanced watermark.
-
-        Applying a committed marker is idempotent (rmtree of dirs that may
-        already be gone), so a crash anywhere after the commit flip is
-        healed by the next read or write.
-        """
-        tp = self._tombstone_path(table)
-        if not os.path.isfile(tp):
-            return
-        with open(tp) as f:
-            marker = json.load(f)
-        if isinstance(marker, list):  # legacy format: dirs of a committed batch
-            marker = {"batch": None, "committed": True, "dirs": marker}
-        if not marker.get("committed"):
-            if writer:
-                os.remove(tp)
-            return
-        for rel in marker["dirs"]:
-            shutil.rmtree(os.path.join(self.path(table), rel), ignore_errors=True)
-        os.remove(tp)
 
     def overwrite(
         self,
@@ -621,8 +582,8 @@ class ParquetWarehouse:
         ``df`` must carry the partition columns, and a partition whose
         files were all replaced with no surviving rows simply has no
         directory in the new state — the whole-table assembly+swap
-        removes emptied partitions atomically, with no tombstone
-        protocol needed. This is the write-side half of the
+        removes emptied partitions atomically, in the same rename
+        that commits the data. This is the write-side half of the
         zone-map-scoped CDC merge (ref :369-408 — the reference
         delegates the equivalent micro-partition-scoped rewrite to
         Snowflake's engine): rewrite cost is O(|df| + |replaced|), not
@@ -723,7 +684,6 @@ class ParquetWarehouse:
                 )
         elif bucket_spec is not None:
             raise ValueError(f"{table!r} carries no bucket spec")
-        self._reconcile(table, writer=True)
 
         def _list_parquet(root_dir: str) -> set[str]:
             out = set()
@@ -758,8 +718,7 @@ class ParquetWarehouse:
             ):
                 raise ValueError(
                     f"{table!r} has partition subdirectories — pass "
-                    "partition_by (hybrid file-level replace) or use "
-                    "replace_partitions"
+                    "partition_by (hybrid file-level replace)"
                 )
         replaced_set = set(replaced)
         unknown = sorted(replaced_set - existing)
@@ -1007,8 +966,7 @@ class ParquetWarehouse:
 
 
     def _drop_zonemap(self, table: str, drop_bloom: bool = True) -> None:
-        """Every in-place mutation (replace_partitions / compact /
-        erase_subjects) calls this FIRST: derived file metadata (zone
+        """Leaf compaction calls this FIRST: derived file metadata (zone
         map AND bloom manifest) describing files that no longer exist
         would silently exclude the new files from pruned reads —
         stale-and-absent must fail loudly in the pruned readers, never
@@ -1046,10 +1004,6 @@ class ParquetWarehouse:
                 f"{table!r} is versioned — snapshots carry their own "
                 "maps; commit with overwrite_versioned(stat_cols=[...])"
             )
-        # finish any interrupted replace_partitions cleanup FIRST: a map
-        # built over a committed-but-unreaped tombstoned dir would index
-        # deleted rows and resurrect them in pruned reads
-        self._reconcile(table)
         zm = self._compute_zonemap(spark, self.path(table), stat_cols)
         tmp = os.path.join(
             self.path(table), ZONEMAP_FILE + f".tmp-{uuid.uuid4().hex[:8]}"
@@ -1572,7 +1526,6 @@ class ParquetWarehouse:
         with self._write_fence(
             table, lock_path=self._mutation_lock_path(table)
         ):
-            self._reconcile(table)
             bm = self._compute_bloom(spark, self.path(table), cols)
             tmp = os.path.join(
                 self.path(table), BLOOM_FILE + f".tmp-{uuid.uuid4().hex}"
@@ -1609,7 +1562,6 @@ class ParquetWarehouse:
         with self._write_fence(
             table, lock_path=self._mutation_lock_path(table)
         ):
-            self._reconcile(table)
             final = self.path(table)
             try:
                 bm = self.bloom(table)
@@ -2067,8 +2019,6 @@ class ParquetWarehouse:
             ranges = {col: (lo, hi)}
         elif col is not None or lo is not None or hi is not None:
             raise ValueError("col/lo/hi and ranges are mutually exclusive")
-        if not os.path.isfile(self._version_pointer(table)):
-            self._reconcile(table)  # same healing contract as read()
         base = self._zoned_base(table, version)
         zm = self.zonemap(table, version)
         if zm is None:
@@ -2277,7 +2227,7 @@ class ParquetWarehouse:
 
         Consistency contract, ENFORCED: every file-level mutation that
         assembles a new state from the current files
-        (``replace_files``, ``replace_partitions``, ``compact``,
+        (``replace_files``, ``compact``,
         ``erase_subjects``) refuses while deletes are pending, because
         its commit swap would drop the sidecar and resurrect the masked
         rows. The ONE sanctioned exception is a CDC merge whose primary
@@ -2318,7 +2268,6 @@ class ParquetWarehouse:
         with self._write_fence(
             table, lock_path=self._mutation_lock_path(table)
         ):
-            self._reconcile(table)
             # both input forms land on the table columns' EXACT types so
             # the read-path equality anti-join never compares across
             # types (a string-vs-long join coerces through DOUBLE and
@@ -2609,36 +2558,6 @@ class ParquetWarehouse:
             )
             res["keys_applied"] = dm["n_keys"]
             return res
-
-    def overwrite_partitions(
-        self, df: DataFrame, table: str, partition_by: list[str]
-    ) -> None:
-        """Dynamic partition overwrite — rewrites only touched partitions.
-
-        Safe without the temp-swap only when the incoming partitions were
-        fully materialized before the write begins (Spark stages output to
-        ``_temporary`` and commits per-partition); for a CDC merge whose
-        input *reads* the same table, callers should persist/checkpoint the
-        merged result first or use ``overwrite``.
-        """
-        # in-place partition mutation KEEPS the _deletes sidecar: a
-        # re-inserted key would be silently masked — same refusal as
-        # every other state-assembling mutation (the CDC-merge fold goes
-        # through replace_files, which commits the sidecar minus the
-        # batch's keys in the same swap)
-        self._refuse_pending_deletes(table, "overwrite_partitions")
-        self._overwrite_partitions_body(df, table, partition_by)
-
-    def _overwrite_partitions_body(
-        self, df: DataFrame, table: str, partition_by: list[str]
-    ) -> None:
-        self._drop_zonemap(table)
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.path(table))
-        )
 
     def append_files(
         self,
@@ -2972,7 +2891,7 @@ class ParquetWarehouse:
 
         Runs under the table's mutation fence: compaction reads the
         live file listing and swaps directories, so a concurrent
-        ``replace_files``/``replace_partitions``/erase would be a lost
+        ``replace_files``/erase would be a lost
         update (the second swap discards the first's rows).
         """
         with self._write_fence(
@@ -3012,7 +2931,6 @@ class ParquetWarehouse:
                     f"spec's sort_by {spec['sort_by']}; rewrite through "
                     "write_bucketed to change it"
                 )
-            self._reconcile(table, writer=True)
             by_bucket: dict[int | None, list[str]] = {}
             for f in os.listdir(final):
                 if f.endswith(".parquet") and os.path.isfile(
@@ -3034,7 +2952,6 @@ class ParquetWarehouse:
                 sub, table, replaced, bucket_spec=spec
             )
             return 1
-        self._reconcile(table)
         stat_cols = None
         bloom_spec = None  # (cols, bits_per_key, k): preserve the tuning
         if not os.path.isfile(self._version_pointer(table)):
@@ -3367,8 +3284,7 @@ class ParquetWarehouse:
         data-file rewrites; the scan reads only the columns the
         predicate and key need (column pruning), not the table. The scan
         goes through ``read`` so it sees exactly what a reader sees:
-        pending tombstone cleanup applied, already-deleted keys masked
-        (not redundantly re-unioned)."""
+        already-deleted keys masked (not redundantly re-unioned)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         kcols = [key_col] if isinstance(key_col, str) else list(key_col)
         keys = (
@@ -3431,7 +3347,6 @@ class ParquetWarehouse:
         with self._write_fence(
             table, lock_path=self._mutation_lock_path(table)
         ):
-            self._reconcile(table)
             if any(
                 os.path.isdir(os.path.join(final, n))
                 for n in os.listdir(final)
@@ -3559,7 +3474,6 @@ class ParquetWarehouse:
         with self._write_fence(
             table, lock_path=self._mutation_lock_path(table)
         ):
-            self._reconcile(table)
             if any(
                 os.path.isdir(os.path.join(final, n))
                 for n in os.listdir(final)
@@ -3912,84 +3826,33 @@ class ParquetWarehouse:
         table: str,
         partition_by: list[str],
         touched: list[tuple],
-    ) -> None:
-        """Partition-scoped replace of the ``touched`` partition-value
-        tuples with ``df`` (``erase_subjects`` and the ANN-index extend
-        commit through it; the CDC merge commits through
-        ``replace_files``).
-
-        Dynamic overwrite only rewrites partitions PRESENT in ``df`` — a
-        batch that removes every row of a partition leaves the stale
-        directory behind, resurrecting deleted rows. The cleanup uses a
-        batch-identified tombstone protocol:
-
-        1. reconcile: apply any COMMITTED marker a crashed run left
-           behind; drop (without applying) a marker whose batch never
-           committed — this batch supersedes it;
-        2. atomically write ``_tombstones.json`` (temp file + rename)
-           recording {batch, committed: false, dirs} for the partition
-           dirs this batch empties;
-        3. dynamic overwrite (commits the non-empty partitions);
-        4. atomically flip the marker to committed: true;
-        5. reconcile — rmtree the tombstoned dirs, then drop the marker.
-
-        Crash windows (plain parquet dirs have no multi-partition atomic
-        commit — that is Delta's log — so the residual windows are STALE
-        reads, never torn ones): between 2 and 3 readers skip the
-        uncommitted marker and see the intact pre-batch table; between 3
-        and 4 readers see the batch's upserts plus the not-yet-removed
-        emptied partitions (stale deletes) until the batch re-runs;
-        after 4 any read/write completes the
-        cleanup. The untouched partitions' files are never read or
-        written.
-
-        SINGLE WRITER per table, ENFORCED (mutation fence): the
-        tombstone protocol heals CRASHES, not concurrent writers — two
-        concurrent replaces would interleave their dynamic overwrites
-        and tombstone markers (a read-modify-write on the partition
-        set). The second writer raises :class:`ConcurrentWriteError`.
-        """
+    ) -> dict:
+        """Partition-grain ``replace_files``: ``df`` replaces every file
+        under the ``touched`` partition-value tuples' dirs, in the same
+        fenced copy-on-write commit (a touched partition ``df`` leaves
+        empty has no dir in the new state). Dir names render as
+        ``col=value`` (NULL as Spark's default-partition sentinel), so
+        pass values whose string form is their hive dir name (integers,
+        plain strings). ``perfbench/layers.py`` traces commits under
+        this name."""
+        dirs = {
+            "/".join(
+                f"{c}=__HIVE_DEFAULT_PARTITION__" if v is None else f"{c}={v}"
+                for c, v in zip(partition_by, vals)
+            )
+            for vals in touched
+        }
         with self._write_fence(
             table, lock_path=self._mutation_lock_path(table)
         ):
-            self._replace_partitions_unlocked(df, table, partition_by, touched)
-
-    def _replace_partitions_unlocked(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str],
-        touched: list[tuple],
-    ) -> None:
-        """``replace_partitions`` body; the caller MUST hold the table's
-        mutation fence (``erase_subjects`` and the ANN extend call this
-        under their own)."""
-        self._refuse_pending_deletes(table, "replace_partitions")
-        self._drop_zonemap(table)
-        self._reconcile(table, writer=True)
-        still_present = {
-            tuple(r[c] for c in partition_by)
-            for r in df.select(*partition_by).distinct().collect()
-        }
-        emptied = []
-        for vals in touched:
-            if tuple(vals) not in still_present:
-                # hive layout; Spark writes NULL partition values as the
-                # default-partition sentinel
-                emptied.append(
-                    "/".join(
-                        f"{c}=__HIVE_DEFAULT_PARTITION__" if v is None else f"{c}={v}"
-                        for c, v in zip(partition_by, vals)
-                    )
-                )
-        batch = uuid.uuid4().hex
-        if emptied:
-            os.makedirs(self.path(table), exist_ok=True)
-            self._write_tombstone(table, batch, emptied, committed=False)
-        self._overwrite_partitions_body(df, table, partition_by)
-        if emptied:
-            self._write_tombstone(table, batch, emptied, committed=True)
-        self._reconcile(table)
+            replaced = [
+                rel
+                for rel in self._walk_parquet_rels(self.path(table))
+                if os.path.dirname(rel) in dirs
+            ]
+            return self._replace_files_unlocked(
+                df, table, replaced, partition_by
+            )
 
     def erase_subjects(
         self,
@@ -4016,18 +3879,17 @@ class ParquetWarehouse:
 
         Three storage layouts, three rewrite scopes:
 
-        - **hive-partitioned** (``partition_by`` given): one broadcast
-          semi-join scan finds the touched partition tuples. With a
-          bloom manifest covering the key, the rewrite narrows to FILE
-          grain: only the bloom-hit files anti-join and rewrite through
-          the partition-aware ``replace_files`` (rel paths address the
-          dirs — no hive value rendering — and an emptied partition
-          simply has no dir in the new state). Otherwise the
-          anti-joined remainder of the touched partitions rewrites via
-          ``replace_partitions`` (emptied partitions tombstoned and
-          removed). Untouched partitions — and with bloom, untouched
-          FILES — are never read or written: at 100 TB an erasure
-          request touches a handful of files, not the table.
+        - **hive-partitioned** (``partition_by`` given): FILE-grain
+          copy-on-write — one broadcast semi-join scan of the key
+          column collects the exact files holding a subject row
+          (``_metadata.file_path``); when a bloom manifest covering the
+          key narrows the table, its hit files are the cover instead.
+          Only the cover's files anti-join and rewrite through the
+          partition-aware ``replace_files`` (rel paths address the dirs
+          — no hive value rendering — and an emptied partition simply
+          has no dir in the new state); every other file hard-links
+          through untouched: at 100 TB an erasure request touches a
+          handful of files, not the table.
         - **versioned** (``_version.json`` present): the survivors
           commit as the next snapshot through ``overwrite_versioned``
           with ``retain`` (default 1, which prunes every pre-erasure
@@ -4047,17 +3909,15 @@ class ParquetWarehouse:
           ``write_bucketed`` instead).
         - **plain**: anti-join + the atomic temp-dir ``overwrite`` swap.
 
-        The survivor set is materialized (localCheckpoint) before any
-        rewrite that overlaps its own input files — the same
-        read-then-overwrite hazard ``overwrite_partitions`` documents.
+        Every rewrite stages into a temp dir before its swap, so reading
+        the files being replaced while writing the new ones is safe.
 
         SINGLE WRITER per table, ENFORCED: the whole read→rewrite spans
         ONE fence acquisition — a versioned erase shares the in-dir
         ``_writer.lock`` with ``overwrite_versioned`` (a snapshot
         committed between the erase's read and its republish would be
         silently PURGED with ``retain=1``); every other layout takes the
-        mutation fence shared with ``replace_files``/
-        ``replace_partitions``/``compact``.
+        mutation fence shared with ``replace_files``/``compact``.
         """
         fence = (
             self._write_fence(table)
@@ -4099,10 +3959,9 @@ class ParquetWarehouse:
                 "bucketed tables are neither versioned nor hive-partitioned"
             )
         # NOTE the map is NOT dropped up front: every mutating branch
-        # below owns its map lifecycle (replace_partitions drops it,
-        # overwrite/write_bucketed replace the whole dir, versioned
-        # snapshots carry their own, and the zone-pruned CoW path
-        # MAINTAINS it), so a refused or no-op erase keeps a valid map.
+        # below owns its map lifecycle (overwrite replaces the whole
+        # dir, versioned snapshots carry their own, and the CoW paths
+        # MAINTAIN it), so a refused or no-op erase keeps a valid map.
         current = (
             self.read_version(spark, table)
             if versioned
@@ -4117,28 +3976,13 @@ class ParquetWarehouse:
         touched_n = None
         purged: list[int] | None = None
         if partition_by:
-            touched = [
-                tuple(r[c] for c in partition_by)
-                for r in current.join(
-                    F.broadcast(subj),
-                    current[key_col] == F.col("__erase_key"),
-                    "left_semi",
-                )
-                .select(*partition_by)
-                .distinct()
-                .collect()
-            ]
-            touched_n = len(touched)
-            if touched:
-                # FILE-grain erase when a bloom manifest covers the key:
-                # random subject keys scatter across partitions, and the
-                # partition-grain rewrite below pays the whole size of
-                # every touched partition. The bloom cover bounds the
-                # rewrite to the files that can contain a subject (no
-                # false negatives = provably complete), rel paths
-                # address partition dirs directly (no hive value
-                # rendering), and the assembly swap retires emptied
-                # partitions without tombstones.
+            cover = self._subject_file_cover(current, table, key_col, subj)
+            touched_n = len({os.path.dirname(rel) for rel in cover})
+            if cover:
+                # random subject keys scatter across partitions; a bloom
+                # manifest on the key bounds the rewrite to the files
+                # that can contain a subject (no false negatives), and
+                # when it narrows the table its hit set is the cover
                 bloom_split = self.bloom_hit_split(
                     spark,
                     table,
@@ -4146,28 +3990,11 @@ class ParquetWarehouse:
                     [r["__erase_key"] for r in subj.collect()],
                 )
                 if bloom_split is not None and bloom_split[1]:
-                    self._bloom_cow_erase(
-                        spark, table, key_col, subj, bloom_split[0],
-                        partition_by,
-                    )
-                else:
-                    cond = None
-                    for vals in touched:
-                        clause = None
-                        for c, v in zip(partition_by, vals):
-                            pc = (
-                                F.col(c).isNull()
-                                if v is None
-                                else F.col(c) == v
-                            )
-                            clause = pc if clause is None else clause & pc
-                        cond = clause if cond is None else cond | clause
-                    slice_survivors = survivors.filter(cond).localCheckpoint(
-                        eager=True
-                    )
-                    self._replace_partitions_unlocked(
-                        slice_survivors, table, partition_by, touched
-                    )
+                    cover = bloom_split[0]
+                self._bloom_cow_erase(
+                    spark, table, key_col, subj, cover, current.schema,
+                    partition_by,
+                )
         elif versioned:
             held_before = set(self._load_versions(table)["versions"])
             # the republished snapshot KEEPS the erased snapshot's
@@ -4243,28 +4070,10 @@ class ParquetWarehouse:
                     and self._bucket_id_of(n) in bids
                 )
             if hit is None:
-                fps = (
-                    current.select(
-                        key_col,
-                        F.col("_metadata.file_path").alias("__fp"),
-                    )
-                    .join(
-                        F.broadcast(subj),
-                        F.col(key_col) == F.col("__erase_key"),
-                        "left_semi",
-                    )
-                    .select("__fp")
-                    .distinct()
-                    .collect()
-                )
-                hit = sorted(
-                    {
-                        self.file_rel(r["__fp"], self.path(table))
-                        for r in fps
-                    }
-                )
+                hit = self._subject_file_cover(current, table, key_col, subj)
             self._bloom_cow_erase(
-                spark, table, key_col, subj, hit, bucket_spec=spec
+                spark, table, key_col, subj, hit, current.schema,
+                bucket_spec=spec,
             )
         else:
             # Plain table: zone-pruned copy-on-write when the map covers
@@ -4309,7 +4118,8 @@ class ParquetWarehouse:
                     pruned_cover = bloom_split
             if pruned_cover is not None:
                 self._bloom_cow_erase(
-                    spark, table, key_col, subj, pruned_cover[0]
+                    spark, table, key_col, subj, pruned_cover[0],
+                    current.schema,
                 )
             else:
                 # overwrite() already stages to a temp dir, so reading
@@ -4329,6 +4139,28 @@ class ParquetWarehouse:
             "purged_versions": purged,
         }
 
+    def _subject_file_cover(
+        self, current: DataFrame, table: str, key_col: str, subj: DataFrame
+    ) -> list[str]:
+        """The exact files of ``table`` holding a subject row, as rel
+        paths: one broadcast semi-join scan that reads only the key
+        column and ``_metadata.file_path``."""
+        fps = (
+            current.select(
+                key_col, F.col("_metadata.file_path").alias("__fp")
+            )
+            .join(
+                F.broadcast(subj),
+                F.col(key_col) == F.col("__erase_key"),
+                "left_semi",
+            )
+            .select("__fp")
+            .distinct()
+            .collect()
+        )
+        base = self.path(table)
+        return sorted({self.file_rel(r["__fp"], base) for r in fps})
+
     def _bloom_cow_erase(
         self,
         spark: SparkSession,
@@ -4336,6 +4168,7 @@ class ParquetWarehouse:
         key_col: str,
         subj: DataFrame,
         hit: list[str],
+        schema: StructType,
         partition_by: list[str] | None = None,
         bucket_spec: dict | None = None,
     ) -> None:
@@ -4344,11 +4177,13 @@ class ParquetWarehouse:
         anti-join the hit files' rows against the subjects and commit
         through the (fence-held) ``_replace_files_unlocked`` —
         bucket-preserving when ``bucket_spec`` rides along. ``hit ==
-        []`` means no file can hold a subject — nothing to do."""
+        []`` means no file can hold a subject — nothing to do.
+        ``schema`` is the table's read schema: it pins the partition
+        column types (inference over a subset of dirs could differ)."""
         if not hit:
             return
         base = self.path(table)
-        sub = spark.read.option("basePath", base).parquet(
+        sub = spark.read.schema(schema).option("basePath", base).parquet(
             *[os.path.join(base, rel) for rel in hit]
         )
         sub_survivors = sub.join(
@@ -4360,14 +4195,6 @@ class ParquetWarehouse:
             sub_survivors, table, hit, partition_by,
             bucket_spec=bucket_spec,
         )
-
-    def _write_tombstone(
-        self, table: str, batch: str, dirs: list[str], committed: bool
-    ) -> None:
-        tmp = self._tombstone_path(table) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"batch": batch, "committed": committed, "dirs": dirs}, f)
-        os.replace(tmp, self._tombstone_path(table))
 
     # ------------------------------------------------------------------
     # Versioned snapshots (time travel)
@@ -4399,8 +4226,8 @@ class ParquetWarehouse:
 
     def _mutation_lock_path(self, table: str) -> str:
         """Lock path for fenced mutations that REPLACE the table
-        directory (``replace_files``/``replace_partitions``/``compact``/
-        non-versioned ``erase_subjects``). The lock must live OUTSIDE
+        directory (``replace_files``/``compact``/non-versioned
+        ``erase_subjects``). The lock must live OUTSIDE
         the table dir: ``_commit_swap`` renames the whole directory
         away, which would displace an in-dir lock mid-fence — a second
         writer could then acquire a fresh in-dir lock that the first
@@ -4896,7 +4723,6 @@ class ParquetWarehouse:
                         f"member {t!r} is versioned — its snapshots are "
                         "already immutable; commit it with commit_group"
                     )
-                self._reconcile(t)
                 # a member's pending merge-on-read deletes ride INTO the
                 # snapshot (manifest copy + hard-linked key parquet), so
                 # the group boundary captures the masked view instead of

@@ -71,7 +71,8 @@ def start_ann_ingest_stream(
     micro-batch would be exactly the write amplification a stream
     cannot afford). Append's crash window — a prefix of a batch's
     files landed — is healed by this stream's own anti-join on replay;
-    ``"rewrite"`` keeps the tombstone-protocol partition replace.
+    ``"rewrite"`` commits each batch copy-on-write through
+    ``replace_files``.
 
     ``compact_every``: append mode accretes one file per touched list
     per batch, so every N-th batch runs the standard leaf repack on the

@@ -419,9 +419,25 @@ def test_append_mode_extend(spark, emb, tmp_path_factory):
                     out[os.path.relpath(p, root)] = os.stat(p).st_ino
         return out
 
+    # a 3-vector batch first, so rewrite mode leaves lists untouched
+    few = odd.orderBy("vec_id").limit(3)
+    before_r = inodes(whr)
+    r1 = AI.extend_ann_index(whr, spark, few, "idx")
+    assert len(r1["touched_lists"]) < len({r.split("/")[0] for r in before_r})
+    after_r = inodes(whr)
+    touched = {f"list_id={t}" for t in r1["touched_lists"]}
+    for rel, ino in before_r.items():
+        if rel.split("/")[0] in touched:
+            assert rel not in after_r, f"rewrite mode kept {rel}"
+        else:
+            assert after_r.get(rel) == ino, f"rewrite mode replaced {rel}"
+
     before = inodes(wha)
-    r1 = AI.extend_ann_index(whr, spark, odd, "idx")
-    r2 = AI.extend_ann_index(wha, spark, odd, "idx", mode="append")
+    r2 = AI.extend_ann_index(wha, spark, few, "idx", mode="append")
+    assert r1 == r2
+    rest = odd.join(few, "vec_id", "left_anti")
+    r1 = AI.extend_ann_index(whr, spark, rest, "idx")
+    r2 = AI.extend_ann_index(wha, spark, rest, "idx", mode="append")
     assert r1["added"] == r2["added"] and r1["touched_lists"] == r2["touched_lists"]
     after = inodes(wha)
     # EVERY pre-extend file survives untouched in append mode
@@ -442,6 +458,50 @@ def test_append_mode_extend(spark, emb, tmp_path_factory):
     wha.compact(spark, "idx", target_file_bytes=1 << 30)
     assert content(wha) == want
     assert len(inodes(wha)) < len(after)
+
+
+def test_rewrite_extend_crash_at_commit_swap(
+    spark, emb, tmp_path_factory, monkeypatch
+):
+    """Rewrite mode commits through replace_files' staged swap: a crash
+    at the swap leaves the index exactly as it was (same files, same
+    inodes, same rows, no staging dir), and the rerun adds each vec_id
+    exactly once."""
+    wh = ParquetWarehouse(str(tmp_path_factory.mktemp("annwh_crash")))
+    even = emb.filter(F.col("vec_id") % 2 == 0)
+    odd = emb.filter(F.col("vec_id") % 2 == 1)
+    AI.build_ann_index(wh, even, "idx", n_lists=4, m=8, k=16)
+    root = wh.path("idx")
+
+    def inodes():
+        return {
+            os.path.relpath(os.path.join(dp, fn), root): os.stat(
+                os.path.join(dp, fn)
+            ).st_ino
+            for dp, _, fns in os.walk(root)
+            for fn in fns
+            if fn.endswith(".parquet")
+        }
+
+    before = inodes()
+    n_before = wh.read(spark, "idx").count()
+
+    def boom(self, *a, **kw):
+        raise RuntimeError("injected crash in the commit swap")
+
+    monkeypatch.setattr(ParquetWarehouse, "_commit_swap", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        AI.extend_ann_index(wh, spark, odd, "idx")
+    monkeypatch.undo()
+
+    assert inodes() == before
+    assert wh.read(spark, "idx").count() == n_before
+    assert not [n for n in os.listdir(wh.root) if n.startswith(".tmp-")]
+
+    res = AI.extend_ann_index(wh, spark, odd, "idx")
+    assert res["added"] == odd.count()
+    ids = [r.vec_id for r in wh.read(spark, "idx").select("vec_id").collect()]
+    assert len(ids) == len(set(ids)) == emb.count()
 
 
 def test_append_mode_refusals(spark, emb, tmp_path_factory):

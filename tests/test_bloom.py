@@ -8,7 +8,7 @@ Pins:
   the pruned read returns exactly the unpruned result (this is what
   makes bloom-pruned ERASURE correct, not merely fast);
 - real pruning: a single probe key hits ~1 of N scattered files;
-- lifecycle: in-place mutations drop the manifest, replace_files
+- lifecycle: leaf compaction drops the manifest, replace_files
   MAINTAINS it (carried entries verbatim, new files recomputed), and a
   stale manifest refuses loudly instead of mis-pruning;
 - erase_subjects rewrites only the bloom-hit files (inode-carry proof)
@@ -295,8 +295,7 @@ def test_partitioned_bloom_build_and_point_lookup(spark, tmp_path):
 
 
 def test_partitioned_erase_is_file_grain(spark, tmp_path):
-    """Random subject keys in a partitioned table: the partition-grain
-    path would rewrite every touched partition ENTIRELY; with a bloom
+    """Random subject keys in a partitioned table: with a bloom
     manifest only the hit files rewrite — miss files keep their inodes
     even inside touched partitions, and the manifest stays exact."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
@@ -329,14 +328,51 @@ def test_partitioned_erase_is_file_grain(spark, tmp_path):
     assert got == {500}
 
 
-def test_partitioned_erase_without_bloom_keeps_partition_grain(spark, tmp_path):
+def test_partitioned_erase_without_bloom_is_file_grain(spark, tmp_path):
+    """No bloom manifest: the erase's semi-join scan finds the exact
+    files holding a subject row and only those rewrite — every other
+    file keeps its inode, including files inside touched partitions,
+    an emptied partition's dir is gone, and a zone map on the table is
+    maintained over exactly the committed files."""
+    import pyarrow.parquet as pq
+
     wh = ParquetWarehouse(str(tmp_path / "wh"))
-    wh.overwrite(_partitioned_scattered(spark, 400), "t", partition_by=["part"])
-    subjects = spark.createDataFrame([(7,), (21,)], "k long")
-    res = wh.erase_subjects(spark, "t", "pk", subjects, partition_by=["part"])
-    assert res["rows_erased"] == 2
-    assert res["touched_partitions"] is not None
-    assert wh.read(spark, "t").filter(F.col("pk").isin([7, 21])).count() == 0
+    df = _partitioned_scattered(spark, 400)
+    wh.overwrite(
+        df.repartition(4, "bucket"), "t", partition_by=["part"],
+        stat_cols=["pk"],
+    )
+    # pk 7 (part 1), pk 14 (part 2), and every row of part 3
+    subjects = {7, 14} | {
+        r.pk for r in df.filter(F.col("part") == 3).select("pk").collect()
+    }
+    base = wh.path("t")
+    before = _inodes_recursive(base)
+
+    def pks(rel):
+        tbl = pq.read_table(os.path.join(base, rel), columns=["pk"])
+        return set(tbl.column("pk").to_pylist())
+
+    holding = {rel for rel in before if pks(rel) & subjects}
+    res = wh.erase_subjects(
+        spark, "t", "pk",
+        spark.createDataFrame([(k,) for k in sorted(subjects)], "k long"),
+        partition_by=["part"],
+    )
+    assert res["rows_erased"] == len(subjects) == 102
+    assert res["touched_partitions"] == 3
+    after = _inodes_recursive(base)
+    carried = {rel for rel in before if rel not in holding}
+    for rel in carried:
+        assert after.get(rel) == before[rel], f"file {rel} was rewritten"
+    assert any(
+        rel.startswith(("part=1/", "part=2/")) for rel in carried
+    ), "no file inside a touched partition was carried"
+    assert not any(rel in after for rel in holding)
+    assert not os.path.isdir(os.path.join(base, "part=3"))
+    assert set(wh.zonemap("t")["files"]) == set(after)
+    assert wh.read(spark, "t").filter(F.col("pk").isin(subjects)).count() == 0
+    assert wh.read(spark, "t").count() == 400 - 102
 
 
 # ---------------------------------------------------------------- #

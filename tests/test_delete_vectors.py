@@ -10,7 +10,7 @@ Pins:
   tables are accepted (mask + bucket-preserving materialization,
   tests/test_bucket_gdpr.py);
 - every state-assembling mutation (CDC merge, replace_files, compact,
-  replace_partitions, erase_subjects, commit_group_linked) refuses
+  erase_subjects, commit_group_linked) refuses
   while deletes are pending — their commit swap would drop the sidecar
   and resurrect the masked rows;
 - materialize_deletes rewrites ONLY the files holding pending keys
@@ -322,16 +322,6 @@ def test_delete_dataframe_keys_cast_to_column_type(spark, tmp_path):
         wh.delete_keys(
             spark, "t", "pk",
             spark.createDataFrame([("not-a-number",)], "k string"),
-        )
-
-
-def test_overwrite_partitions_refuses_while_pending(spark, tmp_path):
-    wh = ParquetWarehouse(str(tmp_path / "wh"))
-    wh.overwrite(_rows(spark), "p", partition_by=["bucket"])
-    wh.delete_keys(spark, "p", "pk", [10])
-    with pytest.raises(ValueError, match="pending merge-on-read deletes"):
-        wh.overwrite_partitions(
-            _rows(spark, n=10), "p", partition_by=["bucket"]
         )
 
 

@@ -407,7 +407,7 @@ def test_run_queue_maintenance_integration(spark, tmp_path):
 
 
 def test_run_maintenance_rebuilds_dropped_zonemap(spark, tmp_path):
-    """A partition-scoped rewrite drops the zone map by design; the
+    """Leaf compaction drops the zone map by design; the
     scheduler rebuilds it from the table's DECLARED stat_cols so the
     hybrid merge scope isn't blind until a human remembers."""
     from example_dms_dataexport_spark.maintenance import (
@@ -418,7 +418,7 @@ def test_run_maintenance_rebuilds_dropped_zonemap(spark, tmp_path):
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite(_rows(spark), "t", partition_by=["bucket"])
     wh.write_zonemap(spark, "t", ["pk"])
-    wh._drop_zonemap("t")  # what replace_partitions does mid-sync
+    wh._drop_zonemap("t")  # what compact does before its rewrite
     assert wh.zonemap("t") is None
     acts = run_maintenance(
         spark, wh, ["t"], MaintenancePolicy(),
@@ -545,10 +545,10 @@ def test_full_load_declared_bloom_cols(spark, tmp_path):
 
 
 def test_run_maintenance_rebuilds_dropped_bloom(spark, tmp_path):
-    """A partition-scoped rewrite drops the Bloom manifest by design
+    """Leaf compaction drops the Bloom manifest by design
     (stale must fail loudly); until round 13 nothing ever rebuilt it,
-    so file-grain GDPR erasure silently degraded to partition-grain
-    rewrites forever after. The scheduler now rebuilds from the
+    so bloom-pruned erasure and delete discovery silently fell back to
+    full key-column scans forever after. The scheduler now rebuilds from the
     DECLARED bloom_cols, and the next erase provably takes the
     FILE-grain cover (untouched files inside a touched partition keep
     their inodes — a partition-grain rewrite would replace them)."""
@@ -563,7 +563,7 @@ def test_run_maintenance_rebuilds_dropped_bloom(spark, tmp_path):
     # bloom-prunable
     wh.overwrite(_rows(spark, n=4000, files=4), "t", partition_by=["bucket"])
     wh.write_bloom(spark, "t", ["pk"])
-    wh._drop_zonemap("t")  # what replace_partitions does mid-sync
+    wh._drop_zonemap("t")  # what compact does before its rewrite
     assert wh.bloom("t") is None
     lay = {"t": {"partition_by": ["bucket"], "bloom_cols": ["pk"]}}
     acts = run_maintenance(spark, wh, ["t"], MaintenancePolicy(), layouts=lay)
@@ -597,7 +597,7 @@ def test_run_maintenance_rebuilds_dropped_bloom(spark, tmp_path):
     ]
     assert carried_in_touched, (
         "no file inside the touched partition was carried — the erase "
-        "fell back to the partition-grain rewrite (bloom cover unused)"
+        "rewrote the whole touched partition"
     )
     assert 7 not in {r.pk for r in wh.read(spark, "t").collect()}
 

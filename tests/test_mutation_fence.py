@@ -1,7 +1,7 @@
 """Writer fences for the swap-based table mutations.
 
-Round-10 verdict: ``replace_files``/``replace_partitions``/
-``erase_subjects``/``compact`` were read-modify-writes outside any
+Round-10 verdict: ``replace_files``/``erase_subjects``/``compact``
+were read-modify-writes outside any
 fence — two concurrent zone-scoped merges would both list the ORIGINAL
 file set and the second commit would silently discard the first's rows
 (the lost-update shape ``commit_group`` was fenced against in round 9,
@@ -91,17 +91,16 @@ def test_replace_files_stale_listing_fails_loudly(spark, tmp_path):
     } == rows_after_a
 
 
-def test_replace_partitions_second_writer_raises(spark, tmp_path):
+def test_erase_subjects_partitioned_second_writer_raises(spark, tmp_path):
     wh = ParquetWarehouse(str(tmp_path / "wh"))
-    df = _df(spark, 40)
-    wh.overwrite(df, "p", partition_by=["val"])
+    wh.overwrite(_df(spark, 40), "p", partition_by=["val"])
+    subjects = spark.createDataFrame([(2,), (22,)], "k long")
     with wh._write_fence("p", lock_path=wh._mutation_lock_path("p")):
         with pytest.raises(ConcurrentWriteError, match="another writer"):
-            wh.replace_partitions(
-                df.filter("val = 1"), "p", ["val"], [(1,)]
-            )
-    wh.replace_partitions(df.filter("val = 1"), "p", ["val"], [(1,)])
-    assert wh.read(spark, "p").count() == 40
+            wh.erase_subjects(spark, "p", "pk", subjects, partition_by=["val"])
+    res = wh.erase_subjects(spark, "p", "pk", subjects, partition_by=["val"])
+    assert res["rows_erased"] == 2
+    assert wh.read(spark, "p").count() == 38
     assert not os.path.exists(wh._mutation_lock_path("p"))
 
 

@@ -5,11 +5,12 @@ Target partitioned by a stable column (``region``, immutable per PK):
 - a batch touching one region must leave the other regions' parquet
   files untouched on disk (same paths, same mtimes);
 - a batch deleting every row of a region must remove its directory
-  (the dynamic-overwrite stale-partition trap).
+  (a stale partition dir would resurrect the deleted rows).
 """
 
 import os
 
+import pytest
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -108,79 +109,54 @@ def test_emptied_partition_directory_removed(spark, tmp_path):
     assert got == {0, 1, 3, 4, 6, 7}
 
 
-def test_crash_between_overwrite_and_cleanup_heals(spark, tmp_path, monkeypatch):
-    # The tombstone protocol of replace_partitions (erase_subjects and
-    # the ANN extend commit through it). Simulate a crash AFTER the
-    # dynamic overwrite committed but BEFORE the emptied-partition
-    # cleanup ran: the tombstone marker must survive and the next reader
-    # must not resurrect the deleted rows.
+def test_replace_partitions_is_copy_on_write(spark, tmp_path):
+    # replace_partitions is a partition-grain replace_files: the touched
+    # partition's files are replaced (an emptied one loses its dir in
+    # the same swap) and every other file keeps its mtime.
     stage, store, wh, tdir = _setup(spark, tmp_path)
-    # every region-c row (ids 2,5,8) is deleted: the touched partition's
-    # replacement is empty
+    before = _snapshot(wh.path("t"))
     survivors = wh.read(spark, "t").filter(
         "region = 'c' AND id NOT IN (2, 5, 8)"
     )
+    res = wh.replace_partitions(survivors, "t", ["region"], [("c",)])
+    assert res["files_new"] == 0 and res["files_replaced"] >= 1
+    assert not os.path.isdir(os.path.join(wh.path("t"), "region=c"))
+    after = _snapshot(wh.path("t"))
+    assert after == {p: m for p, m in before.items() if "region=c" not in p}
+    got = {r["id"] for r in wh.read(spark, "t").collect()}
+    assert got == {0, 1, 3, 4, 6, 7}
 
-    monkeypatch.setattr(
-        ParquetWarehouse, "_reconcile", lambda self, table, writer=False: None
-    )
-    wh.replace_partitions(survivors, "t", ["region"], [("c",)])
+
+def test_partitioned_erase_crash_at_commit_swap(spark, tmp_path, monkeypatch):
+    # A partitioned erase (no bloom manifest) commits copy-on-write
+    # through replace_files. A crash at the commit swap must leave the
+    # pre-erase table readable in full — no emptied partition lost, no
+    # staging dir left behind — and a rerun must erase completely.
+    stage, store, wh, tdir = _setup(spark, tmp_path)
+    # every region-c row (ids 2,5,8) plus one region-a row (id 0)
+    subjects = spark.createDataFrame([(0,), (2,), (5,), (8,)], "k long")
+    before = _snapshot(wh.path("t"))
+
+    def boom(self, *a, **kw):
+        raise RuntimeError("injected crash in the commit swap")
+
+    monkeypatch.setattr(ParquetWarehouse, "_commit_swap", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        wh.erase_subjects(spark, "t", "id", subjects, partition_by=["region"])
     monkeypatch.undo()
 
-    # crash state: stale region=c dir still on disk, tombstone pending
+    assert _snapshot(wh.path("t")) == before
     assert os.path.isdir(os.path.join(wh.path("t"), "region=c"))
-    assert os.path.isfile(os.path.join(wh.path("t"), "_tombstones.json"))
-
-    # "re-open" the warehouse: the read reconciles, deleted rows stay dead
-    wh2 = ParquetWarehouse(str(tmp_path / "wh"))
-    got = {r["id"] for r in wh2.read(spark, "t").collect()}
-    assert got == {0, 1, 3, 4, 6, 7}
-    assert not os.path.isdir(os.path.join(wh.path("t"), "region=c"))
-    assert not os.path.isfile(os.path.join(wh.path("t"), "_tombstones.json"))
-
-
-def test_uncommitted_tombstone_not_applied_on_read(spark, tmp_path):
-    # A marker whose batch never committed (crash between the tombstone
-    # write and the dynamic overwrite) must NOT delete partitions on read:
-    # the batch's upserts are absent, so applying its deletes would be a
-    # torn state. Readers keep the intact pre-batch table; the next writer
-    # drops the stale marker without applying it.
-    import json
-
-    stage, store, wh, tdir = _setup(spark, tmp_path)
-    wh._write_tombstone(
-        "t", batch="deadbeef", dirs=["region=c"], committed=False
-    )
-
     got = {r["id"] for r in wh.read(spark, "t").collect()}
-    assert got == set(range(9))  # region=c rows (2,5,8) still alive
-    assert os.path.isdir(os.path.join(wh.path("t"), "region=c"))
-    tp = os.path.join(wh.path("t"), "_tombstones.json")
-    assert os.path.isfile(tp)  # reader leaves the pending marker in place
+    assert got == set(range(9))
+    assert not [n for n in os.listdir(wh.root) if n.startswith(".tmp-")]
+    assert not os.path.exists(wh._mutation_lock_path("t"))
 
-    # next batch (the writer path) supersedes the abandoned marker
-    (tdir / "20240102-000000001.csv").write_text("U,0,a,999\n")
-    incremental_load(spark, store, wh, "sch/tbl", partition_by=["region"])
-    got = {r["id"]: r["val"] for r in wh.read(spark, "t").collect()}
-    assert got[0] == 999 and 2 in got and 5 in got and 8 in got
-    if os.path.isfile(tp):  # any marker left must be this batch's, committed
-        with open(tp) as f:
-            assert json.load(f)["committed"]
-
-
-def test_legacy_list_tombstone_still_applied(spark, tmp_path):
-    # Markers written by the previous (bare-list) format are treated as
-    # committed and applied on read.
-    import json
-
-    stage, store, wh, tdir = _setup(spark, tmp_path)
-    tp = os.path.join(wh.path("t"), "_tombstones.json")
-    with open(tp, "w") as f:
-        json.dump(["region=c"], f)
+    res = wh.erase_subjects(spark, "t", "id", subjects, partition_by=["region"])
+    assert res["rows_erased"] == 4 and res["touched_partitions"] == 2
     got = {r["id"] for r in wh.read(spark, "t").collect()}
-    assert got == {0, 1, 3, 4, 6, 7}
+    assert got == {1, 3, 4, 6, 7}
     assert not os.path.isdir(os.path.join(wh.path("t"), "region=c"))
-    assert not os.path.isfile(tp)
 
 
 def test_null_partition_value_not_dropped(spark, tmp_path):

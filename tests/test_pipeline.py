@@ -864,7 +864,7 @@ def test_group_commit_fence_blocks_second_writer(spark, tmp_path):
 def test_erase_subjects_partitioned_scoped_rewrite(spark, tmp_path):
     """GDPR erasure EXECUTION on a hive-partitioned table: only touched
     partitions rewrite (untouched parquet mtimes unchanged), a partition
-    emptied by the erasure is removed (tombstone protocol), and the
+    emptied by the erasure is removed in the same atomic swap, and the
     re-audit finds zero subject rows."""
     import os
     import time
@@ -1380,34 +1380,6 @@ def test_layout_validation_fails_loudly():
         ).layout()
         == {}
     )
-
-
-def test_zonemap_rebuild_reconciles_pending_tombstones(spark, tmp_path):
-    """write_zonemap after a replace_partitions crash (committed
-    tombstone, dirs not yet reaped) must reap FIRST — a map indexing a
-    tombstoned dir would resurrect deleted rows in pruned reads."""
-    import json as _json
-
-    from example_dms_dataexport_spark.sources.warehouse import (
-        TOMBSTONE_FILE,
-    )
-
-    wh = ParquetWarehouse(str(tmp_path / "wh"))
-    df = spark.range(40).select(
-        F.col("id").alias("k"), (F.col("id") % 4).alias("p")
-    )
-    wh.overwrite(df, "rt", partition_by=["p"])
-    # simulate the crash window: batch committed, cleanup never ran
-    with open(os.path.join(wh.path("rt"), TOMBSTONE_FILE), "w") as f:
-        _json.dump(
-            {"batch": "b1", "committed": True, "dirs": ["p=3"]}, f
-        )
-    wh.write_zonemap(spark, "rt", ["k"])
-    assert not os.path.isdir(os.path.join(wh.path("rt"), "p=3"))
-    zm = wh.zonemap("rt")
-    assert not any("p=3" in rel for rel in zm["files"])
-    got = wh.read_zoned(spark, "rt", "k", lo=0, hi=100).collect()
-    assert {r.p for r in got} == {0, 1, 2}  # p=3 rows stayed deleted
 
 
 def test_compact_noop_keeps_zonemap(spark, tmp_path):
