@@ -1,26 +1,37 @@
 """Parquet warehouse — the target-table store (Snowflake-side analogue).
 
 The reference's targets are Snowflake tables written by COPY INTO / MERGE.
-Here a warehouse is a directory of parquet tables with two write modes:
+Here a warehouse is a directory of parquet tables committed five ways:
 
-- ``overwrite``: atomic full replace — same idempotency contract as the
-  reference's TRUNCATE + COPY INTO (ref :238-243); re-running a full load
-  can never leave a partial table.
-- ``replace_files``: copy-on-write file replace — only the named files
+- full-state stage + swap: ``overwrite``, ``write_bucketed``,
+  ``recluster`` and ``rebucket`` write a complete new table state
+  (data plus every sidecar) into a temp dir through ONE stager
+  (``_stage_state``) and promote it with an atomic directory swap —
+  the reference's idempotent TRUNCATE + COPY INTO (ref :238-243); a
+  re-run full load can never leave a partial table.
+- file-subset ``replace_files``: copy-on-write — only the named files
   are rewritten; every other file (hive partition dirs included)
-  hard-links into the new state, which commits through the same atomic
-  swap. This is the 100 TB path for CDC merges and erasures: a batch
-  rewrites only the files that can hold its keys (SURVEY §7.3
-  hard-part a).
+  hard-links into the new state, which commits through the same
+  swap. The 100 TB path for CDC merges and erasures: a batch rewrites
+  only the files that can hold its keys (SURVEY §7.3 hard-part a).
+- ``append_files``: new files rename into the live dir, manifests
+  extend by one immutable segment.
+- versioned snapshots: ``overwrite_versioned`` stages through the same
+  stager and renames the result to an immutable ``_vNNNNN`` dir, then
+  flips the ``_version.json`` pointer.
+- group commits: ``commit_group``/``commit_group_linked`` flip one
+  group pointer over per-table snapshots.
 
 The read→merge→overwrite cycle on one table would otherwise race with
 itself (Spark reads lazily while the job overwrites the same files), so
-both modes write to a temp directory first and atomically swap
-(SURVEY §7.3 hard-part b).
+every data write stages first and promotes atomically (SURVEY §7.3
+hard-part b); every JSON sidecar or pointer lands through
+``_write_json_atomic`` (temp + ``os.replace``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
@@ -143,7 +154,8 @@ class ParquetWarehouse:
         bloom_cols: list[str] | None = None,
         carry_deletes_intact: bool = False,
     ) -> None:
-        """Full atomic replace: materialize to temp dir, swap, drop old.
+        """Full atomic replace: stage the complete new state
+        (``_stage_state``), swap, drop old.
 
         ``carry_deletes_intact`` copies the pending ``_deletes`` sidecar
         (keys + manifest, original compliance ``ts``) into the staged
@@ -154,10 +166,10 @@ class ParquetWarehouse:
         full replace normally defines a complete new state that
         supersedes the pending set.
 
-        ``meta`` (JSON-serializable) is written into the temp directory
-        BEFORE the swap, so it commits atomically with the data — the
-        hook exactly-once consumers use to record the identity of the
-        batch a table state includes (``read_meta``).
+        ``meta`` (JSON-serializable) stages WITH the data, so it commits
+        atomically with it — the hook exactly-once consumers use to
+        record the identity of the batch a table state includes
+        (``read_meta``).
 
         ``cluster_by`` range-partitions and sorts the data on the given
         columns before writing, so each parquet file (and each row group
@@ -173,18 +185,13 @@ class ParquetWarehouse:
         ~|files|^(1/n_cols) of the value range per file, so range filters
         on ANY of them skip files (partitioning.zorder_key).
 
-        ``stat_cols`` additionally builds a per-file min/max ZONE MAP
-        over those columns (one pass over the just-written temp dir) and
-        commits it atomically with the data — ``read_zoned`` then prunes
-        whole files at planning time. Pair with ``cluster_by`` on the
-        same column so the bands are narrow.
-
-        ``bloom_cols`` likewise builds the per-file Bloom manifest over
-        the temp dir and commits it atomically with the data — the
-        layout-contract path for tables whose declared layout names
-        ``bloom_cols`` (point-lookup pruning for GDPR erasure and MOR
-        delete discovery survives every full rewrite instead of waiting
-        for a manual ``write_bloom``).
+        ``stat_cols`` additionally stages a per-file min/max ZONE MAP
+        over those columns — ``read_zoned`` then prunes whole files at
+        planning time; pair with ``cluster_by`` on the same column so
+        the bands are narrow. ``bloom_cols`` likewise stages the
+        per-file Bloom manifest, so point-lookup pruning for GDPR
+        erasure and MOR delete discovery survives every full rewrite
+        instead of waiting for a manual ``write_bloom``.
 
         A BUCKETED table keeps its layout through a full replace: the
         new state stages through the bucket-preserving writer and
@@ -204,67 +211,139 @@ class ParquetWarehouse:
                 "the layout through write_bucketed"
             )
         df = self._apply_layout(df, cluster_by, zorder_by, cluster_partitions)
-        final = self.path(table)
-        tmp = os.path.join(self.root, f".tmp-{table}-{uuid.uuid4().hex}")
-        if bspec is not None:
-            self._stage_bucketed(df, tmp, bspec)
-            if not any(
-                n.endswith(".parquet") for n in os.listdir(tmp)
-            ):
+        with self._staging(table) as tmp:
+            staged = self._stage_state(
+                df, tmp, partition_by=partition_by, bucket_spec=bspec,
+                meta=meta, stat_cols=stat_cols, bloom_cols=bloom_cols,
+            )
+            if bspec is not None and not staged:
                 # the bucketed writer emits NO file for an empty frame;
                 # committing the dir would wedge every read on a
                 # schema-less table — same refusal as the replace path
-                shutil.rmtree(tmp, ignore_errors=True)
                 raise ValueError(
                     f"overwrite would empty bucketed table {table!r} — "
                     "rewrite the complete (empty) state through "
                     "write_bucketed instead"
                 )
-            with open(os.path.join(tmp, BUCKET_SPEC_FILE), "w") as f:
-                json.dump(bspec, f)
-        else:
-            # NO implicit rebalance: overwrite callers own the frame's
-            # layout (cluster_by/zorder_by here, or a deliberate
-            # pre-repartition like q139's subject-key hash slices, the
-            # file-grain-pruning fixture shape); callers that want
-            # dir-clustered advisory-sized files opt in with a
-            # ``hint("rebalance", *partition_by)`` (build_ann_index does)
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(tmp)
-        if meta is not None:
-            with open(os.path.join(tmp, META_FILE), "w") as f:
-                json.dump(meta, f)
-        if stat_cols:
-            # computed over the tmp dir (page-cache warm) and committed
-            # atomically WITH the data by the swap below — the manifest
-            # can never describe a different table state than it sits in
-            zm = self._compute_zonemap(df.sparkSession, tmp, stat_cols)
-            with open(os.path.join(tmp, ZONEMAP_FILE), "w") as f:
-                json.dump(zm, f)
-        if bloom_cols:
-            # same atomicity contract as the zone map: rel paths inside
-            # the manifest are tmp-relative, which stay valid verbatim
-            # after the swap renames tmp to the table dir
-            bm = self._compute_bloom(df.sparkSession, tmp, bloom_cols)
-            with open(os.path.join(tmp, BLOOM_FILE), "w") as f:
-                json.dump(bm, f)
-        if carry_deletes_intact and (dm := self.pending_deletes(table)):
-            ndir = f"{DELETES_DIR}-{uuid.uuid4().hex}"
-            shutil.copytree(self._deletes_dir(table, dm),
-                            os.path.join(tmp, ndir))
-            with open(os.path.join(tmp, DELETES_FILE), "w") as f:
-                json.dump(
+            if carry_deletes_intact and (dm := self.pending_deletes(table)):
+                ndir = f"{DELETES_DIR}-{uuid.uuid4().hex}"
+                shutil.copytree(self._deletes_dir(table, dm),
+                                os.path.join(tmp, ndir))
+                self._write_json_atomic(
+                    os.path.join(tmp, DELETES_FILE),
                     self._deletes_manifest(
                         self._delete_key_cols(dm), dm["n_keys"], ndir,
                         ts=dm.get("ts"),
                     ),
-                    f,
                 )
-        self._commit_swap(tmp, final, table)
+            self._commit_swap(tmp, self.path(table), table)
         if bspec is not None:
             self._refresh_bucketed_catalog(df.sparkSession, table)
+
+    @contextlib.contextmanager
+    def _staging(self, table: str):
+        """Yield a fresh ``.tmp-<table>-<uuid hex>`` staging path in the
+        warehouse root and remove it on exit — after a promote it is
+        already gone, after a failure nothing staged is left behind (a
+        hard crash leaves a name ``vacuum``'s orphan pattern sweeps)."""
+        tmp = os.path.join(self.root, f".tmp-{table}-{uuid.uuid4().hex}")
+        try:
+            yield tmp
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    def _stage_state(
+        self,
+        df: DataFrame,
+        tmp: str,
+        *,
+        partition_by: list[str] | None = None,
+        bucket_spec: dict | None = None,
+        meta: dict | None = None,
+        stat_cols: list[str] | None = None,
+        bloom_cols: list[str] | None = None,
+    ) -> list[str]:
+        """Write one COMPLETE table state into ``tmp`` for the caller to
+        promote — the single staging path of every full-state writer
+        (``overwrite``, ``write_bucketed``, ``recluster``, ``rebucket``,
+        ``overwrite_versioned``). Returns the staged parquet rel paths.
+
+        Data goes through the bucket-preserving writer when
+        ``bucket_spec`` is set (plus ``_bucket_spec.json`` recording the
+        frame's schema, so a committed-EMPTY bucketed state stays
+        readable in a fresh session), else the flat/hive writer with NO
+        implicit rebalance: callers own the frame's layout (cluster_by/
+        zorder_by, q139's subject-key hash slices) and opt in with a
+        ``hint("rebalance", *partition_by)`` where wanted
+        (build_ann_index does).
+
+        ``meta`` lands as ``_meta.json``; the zone map (``stat_cols``)
+        and Bloom manifest (``bloom_cols``) compute over ``tmp``, whose
+        rel paths stay valid through the promote, so a manifest never
+        describes a different state than the one it commits with. An
+        empty bucketed stage emits NO file, so neither pass could infer
+        a schema: its manifests are the exact empty ones (``files: {}``
+        zone map, schema-only Bloom manifest)."""
+        spark = df.sparkSession
+        if bucket_spec is not None:
+            self._stage_bucketed(df, tmp, bucket_spec)
+            self._write_json_atomic(
+                os.path.join(tmp, BUCKET_SPEC_FILE),
+                {**bucket_spec, "schema": df.schema.jsonValue()},
+            )
+        else:
+            w = df.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(tmp)
+        staged = self._walk_parquet_rels(tmp)
+        empty = bucket_spec is not None and not staged
+        if meta is not None:
+            self._write_json_atomic(os.path.join(tmp, META_FILE), meta)
+        if stat_cols:
+            zm = (
+                {"stat_cols": list(stat_cols), "files": {}}
+                if empty
+                else self._compute_zonemap(spark, tmp, stat_cols)
+            )
+            self._write_json_atomic(os.path.join(tmp, ZONEMAP_FILE), zm)
+        if bloom_cols:
+            if empty:
+                parts = dict.fromkeys(
+                    p for s in bloom_cols for p in self._bloom_spec_parts(s)
+                )
+                bm = {
+                    "cols": list(bloom_cols),
+                    "k": BLOOM_K,
+                    "bits_per_key": BLOOM_BITS_PER_KEY,
+                    "schema": df.select(*parts).schema.jsonValue(),
+                    "files": {},
+                }
+            else:
+                bm = self._compute_bloom(spark, tmp, bloom_cols)
+            self._write_json_atomic(os.path.join(tmp, BLOOM_FILE), bm)
+        return staged
+
+    @staticmethod
+    def _footer_rows(data_dir: str, rels: list[str]) -> list[int]:
+        """Row count of each file from its parquet footer (no Spark)."""
+        import pyarrow.parquet as pq
+
+        return [
+            pq.read_metadata(os.path.join(data_dir, r)).num_rows for r in rels
+        ]
+
+    @staticmethod
+    def _write_json_atomic(path: str, obj) -> None:
+        """Land one JSON sidecar or pointer atomically: dump to a
+        sibling ``<path>.tmp-<uuid4 hex>``, then ``os.replace``. Readers
+        see the old file or the new one, never a torn one; a crash
+        mid-write leaves only the temp, whose full-uuid suffix
+        ``vacuum``'s orphan pattern sweeps."""
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
 
     @staticmethod
     def _cluster_for_partitioned_write(
@@ -409,8 +488,7 @@ class ParquetWarehouse:
             "total_rows": sum(s["rows"] for s in shards),
             "shards": shards,
         }
-        with open(os.path.join(tmp, "_manifest.json"), "w") as f:
-            json.dump(manifest, f)
+        self._write_json_atomic(os.path.join(tmp, "_manifest.json"), manifest)
         self._commit_swap(tmp, final, table)
         return manifest
 
@@ -684,23 +762,8 @@ class ParquetWarehouse:
                 )
         elif bucket_spec is not None:
             raise ValueError(f"{table!r} carries no bucket spec")
-
-        def _list_parquet(root_dir: str) -> set[str]:
-            out = set()
-            for dirpath, dirs, files in os.walk(root_dir):
-                # hidden dirs (_deletes, dot-temp) are sidecars, not data
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for n in files:
-                    if n.endswith(".parquet"):
-                        out.add(
-                            os.path.relpath(
-                                os.path.join(dirpath, n), root_dir
-                            )
-                        )
-            return out
-
         if partition_by:
-            existing = _list_parquet(final)
+            existing = set(self._walk_parquet_rels(final))
         else:
             existing = {
                 name
@@ -748,9 +811,9 @@ class ParquetWarehouse:
             # a delete-only replacement stages ZERO files (a partitioned
             # writer emits nothing for an empty frame) — the manifest
             # passes below would fail to infer a schema over it
-            staged_any = bool(_list_parquet(tmp_new))
+            staged_rels = sorted(self._walk_parquet_rels(tmp_new))
             new_zm_files = {}
-            if zm is not None and staged_any:
+            if zm is not None and staged_rels:
                 missing = [c for c in zm["stat_cols"] if c not in df.columns]
                 if missing:
                     raise ValueError(
@@ -761,7 +824,7 @@ class ParquetWarehouse:
                     spark, tmp_new, zm["stat_cols"]
                 )["files"]
             new_bm_files = {}
-            if bm is not None and staged_any:
+            if bm is not None and staged_rels:
                 bm_cols = sorted(
                     {
                         p
@@ -823,7 +886,7 @@ class ParquetWarehouse:
                 os.link(os.path.join(tmp_new, rel), dst)
                 renamed[rel] = dest
 
-            for rel in sorted(_list_parquet(tmp_new)):
+            for rel in staged_rels:
                 n_rows = pq.read_metadata(os.path.join(tmp_new, rel)).num_rows
                 if n_rows == 0:
                     # a delete-only replacement emits a 0-row part file
@@ -899,16 +962,12 @@ class ParquetWarehouse:
                         remaining.coalesce(1).write.mode(
                             "overwrite"
                         ).parquet(os.path.join(asm, ndir))
-                        with open(
-                            os.path.join(asm, DELETES_FILE), "w"
-                        ) as f:
-                            json.dump(
-                                self._deletes_manifest(
-                                    kcols, n_rem, ndir,
-                                    ts=pending_dm.get("ts"),
-                                ),
-                                f,
-                            )
+                        self._write_json_atomic(
+                            os.path.join(asm, DELETES_FILE),
+                            self._deletes_manifest(
+                                kcols, n_rem, ndir, ts=pending_dm.get("ts"),
+                            ),
+                        )
                 finally:
                     remaining.unpersist()
             if zm is not None:
@@ -923,8 +982,9 @@ class ParquetWarehouse:
                         **{renamed[k]: v for k, v in new_zm_files.items()},
                     },
                 }
-                with open(os.path.join(asm, ZONEMAP_FILE), "w") as f:
-                    json.dump(merged_zm, f)
+                self._write_json_atomic(
+                    os.path.join(asm, ZONEMAP_FILE), merged_zm
+                )
             if bm is not None:
                 # same maintenance contract as the zone map: carried
                 # files keep their filters verbatim (bytes untouched),
@@ -948,8 +1008,9 @@ class ParquetWarehouse:
                         },
                     },
                 }
-                with open(os.path.join(asm, BLOOM_FILE), "w") as f:
-                    json.dump(merged_bm, f)
+                self._write_json_atomic(
+                    os.path.join(asm, BLOOM_FILE), merged_bm
+                )
             self._commit_swap(asm, final, table)
             if bucket_spec is not None:
                 self._refresh_bucketed_catalog(spark, table)
@@ -1005,13 +1066,7 @@ class ParquetWarehouse:
                 "maps; commit with overwrite_versioned(stat_cols=[...])"
             )
         zm = self._compute_zonemap(spark, self.path(table), stat_cols)
-        tmp = os.path.join(
-            self.path(table), ZONEMAP_FILE + f".tmp-{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as f:
-            json.dump(zm, f)
-        os.replace(tmp, os.path.join(self.path(table), ZONEMAP_FILE))
-        self._clear_sidecar_segments(self.path(table), ZONEMAP_FILE)
+        self._commit_inline_sidecar(self.path(table), ZONEMAP_FILE, zm)
         return zm
 
     # ------------------------------------------------------------------
@@ -1099,16 +1154,6 @@ class ParquetWarehouse:
     ) -> str:
         return f"{cls._seg_prefix(filename)}{tag}{suffix}.json"
 
-    @staticmethod
-    def _write_sidecar_segment(
-        base: str, name: str, files: dict
-    ) -> None:
-        """Atomically land one immutable segment file (entries only)."""
-        tmp = os.path.join(base, name + f".tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump({"files": files}, f)
-        os.replace(tmp, os.path.join(base, name))
-
     @classmethod
     def _clear_sidecar_segments(cls, base: str, filename: str) -> None:
         """Delete segment files after an INLINE head lands (rebuilds
@@ -1126,8 +1171,14 @@ class ParquetWarehouse:
                 except OSError:
                     pass
 
-    def _clear_bloom_segments(self, base: str) -> None:
-        self._clear_sidecar_segments(base, BLOOM_FILE)
+    def _commit_inline_sidecar(
+        self, base: str, filename: str, manifest: dict
+    ) -> None:
+        """Land a rebuilt manifest as one INLINE head, then delete the
+        segment files it no longer references (the full rebuilds:
+        write_zonemap, write_bloom, heal_bloom, compaction)."""
+        self._write_json_atomic(os.path.join(base, filename), manifest)
+        self._clear_sidecar_segments(base, filename)
 
     def _extend_sidecar_segmented(
         self, base: str, filename: str, head: dict, new_files: dict, tag: str
@@ -1142,16 +1193,17 @@ class ParquetWarehouse:
         segs = list(head.get("segments") or [])
         if head.get("files"):
             base_name = self._sidecar_seg_name(filename, tag, "-base")
-            self._write_sidecar_segment(base, base_name, head["files"])
+            self._write_json_atomic(
+                os.path.join(base, base_name), {"files": head["files"]}
+            )
             segs.insert(0, base_name)
             head["files"] = {}
         seg_name = self._sidecar_seg_name(filename, tag)
-        self._write_sidecar_segment(base, seg_name, new_files)
+        self._write_json_atomic(
+            os.path.join(base, seg_name), {"files": new_files}
+        )
         head["segments"] = [*segs, seg_name]
-        tmp = os.path.join(base, filename + f".tmp-{tag}")
-        with open(tmp, "w") as f:
-            json.dump(head, f)
-        os.replace(tmp, os.path.join(base, filename))
+        self._write_json_atomic(os.path.join(base, filename), head)
 
     def _bloom_decoded(self, base: str, col: str, merged: dict):
         """(rels, m_arr, offsets, flat_bitmap_bytes) numpy views of the
@@ -1527,13 +1579,7 @@ class ParquetWarehouse:
             table, lock_path=self._mutation_lock_path(table)
         ):
             bm = self._compute_bloom(spark, self.path(table), cols)
-            tmp = os.path.join(
-                self.path(table), BLOOM_FILE + f".tmp-{uuid.uuid4().hex}"
-            )
-            with open(tmp, "w") as f:
-                json.dump(bm, f)
-            os.replace(tmp, os.path.join(self.path(table), BLOOM_FILE))
-            self._clear_bloom_segments(self.path(table))
+            self._commit_inline_sidecar(self.path(table), BLOOM_FILE, bm)
         return bm
 
     def heal_bloom(
@@ -1599,13 +1645,7 @@ class ParquetWarehouse:
                         paths=abs_paths,
                     )
                     bm["files"].update(add["files"])
-            tmp = os.path.join(
-                final, BLOOM_FILE + f".tmp-{uuid.uuid4().hex}"
-            )
-            with open(tmp, "w") as f:
-                json.dump(bm, f)
-            os.replace(tmp, os.path.join(final, BLOOM_FILE))
-            self._clear_bloom_segments(final)
+            self._commit_inline_sidecar(final, BLOOM_FILE, bm)
         return bm
 
     def bloom(self, table: str, version: int | None = None) -> dict | None:
@@ -2083,11 +2123,7 @@ class ParquetWarehouse:
         mark)."""
         m = self.read_meta(table)
         m.update(updates)
-        final = self.path(table)
-        tmp = os.path.join(final, META_FILE + f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, os.path.join(final, META_FILE))
+        self._write_json_atomic(os.path.join(self.path(table), META_FILE), m)
         return m
 
     # ---- merge-on-read deletion vectors ---------------------------------
@@ -2380,14 +2416,11 @@ class ParquetWarehouse:
                 )
             finally:
                 kdf.unpersist()
-            mtmp = os.path.join(final, DELETES_FILE + f".tmp-{uuid.uuid4().hex}")
             manifest = self._deletes_manifest(
                 kcols, n_keys, ndir,
                 ts=dm.get("ts") if dm is not None else None,
             )
-            with open(mtmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(mtmp, os.path.join(final, DELETES_FILE))
+            self._write_json_atomic(os.path.join(final, DELETES_FILE), manifest)
             # superseded sidecar dirs are left for vacuum (in-flight
             # readers holding the prior manifest may still be scanning
             # them); the manifest flip above already de-references them
@@ -2838,20 +2871,9 @@ class ParquetWarehouse:
         table: str,
         target_file_bytes: int = 128 << 20,
         sort_by: list[str] | None = None,
-        parallelism: int = 1,
     ) -> int:
         """Bin-pack small files up to ``target_file_bytes`` per output file.
         Returns the number of directories rewritten.
-
-        ``parallelism`` fans the per-leaf rewrites over a thread pool
-        (Spark's scheduler is thread-safe — the same pattern as
-        runner.py's workers): each leaf is an independent read→stage→
-        swap on its own directory, so N leaves rewrite concurrently in
-        the one application. A failure mid-fan-out leaves some leaves
-        compacted and others not — the same partial state a crash in
-        the serial loop leaves — and the zone map was already dropped
-        up-front, so pruned readers refuse loudly until the idempotent
-        re-run completes and rebuilds it.
 
         ``sort_by`` turns the repack into a PER-PARTITION recluster —
         the hive-layout counterpart of ``recluster`` (which covers flat
@@ -2876,9 +2898,11 @@ class ParquetWarehouse:
         files are neither read nor touched (mtimes stable), so repeated
         compaction is idempotent and cheap.  Directories are processed in
         a driver loop (one Spark job each), the same per-partition
-        bin-packing shape as Delta's OPTIMIZE; at cluster scale the loop
-        body is what you'd fan out over a thread pool exactly like
-        runner.py does for loads.
+        bin-packing shape as Delta's OPTIMIZE. A failure mid-loop leaves
+        some leaves compacted and others not, and the manifests were
+        already dropped up-front, so pruned readers refuse loudly until
+        the idempotent re-run completes and rebuilds them (the zone map
+        and Bloom manifest are recomputed in full over the new files).
 
         Bucketed tables repack at BUCKET grain: fragmented buckets
         (multi-file, accumulated by bucket-preserving file replaces)
@@ -2898,7 +2922,7 @@ class ParquetWarehouse:
             table, lock_path=self._mutation_lock_path(table)
         ):
             return self._compact_unlocked(
-                spark, table, target_file_bytes, sort_by, parallelism
+                spark, table, target_file_bytes, sort_by
             )
 
     def _compact_unlocked(
@@ -2907,7 +2931,6 @@ class ParquetWarehouse:
         table: str,
         target_file_bytes: int,
         sort_by: list[str] | None = None,
-        parallelism: int = 1,
     ) -> int:
         self._refuse_pending_deletes(table, "compact")
         final = self.path(table)
@@ -2952,12 +2975,10 @@ class ParquetWarehouse:
                 sub, table, replaced, bucket_spec=spec
             )
             return 1
-        stat_cols = None
-        bloom_spec = None  # (cols, bits_per_key, k): preserve the tuning
+        stat_cols = bloom_cols = None
         if not os.path.isfile(self._version_pointer(table)):
             stat_cols = (zm := self.zonemap(table)) and zm["stat_cols"]
-            if (bmm := self.bloom(table)) is not None:
-                bloom_spec = (bmm["cols"], bmm["bits_per_key"], bmm["k"])
+            bloom_cols = (bm := self.bloom(table)) and bm["cols"]
         work: list[tuple[str, int]] = []
         for d in sorted(self._leaf_data_dirs(table)):
             files = [f for f in os.listdir(d) if f.endswith(".parquet")]
@@ -2972,8 +2993,7 @@ class ParquetWarehouse:
             # leave a map describing replaced files; a no-op compaction
             # keeps a still-valid map (idempotence)
             self._drop_zonemap(table)
-
-        def _compact_leaf(d: str, n: int) -> None:
+        for d, n in work:
             df = spark.read.parquet(d)
             if sort_by is not None:
                 # per-partition recluster: one range shuffle scoped to
@@ -2989,18 +3009,6 @@ class ParquetWarehouse:
             os.replace(d, old)
             os.replace(tmp, d)
             shutil.rmtree(old, ignore_errors=True)
-
-        if parallelism > 1 and len(work) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(parallelism, len(work))
-            ) as ex:
-                # list() propagates the first worker exception
-                list(ex.map(lambda w: _compact_leaf(*w), work))
-        else:
-            for d, n in work:
-                _compact_leaf(d, n)
         rewritten = len(work)
         if (
             rewritten
@@ -3019,17 +3027,13 @@ class ParquetWarehouse:
             # this, the first post-compaction merge silently loses the
             # pruned path and regresses to whole-table I/O
             self.write_zonemap(spark, table, stat_cols)
-        if rewritten and bloom_spec:
-            # same contract for the bloom manifest, preserving its
-            # persisted bits_per_key/k tuning; rebuilt directly (not via
-            # write_bloom, which would re-acquire the mutation fence
-            # this compaction already holds)
-            bm = self._compute_bloom(spark, final, *bloom_spec)
-            btmp = os.path.join(final, BLOOM_FILE + f".tmp-{uuid.uuid4().hex}")
-            with open(btmp, "w") as f:
-                json.dump(bm, f)
-            os.replace(btmp, os.path.join(final, BLOOM_FILE))
-            self._clear_bloom_segments(final)
+        if rewritten and bloom_cols:
+            # same contract for the bloom manifest; rebuilt directly
+            # (not via write_bloom, which would re-acquire the mutation
+            # fence this compaction already holds)
+            self._commit_inline_sidecar(
+                final, BLOOM_FILE, self._compute_bloom(spark, final, bloom_cols)
+            )
         return rewritten
 
     # Staging artifacts all carry a dotted stage kind (.tmp-/.old-/
@@ -3321,14 +3325,15 @@ class ParquetWarehouse:
         sized from the current bytes / ``target_file_bytes``). The zone
         map is rebuilt over the new layout (created over the cluster
         columns if the table had none — reclustering EXISTS to enable
-        pruning), a bloom manifest is rebuilt with its persisted tuning,
-        and ``_meta.json`` carries over. Pending merge-on-read deletes
-        are APPLIED by the rewrite (the swap drops the sidecar — this is
-        a full-table materialize_deletes for free). Stages to a temp dir
-        and atomically swaps under the mutation fence; versioned,
-        bucketed, and hive-partitioned tables are refused (snapshots are
-        immutable; buckets' layout is their spec; partitioned tables
-        recluster per-partition through compact + the hybrid scope).
+        pruning), a bloom manifest is rebuilt over its column specs, and
+        ``_meta.json`` carries over. Pending merge-on-read deletes are
+        APPLIED by the rewrite (the swap drops the sidecar — this is a
+        full-table materialize_deletes for free). Stages through
+        ``_stage_state`` and atomically swaps under the mutation fence;
+        versioned, bucketed, and hive-partitioned tables are refused
+        (snapshots are immutable; buckets' layout is their spec;
+        partitioned tables recluster per-partition through compact +
+        the hybrid scope).
 
         Returns ``{"files_before", "files_after", "rows"}``.
         """
@@ -3380,40 +3385,25 @@ class ParquetWarehouse:
                 cluster_partitions = max(
                     1, math.ceil(total / target_file_bytes)
                 )
-            out = self._apply_layout(
-                df, cluster_by, zorder_by, cluster_partitions
-            )
-            tmp = os.path.join(
-                self.root, f".tmp-{table}-{uuid.uuid4().hex}"
-            )
-            try:
-                out.write.mode("overwrite").parquet(tmp)
-                src_meta = os.path.join(final, META_FILE)
-                if os.path.isfile(src_meta):
-                    shutil.copy(src_meta, os.path.join(tmp, META_FILE))
-                stat_cols = (
-                    zm["stat_cols"] if zm is not None
-                    else list(cluster_by or zorder_by)
+            with self._staging(table) as tmp:
+                staged = self._stage_state(
+                    self._apply_layout(
+                        df, cluster_by, zorder_by, cluster_partitions
+                    ),
+                    tmp,
+                    meta=self.read_meta(table) or None,
+                    stat_cols=(
+                        zm["stat_cols"] if zm is not None
+                        else list(cluster_by or zorder_by)
+                    ),
+                    bloom_cols=bm and bm["cols"],
                 )
-                new_zm = self._compute_zonemap(spark, tmp, stat_cols)
-                with open(os.path.join(tmp, ZONEMAP_FILE), "w") as f:
-                    json.dump(new_zm, f)
-                if bm is not None:
-                    new_bm = self._compute_bloom(
-                        spark, tmp, bm["cols"], bm["bits_per_key"], bm["k"]
-                    )
-                    with open(os.path.join(tmp, BLOOM_FILE), "w") as f:
-                        json.dump(new_bm, f)
-                files_after = len(new_zm["files"])
-                rows = sum(e["n"] for e in new_zm["files"].values())
+                n_rows = self._footer_rows(tmp, staged)
                 self._commit_swap(tmp, final, table)
-            finally:
-                if os.path.exists(tmp):  # failed before the swap
-                    shutil.rmtree(tmp, ignore_errors=True)
         return {
             "files_before": len(files),
-            "files_after": files_after,
-            "rows": rows,
+            "files_after": sum(map(bool, n_rows)),
+            "rows": sum(n_rows),
         }
 
     def rebucket(
@@ -3496,68 +3486,14 @@ class ParquetWarehouse:
             # so the rewrite must bake the pending deletes in (read()
             # also covers the committed-EMPTY bucketed state, where no
             # parquet file exists to infer a schema from)
-            df = self.read(spark, table)
-            tmp = os.path.join(self.root, f".tmp-{table}-{uuid.uuid4().hex}")
-            try:
-                self._stage_bucketed(df, tmp, spec)
-                staged = [
-                    n for n in os.listdir(tmp) if n.endswith(".parquet")
-                ]
-                with open(os.path.join(tmp, BUCKET_SPEC_FILE), "w") as f:
-                    json.dump({**spec, "schema": df.schema.jsonValue()}, f)
-                src_meta = os.path.join(final, META_FILE)
-                if os.path.isfile(src_meta):
-                    shutil.copy(src_meta, os.path.join(tmp, META_FILE))
-                rows = 0
-                if staged:
-                    import pyarrow.parquet as pq
-
-                    rows = sum(
-                        pq.read_metadata(os.path.join(tmp, n)).num_rows
-                        for n in staged
-                    )
-                if stat_cols:
-                    new_zm = (
-                        self._compute_zonemap(spark, tmp, stat_cols)
-                        if staged
-                        else {"stat_cols": list(stat_cols), "files": {}}
-                    )
-                    with open(os.path.join(tmp, ZONEMAP_FILE), "w") as f:
-                        json.dump(new_zm, f)
-                if bloom_cols:
-                    if staged:
-                        new_bm = self._compute_bloom(
-                            spark, tmp, bloom_cols,
-                            *(
-                                (bm["bits_per_key"], bm["k"])
-                                if bm is not None
-                                else ()
-                            ),
-                        )
-                    else:
-                        schema_cols: list[str] = []
-                        for s in bloom_cols:
-                            for p in self._bloom_spec_parts(s):
-                                if p not in schema_cols:
-                                    schema_cols.append(p)
-                        new_bm = {
-                            "cols": list(bloom_cols),
-                            "k": bm["k"] if bm is not None else BLOOM_K,
-                            "bits_per_key": (
-                                bm["bits_per_key"]
-                                if bm is not None
-                                else BLOOM_BITS_PER_KEY
-                            ),
-                            "schema": df.select(
-                                *schema_cols
-                            ).schema.jsonValue(),
-                            "files": {},
-                        }
-                    with open(os.path.join(tmp, BLOOM_FILE), "w") as f:
-                        json.dump(new_bm, f)
+            with self._staging(table) as tmp:
+                staged = self._stage_state(
+                    self.read(spark, table), tmp, bucket_spec=spec,
+                    meta=self.read_meta(table) or None,
+                    stat_cols=stat_cols, bloom_cols=bloom_cols,
+                )
+                n_rows = self._footer_rows(tmp, staged)
                 self._commit_swap(tmp, final, table)
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
             # the session catalog still describes the OLD layout — drop
             # it; read_bucketed recreates from the new committed spec
             spark.sql(
@@ -3566,7 +3502,7 @@ class ParquetWarehouse:
         return {
             "files_before": len(files_before),
             "files_after": len(staged),
-            "rows": rows,
+            "rows": sum(n_rows),
         }
 
     def _leaf_data_dirs(self, table: str) -> list[str]:
@@ -3621,63 +3557,27 @@ class ParquetWarehouse:
         either way). Both manifests then survive every bucket-preserving
         mutation via ``_replace_files_unlocked``'s carry/recompute.
 
-        Crash-safe: the new state stages into a temp dir (through
-        Spark's own bucketed writer) and promotes via the same atomic
-        swap as ``overwrite`` — the previous committed state stays
-        readable until the flip, closing the old destroy-before-write
-        window where a crash mid-write lost the table entirely.
+        Crash-safe: the new state stages through ``_stage_state`` and
+        promotes via the same atomic swap as ``overwrite`` — the
+        previous committed state stays readable until the flip.
         """
-        spark = df.sparkSession
-        final = self.path(table)
         spec = {
             "bucket_by": list(bucket_by),
             "n_buckets": n_buckets,
             "sort_by": list(sort_by or []),
         }
-        tmp = os.path.join(self.root, f".tmp-{table}-{uuid.uuid4().hex}")
-        try:
-            self._stage_bucketed(df, tmp, spec)
-            staged_any = any(
-                n.endswith(".parquet") for n in os.listdir(tmp)
+        with self._staging(table) as tmp:
+            self._stage_state(
+                df, tmp, bucket_spec=spec,
+                stat_cols=stat_cols, bloom_cols=bloom_cols,
             )
-            with open(os.path.join(tmp, BUCKET_SPEC_FILE), "w") as f:
-                json.dump({**spec, "schema": df.schema.jsonValue()}, f)
-            if stat_cols:
-                zm = (
-                    self._compute_zonemap(spark, tmp, stat_cols)
-                    if staged_any
-                    # empty table: a files:{} map is exact (nothing to
-                    # prune) — _compute_zonemap can't infer a schema
-                    # over a file-less dir
-                    else {"stat_cols": list(stat_cols), "files": {}}
-                )
-                with open(os.path.join(tmp, ZONEMAP_FILE), "w") as f:
-                    json.dump(zm, f)
-            if bloom_cols:
-                if staged_any:
-                    bm = self._compute_bloom(spark, tmp, bloom_cols)
-                else:
-                    schema_cols: list[str] = []
-                    for s in bloom_cols:
-                        for p in self._bloom_spec_parts(s):
-                            if p not in schema_cols:
-                                schema_cols.append(p)
-                    bm = {
-                        "cols": list(bloom_cols),
-                        "k": BLOOM_K,
-                        "bits_per_key": BLOOM_BITS_PER_KEY,
-                        "schema": df.select(*schema_cols).schema.jsonValue(),
-                        "files": {},
-                    }
-                with open(os.path.join(tmp, BLOOM_FILE), "w") as f:
-                    json.dump(bm, f)
-            self._commit_swap(tmp, final, table)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+            self._commit_swap(tmp, self.path(table), table)
         # the session catalog may still describe the OLD layout/schema
         # (this call can change both) — drop it; read_bucketed recreates
         # the external entry lazily from the committed spec sidecar
-        spark.sql(f"DROP TABLE IF EXISTS `{self._catalog_name(table)}`")
+        df.sparkSession.sql(
+            f"DROP TABLE IF EXISTS `{self._catalog_name(table)}`"
+        )
 
     def bucket_spec(self, table: str) -> dict | None:
         """The persisted bucket layout (``{"bucket_by", "n_buckets",
@@ -4257,8 +4157,6 @@ class ParquetWarehouse:
         retried once, instead of wedging every future commit until a
         human removes the file. Locks from other hosts — where
         liveness cannot be probed — still fail closed."""
-        import contextlib
-
         @contextlib.contextmanager
         def fence():
             lock = lock_path or os.path.join(self.path(table), LOCK_FILE)
@@ -4462,34 +4360,21 @@ class ParquetWarehouse:
         version = state["current"] + 1
         vdir = f"_v{version:05d}"
         final = os.path.join(self.path(table), vdir)
-        tmp = os.path.join(self.root, f".tmp-{table}-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(tmp)
-        if meta is not None:
-            with open(os.path.join(tmp, META_FILE), "w") as f:
-                json.dump(meta, f)
-        if stat_cols:
-            zm = self._compute_zonemap(df.sparkSession, tmp, stat_cols)
-            with open(os.path.join(tmp, ZONEMAP_FILE), "w") as f:
-                json.dump(zm, f)
-        if bloom_cols:
-            # same write-time discipline as stat_cols: the manifest is
-            # computed over the staged snapshot and rides inside it
-            # through the rename, so every immutable snapshot carries
-            # its own never-stale filters and time-travel point reads
-            # (version diffs, q110) file-prune
-            bm = self._compute_bloom(df.sparkSession, tmp, bloom_cols)
-            with open(os.path.join(tmp, BLOOM_FILE), "w") as f:
-                json.dump(bm, f)
-        os.replace(tmp, final)
+        with self._staging(table) as tmp:
+            # the manifests are computed over the staged snapshot and
+            # ride inside it through the rename, so every immutable
+            # snapshot carries its own never-stale zone map and filters
+            # and time-travel reads (version diffs, q110) file-prune
+            self._stage_state(
+                df, tmp, meta=meta, stat_cols=stat_cols, bloom_cols=bloom_cols
+            )
+            os.replace(tmp, final)
         state["versions"][version] = {"dir": vdir, "meta": meta or {}}
         state["current"] = version
         keep = sorted(state["versions"])[-retain:]
         pruned = [v for v in state["versions"] if v not in keep]
         state["versions"] = {v: state["versions"][v] for v in keep}
-        ptmp = self._version_pointer(table) + f".tmp-{uuid.uuid4().hex}"
-        with open(ptmp, "w") as f:
-            json.dump(state, f)
-        os.replace(ptmp, self._version_pointer(table))
+        self._write_json_atomic(self._version_pointer(table), state)
         # prune only after the flip: pruned versions are no longer
         # resolvable, and a crash here just leaves dirs for the next
         # writer's orphan sweep below
@@ -4624,10 +4509,7 @@ class ParquetWarehouse:
             keep = sorted(state["commits"])[-retain:]
             state["commits"] = {v: state["commits"][v] for v in keep}
             state["current"] = commit
-            ptmp = self._group_pointer(group) + f".tmp-{uuid.uuid4().hex}"
-            with open(ptmp, "w") as f:
-                json.dump(state, f)
-            os.replace(ptmp, self._group_pointer(group))
+            self._write_json_atomic(self._group_pointer(group), state)
             # a group may interleave linked and DataFrame commits: the
             # retention prune above can expire LINKED commits, so the
             # hard-link snapshot sweep runs here too
@@ -4765,10 +4647,10 @@ class ParquetWarehouse:
                             )
                     # manifest written AFTER its dir is fully linked;
                     # "dir" rebased to the snapshot-local basename
-                    with open(os.path.join(dst, DELETES_FILE), "w") as f:
-                        json.dump(
-                            {**dm, "dir": os.path.basename(sdir)}, f
-                        )
+                    self._write_json_atomic(
+                        os.path.join(dst, DELETES_FILE),
+                        {**dm, "dir": os.path.basename(sdir)},
+                    )
                 members[t] = {"dir": os.path.relpath(dst, self.root)}
             state["commits"][commit] = members
             keep = sorted(state["commits"])[-retain:]
@@ -4779,10 +4661,7 @@ class ParquetWarehouse:
                 # readers of group_meta() see a marker only once the
                 # commit it describes is the current one
                 state["meta"] = {**state.get("meta", {}), **meta}
-            ptmp = self._group_pointer(group) + f".tmp-{uuid.uuid4().hex}"
-            with open(ptmp, "w") as f:
-                json.dump(state, f)
-            os.replace(ptmp, self._group_pointer(group))
+            self._write_json_atomic(self._group_pointer(group), state)
             self._sweep_group_snaps(group, state)
         return commit
 

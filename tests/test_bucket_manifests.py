@@ -321,6 +321,21 @@ def test_rebucket_applies_pending_deletes_and_keeps_manifests(spark, tmp_path):
     assert set(bm["files"]) == set(_data_inodes(wh, "b"))
 
 
+def test_rebucket_carries_meta(spark, tmp_path):
+    """The batch-identity sidecar survives the full-table rewrite, for a
+    bucketed table and for a flat one gaining its layout — same
+    contract as recluster."""
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    _bucketed(spark, wh, "b", n=200)
+    wh.update_meta("b", {"batch": "b7"})
+    wh.rebucket(spark, "b", bucket_by=["pk"], n_buckets=4)
+    assert wh.read_meta("b") == {"batch": "b7"}
+    wh.overwrite(_rows(spark, 200), "f", meta={"batch": "f3"})
+    wh.rebucket(spark, "f", bucket_by=["pk"], n_buckets=4)
+    assert wh.bucket_spec("f")["n_buckets"] == 4
+    assert wh.read_meta("f") == {"batch": "f3"}
+
+
 def test_rebucket_flat_table_gains_layout(spark, tmp_path):
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite(_rows(spark, 500), "b")

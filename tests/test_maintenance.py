@@ -9,7 +9,9 @@ Pins:
 - plain compact stays an idempotent bin-pack (sortedness is orthogonal);
 - vacuum removes only TTL-expired staging orphans (.tmp-/.old-/
   .compact- + uuid hex) and never touches live data, manifests, locks,
-  or fresh staging.
+  or fresh staging — including the temp a crashed sidecar write leaves;
+- a failure mid-stage in any full-state writer keeps the previous state
+  and leaves no temp dir behind.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from example_dms_dataexport_spark.sources.warehouse import ParquetWarehouse
 
@@ -634,22 +637,120 @@ def test_run_maintenance_reconciles_drifted_bloom_spec(spark, tmp_path):
     assert 7 not in {r.pk for r in wh.read(spark, "t").collect()}
 
 
-def test_compact_parallel_matches_serial(spark, tmp_path):
-    """compact(parallelism=N) fans the per-leaf rewrites over threads
-    (each leaf an independent read->stage->swap): same rewrite count,
-    same content, same zone-map rebuild, and the second pass is still
-    an idempotent no-op."""
+def test_compact_partitioned_rebuilds_zonemap_and_is_idempotent(
+    spark, tmp_path
+):
+    """compact rewrites every small-file leaf of a hive table (each leaf
+    an independent read->stage->swap): content preserved, the zone map
+    rebuilt over the new files, and the second pass is an idempotent
+    no-op."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite(_rows(spark), "t", partition_by=["bucket"])
     wh.write_zonemap(spark, "t", ["pk"])
     content = {(r.pk, r.bucket, r.name) for r in wh.read(spark, "t").collect()}
-    rewritten = wh.compact(spark, "t", parallelism=4)
+    rewritten = wh.compact(spark, "t")
     assert rewritten == 5  # every leaf had small files
     assert {
         (r.pk, r.bucket, r.name) for r in wh.read(spark, "t").collect()
     } == content
-    assert wh.zonemap("t") is not None  # rebuilt after the fan-out
-    assert wh.compact(spark, "t", parallelism=4) == 0  # idempotent
+    assert wh.zonemap("t") is not None  # rebuilt after the rewrite
+    assert wh.compact(spark, "t") == 0  # idempotent
+
+
+def test_crashed_sidecar_write_leaves_a_temp_vacuum_sweeps(
+    spark, tmp_path, monkeypatch
+):
+    """Every sidecar/pointer write lands through one atomic JSON writer
+    whose temp ends in a full uuid4 hex: a crash between the dump and
+    the rename (here: os.replace raising) leaves only that temp behind,
+    and vacuum recognises it as an orphan — an 8/12-hex temp would leak
+    forever."""
+    from example_dms_dataexport_spark.sources.warehouse import ZONEMAP_FILE
+
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    wh.overwrite(_rows(spark), "t", stat_cols=["pk"])
+    real_replace = os.replace
+
+    def crash_on(prefix):
+        def replace(src, dst, *a, **kw):
+            if os.path.basename(dst).startswith(prefix):
+                raise OSError(f"kill-point: crash landing {dst}")
+            return real_replace(src, dst, *a, **kw)
+
+        return replace
+
+    def temps():
+        return sorted(
+            os.path.relpath(os.path.join(dp, n), wh.root)
+            for dp, _, fns in os.walk(wh.path("t"))
+            for n in fns
+            if ".json.tmp-" in n
+        )
+
+    monkeypatch.setattr(os, "replace", crash_on(ZONEMAP_FILE))
+    with pytest.raises(OSError, match="kill-point"):
+        wh.write_zonemap(spark, "t", ["pk"])
+    # the append extends the zone map by one immutable segment file
+    batch = _rows(spark, n=10).withColumn("pk", F.col("pk") + 10_000)
+    monkeypatch.setattr(os, "replace", crash_on("_zonemap.seg-"))
+    with pytest.raises(OSError, match="kill-point"):
+        wh.append_files(spark, batch, "t")
+    monkeypatch.undo()
+    left = temps()
+    assert len(left) == 2, left
+    assert any("_zonemap.json.tmp-" in t for t in left), left
+    assert any("_zonemap.seg-" in t for t in left), left
+    removed = wh.vacuum(ttl_seconds=-5)
+    assert set(left) <= set(removed), (left, removed)
+    assert temps() == []
+    assert wh.read(spark, "t").count() == 2010  # data renames landed
+
+
+def _stage_fail_setup(spark, wh, writer):
+    """Commit a previous state for ``writer`` and return the call that
+    re-stages the table (every one builds a zone map)."""
+    df, new = _rows(spark), _rows(spark, n=10)
+    if writer == "write_bucketed":
+        wh.write_bucketed(df, "t", bucket_by=["pk"], n_buckets=4)
+        return lambda: wh.write_bucketed(
+            new, "t", bucket_by=["pk"], n_buckets=4, stat_cols=["pk"]
+        )
+    if writer == "overwrite_versioned":
+        wh.overwrite_versioned(df, "t")
+        return lambda: wh.overwrite_versioned(new, "t", stat_cols=["pk"])
+    wh.overwrite(df, "t", stat_cols=["pk"], meta={"batch": "b1"})
+    return {
+        "overwrite": lambda: wh.overwrite(new, "t", stat_cols=["pk"]),
+        "recluster": lambda: wh.recluster(spark, "t"),
+        "rebucket": lambda: wh.rebucket(spark, "t", ["pk"], 4),
+    }[writer]
+
+
+@pytest.mark.parametrize(
+    "writer",
+    ["overwrite", "write_bucketed", "recluster", "rebucket",
+     "overwrite_versioned"],
+)
+def test_stage_failure_keeps_previous_state_and_no_temp(
+    spark, tmp_path, monkeypatch, writer
+):
+    """A failure mid-stage (the zone-map pass raising after the data
+    landed in the temp dir) leaves the previous committed state reading
+    identically and removes the temp dir — every full-state writer
+    stages through the one stager inside a try/finally."""
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    restage = _stage_fail_setup(spark, wh, writer)
+    before = sorted(wh.read(spark, "t").collect())
+
+    def boom(*a, **kw):
+        raise RuntimeError("kill-point: zone-map pass failed")
+
+    monkeypatch.setattr(wh, "_compute_zonemap", boom)
+    with pytest.raises(RuntimeError, match="kill-point"):
+        restage()
+    monkeypatch.undo()
+    assert sorted(wh.read(spark, "t").collect()) == before
+    assert [n for n in os.listdir(wh.root) if n.startswith(".tmp-")] == []
 
 
 def test_run_maintenance_reports_bucket_layout_drift(spark, tmp_path):
