@@ -5,10 +5,10 @@ Here a warehouse is a directory of parquet tables committed five ways:
 
 - full-state stage + swap: ``overwrite``, ``write_bucketed``,
   ``recluster`` and ``rebucket`` write a complete new table state
-  (data plus every sidecar) into a temp dir through ONE stager
-  (``_stage_state``) and promote it with an atomic directory swap —
-  the reference's idempotent TRUNCATE + COPY INTO (ref :238-243); a
-  re-run full load can never leave a partial table.
+  (data plus every sidecar, ``_stage_state``) into a temp dir and
+  promote it with an atomic directory swap — the reference's
+  idempotent TRUNCATE + COPY INTO (ref :238-243); a re-run full load
+  can never leave a partial table.
 - file-subset ``replace_files``: copy-on-write — only the named files
   are rewritten; every other file (hive partition dirs included)
   hard-links into the new state, which commits through the same
@@ -21,6 +21,12 @@ Here a warehouse is a directory of parquet tables committed five ways:
   flips the ``_version.json`` pointer.
 - group commits: ``commit_group``/``commit_group_linked`` flip one
   group pointer over per-table snapshots.
+
+Full-state, file-replace and append commits all land their new files
+through ONE stager (``_stage_files``): one writer choice (bucketed or
+flat/hive), one footer read for row counts, one zone-map and Bloom
+computation for the staged files — the reference's single COPY INTO /
+MERGE landing step (ref :238-243, :369-408).
 
 The read→merge→overwrite cycle on one table would otherwise race with
 itself (Spark reads lazily while the job overwrites the same files), so
@@ -69,6 +75,9 @@ ZONEMAP_FILE = "_zonemap.json"
 BLOOM_FILE = "_bloom.json"
 BLOOM_K = 6  # hash functions per key
 BLOOM_BITS_PER_KEY = 16  # ~0.1% false-positive rate at k=6
+# The entry of a file with no keyed row: an all-zero 64-bit bitmap
+# that no probe hits (base64 of 8 zero bytes).
+_EMPTY_BLOOM = {"m": 64, "n_distinct": 0, "bits": "AAAAAAAAAAA="}
 
 # Merge-on-read deletion vector: a parquet directory of deleted keys
 # (DELETES_DIR) plus a JSON manifest (DELETES_FILE, the read-path commit
@@ -262,76 +271,140 @@ class ParquetWarehouse:
         meta: dict | None = None,
         stat_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
-    ) -> list[str]:
+    ) -> dict[str, int]:
         """Write one COMPLETE table state into ``tmp`` for the caller to
         promote — the single staging path of every full-state writer
         (``overwrite``, ``write_bucketed``, ``recluster``, ``rebucket``,
-        ``overwrite_versioned``). Returns the staged parquet rel paths.
+        ``overwrite_versioned``). Returns each staged parquet rel path's
+        footer row count.
 
-        Data goes through the bucket-preserving writer when
-        ``bucket_spec`` is set (plus ``_bucket_spec.json`` recording the
-        frame's schema, so a committed-EMPTY bucketed state stays
-        readable in a fresh session), else the flat/hive writer with NO
-        implicit rebalance: callers own the frame's layout (cluster_by/
-        zorder_by, q139's subject-key hash slices) and opt in with a
-        ``hint("rebalance", *partition_by)`` where wanted
-        (build_ann_index does).
-
-        ``meta`` lands as ``_meta.json``; the zone map (``stat_cols``)
-        and Bloom manifest (``bloom_cols``) compute over ``tmp``, whose
-        rel paths stay valid through the promote, so a manifest never
-        describes a different state than the one it commits with. An
-        empty bucketed stage emits NO file, so neither pass could infer
-        a schema: its manifests are the exact empty ones (``files: {}``
-        zone map, schema-only Bloom manifest)."""
-        spark = df.sparkSession
+        The data and its manifests stage through ``_stage_files`` (Bloom
+        at the ``BLOOM_*`` defaults: a full state recomputes every
+        file's filter); this adds the sidecars: ``_bucket_spec.json``
+        recording the frame's schema (so a committed-EMPTY bucketed
+        state stays readable in a fresh session), ``_meta.json``, the
+        zone map and the Bloom manifest. All land in ``tmp``, whose rel
+        paths stay valid through the promote, so a manifest never
+        describes a different state than the one it commits with."""
+        rows, zm, bm = self._stage_files(
+            df, tmp, partition_by=partition_by, bucket_spec=bucket_spec,
+            stat_cols=stat_cols,
+            bloom={
+                "cols": list(bloom_cols),
+                "bits_per_key": BLOOM_BITS_PER_KEY,
+                "k": BLOOM_K,
+            } if bloom_cols else None,
+        )
         if bucket_spec is not None:
-            self._stage_bucketed(df, tmp, bucket_spec)
             self._write_json_atomic(
                 os.path.join(tmp, BUCKET_SPEC_FILE),
                 {**bucket_spec, "schema": df.schema.jsonValue()},
             )
+        for name, obj in ((META_FILE, meta), (ZONEMAP_FILE, zm), (BLOOM_FILE, bm)):
+            if obj is not None:
+                self._write_json_atomic(os.path.join(tmp, name), obj)
+        return rows
+
+    def _stage_files(
+        self,
+        df: DataFrame,
+        tmp: str,
+        *,
+        partition_by: list[str] | None = None,
+        bucket_spec: dict | None = None,
+        stat_cols: list[str] | None = None,
+        bloom: dict | None = None,
+    ) -> tuple[dict[str, int], dict | None, dict | None]:
+        """Write ``df`` as parquet files into ``tmp`` and describe them —
+        the one staging step of every data commit: full states
+        (``_stage_state``), ``replace_files`` and ``append_files``.
+        Returns ``(rows, zm, bm)``: each staged rel path's footer row
+        count (sorted by rel), plus the zone map over ``stat_cols`` and
+        the Bloom manifest over ``bloom``'s specs for exactly those
+        files (None when not asked for).
+
+        Data goes through the bucket-preserving writer when
+        ``bucket_spec`` is set, else the flat/hive writer with NO
+        implicit rebalance: callers own the frame's layout (cluster_by
+        bands, CDC replacement bands, q139's subject-key hash slices)
+        and opt in with a rebalance hint where wanted (``append_files``,
+        build_ann_index).
+
+        ``bloom`` carries ``cols``/``bits_per_key``/``k`` — the table's
+        persisted manifest for incremental commits (carried entries must
+        match its tuning), the ``BLOOM_*`` defaults for full states.
+        Missing stat/Bloom columns refuse before anything is written,
+        and so does Bloom type drift against ``bloom["schema"]`` when
+        present: new files' bits hashed as the drifted type would never
+        match probes hashed as the manifest type (xxhash64 is
+        type-sensitive) — a silent probe FALSE NEGATIVE that would let
+        an erase skip files that DO hold the subject.
+
+        A stage holding no rows runs no manifest pass: its manifests are
+        the exact ones the row-driven passes would find — no zone entry,
+        a zero bitmap per staged file — with the frame's schema (an
+        empty bucketed stage emits no file to infer one from)."""
+        parts = list(dict.fromkeys(
+            p for s in (bloom or {}).get("cols", ())
+            for p in self._bloom_spec_parts(s)
+        ))  # tuple specs reference their underlying columns
+        for what, cols in (("zone-map stat", stat_cols or ()), ("bloom", parts)):
+            missing = [c for c in cols if c not in df.columns]
+            if missing:
+                raise ValueError(
+                    f"replacement data lacks {what} column(s) {missing}"
+                )
+        if bloom is not None and "schema" in bloom:
+            want = StructType.fromJson(bloom["schema"])
+            drift = [
+                (c, str(df.schema[c].dataType), str(want[c].dataType))
+                for c in parts
+                if df.schema[c].dataType != want[c].dataType
+            ]
+            if drift:
+                raise ValueError(
+                    f"replacement data's bloom column type(s) drifted "
+                    f"from the table's manifest: {drift} — rebuild with "
+                    "write_bloom after the type change"
+                )
+        if bucket_spec is not None:
+            self._stage_bucketed(df, tmp, bucket_spec)
         else:
             w = df.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(tmp)
-        staged = self._walk_parquet_rels(tmp)
-        empty = bucket_spec is not None and not staged
-        if meta is not None:
-            self._write_json_atomic(os.path.join(tmp, META_FILE), meta)
-        if stat_cols:
-            zm = (
-                {"stat_cols": list(stat_cols), "files": {}}
-                if empty
-                else self._compute_zonemap(spark, tmp, stat_cols)
-            )
-            self._write_json_atomic(os.path.join(tmp, ZONEMAP_FILE), zm)
-        if bloom_cols:
-            if empty:
-                parts = dict.fromkeys(
-                    p for s in bloom_cols for p in self._bloom_spec_parts(s)
-                )
-                bm = {
-                    "cols": list(bloom_cols),
-                    "k": BLOOM_K,
-                    "bits_per_key": BLOOM_BITS_PER_KEY,
-                    "schema": df.select(*parts).schema.jsonValue(),
-                    "files": {},
-                }
-            else:
-                bm = self._compute_bloom(spark, tmp, bloom_cols)
-            self._write_json_atomic(os.path.join(tmp, BLOOM_FILE), bm)
-        return staged
-
-    @staticmethod
-    def _footer_rows(data_dir: str, rels: list[str]) -> list[int]:
-        """Row count of each file from its parquet footer (no Spark)."""
         import pyarrow.parquet as pq
 
-        return [
-            pq.read_metadata(os.path.join(data_dir, r)).num_rows for r in rels
-        ]
+        rows = {
+            rel: pq.read_metadata(os.path.join(tmp, rel)).num_rows
+            for rel in sorted(self._walk_parquet_rels(tmp))
+        }
+        n = sum(rows.values())
+        spark = df.sparkSession
+        zm = bm = None
+        if stat_cols:
+            zm = (
+                self._compute_zonemap(spark, tmp, stat_cols) if n
+                else {"stat_cols": list(stat_cols), "files": {}}
+            )
+        if bloom is not None and n:
+            bm = self._bloom_pass(
+                spark, tmp, bloom["cols"], n,
+                bits_per_key=bloom["bits_per_key"], k=bloom["k"],
+            )
+        elif bloom is not None:
+            bm = {
+                "cols": list(bloom["cols"]),
+                "k": bloom["k"],
+                "bits_per_key": bloom["bits_per_key"],
+                "schema": df.select(*parts).schema.jsonValue(),
+                "files": {
+                    rel: {c: dict(_EMPTY_BLOOM) for c in bloom["cols"]}
+                    for rel in rows
+                },
+            }
+        return rows, zm, bm
 
     @staticmethod
     def _write_json_atomic(path: str, obj) -> None:
@@ -444,12 +517,11 @@ class ParquetWarehouse:
         file without another exchange — at 100 TB ``n_tasks`` is the
         write parallelism and no task writes an oversized shard.
 
-        Uses the same temp-dir + atomic swap as ``overwrite``; the
-        manifest is written into the temp dir first, so shards and
-        manifest commit together.  Returns the manifest dict.
+        Stages through the same ``_staging`` dir + atomic swap as
+        ``overwrite`` (a failure leaves no temp behind); the manifest
+        is written into the temp dir first, so shards and manifest
+        commit together.  Returns the manifest dict.
         """
-        from pyspark.sql import functions as F
-
         if shuffle_by:
             key = F.xxhash64(*[F.col(c) for c in shuffle_by])
             n = n_tasks or df.sparkSession.sparkContext.defaultParallelism
@@ -461,35 +533,36 @@ class ParquetWarehouse:
                 .sortWithinPartitions("_shuffle_key", *shuffle_by)
                 .drop("_shuffle_key")
             )
-        final = self.path(table)
-        tmp = os.path.join(self.root, f".tmp-{table}-{uuid.uuid4().hex}")
-        (
-            df.write.mode("overwrite")
-            .option("maxRecordsPerFile", max_records_per_file)
-            .parquet(tmp)
-        )
         import pyarrow.parquet as pq
 
-        shards = []
-        for name in sorted(os.listdir(tmp)):
-            if not name.endswith(".parquet"):
-                continue
-            p = os.path.join(tmp, name)
-            shards.append(
-                {
-                    "file": name,
-                    "rows": pq.read_metadata(p).num_rows,
-                    "bytes": os.path.getsize(p),
-                }
+        with self._staging(table) as tmp:
+            (
+                df.write.mode("overwrite")
+                .option("maxRecordsPerFile", max_records_per_file)
+                .parquet(tmp)
             )
-        manifest = {
-            "table": table,
-            "n_shards": len(shards),
-            "total_rows": sum(s["rows"] for s in shards),
-            "shards": shards,
-        }
-        self._write_json_atomic(os.path.join(tmp, "_manifest.json"), manifest)
-        self._commit_swap(tmp, final, table)
+            shards = []
+            for name in sorted(os.listdir(tmp)):
+                if not name.endswith(".parquet"):
+                    continue
+                p = os.path.join(tmp, name)
+                shards.append(
+                    {
+                        "file": name,
+                        "rows": pq.read_metadata(p).num_rows,
+                        "bytes": os.path.getsize(p),
+                    }
+                )
+            manifest = {
+                "table": table,
+                "n_shards": len(shards),
+                "total_rows": sum(s["rows"] for s in shards),
+                "shards": shards,
+            }
+            self._write_json_atomic(
+                os.path.join(tmp, "_manifest.json"), manifest
+            )
+            self._commit_swap(tmp, self.path(table), table)
         return manifest
 
     # ---- zone map: manifest-level file pruning --------------------------
@@ -549,31 +622,13 @@ class ParquetWarehouse:
         cls, zm: dict, ranges: dict
     ) -> tuple[list[str], list[str]]:
         """Partition a zone map's files into (overlapping, disjoint) for
-        conjunctive per-column ranges — a file overlaps only if EVERY
-        queried column's [min, max] band intersects that column's range.
-        Files with an all-NULL band for a queried column land on the
-        disjoint side (a range predicate — and a PK equality — never
-        matches NULL). Bounds of None are unbounded on that end."""
-        norm = {
-            c: (cls._zonemap_stat(b[0]), cls._zonemap_stat(b[1]))
-            for c, b in ranges.items()
-        }
-        overlapping: list[str] = []
-        disjoint: list[str] = []
-        for rel, stats in zm["files"].items():
-            ok = True
-            for c, (nlo, nhi) in norm.items():
-                mn, mx = stats[c]
-                if mn is None:  # all-NULL file for this column
-                    ok = False
-                    break
-                if (nhi is not None and mn > nhi) or (
-                    nlo is not None and mx < nlo
-                ):
-                    ok = False
-                    break
-            (overlapping if ok else disjoint).append(rel)
-        return overlapping, disjoint
+        conjunctive per-column ranges — ``_split_by_subranges`` with the
+        first column's range as its one sub-range and the others as
+        extra ranges. No ranges: every file overlaps."""
+        if not ranges:
+            return list(zm["files"]), []
+        (col, bounds), *rest = ranges.items()
+        return cls._split_by_subranges(zm["files"], col, [bounds], dict(rest))
 
     @classmethod
     def _split_by_subranges(
@@ -672,13 +727,15 @@ class ParquetWarehouse:
         a temp dir and promotes via the same atomic swap as
         ``overwrite``, so the inputs are intact until the flip.
 
-        Zone-map maintenance: when the table carries a map, entries for
-        carried-over files are kept verbatim (their bytes are untouched)
-        and entries for the new files are computed in one pass over the
-        staged temp dir, so the committed state's map is exact and the
-        NEXT merge prunes again — the map never goes stale-and-dropped
-        in steady state. Returns ``{"rows_written", "files_replaced",
-        "files_linked", "files_new"}``.
+        Manifest maintenance: ``df`` stages through the same stager as
+        every data commit (``_stage_files``), which computes the new
+        files' zone-map and Bloom entries over the staged dir at the
+        table's persisted Bloom tuning. Entries for carried-over files
+        are kept verbatim (their bytes are untouched), so the committed
+        state's manifests are exact and the NEXT merge prunes again —
+        they never go stale-and-dropped in steady state. Returns
+        ``{"rows_written", "files_replaced", "files_linked",
+        "files_new"}``.
 
         SINGLE WRITER per table, ENFORCED: list→stage→swap is a
         read-modify-write — two concurrent replaces would both list the
@@ -792,85 +849,25 @@ class ParquetWarehouse:
         zm = self.zonemap(table)
         bm = self.bloom(table)
         spark = df.sparkSession
-        tmp_new = os.path.join(self.root, f".tmp-{table}-new-{uuid.uuid4().hex}")
-        asm = os.path.join(self.root, f".tmp-{table}-{uuid.uuid4().hex}")
-        try:
-            if bucket_spec is not None:
-                self._stage_bucketed(df, tmp_new, bucket_spec)
-            else:
-                # NO rebalance here: replace_files callers (the CDC
-                # merges) pre-shape the staged frame deliberately —
-                # each staged file is a replacement band whose narrow
-                # zone/bloom footprint the next merge's pruning needs;
-                # a rebalance would smear the bands back to whole-leaf
-                # coverage (caught by the hybrid-merge inode-carry pin)
-                w = df.write.mode("overwrite")
-                if partition_by:
-                    w = w.partitionBy(*partition_by)
-                w.parquet(tmp_new)
-            # a delete-only replacement stages ZERO files (a partitioned
-            # writer emits nothing for an empty frame) — the manifest
-            # passes below would fail to infer a schema over it
-            staged_rels = sorted(self._walk_parquet_rels(tmp_new))
-            new_zm_files = {}
-            if zm is not None and staged_rels:
-                missing = [c for c in zm["stat_cols"] if c not in df.columns]
-                if missing:
-                    raise ValueError(
-                        f"replacement data lacks zone-map stat column(s) "
-                        f"{missing} of {table!r}"
-                    )
-                new_zm_files = self._compute_zonemap(
-                    spark, tmp_new, zm["stat_cols"]
-                )["files"]
-            new_bm_files = {}
-            if bm is not None and staged_rels:
-                bm_cols = sorted(
-                    {
-                        p
-                        for s in bm["cols"]
-                        for p in self._bloom_spec_parts(s)
-                    }
-                )  # tuple specs reference their underlying columns
-                missing = [c for c in bm_cols if c not in df.columns]
-                if missing:
-                    raise ValueError(
-                        f"replacement data lacks bloom column(s) "
-                        f"{missing} of {table!r}"
-                    )
-                if "schema" in bm:
-                    # type drift would be a silent probe FALSE NEGATIVE:
-                    # new files' bits hashed as the drifted type, probes
-                    # hashed as the manifest type (xxhash64 is
-                    # type-sensitive) — an erase would then skip files
-                    # that DO hold the subject. Refuse loudly.
-                    want = StructType.fromJson(bm["schema"])
-                    drift = [
-                        (c, str(df.schema[c].dataType), str(want[c].dataType))
-                        for c in bm_cols
-                        if df.schema[c].dataType != want[c].dataType
-                    ]
-                    if drift:
-                        raise ValueError(
-                            f"replacement data's bloom column type(s) "
-                            f"drifted from {table!r}'s manifest: {drift} "
-                            "— rebuild with write_bloom after the "
-                            "type change"
-                        )
-                new_bm_files = self._compute_bloom(
-                    spark, tmp_new, bm["cols"], bm["bits_per_key"], bm["k"]
-                )["files"]
+        carried = sorted(existing - replaced_set)
+        rows_written = 0
+        renamed: dict[str, str] = {}
+        with self._staging(table) as tmp_new, self._staging(table) as asm:
+            # the stager adds NO rebalance: replace_files callers (the
+            # CDC merges) pre-shape the staged frame deliberately — a
+            # rebalance would smear the replacement bands back to
+            # whole-leaf coverage (caught by the hybrid-merge inode-carry
+            # pin)
+            staged, new_zm, new_bm = self._stage_files(
+                df, tmp_new, partition_by=partition_by,
+                bucket_spec=bucket_spec,
+                stat_cols=zm and zm["stat_cols"], bloom=bm,
+            )
             os.makedirs(asm)
-            carried = sorted(existing - replaced_set)
             for rel in carried:
                 dst = os.path.join(asm, rel)
                 os.makedirs(os.path.dirname(dst) or asm, exist_ok=True)
                 os.link(os.path.join(final, rel), dst)
-            import pyarrow.parquet as pq
-
-            rows_written = 0
-            renamed = {}
-            zero_row: list[str] = []
 
             def _link_staged(rel: str) -> None:
                 dest = rel
@@ -886,40 +883,25 @@ class ParquetWarehouse:
                 os.link(os.path.join(tmp_new, rel), dst)
                 renamed[rel] = dest
 
-            for rel in staged_rels:
-                n_rows = pq.read_metadata(os.path.join(tmp_new, rel)).num_rows
-                if n_rows == 0:
-                    # a delete-only replacement emits a 0-row part file
-                    # (flat writer only) — linking it would wedge the
-                    # manifests, whose row-based recompute can never
-                    # describe a row-less file (bloom_hit_split would
-                    # then refuse as stale forever)
-                    zero_row.append(rel)
-                    continue
-                _link_staged(rel)
-                rows_written += n_rows
+            # a delete-only replacement emits a 0-row part file (flat
+            # writer only) — linking it would wedge the manifests, whose
+            # row-based recompute can never describe a row-less file
+            # (bloom_hit_split would then refuse as stale forever)
+            zero_row = [rel for rel, n in staged.items() if n == 0]
+            for rel, n in staged.items():
+                if n:
+                    _link_staged(rel)
+                    rows_written += n
             if not renamed and not carried and zero_row:
                 # fully-emptied flat table: keep ONE 0-row file so the
-                # committed state still carries a readable schema, and
-                # synthesize its manifest entries (no rows: an all-NULL
-                # zone band that every range skips, an all-zero bloom
-                # bitmap that no probe hits)
+                # committed state still carries a readable schema, with
+                # an all-NULL zone band that every range skips (the
+                # stager already gave it the all-zero bloom bitmap)
                 _link_staged(zero_row[0])
-                if zm is not None:
-                    new_zm_files[zero_row[0]] = {
+                if new_zm is not None:
+                    new_zm["files"][zero_row[0]] = {
                         "n": 0,
                         **{c: [None, None] for c in zm["stat_cols"]},
-                    }
-                if bm is not None:
-                    import base64
-
-                    new_bm_files[zero_row[0]] = {
-                        c: {
-                            "m": 64,
-                            "n_distinct": 0,
-                            "bits": base64.b64encode(bytes(8)).decode(),
-                        }
-                        for c in bm["cols"]
                     }
             if bucket_spec is not None and not renamed and not carried:
                 # a fully-emptied bucketed table would commit a dir with
@@ -970,54 +952,32 @@ class ParquetWarehouse:
                         )
                 finally:
                     remaining.unpersist()
-            if zm is not None:
-                merged_zm = {
-                    "stat_cols": zm["stat_cols"],
-                    "files": {
-                        **{
-                            rel: zm["files"][rel]
-                            for rel in carried
-                            if rel in zm["files"]
+            # same maintenance contract for both manifests: carried
+            # files keep their entries verbatim (bytes untouched), LINKED
+            # staged files take the entries computed over the stage
+            # (skipped 0-row parts never enter)
+            for name, old, new in (
+                (ZONEMAP_FILE, zm, new_zm), (BLOOM_FILE, bm, new_bm)
+            ):
+                if new is not None:
+                    self._write_json_atomic(os.path.join(asm, name), {
+                        **{k: v for k, v in old.items() if k != "files"},
+                        "files": {
+                            **{
+                                rel: old["files"][rel]
+                                for rel in carried
+                                if rel in old["files"]
+                            },
+                            **{
+                                renamed[rel]: e
+                                for rel, e in new["files"].items()
+                                if rel in renamed
+                            },
                         },
-                        **{renamed[k]: v for k, v in new_zm_files.items()},
-                    },
-                }
-                self._write_json_atomic(
-                    os.path.join(asm, ZONEMAP_FILE), merged_zm
-                )
-            if bm is not None:
-                # same maintenance contract as the zone map: carried
-                # files keep their filters verbatim (bytes untouched),
-                # new files get the filters computed over the staged dir
-                merged_bm = {
-                    **{k: v for k, v in bm.items() if k != "files"},
-                    "files": {
-                        **{
-                            rel: bm["files"][rel]
-                            for rel in carried
-                            if rel in bm["files"]
-                        },
-                        # only LINKED staged files enter the manifest:
-                        # _compute_bloom covers 0-row staged files with
-                        # zero bitmaps (r18), but delete-only 0-row
-                        # parts are skipped from linking above
-                        **{
-                            renamed[k]: v
-                            for k, v in new_bm_files.items()
-                            if k in renamed
-                        },
-                    },
-                }
-                self._write_json_atomic(
-                    os.path.join(asm, BLOOM_FILE), merged_bm
-                )
+                    })
             self._commit_swap(asm, final, table)
-            if bucket_spec is not None:
-                self._refresh_bucketed_catalog(spark, table)
-        finally:
-            shutil.rmtree(tmp_new, ignore_errors=True)
-            if os.path.exists(asm):  # failed before the swap
-                shutil.rmtree(asm, ignore_errors=True)
+        if bucket_spec is not None:
+            self._refresh_bucketed_catalog(spark, table)
         return {
             "rows_written": rows_written,
             "files_replaced": len(replaced_set),
@@ -1210,10 +1170,6 @@ class ParquetWarehouse:
         manifest's bitmaps for ``col``, cached with the manifest parse
         (decode is O(manifest) — pay it once per manifest version, not
         per probe)."""
-        import base64
-
-        import numpy as np
-
         cached = self._sidecar_cache.get((base, BLOOM_FILE))
         if cached is not None:
             slot = cached["decoded"]
@@ -1298,6 +1254,30 @@ class ParquetWarehouse:
                 break
         return hit
 
+    def _bloom_pass(
+        self,
+        spark: SparkSession,
+        data_dir: str,
+        cols: list[str],
+        n_rows: int,
+        *,
+        bits_per_key: int = BLOOM_BITS_PER_KEY,
+        k: int = BLOOM_K,
+        paths: list[str] | None = None,
+    ) -> dict:
+        """Bloom manifest over ``data_dir`` (or just ``paths``) holding
+        ``n_rows`` rows, with the pass chosen by input size — the one
+        place that choice is made: ``_compute_bloom_small`` up to
+        ``DELETE_BLOOM_PROBE_CAP`` rows, the distributed
+        ``_compute_bloom`` above it. Both build the same manifest."""
+        fn = (
+            self._compute_bloom_small
+            if n_rows <= DELETE_BLOOM_PROBE_CAP
+            else self._compute_bloom
+        )
+        return fn(spark, data_dir, cols, bits_per_key=bits_per_key, k=k,
+                  paths=paths)
+
     @staticmethod
     def _compute_bloom_small(
         spark: SparkSession,
@@ -1315,10 +1295,12 @@ class ParquetWarehouse:
         per-file bitmaps pack driver-side. Bit-identical to the
         distributed pass (pinned in tests/test_append_files.py): the
         same NULL-key skip, the same m sizing, the same bit positions —
-        only WHERE the packing runs differs. Exists because a streaming
-        ingest append paid ~4 small distributed jobs per batch for
-        manifest upkeep; one job per append matters at minute-grain
-        syncs.
+        only WHERE the packing runs differs. ``_bloom_pass`` picks it
+        by staged row count for every staging writer (full states,
+        ``replace_files``, ``append_files``) and for ``heal_bloom``'s
+        gap files: below ``DELETE_BLOOM_PROBE_CAP`` rows one job beats
+        the distributed pass's several (measured on 4 CPUs: 0.37 vs
+        2.39 s at 200 rows, 2.01 vs 2.24 s at 100k).
 
         ``paths``: restrict to these files (absolute, under
         ``data_dir``) — the incremental-heal shape; rel keys stay
@@ -1387,11 +1369,7 @@ class ParquetWarehouse:
             }
             for rel in expected:
                 if rel not in covered:
-                    files.setdefault(rel, {})[c] = {
-                        "m": 64,
-                        "n_distinct": 0,
-                        "bits": base64.b64encode(bytes(8)).decode(),
-                    }
+                    files.setdefault(rel, {})[c] = dict(_EMPTY_BLOOM)
         return {
             "cols": list(cols),
             "k": k,
@@ -1535,11 +1513,7 @@ class ParquetWarehouse:
             covered = {rel_by_fp[fp] for fp in m_by_fp}
             for rel in all_rels:
                 if rel not in covered:  # row-less file: zero bitmap
-                    files.setdefault(rel, {})[c] = {
-                        "m": 64,
-                        "n_distinct": 0,
-                        "bits": base64.b64encode(bytes(8)).decode(),
-                    }
+                    files.setdefault(rel, {})[c] = dict(_EMPTY_BLOOM)
         return {
             "cols": list(cols),
             "k": k,
@@ -1597,9 +1571,11 @@ class ParquetWarehouse:
         existing entry can never describe changed content. Equals the
         full ``write_bloom`` rebuild bit-for-bit (pinned in tests) at
         O(unmanifested files) cost instead of O(table) — the ingest
-        streams' heal path. Falls back to the full rebuild when no
-        manifest exists or ``cols`` doesn't match the manifest's specs.
-        Returns the committed manifest."""
+        streams' heal path; the gap files' pass is picked by their
+        footer row count (``_bloom_pass``), so a batch-sized gap heals
+        in one job. Falls back to the full rebuild when no manifest
+        exists or ``cols`` doesn't match the manifest's specs. Returns
+        the committed manifest."""
         if os.path.isfile(self._version_pointer(table)):
             raise ValueError(
                 f"{table!r} is versioned — snapshots carry their own "
@@ -1628,20 +1604,11 @@ class ParquetWarehouse:
                     import pyarrow.parquet as _pq
 
                     nrows = sum(
-                        _pq.ParquetFile(p).metadata.num_rows
-                        for p in abs_paths
+                        _pq.read_metadata(p).num_rows for p in abs_paths
                     )
-                    fn = (
-                        self._compute_bloom_small
-                        if nrows <= DELETE_BLOOM_PROBE_CAP
-                        else self._compute_bloom
-                    )
-                    add = fn(
-                        spark,
-                        final,
-                        bm["cols"],
-                        bits_per_key=bm["bits_per_key"],
-                        k=bm["k"],
+                    add = self._bloom_pass(
+                        spark, final, bm["cols"], nrows,
+                        bits_per_key=bm["bits_per_key"], k=bm["k"],
                         paths=abs_paths,
                     )
                     bm["files"].update(add["files"])
@@ -2621,13 +2588,16 @@ class ParquetWarehouse:
         Consistency contract: runs under the table's mutation fence;
         refuses versioned tables (appends would bypass snapshot
         commits) and schema drift (appended columns must match the
-        table's read schema by name — silently unioning mismatched
-        files would corrupt every later scan). Pending merge-on-read
-        deletes no longer refuse (r19): the batch is anti-join MASKED
-        against the pending key set before staging, so appended files
-        never hold a pending-keyed row and the sidecar's guarantees
-        hold untouched — defer-mode GDPR and continuous ingest compose
-        (see the body comment). Zone-map and Bloom manifests are
+        table's read schema by name AND type — a file of a drifted
+        type lands fine, then every later scan of the table fails).
+        Pending merge-on-read deletes no longer refuse (r19): the
+        batch is anti-join MASKED against the pending key set before
+        staging, so appended files never hold a pending-keyed row and
+        the sidecar's guarantees hold untouched — defer-mode GDPR and
+        continuous ingest compose (see the body comment). The batch is rebalanced, then stages
+        through the same stager as every data commit
+        (``_stage_files``), which also computes its zone-map and Bloom
+        entries at the table's persisted tuning. The manifests are
         EXTENDED, not dropped (r18): both are per-file, so the staged
         batch's entries compute in O(batch), and BOTH commit as one
         immutable SEGMENT file plus a head rewrite (r19) — head size is
@@ -2686,12 +2656,24 @@ class ParquetWarehouse:
                 "with the bucket-file layout; append routes through the "
                 "bucketed writer instead"
             )
-        want = set(self.read(spark, table).columns)
-        got = set(df.columns)
-        if got != want:
+        # types compare by simpleString: a parquet read reports every
+        # nested field nullable, so full StructField equality would
+        # refuse batches that land fine
+        want = {
+            f.name: f.dataType.simpleString()
+            for f in self.read(spark, table).schema
+        }
+        got = {f.name: f.dataType.simpleString() for f in df.schema}
+        if got.keys() != want.keys():
             raise ValueError(
                 f"append schema mismatch for {table!r}: batch columns "
                 f"{sorted(got)} != table columns {sorted(want)}"
+            )
+        drift = [(c, got[c], want[c]) for c in sorted(got) if got[c] != want[c]]
+        if drift:
+            raise ValueError(
+                f"append column type drift for {table!r} "
+                f"(column, batch, table): {drift}"
             )
         dm = self.pending_deletes(table)
         if dm is not None:
@@ -2714,7 +2696,7 @@ class ParquetWarehouse:
             # corrupt manifest whose key columns aren't table columns
             # (unmaskable — nothing sound can be staged).
             kcols = self._delete_key_cols(dm)
-            if not set(kcols) <= want:
+            if not set(kcols) <= want.keys():
                 raise ValueError(
                     f"{table!r} has pending merge-on-read deletes on "
                     f"{kcols!r}, which are not all table columns — the "
@@ -2722,6 +2704,16 @@ class ParquetWarehouse:
                 )
             dele = spark.read.parquet(self._deletes_dir(table, dm))
             df = self._anti_join_keys(df, dele, kcols, dm["n_keys"])
+        if bspec is None:
+            df = self._cluster_for_partitioned_write(df, partition_by)
+        zm = self.zonemap(table)
+        try:
+            bm = self.bloom(table)
+        except ValueError:
+            # a head referencing a missing segment: skip manifest
+            # maintenance — pruned readers refuse loudly and heal_bloom
+            # rebuilds, while the append itself proceeds
+            bm = None
         root = self.path(table)
         base = os.path.basename(root.rstrip("/"))
         parent = os.path.dirname(root.rstrip("/"))
@@ -2732,90 +2724,39 @@ class ParquetWarehouse:
         staging = os.path.join(
             parent, f".{base}.append-tmp-{uuid.uuid4().hex}"
         )
-        timings: dict[str, float] = {}
         _t0 = time.monotonic()
         try:
-            if bspec is not None:
-                self._stage_bucketed(df, staging, bspec)
-            else:
-                w = self._cluster_for_partitioned_write(df, partition_by).write
-                if partition_by:
-                    w = w.partitionBy(*partition_by)
-                w.parquet(staging)
             # ONE evaluation: rows come from the staged footers, and the
             # zero-row no-op is decided on the same evidence (an empty
-            # first evaluation can't be contradicted by a write)
-            import pyarrow.parquet as _pq
-
-            staged: list[str] = []  # rel paths under staging
-            rows = 0
-            for dp, _, fns in os.walk(staging):
-                for fn in sorted(fns):
-                    if fn.endswith(".parquet"):
-                        fp = os.path.join(dp, fn)
-                        n = _pq.ParquetFile(fp).metadata.num_rows
-                        if n == 0:
-                            # a zero-row part file (empty write task)
-                            # carries no data: renaming it in would
-                            # only accrete inodes and blind row-driven
-                            # manifest passes
-                            os.remove(fp)
-                            continue
-                        rows += n
-                        staged.append(os.path.relpath(fp, staging))
+            # first evaluation can't be contradicted by a write). The
+            # batch's manifest entries compute over the stage BEFORE the
+            # renames, so a crash leaves the table without manifests
+            # (loud fallback), never with a manifest missing committed
+            # files (silent mis-prune).
+            staged, new_zm, new_bm = self._stage_files(
+                df, staging, partition_by=partition_by, bucket_spec=bspec,
+                stat_cols=zm and zm["stat_cols"], bloom=bm,
+            )
+            # zero-row part files (empty write tasks) carry no data:
+            # renaming them in would only accrete inodes and blind
+            # row-driven manifest passes
+            staged = {rel: n for rel, n in staged.items() if n}
+            rows = sum(staged.values())
             if rows == 0:
                 # a zero-row append is a true no-op: no file lands, no
                 # sidecar changes (a schema-only parquet file per empty
                 # batch would make replayed/filtered-empty batches
                 # accrete inode churn forever)
                 return {"files_added": 0, "rows": 0}
-            timings["stage_s"] = round(time.monotonic() - _t0, 4)
+            timings = {"stage_s": round(time.monotonic() - _t0, 4)}
             _t0 = time.monotonic()
-            # Per-file manifest entries for JUST the staged batch —
-            # O(batch), computed BEFORE the renames so a crash leaves
-            # the table without manifests (loud fallback), never with a
-            # manifest missing committed files (silent mis-prune).
-            zm = self.zonemap(table)
-            try:
-                bm = self.bloom(table)
-            except ValueError:
-                # a head referencing a missing segment: skip manifest
-                # maintenance — pruned readers refuse loudly and
-                # heal_bloom rebuilds, while the append itself proceeds
-                bm = None
             # raw heads (params + inline files + segment list), captured
             # BEFORE the crash-safety drop below removes the head files
-            bloom_head = zm_head = None
-            if bm is not None:
-                with open(os.path.join(root, BLOOM_FILE)) as f:
-                    bloom_head = json.load(f)
-            if zm is not None:
-                with open(os.path.join(root, ZONEMAP_FILE)) as f:
-                    zm_head = json.load(f)
-            new_zm = (
-                self._compute_zonemap(spark, staging, zm["stat_cols"])
-                if zm is not None and staged
-                else None
-            )
-            # batch-bounded appends pack their manifest entries in ONE
-            # job (driver-side packing, bit-identical — see
-            # _compute_bloom_small); big backfill appends keep the
-            # distributed pass
-            bloom_fn = (
-                self._compute_bloom_small
-                if rows <= DELETE_BLOOM_PROBE_CAP
-                else self._compute_bloom
-            )
-            new_bm = (
-                bloom_fn(
-                    spark, staging, bm["cols"],
-                    bits_per_key=bm["bits_per_key"], k=bm["k"],
-                )
-                if bm is not None and staged
-                else None
-            )
-            timings["manifest_s"] = round(time.monotonic() - _t0, 4)
-            _t0 = time.monotonic()
+            heads = {}
+            for name, m in ((ZONEMAP_FILE, new_zm), (BLOOM_FILE, new_bm)):
+                if m is not None:
+                    with open(os.path.join(root, name)) as f:
+                        heads[name] = (json.load(f), m["files"])
             self._drop_zonemap(table, drop_bloom=False)
             tag = uuid.uuid4().hex[:12]
 
@@ -2823,12 +2764,10 @@ class ParquetWarehouse:
                 d, fn = os.path.split(rel)
                 return os.path.join(d, f"app-{tag}-{fn}") if d else f"app-{tag}-{fn}"
 
-            n_files = 0
             for rel in staged:
                 dest = os.path.join(root, final_rel(rel))
                 os.makedirs(os.path.dirname(dest), exist_ok=True)
                 os.rename(os.path.join(staging, rel), dest)
-                n_files += 1
             # extend-and-recommit the manifests AFTER the data renames,
             # each as one immutable SEGMENT + a tiny head rewrite
             # (_extend_sidecar_segmented): O(batch) manifest I/O at any
@@ -2837,20 +2776,10 @@ class ParquetWarehouse:
             # window: zone map absent (head dropped up-front, zoned
             # readers refuse loudly), bloom head at its pre-append
             # version (stale-and-refused, healed incrementally).
-            if new_zm is not None and zm_head is not None:
+            for name, (head, files) in heads.items():
                 self._extend_sidecar_segmented(
-                    root,
-                    ZONEMAP_FILE,
-                    zm_head,
-                    {final_rel(r): e for r, e in new_zm["files"].items()},
-                    tag,
-                )
-            if new_bm is not None and bloom_head is not None:
-                self._extend_sidecar_segmented(
-                    root,
-                    BLOOM_FILE,
-                    bloom_head,
-                    {final_rel(r): e for r, e in new_bm["files"].items()},
+                    root, name, head,
+                    {final_rel(r): e for r, e in files.items() if r in staged},
                     tag,
                 )
         finally:
@@ -2859,11 +2788,11 @@ class ParquetWarehouse:
             # the session catalog caches the bucketed file listing —
             # invalidate so the next read sees the appended files
             self._refresh_bucketed_catalog(spark, table)
-        # stage/manifest/commit wall split (r19, the ingest sentinel's
+        # stage/commit wall split (r19, the ingest sentinel's
         # localization ask): additive diagnostics — callers key on
         # files_added/rows; the zero-row no-op return above stays bare
         timings["commit_s"] = round(time.monotonic() - _t0, 4)
-        return {"files_added": n_files, "rows": rows, "timings": timings}
+        return {"files_added": len(staged), "rows": rows, "timings": timings}
 
     def compact(
         self,
@@ -3398,12 +3327,11 @@ class ParquetWarehouse:
                     ),
                     bloom_cols=bm and bm["cols"],
                 )
-                n_rows = self._footer_rows(tmp, staged)
                 self._commit_swap(tmp, final, table)
         return {
             "files_before": len(files),
-            "files_after": sum(map(bool, n_rows)),
-            "rows": sum(n_rows),
+            "files_after": sum(map(bool, staged.values())),
+            "rows": sum(staged.values()),
         }
 
     def rebucket(
@@ -3492,7 +3420,6 @@ class ParquetWarehouse:
                     meta=self.read_meta(table) or None,
                     stat_cols=stat_cols, bloom_cols=bloom_cols,
                 )
-                n_rows = self._footer_rows(tmp, staged)
                 self._commit_swap(tmp, final, table)
             # the session catalog still describes the OLD layout — drop
             # it; read_bucketed recreates from the new committed spec
@@ -3502,7 +3429,7 @@ class ParquetWarehouse:
         return {
             "files_before": len(files_before),
             "files_after": len(staged),
-            "rows": sum(n_rows),
+            "rows": sum(staged.values()),
         }
 
     def _leaf_data_dirs(self, table: str) -> list[str]:

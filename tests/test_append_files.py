@@ -167,6 +167,22 @@ def test_append_refusals(spark, wh):
         wh.append_files(spark, df.limit(1), "v")
 
 
+def test_append_refuses_column_type_drift(spark, wh):
+    """A batch whose column types drift from the table's refuses before
+    anything lands: the drifted file would be accepted, then every
+    later scan of the table would fail on the parquet type mismatch."""
+    wh.overwrite(
+        spark.createDataFrame([(1,), (2,)], "k long"), "t", bloom_cols=["k"]
+    )
+    batch = spark.createDataFrame([(3,)], "k int")
+    with pytest.raises(ValueError, match="type drift") as err:
+        wh.append_files(spark, batch, "t")
+    assert "('k', 'int', 'bigint')" in str(err.value)
+    table = wh.read(spark, "t")
+    assert table.schema["k"].dataType.simpleString() == "bigint"
+    assert sorted(r.k for r in table.collect()) == [1, 2]
+
+
 def test_append_folds_pending_deletes_by_masking_the_batch(spark, wh):
     """r19 fold (defer-mode GDPR × continuous ingest): an append while
     deletes are pending MASKS the batch against the pending key set

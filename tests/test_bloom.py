@@ -162,6 +162,44 @@ def test_replace_files_maintains_the_manifest(spark, tmp_path):
     assert got == {5, 50}
 
 
+def test_batch_sized_commits_take_the_one_job_bloom_pass(
+    spark, tmp_path, monkeypatch
+):
+    """A batch-sized full state and a file replace on it each build
+    their Bloom entries through ONE ``_compute_bloom_small`` call (the
+    stager picks the pass by staged row count), and the committed
+    manifest equals ``write_bloom``'s distributed rebuild exactly."""
+    calls = {"small": 0, "distributed": 0}
+
+    def spying(name, fn):
+        def spy(*a, **kw):
+            calls[name] += 1
+            return fn(*a, **kw)
+
+        return staticmethod(spy)
+
+    PW = ParquetWarehouse
+    monkeypatch.setattr(
+        PW, "_compute_bloom_small", spying("small", PW._compute_bloom_small)
+    )
+    monkeypatch.setattr(
+        PW, "_compute_bloom", spying("distributed", PW._compute_bloom)
+    )
+    wh = PW(str(tmp_path / "wh"))
+    wh.overwrite(_scattered(spark, n=200, files=4), "t", bloom_cols=["pk"])
+    assert calls == {"small": 1, "distributed": 0}
+    files = sorted(wh.bloom("t")["files"])
+    base = wh.path("t")
+    sub = spark.read.parquet(os.path.join(base, files[0]))
+    wh.replace_files(
+        sub.withColumn("bucket", F.col("bucket") + 1000), "t", files[:1]
+    )
+    assert calls == {"small": 2, "distributed": 0}
+    bm = wh.bloom("t")
+    assert bm == wh.write_bloom(spark, "t", ["pk"])
+    assert calls == {"small": 2, "distributed": 1}
+
+
 def test_erase_subjects_bloom_pruned_copy_on_write(spark, tmp_path):
     """Random subject keys in a table NOT clustered on the key: the zone
     map can't prune (bands span the keyspace), the bloom manifest can —

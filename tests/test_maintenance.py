@@ -10,8 +10,8 @@ Pins:
 - vacuum removes only TTL-expired staging orphans (.tmp-/.old-/
   .compact- + uuid hex) and never touches live data, manifests, locks,
   or fresh staging — including the temp a crashed sidecar write leaves;
-- a failure mid-stage in any full-state writer keeps the previous state
-  and leaves no temp dir behind.
+- a failure mid-stage in any full-state writer, replace_files or
+  append_files keeps the previous state and leaves no temp dir behind.
 """
 
 from __future__ import annotations
@@ -719,25 +719,31 @@ def _stage_fail_setup(spark, wh, writer):
         wh.overwrite_versioned(df, "t")
         return lambda: wh.overwrite_versioned(new, "t", stat_cols=["pk"])
     wh.overwrite(df, "t", stat_cols=["pk"], meta={"batch": "b1"})
+    first = sorted(
+        n for n in os.listdir(wh.path("t")) if n.endswith(".parquet")
+    )[0]
     return {
         "overwrite": lambda: wh.overwrite(new, "t", stat_cols=["pk"]),
         "recluster": lambda: wh.recluster(spark, "t"),
         "rebucket": lambda: wh.rebucket(spark, "t", ["pk"], 4),
+        "replace_files": lambda: wh.replace_files(new, "t", [first]),
+        "append_files": lambda: wh.append_files(spark, new, "t"),
     }[writer]
 
 
 @pytest.mark.parametrize(
     "writer",
     ["overwrite", "write_bucketed", "recluster", "rebucket",
-     "overwrite_versioned"],
+     "overwrite_versioned", "replace_files", "append_files"],
 )
 def test_stage_failure_keeps_previous_state_and_no_temp(
     spark, tmp_path, monkeypatch, writer
 ):
     """A failure mid-stage (the zone-map pass raising after the data
     landed in the temp dir) leaves the previous committed state reading
-    identically and removes the temp dir — every full-state writer
-    stages through the one stager inside a try/finally."""
+    identically and removes the temp dir — every data commit stages
+    through the one stager inside a try/finally, appends into their
+    own ``.<table>.append-tmp-`` dir."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     restage = _stage_fail_setup(spark, wh, writer)
     before = sorted(wh.read(spark, "t").collect())
@@ -750,7 +756,10 @@ def test_stage_failure_keeps_previous_state_and_no_temp(
         restage()
     monkeypatch.undo()
     assert sorted(wh.read(spark, "t").collect()) == before
-    assert [n for n in os.listdir(wh.root) if n.startswith(".tmp-")] == []
+    assert [
+        n for n in os.listdir(wh.root)
+        if n.startswith(".tmp-") or ".append-tmp-" in n
+    ] == []
 
 
 def test_run_maintenance_reports_bucket_layout_drift(spark, tmp_path):

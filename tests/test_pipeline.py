@@ -461,6 +461,22 @@ def test_write_shards_bounds_files_and_manifest(spark, tmp_path):
     assert shard_contents(m2) == first
 
 
+def test_write_shards_failure_leaves_no_temp(spark, tmp_path, monkeypatch):
+    """A failed shard-manifest write removes the staged shards: the
+    export stages through the warehouse's one staging dir, which is
+    cleaned up on every exit."""
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+
+    def boom(*a, **kw):
+        raise OSError("kill-point: manifest write failed")
+
+    monkeypatch.setattr(wh, "_write_json_atomic", boom)
+    with pytest.raises(OSError, match="kill-point"):
+        wh.write_shards(spark.range(0, 100), "shards")
+    assert [n for n in os.listdir(wh.root) if n.startswith(".tmp-")] == []
+    assert not wh.exists("shards")
+
+
 def test_csv_on_error_modes(spark, tmp_path):
     # COPY INTO error-contract parity: permissive nulls bad fields,
     # failfast aborts (ABORT_STATEMENT), quarantine keeps the raw line
