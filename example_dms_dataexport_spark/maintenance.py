@@ -28,13 +28,13 @@ cycle):
    reported on every pass (``bucket_drift``), never silently dropped;
 2. a table whose DECLARED layout (``TableMeta.layout()``) names
    ``stat_cols`` but whose zone map is MISSING → ``write_zonemap``
-   (leaf compaction drops the map by design — stale-and-absent must
-   fail loudly, never mis-prune — so after it the hybrid merge scope
-   is blind until someone rebuilds; one columnar stat pass restores
-   it);
+   (compaction maintains the map in its commit, but an append that
+   crashed after dropping the head — see ``_drop_zonemap`` — or a
+   legacy table leaves the hybrid merge scope blind until someone
+   rebuilds; one columnar stat pass restores it);
 3. a table whose declared layout names ``bloom_cols`` but whose Bloom
-   manifest is MISSING → ``write_bloom`` (leaf compaction drops the
-   manifest by design — see ``_drop_zonemap`` — after which GDPR
+   manifest is MISSING → ``write_bloom`` (a legacy table, or one a
+   crash at an older commit left without it, would otherwise have GDPR
    file-grain erasure and single-key MOR delete discovery silently
    degrade to partition-grain rewrites / full key scans; the rebuild
    restores file skipping). A manifest whose spec set DRIFTED from the

@@ -12,8 +12,9 @@ Here a warehouse is a directory of parquet tables committed five ways:
 - file-subset ``replace_files``: copy-on-write — only the named files
   are rewritten; every other file (hive partition dirs included)
   hard-links into the new state, which commits through the same
-  swap. The 100 TB path for CDC merges and erasures: a batch rewrites
-  only the files that can hold its keys (SURVEY §7.3 hard-part a).
+  swap. The 100 TB path for CDC merges, erasures, materialized
+  deletes and compaction: a pass rewrites only the files it must
+  (SURVEY §7.3 hard-part a).
 - ``append_files``: new files rename into the live dir, manifests
   extend by one immutable segment.
 - versioned snapshots: ``overwrite_versioned`` stages through the same
@@ -38,6 +39,7 @@ hard-part b); every JSON sidecar or pointer lands through
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import math
 import os
@@ -382,16 +384,21 @@ class ParquetWarehouse:
         }
         n = sum(rows.values())
         spark = df.sparkSession
+        # a hive stage re-read by inference would type its partition
+        # columns over the staged subset of dirs (p=007 alone is int 7,
+        # not the table's '007'); data columns keep their footer types
+        schema = df.schema if partition_by else None
         zm = bm = None
         if stat_cols:
             zm = (
-                self._compute_zonemap(spark, tmp, stat_cols) if n
+                self._compute_zonemap(spark, tmp, stat_cols, schema) if n
                 else {"stat_cols": list(stat_cols), "files": {}}
             )
         if bloom is not None and n:
             bm = self._bloom_pass(
                 spark, tmp, bloom["cols"], n,
                 bits_per_key=bloom["bits_per_key"], k=bloom["k"],
+                schema=schema,
             )
         elif bloom is not None:
             bm = {
@@ -582,7 +589,10 @@ class ParquetWarehouse:
 
     @staticmethod
     def _compute_zonemap(
-        spark: SparkSession, data_dir: str, stat_cols: list[str]
+        spark: SparkSession,
+        data_dir: str,
+        stat_cols: list[str],
+        schema: StructType | None = None,
     ) -> dict:
         """One distributed pass over ``data_dir``: per parquet file, row
         count plus min/max of every stat column, keyed by path RELATIVE
@@ -590,7 +600,9 @@ class ParquetWarehouse:
         The result is file-count sized — at 100 TB / ~1 GB files that is
         ~10^5 entries, megabytes of driver memory, not a data scan at
         query time."""
-        df = spark.read.parquet(data_dir)
+        df = (spark.read.schema(schema) if schema else spark.read).parquet(
+            data_dir
+        )
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in stat_cols:
             aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
@@ -986,31 +998,18 @@ class ParquetWarehouse:
         }
 
 
-    def _drop_zonemap(self, table: str, drop_bloom: bool = True) -> None:
-        """Leaf compaction calls this FIRST: derived file metadata (zone
-        map AND bloom manifest) describing files that no longer exist
-        would silently exclude the new files from pruned reads —
-        stale-and-absent must fail loudly in the pruned readers, never
-        mis-prune. Rebuild after the mutation with write_zonemap /
-        write_bloom.
-
-        ``drop_bloom=False`` (append_files only): appends never change
-        committed files, so the bloom head and BOTH manifests'
-        immutable segments stay in place through the renames (the new
-        heads re-reference them) — a crash leaves the bloom head at its
-        pre-append version, which the file-set check refuses as STALE
-        (never a mis-prune) and ``heal_bloom`` repairs at O(new files),
-        instead of the absent-manifest full rebuild; the zone-map head
-        is dropped (zoned readers trust the map, so absent-and-loud is
-        its only safe crash state)."""
-        sides = (ZONEMAP_FILE, BLOOM_FILE) if drop_bloom else (ZONEMAP_FILE,)
-        for side in sides:
-            p = os.path.join(self.path(table), side)
-            if os.path.isfile(p):
-                os.remove(p)
-        if drop_bloom:
-            for side in (ZONEMAP_FILE, BLOOM_FILE):
-                self._clear_sidecar_segments(self.path(table), side)
+    def _drop_zonemap(self, table: str) -> None:
+        """Drop the zone-map head — ``append_files`` does this before
+        renaming its files in: zoned readers trust the map, so a crash
+        mid-append must leave it ABSENT (pruned readers refuse loudly,
+        never mis-prune). The Bloom head and both manifests' immutable
+        segments stay in place (appends never change committed files;
+        the new heads re-reference them), so a crash leaves the Bloom
+        head at its pre-append version, which the file-set check
+        refuses as STALE and ``heal_bloom`` repairs at O(new files)."""
+        p = os.path.join(self.path(table), ZONEMAP_FILE)
+        if os.path.isfile(p):
+            os.remove(p)
 
     def write_zonemap(
         self, spark: SparkSession, table: str, stat_cols: list[str]
@@ -1018,8 +1017,8 @@ class ParquetWarehouse:
         """(Re)build the zone map for a committed table. Derived
         metadata: if it is ever missing or stale, ``read_zoned`` refuses
         loudly rather than mis-pruning — rebuild with this call (e.g.
-        after ``compact``). ``overwrite(..., stat_cols=...)`` builds it
-        atomically with the data instead."""
+        after a crashed append). ``overwrite(..., stat_cols=...)``
+        builds it atomically with the data instead."""
         if os.path.isfile(self._version_pointer(table)):
             raise ValueError(
                 f"{table!r} is versioned — snapshots carry their own "
@@ -1136,7 +1135,7 @@ class ParquetWarehouse:
     ) -> None:
         """Land a rebuilt manifest as one INLINE head, then delete the
         segment files it no longer references (the full rebuilds:
-        write_zonemap, write_bloom, heal_bloom, compaction)."""
+        write_zonemap, write_bloom, heal_bloom)."""
         self._write_json_atomic(os.path.join(base, filename), manifest)
         self._clear_sidecar_segments(base, filename)
 
@@ -1264,6 +1263,7 @@ class ParquetWarehouse:
         bits_per_key: int = BLOOM_BITS_PER_KEY,
         k: int = BLOOM_K,
         paths: list[str] | None = None,
+        schema: StructType | None = None,
     ) -> dict:
         """Bloom manifest over ``data_dir`` (or just ``paths``) holding
         ``n_rows`` rows, with the pass chosen by input size — the one
@@ -1276,7 +1276,7 @@ class ParquetWarehouse:
             else self._compute_bloom
         )
         return fn(spark, data_dir, cols, bits_per_key=bits_per_key, k=k,
-                  paths=paths)
+                  paths=paths, schema=schema)
 
     @staticmethod
     def _compute_bloom_small(
@@ -1286,6 +1286,7 @@ class ParquetWarehouse:
         bits_per_key: int = BLOOM_BITS_PER_KEY,
         k: int = BLOOM_K,
         paths: list[str] | None = None,
+        schema: StructType | None = None,
     ) -> dict:
         """Batch-sized twin of ``_compute_bloom``: ONE Spark job
         projects every column spec's k seeded xxhash64 values (the
@@ -1310,11 +1311,12 @@ class ParquetWarehouse:
         always describes the exact file set."""
         import base64
 
+        reader = spark.read.schema(schema) if schema else spark.read
         if paths is None:
-            df = spark.read.parquet(data_dir)
+            df = reader.parquet(data_dir)
             expected = ParquetWarehouse._walk_parquet_rels(data_dir)
         else:
-            df = spark.read.option("basePath", data_dir).parquet(*paths)
+            df = reader.option("basePath", data_dir).parquet(*paths)
             expected = [
                 ParquetWarehouse.file_rel(p, data_dir) for p in paths
             ]
@@ -1386,6 +1388,7 @@ class ParquetWarehouse:
         bits_per_key: int = BLOOM_BITS_PER_KEY,
         k: int = BLOOM_K,
         paths: list[str] | None = None,
+        schema: StructType | None = None,
     ) -> dict:
         """Two distributed passes over ``data_dir`` per column (or
         tuple spec — see ``_bloom_spec_parts``): one distinct-count agg
@@ -1398,8 +1401,9 @@ class ParquetWarehouse:
         incremental-heal shape, matching ``_compute_bloom_small``)."""
         import base64
 
+        reader = spark.read.schema(schema) if schema else spark.read
         if paths is None:
-            df = spark.read.parquet(data_dir)
+            df = reader.parquet(data_dir)
             # the row-driven passes below can only see files that HOLD
             # rows (groupBy(_metadata.file_path) has no group for an
             # empty part file), but the manifest must describe the
@@ -1409,7 +1413,7 @@ class ParquetWarehouse:
             # contain a probe key)
             all_rels = ParquetWarehouse._walk_parquet_rels(data_dir)
         else:
-            df = spark.read.option("basePath", data_dir).parquet(*paths)
+            df = reader.option("basePath", data_dir).parquet(*paths)
             all_rels = [
                 ParquetWarehouse.file_rel(p, data_dir) for p in paths
             ]
@@ -2541,9 +2545,7 @@ class ParquetWarehouse:
                 # this manifest may still be scanning them
                 os.remove(os.path.join(final, DELETES_FILE))
                 return {"keys_applied": dm["n_keys"], "files_replaced": 0}
-            sub = spark.read.option("basePath", final).parquet(
-                *[os.path.join(final, rel) for rel in hit]
-            )
+            sub = self._read_files(spark, table, hit)
             survivors = self._anti_join_keys(sub, dele, kcols, dm["n_keys"])
             # the assembly swap inside commits the survivors AND drops
             # the _deletes sidecar (not in the carried-sidecar set) in
@@ -2757,7 +2759,7 @@ class ParquetWarehouse:
                 if m is not None:
                     with open(os.path.join(root, name)) as f:
                         heads[name] = (json.load(f), m["files"])
-            self._drop_zonemap(table, drop_bloom=False)
+            self._drop_zonemap(table)
             tag = uuid.uuid4().hex[:12]
 
             def final_rel(rel: str) -> str:
@@ -2802,36 +2804,37 @@ class ParquetWarehouse:
         sort_by: list[str] | None = None,
     ) -> int:
         """Bin-pack small files up to ``target_file_bytes`` per output file.
-        Returns the number of directories rewritten.
-
-        ``sort_by`` turns the repack into a PER-PARTITION recluster —
-        the hive-layout counterpart of ``recluster`` (which covers flat
-        tables): every leaf data directory rewrites range-sorted on the
-        given columns, so each partition's files regain narrow disjoint
-        zone bands and the HYBRID merge scope prunes inside partitions
-        again. Unlike the plain repack, a sort pass rewrites EVERY leaf
-        (sortedness cannot be observed from file counts), so it is an
-        explicit maintenance pass, not an idempotent no-op — schedule it
-        the way the flat recluster is scheduled.
+        Returns the number of leaf data directories rewritten (1 for a
+        bucketed pass, 0 for a no-op or a versioned table).
 
         Every incremental CDC batch appends a few small files per touched
         partition; after thousands of syncs a 100 TB table degenerates
         into millions of tiny files and scan planning + open() overhead
-        dominate reads.  Compaction rewrites each leaf data directory
-        whose file count exceeds ceil(bytes/target) with ``coalesce`` (a
-        shuffle-free narrow repack), using the same temp-dir + rename swap
-        as ``overwrite`` so readers never observe a partial directory, and
-        a crash mid-compaction leaves the original intact.
+        dominate reads. ``_compaction_plan`` picks each leaf data
+        directory whose file count exceeds ceil(bytes/target); each is
+        read with the table's read schema and repacked with
+        ``coalesce`` (shuffle-free, keeping the clustered row order),
+        and the leaves union into one write job. Leaves already at
+        target are neither read nor touched (mtimes stable), so repeated
+        compaction is an idempotent no-op.
 
-        Partitions already at their target file count are skipped — their
-        files are neither read nor touched (mtimes stable), so repeated
-        compaction is idempotent and cheap.  Directories are processed in
-        a driver loop (one Spark job each), the same per-partition
-        bin-packing shape as Delta's OPTIMIZE. A failure mid-loop leaves
-        some leaves compacted and others not, and the manifests were
-        already dropped up-front, so pruned readers refuse loudly until
-        the idempotent re-run completes and rebuilds them (the zone map
-        and Bloom manifest are recomputed in full over the new files).
+        The pass is ONE atomic ``replace_files`` commit: the planned
+        files are replaced, every other file carries over as a hard
+        link, and the zone map and Bloom manifest are maintained like in
+        every copy-on-write commit (carried entries verbatim, new ones
+        over the staged files at the table's persisted tuning). Readers
+        see the previous state or the compacted one, and a failure
+        before the swap keeps the previous state, manifests included.
+
+        ``sort_by`` turns the repack into a PER-PARTITION recluster —
+        the hive-layout counterpart of ``recluster`` (which covers flat
+        tables): every leaf rewrites range-sorted on the given columns,
+        so each partition's files regain narrow disjoint zone bands and
+        the HYBRID merge scope prunes inside partitions again. A sort
+        pass rewrites EVERY leaf (sortedness cannot be observed from
+        file counts), so it is an explicit maintenance pass, not an
+        idempotent no-op; on a table with no zone map it creates one
+        over ``sort_by``.
 
         Bucketed tables repack at BUCKET grain: fragmented buckets
         (multi-file, accumulated by bucket-preserving file replaces)
@@ -2842,10 +2845,9 @@ class ParquetWarehouse:
         does not split buckets (the bucket count is the parallelism
         contract); ``sort_by`` contradicting the spec refuses.
 
-        Runs under the table's mutation fence: compaction reads the
-        live file listing and swaps directories, so a concurrent
-        ``replace_files``/erase would be a lost
-        update (the second swap discards the first's rows).
+        Runs under the table's mutation fence: a concurrent
+        ``replace_files``/erase would be a lost update (the second
+        swap discards the first's rows).
         """
         with self._write_fence(
             table, lock_path=self._mutation_lock_path(table)
@@ -2853,6 +2855,38 @@ class ParquetWarehouse:
             return self._compact_unlocked(
                 spark, table, target_file_bytes, sort_by
             )
+
+    def _compaction_plan(
+        self, table: str, target_file_bytes: int
+    ) -> tuple[dict | None, list[tuple[list[str], int]]]:
+        """The compaction plan ``compact`` executes and
+        ``compaction_debt`` summarises: ``(bucket_spec, units)``, each
+        unit ``(rels, n)`` — the parquet rel paths of one leaf data dir
+        (bucketed: of one bucket) and the file count ``compact`` leaves
+        there; more than ``n`` files is over target. A bucket's ideal is
+        ONE file whatever its size (compact never splits a bucket), a
+        leaf's ``max(1, ceil(bytes / target))``. Pure os.stat over the
+        listing; a versioned table's snapshot dirs are hidden, so its
+        plan is empty."""
+        final = self.path(table)
+        spec = self.bucket_spec(table)
+        units: dict[int | str | None, list[str]] = {}
+        for rel in sorted(self._walk_parquet_rels(final)):
+            units.setdefault(
+                os.path.dirname(rel) if spec is None
+                else self._bucket_id_of(rel), [],
+            ).append(rel)
+        if spec is not None:
+            return spec, [
+                (rels, len(rels) if b is None else 1)
+                for b, rels in units.items()
+            ]
+        return None, [
+            (rels, max(1, math.ceil(sum(
+                os.path.getsize(os.path.join(final, r)) for r in rels
+            ) / target_file_bytes)))
+            for rels in units.values()
+        ]
 
     def _compact_unlocked(
         self,
@@ -2862,111 +2896,57 @@ class ParquetWarehouse:
         sort_by: list[str] | None = None,
     ) -> int:
         self._refuse_pending_deletes(table, "compact")
-        final = self.path(table)
-        if os.path.isfile(os.path.join(final, BUCKET_SPEC_FILE)):
-            # BUCKETED repack: repeated bucket-preserving file replaces
-            # (CDC merges, materialized deletes, public replace_files)
-            # leave multi-file buckets — correct to read (Spark scans
-            # multi-file buckets natively) but paying open() overhead
-            # and per-file-only sortedness. Merge each fragmented
-            # bucket's files back to ONE through the bucket-preserving
-            # staged writer: fragment files are the replaced set,
-            # single-file buckets hard-link through untouched, and the
-            # spec's own sort_by re-sorts each merged bucket whole (the
-            # reason a caller-supplied sort_by that contradicts the
-            # layout contract refuses). Buckets never SPLIT here: the
-            # bucket count is the table's parallelism contract.
-            spec = self.bucket_spec(table)
-            if sort_by is not None and list(sort_by) != spec["sort_by"]:
-                raise ValueError(
-                    f"{table!r} is bucketed — its sort contract is the "
-                    f"spec's sort_by {spec['sort_by']}; rewrite through "
-                    "write_bucketed to change it"
-                )
-            by_bucket: dict[int | None, list[str]] = {}
-            for f in os.listdir(final):
-                if f.endswith(".parquet") and os.path.isfile(
-                    os.path.join(final, f)
-                ):
-                    by_bucket.setdefault(self._bucket_id_of(f), []).append(f)
-            frag = [
-                fl
-                for b, fl in by_bucket.items()
-                if b is not None and len(fl) > 1
-            ]
-            if not frag:
-                return 0  # idempotent: one file per bucket already
-            replaced = sorted(f for fl in frag for f in fl)
-            sub = spark.read.option("basePath", final).parquet(
-                *[os.path.join(final, rel) for rel in replaced]
-            )
-            self._replace_files_unlocked(
-                sub, table, replaced, bucket_spec=spec
-            )
-            return 1
-        stat_cols = bloom_cols = None
-        if not os.path.isfile(self._version_pointer(table)):
-            stat_cols = (zm := self.zonemap(table)) and zm["stat_cols"]
-            bloom_cols = (bm := self.bloom(table)) and bm["cols"]
-        work: list[tuple[str, int]] = []
-        for d in sorted(self._leaf_data_dirs(table)):
-            files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-            total = sum(os.path.getsize(os.path.join(d, f)) for f in files)
-            n = max(1, math.ceil(total / target_file_bytes))
-            if sort_by is None and len(files) <= n:
-                continue  # a sort pass rewrites every leaf (see compact)
-            work.append((d, n))
-        if work:
-            # drop the zone map only when something WILL change, and
-            # before the first rewrite so a crash mid-compaction cannot
-            # leave a map describing replaced files; a no-op compaction
-            # keeps a still-valid map (idempotence)
-            self._drop_zonemap(table)
-        for d, n in work:
-            df = spark.read.parquet(d)
-            if sort_by is not None:
-                # per-partition recluster: one range shuffle scoped to
-                # this leaf's rows, narrow disjoint bands per output file
-                df = df.repartitionByRange(n, *sort_by).sortWithinPartitions(
-                    *sort_by
-                )
-            else:
-                df = df.coalesce(n)
-            tmp = d + f".compact-{uuid.uuid4().hex}"
-            df.write.mode("overwrite").parquet(tmp)
-            old = d + f".old-{uuid.uuid4().hex}"
-            os.replace(d, old)
-            os.replace(tmp, d)
-            shutil.rmtree(old, ignore_errors=True)
-        rewritten = len(work)
-        if (
-            rewritten
-            and stat_cols is None
-            and sort_by is not None
-            and not os.path.isfile(self._version_pointer(table))
+        spec, units = self._compaction_plan(table, target_file_bytes)
+        if spec is not None and sort_by is not None and (
+            list(sort_by) != spec["sort_by"]
         ):
-            # a sort pass EXISTS to enable pruning: create the map over
-            # the sort columns when the table had none (recluster's
-            # contract, per-partition)
-            stat_cols = sort_by
-        if rewritten and stat_cols:
-            # a zone-mapped table stays zone-mapped through maintenance:
-            # rebuild over the compacted layout (coalesce preserves the
-            # clustered row order, so the bands stay narrow) — without
-            # this, the first post-compaction merge silently loses the
-            # pruned path and regresses to whole-table I/O
-            self.write_zonemap(spark, table, stat_cols)
-        if rewritten and bloom_cols:
-            # same contract for the bloom manifest; rebuilt directly
-            # (not via write_bloom, which would re-acquire the mutation
-            # fence this compaction already holds)
-            self._commit_inline_sidecar(
-                final, BLOOM_FILE, self._compute_bloom(spark, final, bloom_cols)
+            raise ValueError(
+                f"{table!r} is bucketed — its sort contract is the "
+                f"spec's sort_by {spec['sort_by']}; rewrite through "
+                "write_bucketed to change it"
             )
-        return rewritten
+        # a sort pass rewrites every leaf (see compact)
+        work = [
+            (rels, n) for rels, n in units
+            if len(rels) > n or (sort_by is not None and spec is None)
+        ]
+        if not work:
+            return 0
+        replaced = sorted(r for rels, _ in work for r in rels)
+        if spec is not None:
+            # the bucket-preserving stager re-sorts each merged bucket
+            frame = self._read_files(spark, table, replaced)
+        else:
+            schema = spark.read.parquet(self.path(table)).schema
+            leaves = []
+            for rels, n in work:
+                df = self._read_files(spark, table, rels, schema)
+                leaves.append(
+                    # per-partition recluster: one range shuffle scoped
+                    # to this leaf's rows, narrow disjoint bands per file
+                    df.repartitionByRange(n, *sort_by).sortWithinPartitions(
+                        *sort_by
+                    )
+                    if sort_by is not None
+                    else df.coalesce(n)
+                )
+            frame = functools.reduce(DataFrame.union, leaves)
+        partition_by = [
+            seg.split("=", 1)[0]
+            for seg in os.path.dirname(replaced[0]).split(os.sep)
+            if seg
+        ] or None
+        self._replace_files_unlocked(
+            frame, table, replaced, partition_by, bucket_spec=spec
+        )
+        if sort_by is not None and spec is None and self.zonemap(table) is None:
+            self.write_zonemap(spark, table, sort_by)
+        return 1 if spec is not None else len(work)
 
     # Staging artifacts all carry a dotted stage kind (.tmp-/.old-/
-    # .compact-) and END with a full uuid4 hex (32 chars) — every
+    # .compact-; in-tree .compact-/.old- dirs come only from crashes of
+    # older commits' per-leaf compaction swap, kept so they still get
+    # swept) and END with a full uuid4 hex (32 chars) — every
     # staging site uses uuid.uuid4().hex. Nothing the warehouse commits
     # as live state matches BOTH (snapshots are _vNNNNN, group snaps
     # cNNNNN, CoW data files cow-<hex8>-part-*.parquet, locks/tokens
@@ -2989,7 +2969,8 @@ class ParquetWarehouse:
         vacuum is the janitor for crashes and for superseded delete
         sidecars (which are deliberately left behind as a grace window
         for in-flight readers), which otherwise leak disk forever at
-        100 TB staging sizes.
+        100 TB staging sizes. No current writer stages next to leaf
+        dirs; those come from crashes of older commits' compaction.
 
         Safety, three layers: (1) an artifact is removed only when its
         mtime is older than ``ttl_seconds`` (default 24 h), so a LIVE
@@ -3167,44 +3148,15 @@ class ParquetWarehouse:
         scan planning + open() overhead from millions of
         CDC-accumulated small files, which grows silently until reads
         degrade."""
-        spec = self.bucket_spec(table)
-        if spec is not None:
-            # bucketed ideal is ONE file per bucket (compact never
-            # splits a bucket), so the debt is the fragment count —
-            # sized against the bucket layout, not target_file_bytes,
-            # or the scheduler would call a no-op compact every cycle
-            # on any bucketed table whose buckets are smaller than the
-            # flat target
-            by_bucket: dict[int | None, int] = {}
-            for f in os.listdir(self.path(table)):
-                if f.endswith(".parquet"):
-                    b = self._bucket_id_of(f)
-                    by_bucket[b] = by_bucket.get(b, 0) + 1
-            files = sum(by_bucket.values())
-            excess = sum(
-                n - 1 for b, n in by_bucket.items() if b is not None and n > 1
-            )
-            return {
-                "leaves": 1,
-                "leaves_over_target": 1 if excess else 0,
-                "files": files,
-                "excess_files": excess,
-            }
-        leaves = over = files = excess = 0
-        for d in self._leaf_data_dirs(table):
-            names = [f for f in os.listdir(d) if f.endswith(".parquet")]
-            total = sum(os.path.getsize(os.path.join(d, f)) for f in names)
-            ideal = max(1, math.ceil(total / target_file_bytes))
-            leaves += 1
-            files += len(names)
-            if len(names) > ideal:
-                over += 1
-                excess += len(names) - ideal
+        spec, units = self._compaction_plan(table, target_file_bytes)
+        over = [len(rels) - n for rels, n in units if len(rels) > n]
         return {
-            "leaves": leaves,
-            "leaves_over_target": over,
-            "files": files,
-            "excess_files": excess,
+            # a bucketed table is one leaf: compact merges every
+            # fragmented bucket in one pass
+            "leaves": 1 if spec else len(units),
+            "leaves_over_target": min(len(over), 1) if spec else len(over),
+            "files": sum(len(rels) for rels, _ in units),
+            "excess_files": sum(over),
         }
 
     def delete_where(
@@ -3431,17 +3383,6 @@ class ParquetWarehouse:
             "files_after": len(staged),
             "rows": sum(staged.values()),
         }
-
-    def _leaf_data_dirs(self, table: str) -> list[str]:
-        """Directories under ``table`` that directly hold parquet files —
-        the table root itself, or each hive partition leaf."""
-        out = []
-        for dirpath, dirs, files in os.walk(self.path(table)):
-            # hidden dirs (_deletes sidecar) never compact as data
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            if any(f.endswith(".parquet") for f in files):
-                out.append(dirpath)
-        return out
 
     def _catalog_name(self, table: str) -> str:
         return "wh_" + re.sub(r"[^A-Za-z0-9_]", "_", table)
@@ -4005,14 +3946,10 @@ class ParquetWarehouse:
         through the (fence-held) ``_replace_files_unlocked`` —
         bucket-preserving when ``bucket_spec`` rides along. ``hit ==
         []`` means no file can hold a subject — nothing to do.
-        ``schema`` is the table's read schema: it pins the partition
-        column types (inference over a subset of dirs could differ)."""
+        ``schema`` is the table's read schema (see ``_read_files``)."""
         if not hit:
             return
-        base = self.path(table)
-        sub = spark.read.schema(schema).option("basePath", base).parquet(
-            *[os.path.join(base, rel) for rel in hit]
-        )
+        sub = self._read_files(spark, table, hit, schema)
         sub_survivors = sub.join(
             F.broadcast(subj),
             sub[key_col] == F.col("__erase_key"),
@@ -4021,6 +3958,28 @@ class ParquetWarehouse:
         self._replace_files_unlocked(
             sub_survivors, table, hit, partition_by,
             bucket_spec=bucket_spec,
+        )
+
+    def _read_files(
+        self,
+        spark: SparkSession,
+        table: str,
+        rels: list[str],
+        schema: StructType | None = None,
+    ) -> DataFrame:
+        """Read just the files ``rels`` of ``table`` the way ``read``
+        sees them: with ``basePath`` (hive partition columns come back
+        as columns) and the table's read ``schema`` (inferred over the
+        whole table when not given). The schema pins the partition
+        column types — inference over a subset of partition dirs can
+        differ (``p=007`` alone infers as int 7; next to ``p=abc`` it
+        is the string '007'), and a rewrite must stage the values the
+        table holds."""
+        base = self.path(table)
+        return spark.read.schema(
+            schema or spark.read.parquet(base).schema
+        ).option("basePath", base).parquet(
+            *[os.path.join(base, rel) for rel in rels]
         )
 
     # ------------------------------------------------------------------

@@ -107,7 +107,7 @@ def test_single_key_hits_few_files(spark, tmp_path):
 
 def test_mutations_rebuild_and_stale_refuses(spark, tmp_path):
     wh = _mk(spark, tmp_path)
-    # compact drops the manifest mid-rewrite but REBUILDS it at the end
+    # compact maintains the manifest in its one copy-on-write commit
     # (same contract as the zone map): pruned lookups survive maintenance
     assert wh.compact(spark, "t", target_file_bytes=1 << 30) == 1
     bm = wh.bloom("t")

@@ -295,6 +295,27 @@ def test_materialize_partitioned(spark, tmp_path):
     assert pks == set(range(2000)) - dead
 
 
+def test_materialize_partitioned_keeps_partition_values(spark, tmp_path):
+    """The hit files are read with the table's read schema: a string
+    partition value that would infer as an int over the hit subset
+    alone ('007' -> 7) keeps its text, its dir and its type."""
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    wh.overwrite(
+        spark.createDataFrame(
+            [(1, "007"), (3, "007"), (2, "abc")], "id long, p string"
+        ).coalesce(1),  # ids 1 and 3 share the one p=007 file
+        "t", partition_by=["p"],
+    )
+    wh.delete_keys(spark, "t", "id", [1])
+    wh.materialize_deletes(spark, "t", partition_by=["p"])
+    assert sorted(
+        n for n in os.listdir(wh.path("t")) if not n.startswith(("_", "."))
+    ) == ["p=007", "p=abc"]
+    got = wh.read(spark, "t")
+    assert got.schema.simpleString() == "struct<id:bigint,p:string>"
+    assert sorted(got.collect()) == [(2, "abc"), (3, "007")]
+
+
 def test_read_bloom_keys_masks_pending(spark, tmp_path):
     """The third read surface: a bloom-pruned point lookup must return
     exactly what the unpruned read would — including pending deletes."""

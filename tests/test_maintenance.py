@@ -10,8 +10,13 @@ Pins:
 - vacuum removes only TTL-expired staging orphans (.tmp-/.old-/
   .compact- + uuid hex) and never touches live data, manifests, locks,
   or fresh staging — including the temp a crashed sidecar write leaves;
-- a failure mid-stage in any full-state writer, replace_files or
-  append_files keeps the previous state and leaves no temp dir behind.
+- a failure mid-stage in any full-state writer, replace_files,
+  append_files or compact keeps the previous state and its manifests
+  and leaves no temp dir behind;
+- compact is one atomic commit: a failure at its first rename leaves the
+  table reading exactly as before, and every partition value type
+  (int, date, NULL, escaped and int-like strings) survives it with its
+  leaf dir name and an exact zone map and Bloom manifest.
 """
 
 from __future__ import annotations
@@ -410,9 +415,10 @@ def test_run_queue_maintenance_integration(spark, tmp_path):
 
 
 def test_run_maintenance_rebuilds_dropped_zonemap(spark, tmp_path):
-    """Leaf compaction drops the zone map by design; the
-    scheduler rebuilds it from the table's DECLARED stat_cols so the
-    hybrid merge scope isn't blind until a human remembers."""
+    """A table whose zone map is absent (a crashed append dropped its
+    head, or a legacy table never had one) gets it rebuilt by the
+    scheduler from the table's DECLARED stat_cols, so the hybrid merge
+    scope isn't blind until a human remembers."""
     from example_dms_dataexport_spark.maintenance import (
         MaintenancePolicy,
         run_maintenance,
@@ -421,7 +427,7 @@ def test_run_maintenance_rebuilds_dropped_zonemap(spark, tmp_path):
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite(_rows(spark), "t", partition_by=["bucket"])
     wh.write_zonemap(spark, "t", ["pk"])
-    wh._drop_zonemap("t")  # what compact does before its rewrite
+    os.remove(os.path.join(wh.path("t"), "_zonemap.json"))
     assert wh.zonemap("t") is None
     acts = run_maintenance(
         spark, wh, ["t"], MaintenancePolicy(),
@@ -548,10 +554,10 @@ def test_full_load_declared_bloom_cols(spark, tmp_path):
 
 
 def test_run_maintenance_rebuilds_dropped_bloom(spark, tmp_path):
-    """Leaf compaction drops the Bloom manifest by design
-    (stale must fail loudly); until round 13 nothing ever rebuilt it,
-    so bloom-pruned erasure and delete discovery silently fell back to
-    full key-column scans forever after. The scheduler now rebuilds from the
+    """A table that declares bloom_cols but has no Bloom manifest (a
+    legacy table, or one loaded before the columns were declared) would
+    have bloom-pruned erasure and delete discovery silently fall back to
+    full key-column scans forever. The scheduler rebuilds from the
     DECLARED bloom_cols, and the next erase provably takes the
     FILE-grain cover (untouched files inside a touched partition keep
     their inodes — a partition-grain rewrite would replace them)."""
@@ -566,7 +572,7 @@ def test_run_maintenance_rebuilds_dropped_bloom(spark, tmp_path):
     # bloom-prunable
     wh.overwrite(_rows(spark, n=4000, files=4), "t", partition_by=["bucket"])
     wh.write_bloom(spark, "t", ["pk"])
-    wh._drop_zonemap("t")  # what compact does before its rewrite
+    os.remove(os.path.join(wh.path("t"), "_bloom.json"))
     assert wh.bloom("t") is None
     lay = {"t": {"partition_by": ["bucket"], "bloom_cols": ["pk"]}}
     acts = run_maintenance(spark, wh, ["t"], MaintenancePolicy(), layouts=lay)
@@ -640,10 +646,9 @@ def test_run_maintenance_reconciles_drifted_bloom_spec(spark, tmp_path):
 def test_compact_partitioned_rebuilds_zonemap_and_is_idempotent(
     spark, tmp_path
 ):
-    """compact rewrites every small-file leaf of a hive table (each leaf
-    an independent read->stage->swap): content preserved, the zone map
-    rebuilt over the new files, and the second pass is an idempotent
-    no-op."""
+    """compact rewrites every small-file leaf of a hive table in one
+    commit: content preserved, the zone map maintained over the new
+    files, and the second pass is an idempotent no-op."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite(_rows(spark), "t", partition_by=["bucket"])
     wh.write_zonemap(spark, "t", ["pk"])
@@ -653,7 +658,7 @@ def test_compact_partitioned_rebuilds_zonemap_and_is_idempotent(
     assert {
         (r.pk, r.bucket, r.name) for r in wh.read(spark, "t").collect()
     } == content
-    assert wh.zonemap("t") is not None  # rebuilt after the rewrite
+    assert wh.zonemap("t") is not None  # maintained by the commit
     assert wh.compact(spark, "t") == 0  # idempotent
 
 
@@ -718,6 +723,12 @@ def _stage_fail_setup(spark, wh, writer):
     if writer == "overwrite_versioned":
         wh.overwrite_versioned(df, "t")
         return lambda: wh.overwrite_versioned(new, "t", stat_cols=["pk"])
+    if writer == "compact":
+        wh.overwrite(
+            df, "t", partition_by=["bucket"], stat_cols=["pk"],
+            bloom_cols=["pk"],
+        )
+        return lambda: wh.compact(spark, "t", target_file_bytes=1 << 30)
     wh.overwrite(df, "t", stat_cols=["pk"], meta={"batch": "b1"})
     first = sorted(
         n for n in os.listdir(wh.path("t")) if n.endswith(".parquet")
@@ -734,19 +745,22 @@ def _stage_fail_setup(spark, wh, writer):
 @pytest.mark.parametrize(
     "writer",
     ["overwrite", "write_bucketed", "recluster", "rebucket",
-     "overwrite_versioned", "replace_files", "append_files"],
+     "overwrite_versioned", "replace_files", "append_files", "compact"],
 )
 def test_stage_failure_keeps_previous_state_and_no_temp(
     spark, tmp_path, monkeypatch, writer
 ):
     """A failure mid-stage (the zone-map pass raising after the data
     landed in the temp dir) leaves the previous committed state reading
-    identically and removes the temp dir — every data commit stages
-    through the one stager inside a try/finally, appends into their
-    own ``.<table>.append-tmp-`` dir."""
+    identically, with the same zone map and Bloom manifest, and removes
+    the temp dir — every data commit stages through the one stager
+    inside a try/finally, appends into their own
+    ``.<table>.append-tmp-`` dir, and nothing stages inside the table
+    dir."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     restage = _stage_fail_setup(spark, wh, writer)
     before = sorted(wh.read(spark, "t").collect())
+    manifests = (wh.zonemap("t"), wh.bloom("t"))
 
     def boom(*a, **kw):
         raise RuntimeError("kill-point: zone-map pass failed")
@@ -756,10 +770,93 @@ def test_stage_failure_keeps_previous_state_and_no_temp(
         restage()
     monkeypatch.undo()
     assert sorted(wh.read(spark, "t").collect()) == before
+    assert (wh.zonemap("t"), wh.bloom("t")) == manifests
     assert [
         n for n in os.listdir(wh.root)
         if n.startswith(".tmp-") or ".append-tmp-" in n
     ] == []
+    assert [
+        n for _d, dirs, files in os.walk(wh.path("t"))
+        for n in dirs + files if ".compact-" in n or ".old-" in n
+    ] == []
+
+
+def test_compact_failure_at_first_rename_keeps_previous_state(
+    spark, tmp_path, monkeypatch
+):
+    """compact is one atomic commit: raising at the first rename the
+    warehouse makes during the pass leaves the table reading exactly as
+    before — same rows, same schema — with no staged leaf visible to
+    readers."""
+    from example_dms_dataexport_spark.sources import warehouse
+
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    wh.overwrite(_rows(spark), "t", partition_by=["bucket"])
+    before = wh.read(spark, "t")
+    rows, schema = sorted(before.collect()), before.schema
+
+    def boom(*a, **kw):
+        raise OSError("kill-point: first rename")
+
+    monkeypatch.setattr(warehouse.os, "replace", boom)
+    with pytest.raises(OSError, match="kill-point"):
+        wh.compact(spark, "t", target_file_bytes=1 << 30)
+    monkeypatch.undo()
+    after = wh.read(spark, "t")
+    assert after.schema == schema
+    assert sorted(after.collect()) == rows
+
+
+_P_CASES = {
+    "int": ("int", [-3, 0, 12], ["id"]),
+    "date": ("date", ["2024-01-05", "2023-12-31"], ["id"]),
+    "null": ("int", [None, 4], ["id"]),
+    "escaped_string": ("string", ["a b:c%", "x"], ["id"]),
+    "int_like_string": ("string", ["007", "abc"], ["id", "p"]),
+    "manifests_on_partition": ("int", [-3, 0, 12], ["id", "p"]),
+}
+
+
+@pytest.mark.parametrize("case", list(_P_CASES))
+def test_compact_keeps_partition_values_and_exact_manifests(
+    spark, tmp_path, case
+):
+    """compact reads each planned leaf with the table's read schema, so
+    every partition value keeps its type and its dir name, and the
+    manifests it maintains (including over the partition column, and
+    for a leaf whose value would infer as another type on its own)
+    equal a full rebuild. The LAST value's leaf holds one file and is
+    carried, so the commit mixes carried and rewritten entries."""
+    ptype, values, cols = _P_CASES[case]
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    rows = [(i, values[0]) for i in range(12)] + [
+        (100 + j, v) for j, v in enumerate(values[1:])
+    ]
+    df = spark.createDataFrame(rows, "id long, p string").withColumn(
+        "p", F.col("p").cast(ptype)
+    )
+    wh.overwrite(
+        df.repartition(3), "t", partition_by=["p"], stat_cols=cols,
+        bloom_cols=cols,
+    )
+
+    def leaves():
+        return sorted(
+            n for n in os.listdir(wh.path("t"))
+            if not n.startswith(("_", "."))
+        )
+
+    before = wh.read(spark, "t")
+    content, schema, dirs = sorted(before.collect()), before.schema, leaves()
+    assert wh.compact(spark, "t", target_file_bytes=1 << 30) >= 1
+    after = wh.read(spark, "t")
+    assert after.schema == schema
+    assert sorted(after.collect()) == content
+    assert leaves() == dirs
+    zm, bm = wh.zonemap("t"), wh.bloom("t")
+    assert zm == wh.write_zonemap(spark, "t", cols)
+    rebuilt = wh.write_bloom(spark, "t", cols)
+    assert (bm["schema"], bm["files"]) == (rebuilt["schema"], rebuilt["files"])
 
 
 def test_run_maintenance_reports_bucket_layout_drift(spark, tmp_path):

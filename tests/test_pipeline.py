@@ -1163,10 +1163,10 @@ def test_zonemap_unknown_column_and_missing_map(spark, tmp_path):
 
 def test_zonemap_rebuilt_automatically_by_compaction(spark, tmp_path):
     """A zone-mapped table stays zone-mapped through maintenance:
-    compaction that rewrites files rebuilds the map over the compacted
-    layout in the same call (the old stale map is dropped BEFORE the
-    first rewrite, so a crash mid-compaction still cannot leave a map
-    describing replaced files — pruned reads then refuse loudly)."""
+    compaction commits the map for the compacted layout atomically with
+    the rewrite (carried entries verbatim, new files' entries over the
+    stage), so it is exact and no state ever has a map describing
+    replaced files."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     _zm_table(spark, wh)
     assert wh.compact(spark, "zt", target_file_bytes=1 << 30) >= 1
