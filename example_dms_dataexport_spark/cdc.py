@@ -374,19 +374,15 @@ def merge_and_write(
         )
         merged.unpersist()
         return n
-    base = warehouse.path(target_table)
     spark = changes.sparkSession
     if cand is None:  # bucketed and unnarrowed: every file rewrites
-        cand = ParquetWarehouse._walk_parquet_rels(base)
+        cand = ParquetWarehouse._walk_parquet_rels(warehouse.path(target_table))
         sub_target = target
     elif cand:
-        # the target's schema pins the partition column types (inference
-        # over a subset of dirs could differ) and skips a footer-read job
-        sub_target = (
-            spark.read.schema(target.schema)
-            .option("basePath", base)
-            .parquet(*[os.path.join(base, rel) for rel in cand])
-            .select(*target.columns)
+        # the candidate files with the committed schema: partition column
+        # types never depend on which dirs are read
+        sub_target = warehouse._read_files(spark, target_table, cand).select(
+            *target.columns
         )
         # raw file reads bypass the read mask: drop the pending deletes
         # here or the rewrite would resurrect them
@@ -714,7 +710,7 @@ def _scan_scoped_merge(
     if not all(_in_layout(rel, partition_by) for rel in all_rels):
         return None
     spark = changes.sparkSession
-    scan = spark.read.parquet(base)
+    scan = warehouse._read_files(spark, target_table)
     if partition_by:
         scan = scan.filter(
             _touched_predicate(scan.schema, partition_by, touched)

@@ -57,7 +57,7 @@ def full_load(
             raise ValueError(
                 f"no schema given and target {meta.target_table!r} does not exist"
             )
-        schema = warehouse.read(spark, meta.target_table).schema
+        schema = warehouse.schema(meta.target_table)
         if meta.column_order:
             # a partitioned target reads back partition-columns-last;
             # restore the recorded SOURCE order for the positional cast

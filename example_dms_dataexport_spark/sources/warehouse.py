@@ -29,6 +29,11 @@ flat/hive), one footer read for row counts, one zone-map and Bloom
 computation for the staged files — the reference's single COPY INTO /
 MERGE landing step (ref :238-243, :369-408).
 
+Every committed state (table dir, ``_vNNNNN`` snapshot, linked group
+member) carries its read schema in ``_schema.json``; every read and
+rewrite takes it from there (``schema``, ``_read_dir``) — the
+reference's declared target columns (ref :307-319) — and none infers it.
+
 The read→merge→overwrite cycle on one table would otherwise race with
 itself (Spark reads lazily while the job overwrites the same files), so
 every data write stages first and promotes atomically (SURVEY §7.3
@@ -52,7 +57,10 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
+
+# Committed read schema of a table state (see ``_frame_schema``).
+SCHEMA_FILE = "_schema.json"
 
 # Small JSON sidecar committed atomically WITH an ``overwrite`` (written
 # into the temp dir before the swap) — e.g. the streaming rollup's
@@ -133,24 +141,92 @@ class ParquetWarehouse:
         return os.path.isdir(self.path(table))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """The committed state (a versioned table's current snapshot)
+        with its committed schema — building the frame runs no Spark
+        job; a committed-empty bucketed state reads as an empty frame —
+        and pending merge-on-read deletes masked."""
         if os.path.isfile(self._version_pointer(table)):
             return self.read_version(spark, table)
-        final = self.path(table)
-        spec_p = os.path.join(final, BUCKET_SPEC_FILE)
-        if os.path.isfile(spec_p) and not any(
-            n.endswith(".parquet") for n in os.listdir(final)
-        ):
-            # committed-EMPTY bucketed table: the bucketed writer emits
-            # no file for an empty frame, so there is no parquet to
-            # infer a schema from — the spec sidecar records it
-            with open(spec_p) as f:
-                spec = json.load(f)
-            if "schema" in spec:
-                return spark.createDataFrame(
-                    [], StructType.fromJson(spec["schema"])
-                )
-        df = spark.read.parquet(final)
-        return self._apply_pending_deletes(spark, df, table)
+        return self._apply_pending_deletes(
+            spark, self._read_files(spark, table), table
+        )
+
+    def schema(self, table: str, version: int | None = None) -> StructType:
+        """The committed read schema of ``table`` (or of a retained
+        ``version``) that every reader applies; a state without
+        ``_schema.json`` is refused."""
+        return self._dir_schema(self._zoned_base(table, version), table)
+
+    @staticmethod
+    def _dir_schema(base: str, table: str) -> StructType:
+        """The ``_schema.json`` committed in the state dir ``base``."""
+        try:
+            with open(os.path.join(base, SCHEMA_FILE)) as f:
+                return StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"{table!r} has no committed schema ({SCHEMA_FILE} in "
+                f"{base!r}) — rewrite it through overwrite"
+            ) from None
+
+    @staticmethod
+    def _read_dir(
+        spark: SparkSession,
+        base: str,
+        schema: StructType,
+        rels: list[str] | None = None,
+    ) -> DataFrame:
+        """The one reader of table data: the state dir ``base`` (or its
+        files ``rels``) with ``schema`` and ``basePath``, so partition
+        columns keep the schema's types whichever dirs are read
+        (``p=007`` alone stays the string). ``rels == []`` is an empty
+        relation the optimizer prunes: a bare zero-path scan would still
+        cost a job wherever it is broadcast."""
+        paths = [base] if rels is None else [os.path.join(base, r) for r in rels]
+        df = spark.read.schema(schema).option("basePath", base).parquet(*paths)
+        return df if paths else df.filter(F.lit(False))
+
+    @staticmethod
+    def _frame_schema(
+        df: DataFrame, partition_by: list[str] | None = None
+    ) -> StructType:
+        """``df``'s schema in read order (data columns, then
+        ``partition_by``), nullable as a parquet read reports it."""
+        parts = list(partition_by or [])
+        fields = [f for f in df.schema if f.name not in parts] + [
+            df.schema[p] for p in parts
+        ]
+        return StructType(
+            [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+        )
+
+    def _write_schema(self, base: str, df: DataFrame, partition_by=None):
+        self._write_json_atomic(
+            os.path.join(base, SCHEMA_FILE),
+            self._frame_schema(df, partition_by).jsonValue(),
+        )
+
+    def _refuse_schema_drift(self, table: str, df: DataFrame) -> None:
+        """Refuse a frame whose columns or types differ from the committed
+        schema — ``append_files`` and ``replace_files`` keep it, and a
+        drifted file would land, then fail every later scan; schema
+        evolution is a full-state commit. Types compare by simpleString
+        (reads report nested fields nullable)."""
+        want = {
+            f.name: f.dataType.simpleString() for f in self.schema(table)
+        }
+        got = {f.name: f.dataType.simpleString() for f in df.schema}
+        if got.keys() != want.keys():
+            raise ValueError(
+                f"schema mismatch for {table!r}: batch columns "
+                f"{sorted(got)} != table columns {sorted(want)}"
+            )
+        drift = [(c, got[c], want[c]) for c in sorted(got) if got[c] != want[c]]
+        if drift:
+            raise ValueError(
+                f"column type drift for {table!r} "
+                f"(column, batch, table): {drift}"
+            )
 
     def overwrite(
         self,
@@ -228,9 +304,8 @@ class ParquetWarehouse:
                 meta=meta, stat_cols=stat_cols, bloom_cols=bloom_cols,
             )
             if bspec is not None and not staged:
-                # the bucketed writer emits NO file for an empty frame;
-                # committing the dir would wedge every read on a
-                # schema-less table — same refusal as the replace path
+                # only write_bucketed commits an empty bucketed state
+                # (same refusal as the replace path)
                 raise ValueError(
                     f"overwrite would empty bucketed table {table!r} — "
                     "rewrite the complete (empty) state through "
@@ -282,12 +357,12 @@ class ParquetWarehouse:
 
         The data and its manifests stage through ``_stage_files`` (Bloom
         at the ``BLOOM_*`` defaults: a full state recomputes every
-        file's filter); this adds the sidecars: ``_bucket_spec.json``
-        recording the frame's schema (so a committed-EMPTY bucketed
-        state stays readable in a fresh session), ``_meta.json``, the
-        zone map and the Bloom manifest. All land in ``tmp``, whose rel
-        paths stay valid through the promote, so a manifest never
-        describes a different state than the one it commits with."""
+        file's filter); this adds the sidecars: ``_schema.json`` (the
+        frame's read schema every reader of the state applies),
+        ``_bucket_spec.json``, ``_meta.json``, the zone map and the
+        Bloom manifest. All land in ``tmp``, whose rel paths stay valid
+        through the promote, so a manifest never describes a different
+        state than the one it commits with."""
         rows, zm, bm = self._stage_files(
             df, tmp, partition_by=partition_by, bucket_spec=bucket_spec,
             stat_cols=stat_cols,
@@ -297,12 +372,11 @@ class ParquetWarehouse:
                 "k": BLOOM_K,
             } if bloom_cols else None,
         )
-        if bucket_spec is not None:
-            self._write_json_atomic(
-                os.path.join(tmp, BUCKET_SPEC_FILE),
-                {**bucket_spec, "schema": df.schema.jsonValue()},
-            )
-        for name, obj in ((META_FILE, meta), (ZONEMAP_FILE, zm), (BLOOM_FILE, bm)):
+        self._write_schema(tmp, df, partition_by)
+        for name, obj in (
+            (BUCKET_SPEC_FILE, bucket_spec), (META_FILE, meta),
+            (ZONEMAP_FILE, zm), (BLOOM_FILE, bm),
+        ):
             if obj is not None:
                 self._write_json_atomic(os.path.join(tmp, name), obj)
         return rows
@@ -342,10 +416,10 @@ class ParquetWarehouse:
         type-sensitive) — a silent probe FALSE NEGATIVE that would let
         an erase skip files that DO hold the subject.
 
-        A stage holding no rows runs no manifest pass: its manifests are
-        the exact ones the row-driven passes would find — no zone entry,
-        a zero bitmap per staged file — with the frame's schema (an
-        empty bucketed stage emits no file to infer one from)."""
+        The manifest passes re-read the stage with the frame's read
+        schema (``_frame_schema``). A stage holding no rows runs none:
+        its manifests are the exact ones they would find — no zone
+        entry, a zero bitmap per staged file."""
         parts = list(dict.fromkeys(
             p for s in (bloom or {}).get("cols", ())
             for p in self._bloom_spec_parts(s)
@@ -384,10 +458,7 @@ class ParquetWarehouse:
         }
         n = sum(rows.values())
         spark = df.sparkSession
-        # a hive stage re-read by inference would type its partition
-        # columns over the staged subset of dirs (p=007 alone is int 7,
-        # not the table's '007'); data columns keep their footer types
-        schema = df.schema if partition_by else None
+        schema = self._frame_schema(df, partition_by)
         zm = bm = None
         if stat_cols:
             zm = (
@@ -396,9 +467,8 @@ class ParquetWarehouse:
             )
         if bloom is not None and n:
             bm = self._bloom_pass(
-                spark, tmp, bloom["cols"], n,
+                spark, tmp, bloom["cols"], n, schema=schema,
                 bits_per_key=bloom["bits_per_key"], k=bloom["k"],
-                schema=schema,
             )
         elif bloom is not None:
             bm = {
@@ -526,8 +596,9 @@ class ParquetWarehouse:
 
         Stages through the same ``_staging`` dir + atomic swap as
         ``overwrite`` (a failure leaves no temp behind); the manifest
-        is written into the temp dir first, so shards and manifest
-        commit together.  Returns the manifest dict.
+        and the read schema (``_schema.json``) are written into the temp
+        dir first, so shards and sidecars commit together.  Returns the
+        manifest dict.
         """
         if shuffle_by:
             key = F.xxhash64(*[F.col(c) for c in shuffle_by])
@@ -569,6 +640,7 @@ class ParquetWarehouse:
             self._write_json_atomic(
                 os.path.join(tmp, "_manifest.json"), manifest
             )
+            self._write_schema(tmp, df)
             self._commit_swap(tmp, self.path(table), table)
         return manifest
 
@@ -592,17 +664,15 @@ class ParquetWarehouse:
         spark: SparkSession,
         data_dir: str,
         stat_cols: list[str],
-        schema: StructType | None = None,
+        schema: StructType,
     ) -> dict:
-        """One distributed pass over ``data_dir``: per parquet file, row
-        count plus min/max of every stat column, keyed by path RELATIVE
-        to ``data_dir`` (stable across the atomic tmp→final rename).
-        The result is file-count sized — at 100 TB / ~1 GB files that is
-        ~10^5 entries, megabytes of driver memory, not a data scan at
-        query time."""
-        df = (spark.read.schema(schema) if schema else spark.read).parquet(
-            data_dir
-        )
+        """One distributed pass over ``data_dir`` (read with ``schema``):
+        per parquet file, row count plus min/max of every stat column,
+        keyed by path RELATIVE to ``data_dir`` (stable across the atomic
+        tmp→final rename). The result is file-count sized — at 100 TB /
+        ~1 GB files that is ~10^5 entries, megabytes of driver memory,
+        not a data scan at query time."""
+        df = ParquetWarehouse._read_dir(spark, data_dir, schema)
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in stat_cols:
             aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
@@ -737,7 +807,10 @@ class ParquetWarehouse:
 
         ``df`` may lazily READ the replaced files — everything stages in
         a temp dir and promotes via the same atomic swap as
-        ``overwrite``, so the inputs are intact until the flip.
+        ``overwrite``, so the inputs are intact until the flip. Its
+        columns and types must match the committed schema, which the
+        new state carries (``_refuse_schema_drift``, as in
+        ``append_files``): schema evolution is a full-state commit.
 
         Manifest maintenance: ``df`` stages through the same stager as
         every data commit (``_stage_files``), which computes the new
@@ -831,6 +904,7 @@ class ParquetWarehouse:
                 )
         elif bucket_spec is not None:
             raise ValueError(f"{table!r} carries no bucket spec")
+        self._refuse_schema_drift(table, df)
         if partition_by:
             existing = set(self._walk_parquet_rels(final))
         else:
@@ -905,10 +979,9 @@ class ParquetWarehouse:
                     _link_staged(rel)
                     rows_written += n
             if not renamed and not carried and zero_row:
-                # fully-emptied flat table: keep ONE 0-row file so the
-                # committed state still carries a readable schema, with
-                # an all-NULL zone band that every range skips (the
-                # stager already gave it the all-zero bloom bitmap)
+                # fully-emptied flat table: keep ONE 0-row file, with an
+                # all-NULL zone band that every range skips (the stager
+                # already gave it the all-zero bloom bitmap)
                 _link_staged(zero_row[0])
                 if new_zm is not None:
                     new_zm["files"][zero_row[0]] = {
@@ -916,19 +989,16 @@ class ParquetWarehouse:
                         **{c: [None, None] for c in zm["stat_cols"]},
                     }
             if bucket_spec is not None and not renamed and not carried:
-                # a fully-emptied bucketed table would commit a dir with
-                # no readable schema (the bucketed writer emits no file
-                # for an empty frame, unlike the flat writer's 0-row
-                # part) — refuse loudly rather than wedge plain reads
+                # only write_bucketed commits an empty bucketed state
                 raise ValueError(
                     f"replacement empties bucketed table {table!r} — "
                     "rewrite the complete (empty) state through "
                     "write_bucketed instead"
                 )
-            # sidecars carry over (the batch-identity hook stays intact;
-            # a bucketed state keeps its layout contract file)
-            sides = (META_FILE, BUCKET_SPEC_FILE) if bucket_spec else (META_FILE,)
-            for side in sides:
+            # sidecars carry over (the batch-identity hook stays intact,
+            # the read schema is unchanged — drift refused above — and a
+            # bucketed state keeps its layout contract file)
+            for side in (SCHEMA_FILE, META_FILE, BUCKET_SPEC_FILE):
                 src = os.path.join(final, side)
                 if os.path.isfile(src):
                     shutil.copy(src, os.path.join(asm, side))
@@ -1024,7 +1094,9 @@ class ParquetWarehouse:
                 f"{table!r} is versioned — snapshots carry their own "
                 "maps; commit with overwrite_versioned(stat_cols=[...])"
             )
-        zm = self._compute_zonemap(spark, self.path(table), stat_cols)
+        zm = self._compute_zonemap(
+            spark, self.path(table), stat_cols, self.schema(table)
+        )
         self._commit_inline_sidecar(self.path(table), ZONEMAP_FILE, zm)
         return zm
 
@@ -1260,33 +1332,34 @@ class ParquetWarehouse:
         cols: list[str],
         n_rows: int,
         *,
+        schema: StructType,
         bits_per_key: int = BLOOM_BITS_PER_KEY,
         k: int = BLOOM_K,
         paths: list[str] | None = None,
-        schema: StructType | None = None,
     ) -> dict:
-        """Bloom manifest over ``data_dir`` (or just ``paths``) holding
-        ``n_rows`` rows, with the pass chosen by input size — the one
-        place that choice is made: ``_compute_bloom_small`` up to
-        ``DELETE_BLOOM_PROBE_CAP`` rows, the distributed
-        ``_compute_bloom`` above it. Both build the same manifest."""
+        """Bloom manifest over ``data_dir`` (or just ``paths``) read with
+        ``schema``, holding ``n_rows`` rows, with the pass chosen by
+        input size — the one place that choice is made:
+        ``_compute_bloom_small`` up to ``DELETE_BLOOM_PROBE_CAP`` rows,
+        the distributed ``_compute_bloom`` above it. Both build the same
+        manifest."""
         fn = (
             self._compute_bloom_small
             if n_rows <= DELETE_BLOOM_PROBE_CAP
             else self._compute_bloom
         )
-        return fn(spark, data_dir, cols, bits_per_key=bits_per_key, k=k,
-                  paths=paths, schema=schema)
+        return fn(spark, data_dir, cols, schema=schema,
+                  bits_per_key=bits_per_key, k=k, paths=paths)
 
     @staticmethod
     def _compute_bloom_small(
         spark: SparkSession,
         data_dir: str,
         cols: list[str],
+        schema: StructType,
         bits_per_key: int = BLOOM_BITS_PER_KEY,
         k: int = BLOOM_K,
         paths: list[str] | None = None,
-        schema: StructType | None = None,
     ) -> dict:
         """Batch-sized twin of ``_compute_bloom``: ONE Spark job
         projects every column spec's k seeded xxhash64 values (the
@@ -1311,15 +1384,13 @@ class ParquetWarehouse:
         always describes the exact file set."""
         import base64
 
-        reader = spark.read.schema(schema) if schema else spark.read
-        if paths is None:
-            df = reader.parquet(data_dir)
-            expected = ParquetWarehouse._walk_parquet_rels(data_dir)
-        else:
-            df = reader.option("basePath", data_dir).parquet(*paths)
-            expected = [
-                ParquetWarehouse.file_rel(p, data_dir) for p in paths
-            ]
+        expected = (
+            ParquetWarehouse._walk_parquet_rels(data_dir) if paths is None
+            else [ParquetWarehouse.file_rel(p, data_dir) for p in paths]
+        )
+        df = ParquetWarehouse._read_dir(
+            spark, data_dir, schema, None if paths is None else expected
+        )
         proj = [F.col("_metadata.file_path").alias("__fp")]
         for ci, c in enumerate(cols):
             parts = ParquetWarehouse._bloom_spec_parts(c)
@@ -1385,10 +1456,10 @@ class ParquetWarehouse:
         spark: SparkSession,
         data_dir: str,
         cols: list[str],
+        schema: StructType,
         bits_per_key: int = BLOOM_BITS_PER_KEY,
         k: int = BLOOM_K,
         paths: list[str] | None = None,
-        schema: StructType | None = None,
     ) -> dict:
         """Two distributed passes over ``data_dir`` per column (or
         tuple spec — see ``_bloom_spec_parts``): one distinct-count agg
@@ -1401,22 +1472,19 @@ class ParquetWarehouse:
         incremental-heal shape, matching ``_compute_bloom_small``)."""
         import base64
 
-        reader = spark.read.schema(schema) if schema else spark.read
-        if paths is None:
-            df = reader.parquet(data_dir)
-            # the row-driven passes below can only see files that HOLD
-            # rows (groupBy(_metadata.file_path) has no group for an
-            # empty part file), but the manifest must describe the
-            # EXACT committed file set or the staleness check refuses
-            # forever — enumerate every parquet file up front and give
-            # row-less ones zero bitmaps (an empty file can never
-            # contain a probe key)
-            all_rels = ParquetWarehouse._walk_parquet_rels(data_dir)
-        else:
-            df = reader.option("basePath", data_dir).parquet(*paths)
-            all_rels = [
-                ParquetWarehouse.file_rel(p, data_dir) for p in paths
-            ]
+        # the row-driven passes below can only see files that HOLD rows
+        # (groupBy(_metadata.file_path) has no group for an empty part
+        # file), but the manifest must describe the EXACT committed file
+        # set or the staleness check refuses forever — enumerate every
+        # parquet file up front and give row-less ones zero bitmaps (an
+        # empty file can never contain a probe key)
+        all_rels = (
+            ParquetWarehouse._walk_parquet_rels(data_dir) if paths is None
+            else [ParquetWarehouse.file_rel(p, data_dir) for p in paths]
+        )
+        df = ParquetWarehouse._read_dir(
+            spark, data_dir, schema, None if paths is None else all_rels
+        )
 
         def rel_of(fp: str) -> str:
             return ParquetWarehouse.file_rel(fp, data_dir)
@@ -1556,7 +1624,9 @@ class ParquetWarehouse:
         with self._write_fence(
             table, lock_path=self._mutation_lock_path(table)
         ):
-            bm = self._compute_bloom(spark, self.path(table), cols)
+            bm = self._compute_bloom(
+                spark, self.path(table), cols, self.schema(table)
+            )
             self._commit_inline_sidecar(self.path(table), BLOOM_FILE, bm)
         return bm
 
@@ -1577,9 +1647,11 @@ class ParquetWarehouse:
         O(unmanifested files) cost instead of O(table) — the ingest
         streams' heal path; the gap files' pass is picked by their
         footer row count (``_bloom_pass``), so a batch-sized gap heals
-        in one job. Falls back to the full rebuild when no manifest
-        exists or ``cols`` doesn't match the manifest's specs. Returns
-        the committed manifest."""
+        in one job. Both passes read with the committed schema, so a gap
+        file's partition values hash as the type the rest of the
+        manifest was built with. Falls back to the full rebuild when no
+        manifest exists or ``cols`` doesn't match the manifest's specs.
+        Returns the committed manifest."""
         if os.path.isfile(self._version_pointer(table)):
             raise ValueError(
                 f"{table!r} is versioned — snapshots carry their own "
@@ -1589,12 +1661,13 @@ class ParquetWarehouse:
             table, lock_path=self._mutation_lock_path(table)
         ):
             final = self.path(table)
+            schema = self.schema(table)
             try:
                 bm = self.bloom(table)
             except ValueError:
                 bm = None  # missing segment → full rebuild below
             if bm is None or list(bm["cols"]) != list(cols):
-                bm = self._compute_bloom(spark, final, cols)
+                bm = self._compute_bloom(spark, final, cols, schema)
             else:
                 current = set(self._walk_parquet_rels(final))
                 have = set(bm["files"])
@@ -1611,7 +1684,7 @@ class ParquetWarehouse:
                         _pq.read_metadata(p).num_rows for p in abs_paths
                     )
                     add = self._bloom_pass(
-                        spark, final, bm["cols"], nrows,
+                        spark, final, bm["cols"], nrows, schema=schema,
                         bits_per_key=bm["bits_per_key"], k=bm["k"],
                         paths=abs_paths,
                     )
@@ -1725,15 +1798,10 @@ class ParquetWarehouse:
         bit-identical to ``F.xxhash64`` by pinned test) — zero Spark
         jobs on the ingest streams' per-batch reconcile probes and every
         point lookup; other types run the one tiny driver-bounded job
-        over len(keys) rows. The column type comes from the manifest
-        itself (one parquet footer read per probe otherwise — at
-        manifest scale that matters)."""
+        over len(keys) rows. The column type comes from the manifest,
+        which every Bloom pass records."""
         parts = self._bloom_spec_parts(col)
-        src = (
-            StructType.fromJson(bm["schema"])
-            if "schema" in bm
-            else spark.read.parquet(self.path(table)).schema
-        )  # pre-schema manifests fall back to one footer read
+        src = StructType.fromJson(bm["schema"])
         fields = [src[p] for p in parts]
         from ..functions.xxh64 import chain_integral_hashes
 
@@ -1799,9 +1867,10 @@ class ParquetWarehouse:
         """Manifest-pruned point lookup: scan only the files whose Bloom
         filter admits at least one probe key, then apply the exact
         ``IN`` filter as the residual. The no-false-negative guarantee
-        makes the pruned scan return exactly the unpruned result.
-        ``version`` prunes a time-travel read of a versioned table
-        through the snapshot's own manifest."""
+        makes the pruned scan return exactly the unpruned result, read
+        with the committed schema (``_read_dir``) whichever files are
+        kept. ``version`` prunes a time-travel read of a versioned
+        table through the snapshot's own manifest."""
         split = self.bloom_hit_split(spark, table, col, keys, version)
         if split is None:
             raise ValueError(
@@ -1810,11 +1879,9 @@ class ParquetWarehouse:
                 "overwrite_versioned(bloom_cols=...) for snapshots)"
             )
         hit, _miss = split
-        base = self._zoned_base(table, version)
-        if not hit:
-            return spark.read.parquet(base).filter(F.lit(False))
-        df = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, rel) for rel in hit]
+        df = self._read_dir(
+            spark, self._zoned_base(table, version),
+            self.schema(table, version), hit,
         )
         parts = self._bloom_spec_parts(col)
         if len(parts) == 1:
@@ -1862,8 +1929,9 @@ class ParquetWarehouse:
         silently reads every file. The engine-owned cover does not
         depend on planner rules. ``keys``: scalar values for a
         single-column bucket key, tuples (in ``bucket_by`` order) for a
-        composite one. Pending merge-on-read deletes are masked, same
-        contract as ``read``/``read_bloom_keys``."""
+        composite one. The hit files read with the committed schema,
+        which also types the probe keys. Pending merge-on-read deletes
+        are masked, same contract as ``read``/``read_bloom_keys``."""
         spec = self.bucket_spec(table)
         if spec is None:
             raise ValueError(
@@ -1878,9 +1946,7 @@ class ParquetWarehouse:
             if len(bcols) == 1
             else [tuple(k) for k in keys]
         )
-        from pyspark.sql.types import StructField
-
-        tsch = self.read(spark, table).schema
+        tsch = self.schema(table)
         kdf = spark.createDataFrame(
             rows,
             StructType([StructField(c, tsch[c].dataType, True) for c in bcols]),
@@ -1903,13 +1969,8 @@ class ParquetWarehouse:
             for n in os.listdir(final)
             if n.endswith(".parquet") and self._bucket_id_of(n) in bids
         )
-        if not hit:
-            # all named buckets are empty in the committed state
-            df = self.read(spark, table).filter(F.lit(False))
-            return df
-        df = spark.read.option("basePath", final).parquet(
-            *[os.path.join(final, rel) for rel in hit]
-        )
+        # no hit file: the named buckets are empty in the committed state
+        df = self._read_files(spark, table, hit)
         if len(bcols) == 1:
             df = df.filter(F.col(bcols[0]).isin(keys))
         else:
@@ -2023,7 +2084,9 @@ class ParquetWarehouse:
         (lexicographic ``cluster_by`` only makes the leading column's
         bands narrow). On a versioned table the CURRENT snapshot's map
         is used, or any retained ``version`` (time-travel pruned
-        reads)."""
+        reads). The kept files read with the committed schema
+        (``_read_dir``), so the result has ``read``'s schema whichever
+        files survive."""
         if ranges is None:
             if col is None:
                 raise ValueError("pass col (+ lo/hi) or ranges={...}")
@@ -2043,13 +2106,10 @@ class ParquetWarehouse:
                 f"column(s) {missing} not in zone map stat_cols "
                 f"{zm['stat_cols']}"
             )
-        kept = [
-            os.path.join(base, rel)
-            for rel in self._split_by_ranges(zm, ranges)[0]
-        ]
-        if not kept:  # zero overlap: empty result with the table schema
-            return spark.read.parquet(base).filter(F.lit(False))
-        df = spark.read.option("basePath", base).parquet(*kept)
+        df = self._read_dir(
+            spark, base, self.schema(table, version),
+            self._split_by_ranges(zm, ranges)[0],
+        )
         for c, (clo, chi) in ranges.items():
             if clo is not None:
                 df = df.filter(F.col(c) >= F.lit(clo))
@@ -2281,7 +2341,7 @@ class ParquetWarehouse:
             # mis-matches keys above 2^53); try_cast turns an
             # unparseable key into NULL — plain cast THROWS under ANSI
             # mid-write — which the NULL refusal below rejects loudly
-            tsch = spark.read.parquet(final).schema
+            tsch = self.schema(table)
             key_dts = {c: tsch[c].dataType for c in kcols}
             if isinstance(keys, DataFrame):
                 if len(kcols) == 1 and len(keys.columns) == 1:
@@ -2332,8 +2392,6 @@ class ParquetWarehouse:
                 else:
                     kdf = keys.select(*kcols)
             else:
-                from pyspark.sql.types import StructField
-
                 rows = (
                     [(k,) for k in keys]
                     if len(kcols) == 1
@@ -2525,7 +2583,7 @@ class ParquetWarehouse:
                 if dm["n_keys"] <= DELETE_BROADCAST_KEY_CAP:
                     probe = F.broadcast(probe)
                 fps = (
-                    spark.read.parquet(final)
+                    self._read_files(spark, table)
                     .select(
                         *kcols,
                         F.col("_metadata.file_path").alias("__fp"),
@@ -2589,9 +2647,10 @@ class ParquetWarehouse:
 
         Consistency contract: runs under the table's mutation fence;
         refuses versioned tables (appends would bypass snapshot
-        commits) and schema drift (appended columns must match the
-        table's read schema by name AND type — a file of a drifted
-        type lands fine, then every later scan of the table fails).
+        commits) and schema drift (``_refuse_schema_drift``: appended
+        columns must match the committed schema by name AND type — a
+        file of a drifted type lands fine, then every later scan of the
+        table fails); the committed schema itself is left unchanged.
         Pending merge-on-read deletes no longer refuse (r19): the
         batch is anti-join MASKED against the pending key set before
         staging, so appended files never hold a pending-keyed row and
@@ -2658,25 +2717,7 @@ class ParquetWarehouse:
                 "with the bucket-file layout; append routes through the "
                 "bucketed writer instead"
             )
-        # types compare by simpleString: a parquet read reports every
-        # nested field nullable, so full StructField equality would
-        # refuse batches that land fine
-        want = {
-            f.name: f.dataType.simpleString()
-            for f in self.read(spark, table).schema
-        }
-        got = {f.name: f.dataType.simpleString() for f in df.schema}
-        if got.keys() != want.keys():
-            raise ValueError(
-                f"append schema mismatch for {table!r}: batch columns "
-                f"{sorted(got)} != table columns {sorted(want)}"
-            )
-        drift = [(c, got[c], want[c]) for c in sorted(got) if got[c] != want[c]]
-        if drift:
-            raise ValueError(
-                f"append column type drift for {table!r} "
-                f"(column, batch, table): {drift}"
-            )
+        self._refuse_schema_drift(table, df)
         dm = self.pending_deletes(table)
         if dm is not None:
             # r19 fold (defer-mode GDPR × continuous ingest): appends no
@@ -2698,7 +2739,7 @@ class ParquetWarehouse:
             # corrupt manifest whose key columns aren't table columns
             # (unmaskable — nothing sound can be staged).
             kcols = self._delete_key_cols(dm)
-            if not set(kcols) <= want.keys():
+            if not set(kcols) <= set(df.columns):
                 raise ValueError(
                     f"{table!r} has pending merge-on-read deletes on "
                     f"{kcols!r}, which are not all table columns — the "
@@ -2812,7 +2853,7 @@ class ParquetWarehouse:
         into millions of tiny files and scan planning + open() overhead
         dominate reads. ``_compaction_plan`` picks each leaf data
         directory whose file count exceeds ceil(bytes/target); each is
-        read with the table's read schema and repacked with
+        read with the table's committed schema and repacked with
         ``coalesce`` (shuffle-free, keeping the clustered row order),
         and the leaves union into one write job. Leaves already at
         target are neither read nor touched (mtimes stable), so repeated
@@ -2917,10 +2958,9 @@ class ParquetWarehouse:
             # the bucket-preserving stager re-sorts each merged bucket
             frame = self._read_files(spark, table, replaced)
         else:
-            schema = spark.read.parquet(self.path(table)).schema
             leaves = []
             for rels, n in work:
-                df = self._read_files(spark, table, rels, schema)
+                df = self._read_files(spark, table, rels)
                 leaves.append(
                     # per-partition recluster: one range shuffle scoped
                     # to this leaf's rows, narrow disjoint bands per file
@@ -3256,9 +3296,7 @@ class ParquetWarehouse:
                         "zone map to default the cluster columns from"
                     )
                 cluster_by = zm["stat_cols"]
-            df = self._apply_pending_deletes(
-                spark, spark.read.parquet(final), table
-            )
+            df = self.read(spark, table)
             if cluster_partitions is None:
                 total = sum(
                     os.path.getsize(os.path.join(final, n)) for n in files
@@ -3363,9 +3401,7 @@ class ParquetWarehouse:
             if bloom_cols is None and bm is not None:
                 bloom_cols = bm["cols"]
             # masked read: the swap below drops the _deletes sidecar,
-            # so the rewrite must bake the pending deletes in (read()
-            # also covers the committed-EMPTY bucketed state, where no
-            # parquet file exists to infer a schema from)
+            # so the rewrite must bake the pending deletes in
             with self._staging(table) as tmp:
                 staged = self._stage_state(
                     self.read(spark, table), tmp, bucket_spec=spec,
@@ -3410,10 +3446,10 @@ class ParquetWarehouse:
         Spark keeps bucketing metadata in the catalog, not in parquet, so
         the spec is also persisted to ``_bucket_spec.json`` in the table
         directory and ``read_bucketed`` re-registers the table in a fresh
-        session's (in-memory) catalog from that file. The spec also
-        records the frame's SCHEMA, so a committed-empty bucketed table
-        (zero bucket files — the writer emits none for an empty frame)
-        stays readable in a fresh session.
+        session's (in-memory) catalog from that file and the committed
+        ``_schema.json`` — so a committed-empty bucketed table (zero
+        bucket files — the writer emits none for an empty frame) stays
+        readable in a fresh session.
 
         ``stat_cols`` / ``bloom_cols`` build the per-file zone map /
         Bloom manifest over the staged files and commit them atomically
@@ -3451,18 +3487,14 @@ class ParquetWarehouse:
         """The persisted bucket layout (``{"bucket_by", "n_buckets",
         "sort_by"}``) or None for non-bucketed tables — the contract
         rewriters (CDC merge, erasure) use to rewrite THROUGH
-        ``write_bucketed`` so the co-located-join layout survives.
-        The sidecar's recorded frame schema (an empty-state read aid —
-        see ``write_bucketed``) is NOT part of the layout: it is
-        stripped here so drift comparisons and spec re-persists stay
-        layout-only."""
+        ``write_bucketed`` so the co-located-join layout survives. The
+        layout only: the table's schema is the committed
+        ``_schema.json`` (``schema``)."""
         p = os.path.join(self.path(table), BUCKET_SPEC_FILE)
         if not os.path.isfile(p):
             return None
         with open(p) as f:
-            spec = json.load(f)
-        spec.pop("schema", None)
-        return spec
+            return json.load(f)
 
     # Spark's own bucket-id convention (BucketingUtils.getBucketId):
     # the LAST ``_<digits>`` run before the extension chain names the
@@ -3513,20 +3545,17 @@ class ParquetWarehouse:
         """After a bucket-preserving swap the session's external catalog
         entry (if one exists) still describes the right location and
         layout, but Spark caches the file listing — invalidate it so
-        the next read lists the NEW state's files. If the swap EVOLVED
-        the schema (an additive CDC evolution batch), the entry's
-        pinned column list would silently DROP the new columns from
-        every later read — detect the drift (names+types; catalog
-        nullability is not authoritative) and drop the entry instead,
-        so ``read_bucketed`` lazily recreates it from the committed
-        state. A fresh session needs nothing either way."""
+        the next read lists the NEW state's files. If the commit EVOLVED
+        the committed schema (an additive CDC evolution batch through
+        ``overwrite``), the entry's pinned column list would silently
+        DROP the new columns from every later read — compare it with
+        the committed schema (names+types; catalog nullability is not
+        authoritative) and drop the entry instead, so ``read_bucketed``
+        lazily recreates it. A fresh session needs nothing either way."""
         name = self._catalog_name(table)
         if not spark.catalog.tableExists(name):
             return
-        disk = [
-            (f.name, f.dataType)
-            for f in spark.read.parquet(self.path(table)).schema.fields
-        ]
+        disk = [(f.name, f.dataType) for f in self.schema(table)]
         cur = [
             (f.name, f.dataType)
             for f in spark.table(name).schema.fields
@@ -3541,7 +3570,8 @@ class ParquetWarehouse:
         on the bucket key can use the existing layout instead of
         shuffling.  If the catalog entry is gone (fresh session), it is
         recreated as an external bucketed table over the same files from
-        the persisted spec.
+        the persisted spec and the committed schema (``schema``) — a
+        committed-empty state (no bucket file) included.
 
         Pending merge-on-read deletes are masked here too (same contract
         as ``read``): the key set broadcasts, and a broadcast LEFT ANTI
@@ -3552,28 +3582,10 @@ class ParquetWarehouse:
         name = self._catalog_name(table)
         final = self.path(table)
         if not spark.catalog.tableExists(name):
-            with open(os.path.join(final, BUCKET_SPEC_FILE)) as f:
-                spec = json.load(f)
-            # schema comes from the committed FILES when any exist (a
-            # schema-evolving replace carries the spec sidecar verbatim,
-            # so its recorded schema may lag the data's); the sidecar
-            # schema covers the committed-EMPTY state, where there is no
-            # file to infer from
-            has_files = any(
-                n.endswith(".parquet") for n in os.listdir(final)
-            )
-            if has_files:
-                schema = spark.read.parquet(final).schema
-            elif "schema" in spec:
-                schema = StructType.fromJson(spec["schema"])
-            else:
-                raise ValueError(
-                    f"bucketed table {table!r} has no data files and its "
-                    "spec sidecar predates schema recording — rewrite "
-                    "through write_bucketed"
-                )
+            spec = self.bucket_spec(table)
             cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+                f"`{f.name}` {f.dataType.simpleString()}"
+                for f in self.schema(table)
             )
             bcols = ", ".join(f"`{c}`" for c in spec["bucket_by"])
             sorted_by = (
@@ -3760,8 +3772,7 @@ class ParquetWarehouse:
                 if bloom_split is not None and bloom_split[1]:
                     cover = bloom_split[0]
                 self._bloom_cow_erase(
-                    spark, table, key_col, subj, cover, current.schema,
-                    partition_by,
+                    spark, table, key_col, subj, cover, partition_by
                 )
         elif versioned:
             held_before = set(self._load_versions(table)["versions"])
@@ -3796,8 +3807,7 @@ class ParquetWarehouse:
                     stacklevel=2,
                 )
         elif bucketed:
-            with open(bucket_spec_path) as f:
-                spec = json.load(f)
+            spec = self.bucket_spec(table)
             # FILE-grain erase (r13 finding: the old path rewrote the
             # WHOLE table through write_bucketed — at 100 TB one subject
             # erasure paid the full table). Cover discovery, cheapest
@@ -3840,8 +3850,7 @@ class ParquetWarehouse:
             if hit is None:
                 hit = self._subject_file_cover(current, table, key_col, subj)
             self._bloom_cow_erase(
-                spark, table, key_col, subj, hit, current.schema,
-                bucket_spec=spec,
+                spark, table, key_col, subj, hit, bucket_spec=spec
             )
         else:
             # Plain table: zone-pruned copy-on-write when the map covers
@@ -3886,8 +3895,7 @@ class ParquetWarehouse:
                     pruned_cover = bloom_split
             if pruned_cover is not None:
                 self._bloom_cow_erase(
-                    spark, table, key_col, subj, pruned_cover[0],
-                    current.schema,
+                    spark, table, key_col, subj, pruned_cover[0]
                 )
             else:
                 # overwrite() already stages to a temp dir, so reading
@@ -3936,7 +3944,6 @@ class ParquetWarehouse:
         key_col: str,
         subj: DataFrame,
         hit: list[str],
-        schema: StructType,
         partition_by: list[str] | None = None,
         bucket_spec: dict | None = None,
     ) -> None:
@@ -3945,11 +3952,10 @@ class ParquetWarehouse:
         anti-join the hit files' rows against the subjects and commit
         through the (fence-held) ``_replace_files_unlocked`` —
         bucket-preserving when ``bucket_spec`` rides along. ``hit ==
-        []`` means no file can hold a subject — nothing to do.
-        ``schema`` is the table's read schema (see ``_read_files``)."""
+        []`` means no file can hold a subject — nothing to do."""
         if not hit:
             return
-        sub = self._read_files(spark, table, hit, schema)
+        sub = self._read_files(spark, table, hit)
         sub_survivors = sub.join(
             F.broadcast(subj),
             sub[key_col] == F.col("__erase_key"),
@@ -3964,22 +3970,14 @@ class ParquetWarehouse:
         self,
         spark: SparkSession,
         table: str,
-        rels: list[str],
-        schema: StructType | None = None,
+        rels: list[str] | None = None,
     ) -> DataFrame:
-        """Read just the files ``rels`` of ``table`` the way ``read``
-        sees them: with ``basePath`` (hive partition columns come back
-        as columns) and the table's read ``schema`` (inferred over the
-        whole table when not given). The schema pins the partition
-        column types — inference over a subset of partition dirs can
-        differ (``p=007`` alone infers as int 7; next to ``p=abc`` it
-        is the string '007'), and a rewrite must stage the values the
-        table holds."""
-        base = self.path(table)
-        return spark.read.schema(
-            schema or spark.read.parquet(base).schema
-        ).option("basePath", base).parquet(
-            *[os.path.join(base, rel) for rel in rels]
+        """Read the live table's files — all of them, or just ``rels`` —
+        the way ``read`` sees them, without its delete mask: through
+        ``_read_dir`` with the committed schema, so a rewrite stages the
+        values the table holds whichever partition dirs it reads."""
+        return self._read_dir(
+            spark, self.path(table), self.schema(table), rels
         )
 
     # ------------------------------------------------------------------
@@ -4282,19 +4280,12 @@ class ParquetWarehouse:
         self, spark: SparkSession, table: str, version: int | None = None
     ) -> DataFrame:
         """Read a snapshot of a versioned table — the current one by
-        default, or any retained ``version`` (time travel)."""
-        state = self._load_versions(table)
-        if state["current"] == 0:
+        default, or any retained ``version`` (time travel) — with the
+        snapshot's own committed schema."""
+        if self._load_versions(table)["current"] == 0:
             raise FileNotFoundError(f"{table!r} has no versioned snapshots")
-        v = state["current"] if version is None else version
-        if v not in state["versions"]:
-            raise KeyError(
-                f"version {v} of {table!r} is not retained "
-                f"(have {sorted(state['versions'])})"
-            )
-        return spark.read.parquet(
-            os.path.join(self.path(table), state["versions"][v]["dir"])
-        )
+        base = self._zoned_base(table, version)
+        return self._read_dir(spark, base, self._dir_schema(base, table))
 
     def versions(self, table: str) -> dict[int, dict]:
         """Retained snapshot versions with their committed meta."""
@@ -4521,6 +4512,9 @@ class ParquetWarehouse:
                     raise FileNotFoundError(
                         f"member {t!r} has no committed parquet files"
                     )
+                self._write_json_atomic(
+                    os.path.join(dst, SCHEMA_FILE), self.schema(t).jsonValue()
+                )
                 if dm is not None:
                     sdir = self._deletes_dir(t, dm)
                     sdst = os.path.join(dst, os.path.basename(sdir))
@@ -4579,7 +4573,8 @@ class ParquetWarehouse:
         the returned frames are mutually consistent even while a writer
         publishes the next commit. Members committed by ``commit_group``
         resolve through their versioned snapshots; members committed by
-        ``commit_group_linked`` read their hard-linked snapshot dirs."""
+        ``commit_group_linked`` read their hard-linked snapshot dirs with
+        the schema committed into each."""
         state = self._load_group(group)
         if state["current"] == 0:
             raise FileNotFoundError(f"group {group!r} has no commits")
@@ -4597,7 +4592,9 @@ class ParquetWarehouse:
                 # merge-on-read deletes carries its own sidecar — apply
                 # it so the group boundary shows the masked view
                 out[name] = self._apply_deletes_in_dir(
-                    spark, spark.read.parquet(base), base
+                    spark,
+                    self._read_dir(spark, base, self._dir_schema(base, name)),
+                    base,
                 )
             else:
                 out[name] = self.read_version(spark, name, version=v)

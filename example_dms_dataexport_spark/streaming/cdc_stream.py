@@ -275,7 +275,7 @@ def start_cdc_stream(
     inside the batch's touched partitions, untouched partition files
     never read or written.
     """
-    target_schema = warehouse.read(spark, target_table).schema
+    target_schema = warehouse.schema(target_table)
     if column_order:
         from ..metadata import source_ordered
 
@@ -396,7 +396,7 @@ def start_cdc_group_stream(
     streams = []
     for name in member_names:
         spec = dict(members[name])
-        target_schema = warehouse.read(spark, name).schema
+        target_schema = warehouse.schema(name)
         if spec.get("column_order"):
             target_schema = StructType(
                 [

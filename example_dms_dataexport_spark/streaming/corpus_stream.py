@@ -247,7 +247,7 @@ def start_corpus_ingest_stream(
             )
             _release_local_checkpoints(stage_frames)
             return
-        corpus_cols = warehouse.read(spark, table).columns
+        corpus_cols = warehouse.schema(table).fieldNames()
         # ONE evaluation of the cleaned batch serves the probe
         # collects, the anti-joins, and the append — via localCheckpoint
         # rather than persist (r19): with persist() every later query

@@ -271,8 +271,9 @@ def test_small_bloom_pass_is_bit_identical_to_distributed(spark, wh):
     root = str(wh.path("raw"))
     df.repartition(3).write.parquet(root)
     cols = ["o_orderkey", "o_custkey", "o_orderkey,o_custkey"]
-    big = wh._compute_bloom(spark, root, cols)
-    small = wh._compute_bloom_small(spark, root, cols)
+    schema = df.schema
+    big = wh._compute_bloom(spark, root, cols, schema)
+    small = wh._compute_bloom_small(spark, root, cols, schema)
     assert big == small
 
 
@@ -363,8 +364,9 @@ def test_compute_bloom_small_paths_covers_zero_row_files(spark, wh, tmp_path):
         if n.endswith(".parquet")
     ]
     assert len(paths) == 2
-    small = PW._compute_bloom_small(spark, d, ["k"], paths=paths)
-    dist = PW._compute_bloom(spark, d, ["k"], paths=paths)
+    schema = spark.read.parquet(d).schema
+    small = PW._compute_bloom_small(spark, d, ["k"], schema, paths=paths)
+    dist = PW._compute_bloom(spark, d, ["k"], schema, paths=paths)
     assert small == dist
     rels = set(small["files"])
     assert any(r.startswith("empty-") for r in rels) and len(rels) == 2

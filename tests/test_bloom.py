@@ -288,6 +288,37 @@ def test_manifest_schema_probe_avoids_footer_reads(spark, tmp_path):
     assert got == {3}
 
 
+def test_heal_bloom_hashes_gap_files_with_the_committed_schema(
+    spark, tmp_path
+):
+    """heal_bloom's gap-file pass reads with the committed schema: a
+    healed ``p=007`` file of a string partition column hashes '007',
+    not the int 7 the dir name infers as on its own, so it stays in the
+    hit set for '007' (an inferred type is a Bloom false negative) and
+    the healed manifest equals a full rebuild."""
+    import json
+
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [(i, "007" if i % 2 else "abc") for i in range(20)], "id long, p string"
+    )
+    wh.overwrite(
+        df.repartition(2, "id"), "t", partition_by=["p"], bloom_cols=["p"]
+    )
+    head_p = os.path.join(wh.path("t"), "_bloom.json")
+    with open(head_p) as f:
+        head = json.load(f)
+    gap = sorted(r for r in head["files"] if r.startswith("p=007/"))[0]
+    del head["files"][gap]
+    with open(head_p, "w") as f:
+        json.dump(head, f)
+    healed = wh.heal_bloom(spark, "t", ["p"])
+    hit, _miss = wh.bloom_hit_split(spark, "t", "p", ["007"])
+    assert gap in hit
+    rebuilt = wh.write_bloom(spark, "t", ["p"])
+    assert healed == rebuilt
+
+
 def _partitioned_scattered(spark, n=2000, parts=4):
     """pk scattered across files WITHIN hive partitions (partitioned on
     a coarse bucket, files split by an unrelated column)."""

@@ -201,19 +201,23 @@ def test_write_bucketed_crash_at_swap_keeps_previous_state(spark, tmp_path, monk
 
 
 def test_empty_bucketed_table_survives_fresh_session(spark, tmp_path):
-    """The bucketed writer emits no file for an empty frame; the spec
-    sidecar's recorded schema is what keeps the committed-empty state
-    readable once the session catalog is gone."""
+    """The bucketed writer emits no file for an empty frame; the
+    committed schema (``_schema.json``) is what keeps the
+    committed-empty state readable, with its types, in a fresh
+    warehouse once the session catalog is gone."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
+    data = _rows(spark, 100)
     wh.write_bucketed(
-        _rows(spark, 100).filter("pk < 0"), "e",
-        bucket_by=["pk"], n_buckets=4,
+        data.filter("pk < 0"), "e", bucket_by=["pk"], n_buckets=4,
     )
     # simulate a fresh session: no catalog entry survives a restart
     spark.sql(f"DROP TABLE IF EXISTS `{wh._catalog_name('e')}`")
-    got = wh.read_bucketed(spark, "e")
-    assert got.count() == 0
-    assert set(got.columns) == {"pk", "grp", "name"}
+    fresh = ParquetWarehouse(wh.root)
+    for got in (fresh.read_bucketed(spark, "e"), fresh.read(spark, "e")):
+        assert got.count() == 0
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in data.schema
+        ]
 
 
 def test_full_load_declared_bucket_builds_manifests(spark, tmp_path):
@@ -467,7 +471,7 @@ def test_cdc_stream_preserves_bucket_layout_across_crash(spark, tmp_path):
 
 def test_empty_bucketed_plain_read_and_rebucket(spark, tmp_path):
     """wh.read() (the universal reader) and rebucket() both handle the
-    committed-EMPTY bucketed state via the spec sidecar's schema — no
+    committed-EMPTY bucketed state via the committed schema — no
     parquet file exists to infer from."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.write_bucketed(

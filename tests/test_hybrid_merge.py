@@ -212,11 +212,11 @@ def test_unrenderable_partition_values_scan_scoped_and_carried(spark, tmp_path):
     )
     merge_and_write(wh, "t", target, ch, pks=["pk"], version_cols=VC,
                     partition_by=["flag"])
-    # NB the read-back partition column is the hive dir STRING 'true' —
-    # Spark writes booleans escaped-lowercase, which is exactly why a
-    # str(v) prefix could never have addressed these dirs
-    got = {r.pk: (str(r.flag), r.val) for r in wh.read(spark, "t").collect()}
-    assert got[4] == ("true", 777) and len(got) == 20
+    # the partition column reads back with its committed boolean type,
+    # though Spark writes the dirs escaped-lowercase (flag=true) — which
+    # is exactly why a str(v) prefix could never have addressed them
+    got = {r.pk: (r.flag, r.val) for r in wh.read(spark, "t").collect()}
+    assert got[4] == (True, 777) and len(got) == 20
     after = _inodes(wh.path("t"))
     for rel, ino in before.items():
         if rel.startswith("flag=false/"):

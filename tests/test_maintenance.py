@@ -857,6 +857,15 @@ def test_compact_keeps_partition_values_and_exact_manifests(
     assert zm == wh.write_zonemap(spark, "t", cols)
     rebuilt = wh.write_bloom(spark, "t", cols)
     assert (bm["schema"], bm["files"]) == (rebuilt["schema"], rebuilt["files"])
+    # pruned reads that keep one leaf alone (the first value's rows, the
+    # last value's row) return read()'s rows with read()'s schema
+    for pruned, ids in (
+        (wh.read_zoned(spark, "t", "id", 0, 11), range(12)),
+        (wh.read_bloom_keys(spark, "t", "id", [98 + len(values)]),
+         [98 + len(values)]),
+    ):
+        assert pruned.schema == schema
+        assert sorted(pruned.collect()) == [r for r in content if r.id in ids]
 
 
 def test_run_maintenance_reports_bucket_layout_drift(spark, tmp_path):

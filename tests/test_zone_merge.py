@@ -114,8 +114,9 @@ def test_replace_files_guards(spark, tmp_path):
     wh.overwrite(df, "pt", partition_by=["val"])
     with pytest.raises(ValueError, match="partition subdirectories"):
         wh.replace_files(df, "pt", [])
-    # replacement data missing a stat col fails loudly, table intact
-    with pytest.raises(ValueError, match="stat column"):
+    # replacement data missing a (stat) column fails loudly — it no
+    # longer matches the committed schema — and the table stays intact
+    with pytest.raises(ValueError, match="schema mismatch"):
         wh.replace_files(df.drop("pk"), "t", [])
     assert wh.read(spark, "t").count() == 100
 
