@@ -1,14 +1,15 @@
 """Frozen side-input relation cache (guide §4.5: heavyweight init once).
 
 A frozen model (NB language profiles, unigram LM) scores every
-micro-batch of an ingest stream, but ``spark.createDataFrame`` over the
-vocabulary-sized model table was re-paying the driver-side conversion
-and JVM transfer PER BATCH — pure fixed overhead at minute-grain syncs
-(the model is immutable for the stream's lifetime by the admission
-contract). This cache keys the built relation on the exact (model
-object, SparkSession) pair, so each frozen model ships to the JVM once
-per session and every later scoring call reuses the same local
-relation.
+micro-batch of an ingest stream. Its vocabulary-sized model table is a
+JVM local relation (``session.local_frame``), so scoring it starts no
+Python worker, but building it converts the whole table to Arrow and
+ships it to the JVM — fixed overhead that a per-batch rebuild would
+re-pay at every minute-grain sync (the model is immutable for the
+stream's lifetime by the admission contract). This cache keys the built
+relation on the exact (model object, SparkSession) pair, so each frozen
+model converts and ships once per session and every later scoring call
+reuses the same local relation.
 
 This is NOT result caching: entries are side-input relations (model
 parameters), never derived query output, and an entry is only reused

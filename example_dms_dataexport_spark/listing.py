@@ -19,6 +19,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import local_frame
+
 
 _SCHEME_RX = re.compile(r"^[A-Za-z0-9+.-]+://?")
 
@@ -76,7 +78,9 @@ def listing_df(spark: SparkSession, stage: str, files: list[FileInfo]) -> DataFr
     reference's planner unions per stage (ref :105-109).  ``file`` is
     stage-relative (``<schema>/<table>/<name>.csv``) so the planner's
     prefix join against metadata ``full_path`` is stage-location
-    independent."""
+    independent.  The listing is a JVM local relation
+    (``session.local_frame``): planning over it starts no Python worker
+    and no job of its own."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         LongType,
@@ -93,7 +97,7 @@ def listing_df(spark: SparkSession, stage: str, files: list[FileInfo]) -> DataFr
         ]
     )
     rows = [(stage, relativize(f.path, stage), f.mtime_ms) for f in files]
-    df = spark.createDataFrame(rows, schema)
+    df = local_frame(spark, rows, schema)
     # file_date as timestamp: reference parses S3 HTTP dates (ref :132, F7);
     # Hadoop gives epoch millis, so the fragile to_timestamp(DY, DD MON...)
     # format translation is avoided entirely (SURVEY §2.8 F7).

@@ -39,6 +39,7 @@ from pyspark.sql.types import ArrayType, IntegerType
 from pyspark.sql.window import Window
 
 from ..partitioning import spread
+from ..session import local_frame
 from .pq import (
     PQ_TRAIN_SAMPLE_CAP,
     _collect_sample,
@@ -411,7 +412,7 @@ def ann_query(
     )
     if collect_probes:
         pl_rows = pl_df.collect()
-        pl = spark.createDataFrame(pl_rows, pl_df.schema)
+        pl = local_frame(spark, pl_rows, pl_df.schema)
         visited = sorted({l for r in pl_rows for l in r["lists"]})
     else:
         pl = pl_df.localCheckpoint()

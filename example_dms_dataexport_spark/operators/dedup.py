@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from ..functions import texthash as TH
 from ..partitioning import spread
+from ..session import local_frame
 
 SIMHASH_BITS = 32
 SIMHASH_BYTES = 4
@@ -350,8 +351,8 @@ def dedup_clusters(
                 T.StructField("cluster_id", id_type, True),
             ]
         )
-        return pairs.sparkSession.createDataFrame(
-            sorted(label_of.items()), schema
+        return local_frame(
+            pairs.sparkSession, sorted(label_of.items()), schema
         )
     labels = (
         edges.select(F.col("src").alias("id"), F.col("src").alias("cluster_id"))

@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..session import local_frame
+
 _SUMMARY_SCHEMA = StructType(
     [
         StructField("item", StringType()),  # NULL on the totals row
@@ -121,7 +123,7 @@ def heavy_hitters(
         # certified exact: every non-candidate's count <= N/(capacity+1)
         # < the k-th candidate's count, so no non-candidate can displace
         # the collected top-k
-        return df.sparkSession.createDataFrame(got, "item string, n long")
+        return local_frame(df.sparkSession, got, "item string, n long")
     # certificate failed (tiny or pathologically flat data): exact path
     return topk(items.groupBy("item").agg(F.count(F.lit(1)).alias("n")))
 

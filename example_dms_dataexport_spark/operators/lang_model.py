@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 UND = "und"
 # fixed-point log-prob scale (the q48/q88 LP_SCALE discipline): log-probs
 # quantize to integer micro-units at TRAIN time, so every scoring sum is
@@ -179,11 +181,12 @@ def classify_lang(
     # (top-V per lang), so the scoring plan needs no langs join at all.
     # The vocabulary-sized relation ships to the JVM ONCE per (model,
     # session) — an ingest stream scoring every micro-batch was
-    # re-paying the createDataFrame conversion per sync (relcache,
+    # re-paying the Arrow conversion and JVM transfer per sync (relcache,
     # guide §4.5: frozen side inputs initialize once).
     def _build() -> DataFrame:
         floors = {lg: p["floor"] for lg, p in model["langs"].items()}
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(tri, lg, logp - floors[lg]) for tri, lg, logp in model["table"]],
             "tri string, lang string, delta long",
         )

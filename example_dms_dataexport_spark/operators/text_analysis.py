@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions import texthash as TH
 from ..partitioning import spread
+from ..session import local_frame
 
 # Per-token log10-probabilities are rounded to this fixed-point scale
 # BEFORE the per-document sum: int64 addition is order-independent, so the
@@ -661,8 +662,8 @@ def unigram_logprob_frozen(
             spark,
             lm,
             "unigram_lp",
-            lambda: spark.createDataFrame(
-                list(lm["lp"].items()), "tok string, _lp long"
+            lambda: local_frame(
+                spark, list(lm["lp"].items()), "tok string, _lp long"
             ),
         )
     )

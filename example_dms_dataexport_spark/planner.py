@@ -16,7 +16,9 @@ out) so it is directly oracle-testable; ``prepare_migration_queue`` is the
 driver wrapper that lists real stages and returns the work queue.
 
 Scale: the inputs are file *listings* (one row per file), never data rows,
-so the plan computation is O(file count).  Both sides of the join are
+so the plan computation is O(file count).  Both inputs — the listing and
+the metadata rows — are JVM local relations (``session.local_frame``):
+a planner tick forks no Python worker, and both sides of the join are
 small → Catalyst broadcasts automatically.
 """
 
@@ -29,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .listing import list_stage, listing_df
 from .metadata import MetadataStore
+from .session import local_frame
 
 # ref :130,139 — strip the file name to get the table directory prefix.
 FILE_SUFFIX_RX = r"/(LOAD[0-9]{8}|2[0-9]{7}-[0-9]{9})..*$"
@@ -161,8 +164,11 @@ def prepare_migration_queue(
         )
         for m in metas
     ]
-    metadata = spark.createDataFrame(
-        meta_rows, "full_path string, stage string, last_incremental_file string, last_full_load_date string"
+    metadata = local_frame(
+        spark,
+        meta_rows,
+        "full_path string, stage string, last_incremental_file string,"
+        " last_full_load_date string",
     ).withColumn("last_full_load_date", F.to_timestamp("last_full_load_date"))
     plan = load_plan_df(listing, metadata, task_count).collect()
     return [

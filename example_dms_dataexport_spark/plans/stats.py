@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StringType,
 )
 
+from ..session import local_frame
+
 _NUMERIC = (
     ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType, DecimalType,
 )
@@ -90,7 +92,8 @@ def profile(
                 wide.asDict().get(f"_smax_{c}"),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "col_name string, n_rows long, n_nulls long, ndv long,"
         " min_num double, max_num double, min_str string, max_str string",

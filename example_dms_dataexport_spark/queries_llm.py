@@ -28,6 +28,7 @@ from .operators import (
     text_analysis,
 )
 from .registry import query, staged_query
+from .session import local_frame
 from .tables import load_table
 
 
@@ -2110,7 +2111,8 @@ def q81_bpe_merges(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     merges = bpe_train(docs, num_merges=8, min_pair_count=2)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, l, r, n) for i, (l, r, n) in enumerate(merges)],
         "merge_rank INT, left STRING, right STRING, pair_count BIGINT",
     )
@@ -2697,8 +2699,10 @@ def q103_cms_accuracy(spark, sf_dir):
                 & (F.col("est_n") <= F.col("exact_n") + F.lit(slack))
             ).alias("within_bounds"),
         )
-        out = spark.createDataFrame(
-            out.collect(), "item string, exact_n long, within_bounds boolean"
+        out = local_frame(
+            spark,
+            out.collect(),
+            "item string, exact_n long, within_bounds boolean",
         )
     finally:
         state.unpersist()
@@ -3768,7 +3772,8 @@ def q150_wordpiece_merges(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     res = wordpiece_train(docs, num_merges=6, min_pair_count=2)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (i + 1, l, r, float(s), int(n))
             for i, (l, r, s, n) in enumerate(res["merges"])

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QUERIES, ORACLES, query, staged_query  # noqa: F401
+from .session import local_frame
 from .tables import load_table
 
 
@@ -4132,7 +4133,7 @@ def q139_bloom_partitioned_erase(spark, sf_dir):
         spark,
         "ord_p",
         "o_custkey",
-        spark.createDataFrame([(s,) for s in subjects], "k long"),
+        local_frame(spark, [(s,) for s in subjects], "k long"),
         partition_by=["part"],
     )
     if res["rows_erased"] == 0:
@@ -4969,7 +4970,8 @@ def q152_metadata_stats(spark, sf_dir):
         stat_cols=["o_orderkey", "o_orderpriority"],
     )
     st = wh.metadata_stats("o_stats")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 st["rows"],

@@ -13,8 +13,10 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -93,3 +95,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-side ``rows`` (tuples or ``Row``s, positional against
+    ``schema``: a ``StructType`` or a DDL string) as a JVM local relation.
+
+    The engine's one way to turn Python values into a DataFrame. The
+    rows become a ``pyarrow.Table`` typed from the Spark schema, which
+    ``createDataFrame`` ships to the JVM as a ``LocalRelation``: no
+    PythonRDD, so no Python worker starts and collecting the frame runs
+    no Spark job. ``createDataFrame`` over a Python list instead
+    parallelizes a PythonRDD that forks Python workers on every action
+    just to unpickle the rows. Values convert as ``createDataFrame``
+    converts them (a naive ``datetime`` is local time, like
+    ``TimestampType.toInternal``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for field, col, typ in zip(schema.fields, cols, arrow.types):
+        dt = field.dataType
+        if dt.needConversion():
+            col = [dt.toInternal(v) for v in col]
+        arrays.append(pa.array(col, type=typ))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)

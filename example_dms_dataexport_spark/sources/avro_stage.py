@@ -44,6 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
 from .filemeta import positional_cast, with_split_safe_rownum
 
 _MAGIC = b"Obj\x01"
@@ -399,7 +400,7 @@ def read_stage_avro(
     when the module is deployed; otherwise the distributed stdlib
     fallback (module docstring)."""
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     if not avro_available(spark):
         return _read_stage_avro_fallback(
             spark, files, schema, with_file_metadata

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 OP_FIELD = StructField("op", StringType(), True)
 
 
@@ -70,7 +72,7 @@ def read_stage_csv(
             f"got {on_error!r}"
         )
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     if on_error == "quarantine":
         schema = StructType(
             [*schema.fields, StructField(CORRUPT_COL, StringType(), True)]

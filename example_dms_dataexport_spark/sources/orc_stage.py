@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
 from .filemeta import positional_cast, with_split_safe_rownum
 
 
@@ -41,7 +42,7 @@ def read_stage_orc(
     watermark before this call — already-loaded files are never
     scanned."""
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     # NB: unlike .parquet(*paths), DataFrameReader.orc takes the list
     raw = spark.read.orc(files)
     cols = positional_cast(raw, schema, "orc")

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
+
 
 def read_stage_parquet(
     spark: SparkSession,
@@ -44,7 +46,7 @@ def read_stage_parquet(
     watermark before this call — already-loaded files are never
     scanned."""
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     raw = spark.read.parquet(*files)
     src = raw.columns
     if len(src) != len(schema.fields):

@@ -59,6 +59,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..session import local_frame
+
 # Committed read schema of a table state (see ``_frame_schema``).
 SCHEMA_FILE = "_schema.json"
 
@@ -180,11 +182,12 @@ class ParquetWarehouse:
         files ``rels``) with ``schema`` and ``basePath``, so partition
         columns keep the schema's types whichever dirs are read
         (``p=007`` alone stays the string). ``rels == []`` is an empty
-        relation the optimizer prunes: a bare zero-path scan would still
-        cost a job wherever it is broadcast."""
+        local relation the optimizer prunes: a bare zero-path scan would
+        still cost a job wherever it is broadcast."""
+        if rels == []:
+            return local_frame(spark, [], schema)
         paths = [base] if rels is None else [os.path.join(base, r) for r in rels]
-        df = spark.read.schema(schema).option("basePath", base).parquet(*paths)
-        return df if paths else df.filter(F.lit(False))
+        return spark.read.schema(schema).option("basePath", base).parquet(*paths)
 
     @staticmethod
     def _frame_schema(
@@ -1011,7 +1014,7 @@ class ParquetWarehouse:
                 # stages nothing: the swap drops the sidecar entirely.
                 kcols = self._delete_key_cols(pending_dm)
                 remaining = (
-                    spark.read.parquet(self._deletes_dir(table, pending_dm))
+                    self._read_deletes(spark, final, pending_dm)
                     .join(
                         carry_deletes_minus.select(*kcols).distinct(),
                         kcols,
@@ -1515,8 +1518,10 @@ class ParquetWarehouse:
                 fp: ParquetWarehouse._bloom_m(nd, bits_per_key)
                 for fp, nd in counts_fp.items()
             }
-            m_df = spark.createDataFrame(
-                [(fp, m) for fp, m in m_by_fp.items()], "__fp string, __m long"
+            m_df = local_frame(
+                spark,
+                [(fp, m) for fp, m in m_by_fp.items()],
+                "__fp string, __m long",
             )
             # a row with ANY NULL key column can never equality-match a
             # probe key (delete_keys refuses NULL keys), so its bits
@@ -1811,7 +1816,7 @@ class ParquetWarehouse:
         )
         if fast is not None:
             return fast
-        probe = spark.createDataFrame(rows, StructType(fields))
+        probe = local_frame(spark, rows, StructType(fields))
         rows = probe.select(
             *[
                 F.xxhash64(
@@ -1947,7 +1952,8 @@ class ParquetWarehouse:
             else [tuple(k) for k in keys]
         )
         tsch = self.schema(table)
-        kdf = spark.createDataFrame(
+        kdf = local_frame(
+            spark,
             rows,
             StructType([StructField(c, tsch[c].dataType, True) for c in bcols]),
         )
@@ -2202,6 +2208,23 @@ class ParquetWarehouse:
         # legacy manifests (pre-versioned-dir) named the fixed _deletes
         return os.path.join(self.path(table), dm.get("dir", DELETES_DIR))
 
+    @staticmethod
+    def _read_deletes(spark: SparkSession, base: str, dm: dict) -> DataFrame:
+        """The pending-delete key sidecar of the state dir ``base`` (a
+        live table or a group snapshot, each with its own
+        ``_schema.json``), read with the key columns' committed types —
+        the types ``delete_keys`` casts the keys to — never inferred."""
+        tsch = ParquetWarehouse._dir_schema(base, os.path.basename(base))
+        schema = StructType(
+            [
+                StructField(c, tsch[c].dataType, True)
+                for c in ParquetWarehouse._delete_key_cols(dm)
+            ]
+        )
+        return spark.read.schema(schema).parquet(
+            os.path.join(base, dm.get("dir", DELETES_DIR))
+        )
+
     def _refuse_pending_deletes(self, table: str, op: str) -> None:
         """Mutations that assemble a new table state from the CURRENT
         files must refuse while deletes are pending: their commit swap
@@ -2241,9 +2264,7 @@ class ParquetWarehouse:
             return df
         with open(p) as f:
             dm = json.load(f)
-        dele = spark.read.parquet(
-            os.path.join(base, dm.get("dir", DELETES_DIR))
-        )
+        dele = self._read_deletes(spark, base, dm)
         return self._anti_join_keys(
             df, dele, self._delete_key_cols(dm), dm["n_keys"]
         )
@@ -2397,7 +2418,8 @@ class ParquetWarehouse:
                     if len(kcols) == 1
                     else [tuple(k) for k in keys]
                 )
-                kdf = spark.createDataFrame(
+                kdf = local_frame(
+                    spark,
                     rows,
                     StructType(
                         [StructField(c, key_dts[c], True) for c in kcols]
@@ -2412,11 +2434,7 @@ class ParquetWarehouse:
                         f"{prev!r}; one key-column set at a time — "
                         "materialize_deletes() before switching"
                     )
-                kdf = kdf.unionByName(
-                    spark.read.parquet(self._deletes_dir(table, dm)).select(
-                        *kcols
-                    )
-                )
+                kdf = kdf.unionByName(self._read_deletes(spark, final, dm))
             kdf = kdf.distinct().persist()
             ndir = f"{DELETES_DIR}-{uuid.uuid4().hex}"
             try:
@@ -2502,7 +2520,7 @@ class ParquetWarehouse:
                     "bucketed tables are not hive-partitioned — drop "
                     "partition_by"
                 )
-            dele = spark.read.parquet(self._deletes_dir(table, dm))
+            dele = self._read_deletes(spark, final, dm)
             hit = None
             # bloom discovery: a single-column filter for a one-column
             # key, or a TUPLE-HASH filter (a "c1,c2" spec over
@@ -2745,7 +2763,7 @@ class ParquetWarehouse:
                     f"{kcols!r}, which are not all table columns — the "
                     "batch cannot be masked; materialize_deletes() first"
                 )
-            dele = spark.read.parquet(self._deletes_dir(table, dm))
+            dele = self._read_deletes(spark, self.path(table), dm)
             df = self._anti_join_keys(df, dele, kcols, dm["n_keys"])
         if bspec is None:
             df = self._cluster_for_partitioned_write(df, partition_by)

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..session import local_frame
+
 from .csv_stage import CORRUPT_COL
 from .filemeta import with_split_safe_rownum
 
@@ -60,7 +62,7 @@ def read_stage_xml(
             f"got {on_error!r}"
         )
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     if on_error == "quarantine":
         schema = StructType(
             [*schema.fields, StructField(CORRUPT_COL, StringType(), True)]

@@ -6,7 +6,10 @@ Pins:
   partition value ``'007'`` is not re-typed as the int 7 when the kept
   files sit under ``p=007`` alone;
 - building the DataFrame of ``read``, ``read_zoned`` and
-  ``read_bloom_keys`` starts no Spark job (no footer inference);
+  ``read_bloom_keys`` starts no Spark job (no footer inference), also
+  for a ``read_zoned`` that keeps no file (an empty local relation) and
+  a ``read`` masking a pending delete key (the key sidecar reads with the
+  committed key type);
 - ``replace_files`` refuses column type drift with ``append_files``'
   error, since carried files keep their footer types;
 - a state dir without ``_schema.json`` is refused, not inferred.
@@ -59,18 +62,42 @@ def test_pruned_reads_keep_committed_partition_types(
     assert [r.p for r in pruned.collect()] == ["007"]
 
 
-def test_building_reads_starts_no_spark_job(spark, tmp_path):
-    wh = _int_like_partitions(spark, tmp_path)
+def _jobs_building(spark, build) -> tuple[object, list[int]]:
     sc = spark.sparkContext
     group = f"schema-pin-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "building reads")
     try:
-        wh.read(spark, "t")
-        wh.read_zoned(spark, "t", "id", 1, 2)
-        wh.read_bloom_keys(spark, "t", "id", [1, 2])
+        built = build()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    return built, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_building_reads_starts_no_spark_job(spark, tmp_path):
+    wh = _int_like_partitions(spark, tmp_path)
+    built, jobs = _jobs_building(
+        spark,
+        lambda: (
+            wh.read(spark, "t"),
+            wh.read_zoned(spark, "t", "id", 1, 2),
+            wh.read_bloom_keys(spark, "t", "id", [1, 2]),
+            wh.read_zoned(spark, "t", "id", 100, 200),
+        ),
+    )
+    assert jobs == []
+    # a pruned read that keeps no file is an empty local relation, not a
+    # zero-path parquet scan
+    empty = built[-1]
+    analyzed = empty._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation <empty>" in analyzed, analyzed
+    assert "parquet" not in analyzed, analyzed
+    assert empty.schema == built[0].schema and empty.collect() == []
+    # a pending delete key: the sidecar reads with the committed key
+    # type instead of inferring it
+    wh.delete_keys(spark, "t", "id", [2])
+    masked, jobs = _jobs_building(spark, lambda: wh.read(spark, "t"))
+    assert jobs == []
+    assert sorted(r.id for r in masked.collect()) == [1, 3]
 
 
 def test_replace_files_refuses_type_drift_like_append(spark, tmp_path):
