@@ -449,11 +449,6 @@ def _is_widening(src, dst) -> bool:
     return False
 
 
-# Above this many distinct batch keys the scan-scoped merge's semi-join
-# probe is NOT broadcast-hinted (AQE picks the shuffled strategy instead
-# of risking the driver on an unbounded backfill batch).
-_SCAN_BROADCAST_KEY_CAP = 2_000_000
-
 # The characters Spark's ExternalCatalogUtils percent-escapes in hive
 # partition directory names (plus control chars and DEL, handled in
 # code): a string value containing any of these renders differently on
@@ -679,8 +674,10 @@ def _scan_scoped_merge(
     """PK-SCAN stage: the EXACT files holding a batch key, from one
     semi-join of the target's primary-key column(s) — projected down to
     (pks, ``_metadata.file_path``), so the scan reads the pk column,
-    not the table — against the batch's distinct keys; on partitioned
-    targets the scan is first pruned to the ``touched`` partitions.
+    not the table — against the batch's distinct keys
+    (``ParquetWarehouse._key_scan``, the exact scan the warehouse's
+    keyed rewrites share); on partitioned targets the scan is first
+    pruned to the ``touched`` partitions.
 
     This is the layout-independent rewrite-amplification fix (the same
     touched-file discovery join Delta's MERGE runs): the zone map only
@@ -716,34 +713,17 @@ def _scan_scoped_merge(
             _touched_predicate(scan.schema, partition_by, touched)
         )
     # persisted across the count AND the semi-join below — otherwise
-    # every scan-scoped batch pays the key-dedup shuffle twice
+    # every scan-scoped batch pays the key-dedup shuffle twice; the
+    # count decides the broadcast (a catch-up/backfill batch can carry
+    # millions of distinct pks)
     keys = changes.select(*pks).distinct().persist()
     try:
-        # broadcast only bounded key sets: a catch-up/backfill batch can
-        # carry millions of distinct pks, and a forced broadcast would
-        # blow the driver where the shuffled semi-join (AQE's choice)
-        # completes
         n_keys = keys.count()
         if n_keys == 0:
             return None
-        probe = (
-            keys if n_keys > _SCAN_BROADCAST_KEY_CAP else F.broadcast(keys)
-        )
-        touched_fps = [
-            r["__fp"]
-            for r in scan.select(
-                *pks, F.col("_metadata.file_path").alias("__fp")
-            )
-            .join(probe, pks, "left_semi")
-            .select("__fp")
-            .distinct()
-            .collect()
-        ]
+        overlap = ParquetWarehouse._key_scan(scan, base, pks, keys, n_keys)
     finally:
         keys.unpersist()
-    overlap = sorted(
-        {ParquetWarehouse.file_rel(fp, base) for fp in touched_fps}
-    )
     if len(overlap) == len(all_rels):
         return None  # every file holds a matching key: nothing prunes
     return overlap

@@ -29,6 +29,16 @@ flat/hive), one footer read for row counts, one zone-map and Bloom
 computation for the staged files — the reference's single COPY INTO /
 MERGE landing step (ref :238-243, :369-408).
 
+Every keyed rewrite finds its files through ONE key cover
+(``_key_cover``): the zone-map, Bloom and bucket-id covers intersected
+where they apply, else one exact key-column scan (``_key_scan``, which
+the scan-scoped CDC merge shares) — the engine's own stand-in for the
+micro-partition pruning the reference's DELETE/MERGE leans on (ref
+:369-408). ``erase_subjects`` (non-versioned) and
+``materialize_deletes`` run the same rewrite over it
+(``_rewrite_key_cover``). Every commit may leave a table empty: the
+committed ``_schema.json`` still types its reads.
+
 Every committed state (table dir, ``_vNNNNN`` snapshot, linked group
 member) carries its read schema in ``_schema.json``; every read and
 rewrite takes it from there (``schema``, ``_read_dir``) — the
@@ -101,13 +111,15 @@ _EMPTY_BLOOM = {"m": 64, "n_distinct": 0, "bits": "AAAAAAAAAAA="}
 # prefixes hide both from parquet file discovery.
 DELETES_DIR = "_deletes"
 DELETES_FILE = "_deletes.json"
-# Above this many pending keys the read-path anti-join is not
-# broadcast-hinted (same driver-protection rationale as the scan-scoped
-# merge's probe cap; AQE picks the shuffled strategy instead).
+# Above this many keys a key set is not broadcast-hinted (AQE picks the
+# shuffled strategy instead of risking the driver on an unbounded set):
+# the one cap of every keyed join — the read-path delete mask, the
+# rewrite anti-join and the exact key scan (``_key_scan``, shared with
+# the scan-scoped CDC merge).
 DELETE_BROADCAST_KEY_CAP = 2_000_000
-# Above this many pending keys materialize_deletes skips the driver-side
-# bloom probe (its key list collects to the driver) and uses the
-# distributed exact scan discovery instead.
+# Above this many keys a key cover (``_key_cover``) probes no manifest
+# (the probe collects the keys to the driver) and takes the distributed
+# exact key scan instead.
 DELETE_BLOOM_PROBE_CAP = 100_000
 
 # Writer fence for overwrite_versioned (single-writer enforcement).
@@ -302,18 +314,10 @@ class ParquetWarehouse:
             )
         df = self._apply_layout(df, cluster_by, zorder_by, cluster_partitions)
         with self._staging(table) as tmp:
-            staged = self._stage_state(
+            self._stage_state(
                 df, tmp, partition_by=partition_by, bucket_spec=bspec,
                 meta=meta, stat_cols=stat_cols, bloom_cols=bloom_cols,
             )
-            if bspec is not None and not staged:
-                # only write_bucketed commits an empty bucketed state
-                # (same refusal as the replace path)
-                raise ValueError(
-                    f"overwrite would empty bucketed table {table!r} — "
-                    "rewrite the complete (empty) state through "
-                    "write_bucketed instead"
-                )
             if carry_deletes_intact and (dm := self.pending_deletes(table)):
                 ndir = f"{DELETES_DIR}-{uuid.uuid4().hex}"
                 shutil.copytree(self._deletes_dir(table, dm),
@@ -973,31 +977,13 @@ class ParquetWarehouse:
                 renamed[rel] = dest
 
             # a delete-only replacement emits a 0-row part file (flat
-            # writer only) — linking it would wedge the manifests, whose
-            # row-based recompute can never describe a row-less file
-            # (bloom_hit_split would then refuse as stale forever)
-            zero_row = [rel for rel, n in staged.items() if n == 0]
+            # writer only) — it is never linked: the committed
+            # _schema.json gives every state, an emptied one included,
+            # its read schema
             for rel, n in staged.items():
                 if n:
                     _link_staged(rel)
                     rows_written += n
-            if not renamed and not carried and zero_row:
-                # fully-emptied flat table: keep ONE 0-row file, with an
-                # all-NULL zone band that every range skips (the stager
-                # already gave it the all-zero bloom bitmap)
-                _link_staged(zero_row[0])
-                if new_zm is not None:
-                    new_zm["files"][zero_row[0]] = {
-                        "n": 0,
-                        **{c: [None, None] for c in zm["stat_cols"]},
-                    }
-            if bucket_spec is not None and not renamed and not carried:
-                # only write_bucketed commits an empty bucketed state
-                raise ValueError(
-                    f"replacement empties bucketed table {table!r} — "
-                    "rewrite the complete (empty) state through "
-                    "write_bucketed instead"
-                )
             # sidecars carry over (the batch-identity hook stays intact,
             # the read schema is unchanged — drift refused above — and a
             # bucketed state keeps its layout contract file)
@@ -1918,9 +1904,9 @@ class ParquetWarehouse:
     ) -> DataFrame:
         """Bucket-cover point lookup on a BUCKETED table's bucket key:
         scan only the files of the buckets the probe keys hash into
-        (``pmod(hash(key), n_buckets)`` against the ``_NNNNN`` file-name
-        suffixes — the same zero-I/O cover ``materialize_deletes`` uses
-        for discovery), then apply the exact ``IN`` residual. A row's
+        (``_bucket_cover``: ``pmod(hash(key), n_buckets)`` against the
+        ``_NNNNN`` file-name suffixes — the same zero-I/O cover every
+        keyed rewrite intersects), then apply the exact ``IN`` residual. A row's
         bucket is a pure function of its key, so the cover is provably
         complete and the pruned scan returns exactly the unpruned
         result. At 100 TB with thousands of buckets this reads
@@ -1944,7 +1930,6 @@ class ParquetWarehouse:
                 "reads need a bucketed layout (use read_bloom_keys for "
                 "manifest-pruned lookups on other layouts)"
             )
-        final = self.path(table)
         bcols = spec["bucket_by"]
         rows = (
             [(k,) for k in keys]
@@ -1957,26 +1942,10 @@ class ParquetWarehouse:
             rows,
             StructType([StructField(c, tsch[c].dataType, True) for c in bcols]),
         )
-        # type-exact hash: the sidecar frame carries the table's column
-        # types, so Murmur3 agrees with what the writer assigned
-        bids = {
-            r["__b"]
-            for r in kdf.select(
-                F.pmod(
-                    F.hash(*[F.col(c) for c in bcols]),
-                    F.lit(spec["n_buckets"]),
-                ).alias("__b")
-            )
-            .distinct()
-            .collect()
-        }
-        hit = sorted(
-            n
-            for n in os.listdir(final)
-            if n.endswith(".parquet") and self._bucket_id_of(n) in bids
-        )
         # no hit file: the named buckets are empty in the committed state
-        df = self._read_files(spark, table, hit)
+        df = self._read_files(
+            spark, table, self._bucket_cover(table, spec, kdf)
+        )
         if len(bcols) == 1:
             df = df.filter(F.col(bcols[0]).isin(keys))
         else:
@@ -2289,6 +2258,162 @@ class ParquetWarehouse:
             cond = cond & (df[c] == F.col(f"__del_{c}"))
         return df.join(probe, cond, "left_anti")
 
+    @staticmethod
+    def _key_scan(
+        scan: DataFrame, base: str, kcols: list[str], keys: DataFrame,
+        n_keys: int,
+    ) -> list[str]:
+        """The EXACT files of ``scan`` (a read of the state dir ``base``)
+        holding a key tuple of ``keys``, as sorted rel paths: one
+        semi-join of the key column(s) and ``_metadata.file_path``
+        against ``keys`` — the scan reads the key columns, not the
+        table, and the paths come from the scan itself, so no partition
+        value is ever rendered to a dir name. No false positives or
+        negatives (NULL keys never equality-match). ``keys`` must carry
+        ``kcols`` with the scan's types."""
+        probe = keys.select(*kcols)
+        if n_keys <= DELETE_BROADCAST_KEY_CAP:
+            probe = F.broadcast(probe)
+        fps = (
+            scan.select(*kcols, F.col("_metadata.file_path").alias("__fp"))
+            .join(probe, kcols, "left_semi")
+            .select("__fp")
+            .distinct()
+            .collect()
+        )
+        return sorted(
+            {ParquetWarehouse.file_rel(r["__fp"], base) for r in fps}
+        )
+
+    def _bucket_cover(
+        self, table: str, spec: dict, keys: DataFrame
+    ) -> list[str]:
+        """The files of the buckets ``keys`` hash into, as sorted names:
+        a row's bucket is ``pmod(hash(bucket_by), n_buckets)``, a pure
+        function of its bucket columns, matched against the ``_NNNNN``
+        file-name suffixes — zero data I/O. ``keys`` must carry the
+        ``bucket_by`` columns with the table's exact types (Murmur3 is
+        type-sensitive); the hash takes them in the spec's order."""
+        bids = {
+            r["__b"]
+            for r in keys.select(
+                F.pmod(
+                    F.hash(*[F.col(c) for c in spec["bucket_by"]]),
+                    F.lit(spec["n_buckets"]),
+                ).alias("__b")
+            )
+            .distinct()
+            .collect()
+        }
+        return sorted(
+            n
+            for n in os.listdir(self.path(table))
+            if n.endswith(".parquet") and self._bucket_id_of(n) in bids
+        )
+
+    def _key_cover(
+        self,
+        spark: SparkSession,
+        table: str,
+        kcols: list[str],
+        keys: DataFrame,
+        n_keys: int,
+    ) -> list[str]:
+        """The files of ``table`` that may hold a key tuple of ``keys``
+        (``n_keys`` distinct tuples of ``kcols``, typed as the table's
+        columns), as sorted rel paths — the discovery step of every
+        keyed rewrite, where the reference leans on Snowflake's
+        micro-partition pruning (ref :369-408).
+
+        Up to ``DELETE_BLOOM_PROBE_CAP`` keys, every manifest cover that
+        applies is intersected: the zone map's point cover for each key
+        column it tracks (``_split_by_subranges``, only while the map
+        describes exactly the committed files), the Bloom manifest of a
+        spec over exactly ``kcols`` (``bloom_hit_split``: a per-column
+        filter cannot attest a composite tuple), and the bucket-id cover
+        when ``bucket_by`` is a subset of ``kcols``. Each is a superset
+        of the exact file set, so the intersection is too. When none
+        applies, or it drops no file, one exact key scan (``_key_scan``)
+        finds the files instead."""
+        rels = self._walk_parquet_rels(self.path(table))
+        if not rels:
+            return []
+        covers: list[list[str]] = []
+        if n_keys <= DELETE_BLOOM_PROBE_CAP:
+            rows = keys.select(*kcols).collect()
+            zm = self.zonemap(table)
+            if zm is not None and set(zm["files"]) == set(rels):
+                covers += [
+                    self._split_by_subranges(
+                        zm["files"], c, [(r[c], r[c]) for r in rows]
+                    )[0]
+                    for c in kcols
+                    if c in zm["stat_cols"]
+                ]
+            bm = self.bloom(table)
+            spec = next(
+                (
+                    s
+                    for s in (bm["cols"] if bm else [])
+                    if set(self._bloom_spec_parts(s)) == set(kcols)
+                ),
+                None,
+            )
+            if spec is not None:
+                # tuples in the SPEC's column order: the hash is
+                # argument-order sensitive
+                parts = self._bloom_spec_parts(spec)
+                probe = [
+                    r[parts[0]] if len(parts) == 1
+                    else tuple(r[p] for p in parts)
+                    for r in rows
+                ]
+                covers.append(
+                    self.bloom_hit_split(spark, table, spec, probe)[0]
+                )
+            bspec = self.bucket_spec(table)
+            if bspec is not None and set(bspec["bucket_by"]) <= set(kcols):
+                covers.append(self._bucket_cover(table, bspec, keys))
+        if covers:
+            hit = set(rels).intersection(*covers)
+            if len(hit) < len(rels):
+                return sorted(hit)
+        return self._key_scan(
+            self._read_files(spark, table), self.path(table), kcols, keys,
+            n_keys,
+        )
+
+    def _rewrite_key_cover(
+        self,
+        spark: SparkSession,
+        table: str,
+        kcols: list[str],
+        keys: DataFrame,
+        n_keys: int,
+        partition_by: list[str] | None,
+        allow_pending_deletes: bool = False,
+    ) -> tuple[list[str], dict | None]:
+        """The one keyed copy-on-write rewrite, shared by
+        ``erase_subjects`` (non-versioned) and ``materialize_deletes``:
+        the key cover's files read back (``_read_files``), lose every
+        row whose key tuple is in ``keys`` (``_anti_join_keys``) and
+        commit through ``_replace_files_unlocked`` — bucket-preserving
+        on a bucketed table — while every other file carries as a hard
+        link. Returns the rewritten files and the commit's stats; an
+        empty cover writes nothing (``([], None)``). The caller holds
+        the mutation fence."""
+        hit = self._key_cover(spark, table, kcols, keys, n_keys)
+        if not hit:
+            return hit, None
+        survivors = self._anti_join_keys(
+            self._read_files(spark, table, hit), keys, kcols, n_keys
+        )
+        return hit, self._replace_files_unlocked(
+            survivors, table, hit, partition_by,
+            allow_pending_deletes=allow_pending_deletes,
+            bucket_spec=self.bucket_spec(table),
+        )
+
     def delete_keys(
         self, spark: SparkSession, table: str, key_col, keys
     ) -> dict:
@@ -2332,9 +2457,9 @@ class ParquetWarehouse:
         anti preserves the probe side's partitioning, so co-located
         joins still plan zero exchanges), and ``materialize_deletes``
         rewrites bucket files copy-on-write through the bucket-
-        preserving staged writer — when the key columns equal
-        ``bucket_by``, discovery is the computable bucket-id cover
-        (``pmod(hash(keys), n_buckets)``), zero data I/O.
+        preserving staged writer — when the key columns contain
+        ``bucket_by``, the key cover includes the computable bucket-id
+        cover (``_bucket_cover``), zero data I/O.
 
         Crash-safety AND lock-free readers: the accumulated key set is
         written to a NEW versioned sidecar dir (``_deletes-<hex>``) and
@@ -2482,23 +2607,15 @@ class ParquetWarehouse:
         """Apply the pending merge-on-read deletes to the data files and
         drop the sidecar — the maintenance half of ``delete_keys``.
 
-        File discovery is pruned, never whole-table: with a bloom
-        manifest covering the key column — or, for a composite key, a
-        tuple spec over exactly the key columns — and a driver-bounded
-        pending set, the hit files come from the manifest alone — zero
-        data I/O for the miss set; on a BUCKETED table whose bucket
-        keys equal the key columns, the computable bucket-id cover
-        (``pmod(hash(keys), n_buckets)`` against the file-name bucket
-        suffixes) finds them with zero data I/O; otherwise one
-        key-column semi-join scan (the same exact touched-file
-        discovery as the scan-scoped CDC merge) finds them. Bucketed
-        hit files rewrite through the bucket-preserving staged writer
-        (``_stage_bucketed``), so the co-located-join layout and its
-        catalog entry survive materialization. Only the hit files rewrite (anti-joined
-        survivors through the copy-on-write ``replace_files`` machinery,
-        every other file carried as a hard link), and the commit swap
-        atomically drops the sidecar WITH the rewrite — a crash before
-        the swap leaves the pending set authoritative, so reads stay
+        The rewrite is ``erase_subjects``' own (``_rewrite_key_cover``):
+        the key cover (``_key_cover`` — the zone map, the Bloom manifest
+        and the bucket-id cover where they apply, else one exact
+        key-column scan) names the files holding a pending key, only
+        those read back, lose the keyed rows and commit copy-on-write
+        through ``replace_files`` (bucket-preserving on a bucketed
+        table), and every other file carries as a hard link. The commit
+        swap drops the sidecar WITH the rewrite — a crash before the
+        swap leaves the pending set authoritative, so reads stay
         correct through every window. ``partition_by`` must name the
         hive layout for partitioned tables (file-grain rewrite inside
         partitions, like the hybrid merge scope).
@@ -2512,128 +2629,27 @@ class ParquetWarehouse:
             dm = self.pending_deletes(table)
             if dm is None:
                 return {"keys_applied": 0, "files_replaced": 0}
-            final = self.path(table)
-            kcols = self._delete_key_cols(dm)
-            bspec = self.bucket_spec(table)
-            if bspec is not None and partition_by:
+            if self.bucket_spec(table) is not None and partition_by:
                 raise ValueError(
                     "bucketed tables are not hive-partitioned — drop "
                     "partition_by"
                 )
-            dele = self._read_deletes(spark, final, dm)
-            hit = None
-            # bloom discovery: a single-column filter for a one-column
-            # key, or a TUPLE-HASH filter (a "c1,c2" spec over
-            # xxhash64(c1, c2, seed) — see _bloom_spec_parts) for a
-            # composite key. Per-column filters can't attest a tuple's
-            # conjunction (a file holding key1 in one row and key2 in
-            # another hits both columns' filters without holding the
-            # tuple), which is why composite keys need their own spec;
-            # false POSITIVES only widen the rewrite, and the no-false-
-            # negative guarantee makes the pruned discovery provably
-            # complete. The exact scan below remains the fallback.
-            if dm["n_keys"] <= DELETE_BLOOM_PROBE_CAP:
-                bm = self.bloom(table)
-                spec = None
-                if bm is not None:
-                    spec = next(
-                        (
-                            s
-                            for s in bm["cols"]
-                            if set(self._bloom_spec_parts(s)) == set(kcols)
-                        ),
-                        None,
-                    )
-                if spec is not None:
-                    parts = self._bloom_spec_parts(spec)
-                    rows = dele.collect()
-                    key_list = (
-                        [r[parts[0]] for r in rows]
-                        if len(parts) == 1
-                        # reorder sidecar tuples into the SPEC's column
-                        # order — the hash is argument-order sensitive
-                        else [tuple(r[p] for p in parts) for r in rows]
-                    )
-                    split = self.bloom_hit_split(
-                        spark, table, spec, key_list
-                    )
-                    if split is not None:
-                        hit = split[0]
-            if (
-                hit is None
-                and bspec is not None
-                and set(bspec["bucket_by"]) <= set(kcols)
-            ):
-                # computable bucket-id COVER: a row's bucket is a pure
-                # function of the bucket keys, so whenever the pending
-                # key columns CONTAIN the bucket keys (equality is the
-                # common case; a composite delete key extending the
-                # bucket key also qualifies) the hit set is exactly the
-                # files of the buckets the keys hash into — pmod(hash)
-                # over the driver-bounded pending set, ZERO data I/O.
-                # Hash argument order must match the spec's (hash is
-                # order-sensitive); the sidecar already carries the
-                # table's exact column types (delete_keys casts), so the
-                # type-sensitive Murmur3 agrees with the writer's.
-                bids = {
-                    r["__b"]
-                    for r in dele.select(
-                        F.pmod(
-                            F.hash(
-                                *[F.col(c) for c in bspec["bucket_by"]]
-                            ),
-                            F.lit(bspec["n_buckets"]),
-                        ).alias("__b")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                hit = sorted(
-                    n
-                    for n in os.listdir(final)
-                    if n.endswith(".parquet")
-                    and self._bucket_id_of(n) in bids
-                )
-            if hit is None:
-                # exact distributed discovery: one key-column semi-join
-                # scan (columnar — reads the key column(s), not the table)
-                probe = dele.select(*kcols)
-                if dm["n_keys"] <= DELETE_BROADCAST_KEY_CAP:
-                    probe = F.broadcast(probe)
-                fps = (
-                    self._read_files(spark, table)
-                    .select(
-                        *kcols,
-                        F.col("_metadata.file_path").alias("__fp"),
-                    )
-                    .join(probe, kcols, "left_semi")
-                    .select("__fp")
-                    .distinct()
-                    .collect()
-                )
-                hit = sorted(
-                    {self.file_rel(r["__fp"], final) for r in fps}
-                )
-            if not hit:
+            final = self.path(table)
+            # the swap inside commits the survivors AND drops the
+            # _deletes sidecar (not in the carried-sidecar set) in ONE
+            # atomic rename — materialization cannot tear
+            _hit, res = self._rewrite_key_cover(
+                spark, table, self._delete_key_cols(dm),
+                self._read_deletes(spark, final, dm), dm["n_keys"],
+                partition_by, allow_pending_deletes=True,
+            )
+            if res is None:
                 # no data file holds a pending key: drop the manifest
                 # (the sole commit point); the de-referenced sidecar
                 # dirs are left for vacuum — in-flight readers holding
                 # this manifest may still be scanning them
                 os.remove(os.path.join(final, DELETES_FILE))
                 return {"keys_applied": dm["n_keys"], "files_replaced": 0}
-            sub = self._read_files(spark, table, hit)
-            survivors = self._anti_join_keys(sub, dele, kcols, dm["n_keys"])
-            # the assembly swap inside commits the survivors AND drops
-            # the _deletes sidecar (not in the carried-sidecar set) in
-            # ONE atomic rename — materialization cannot tear
-            res = self._replace_files_unlocked(
-                survivors,
-                table,
-                hit,
-                partition_by,
-                allow_pending_deletes=True,
-                bucket_spec=bspec,
-            )
             res["keys_applied"] = dm["n_keys"]
             return res
 
@@ -3675,37 +3691,34 @@ class ParquetWarehouse:
         surfaced as a warning, since ``retain=1`` silently drops ALL
         history by design; ``None`` for non-versioned layouts).
 
-        Three storage layouts, three rewrite scopes:
+        Two rewrite scopes:
 
-        - **hive-partitioned** (``partition_by`` given): FILE-grain
-          copy-on-write — one broadcast semi-join scan of the key
-          column collects the exact files holding a subject row
-          (``_metadata.file_path``); when a bloom manifest covering the
-          key narrows the table, its hit files are the cover instead.
-          Only the cover's files anti-join and rewrite through the
-          partition-aware ``replace_files`` (rel paths address the dirs
-          — no hive value rendering — and an emptied partition simply
-          has no dir in the new state); every other file hard-links
-          through untouched: at 100 TB an erasure request touches a
-          handful of files, not the table.
         - **versioned** (``_version.json`` present): the survivors
           commit as the next snapshot through ``overwrite_versioned``
           with ``retain`` (default 1, which prunes every pre-erasure
           snapshot immediately — erasure is only complete once no
           retained snapshot holds the subject's rows; pass a larger
           ``retain`` only if policy allows the grace window).
-        - **bucketed** (``_bucket_spec.json`` present): FILE-grain
-          copy-on-write — the subject cover comes from the bloom
-          manifest, the computable bucket-id cover (when the subject
-          key IS the bucket key: ``pmod(hash(key), n_buckets)`` against
-          the file-name suffixes, zero data I/O), or an exact
-          key-column scan; only the cover's files anti-join and rewrite
-          through the bucket-preserving staged writer, every other file
-          hard-links through untouched, and the layout contract +
-          catalog entry survive. An erase that would EMPTY the table
-          refuses loudly (rewrite the empty state through
-          ``write_bucketed`` instead).
-        - **plain**: anti-join + the atomic temp-dir ``overwrite`` swap.
+        - **every other layout** (flat, hive-partitioned with
+          ``partition_by``, bucketed): FILE-grain copy-on-write through
+          the rewrite ``materialize_deletes`` runs
+          (``_rewrite_key_cover``). The key cover (``_key_cover``)
+          intersects the zone map, the Bloom manifest and the bucket-id
+          cover where they apply, else one broadcast semi-join scan of
+          the key column finds the exact files; only those anti-join
+          and rewrite through ``replace_files`` (bucket-preserving on a
+          bucketed table; an emptied partition has no dir in the new
+          state), and every other file hard-links through with its
+          inode — and its zone-map and Bloom entries — intact. At
+          100 TB an erasure request touches a handful of files, not
+          the table. A hive-laid-out table erased without
+          ``partition_by`` is refused by ``replace_files``.
+          ``touched_partitions`` counts the partition dirs of the
+          rewritten files (``None`` without ``partition_by``).
+
+        Subject sets of up to ``DELETE_BLOOM_PROBE_CAP`` keys collect to
+        the driver for the manifest covers; larger ones take the exact
+        scan and never leave the cluster.
 
         Every rewrite stages into a temp dir before its swap, so reading
         the files being replaced while writing the new ones is safe.
@@ -3745,8 +3758,9 @@ class ParquetWarehouse:
             F.col("__erase_key").isNotNull()
         ).distinct()
         versioned = os.path.isfile(self._version_pointer(table))
-        bucket_spec_path = os.path.join(self.path(table), BUCKET_SPEC_FILE)
-        bucketed = os.path.isfile(bucket_spec_path)
+        bucketed = os.path.isfile(
+            os.path.join(self.path(table), BUCKET_SPEC_FILE)
+        )
         if versioned and partition_by:
             raise ValueError(
                 "versioned tables snapshot whole states; erase without "
@@ -3756,50 +3770,22 @@ class ParquetWarehouse:
             raise ValueError(
                 "bucketed tables are neither versioned nor hive-partitioned"
             )
-        # NOTE the map is NOT dropped up front: every mutating branch
-        # below owns its map lifecycle (overwrite replaces the whole
-        # dir, versioned snapshots carry their own, and the CoW paths
-        # MAINTAIN it), so a refused or no-op erase keeps a valid map.
-        current = (
-            self.read_version(spark, table)
-            if versioned
-            else self.read(spark, table)
-        )
-        rows_before = current.count()
-        survivors = current.join(
-            F.broadcast(subj),
-            current[key_col] == F.col("__erase_key"),
-            "left_anti",
-        )
         touched_n = None
         purged: list[int] | None = None
-        if partition_by:
-            cover = self._subject_file_cover(current, table, key_col, subj)
-            touched_n = len({os.path.dirname(rel) for rel in cover})
-            if cover:
-                # random subject keys scatter across partitions; a bloom
-                # manifest on the key bounds the rewrite to the files
-                # that can contain a subject (no false negatives), and
-                # when it narrows the table its hit set is the cover
-                bloom_split = self.bloom_hit_split(
-                    spark,
-                    table,
-                    key_col,
-                    [r["__erase_key"] for r in subj.collect()],
-                )
-                if bloom_split is not None and bloom_split[1]:
-                    cover = bloom_split[0]
-                self._bloom_cow_erase(
-                    spark, table, key_col, subj, cover, partition_by
-                )
-        elif versioned:
+        if versioned:
+            current = self.read_version(spark, table)
+            rows_before = current.count()
+            survivors = current.join(
+                F.broadcast(subj),
+                current[key_col] == F.col("__erase_key"),
+                "left_anti",
+            )
             held_before = set(self._load_versions(table)["versions"])
             # the republished snapshot KEEPS the erased snapshot's
             # derived-metadata contract: a snapshot committed with
             # stat_cols / bloom_cols would otherwise silently lose its
             # zone map and bloom manifest at the erase, degrading every
-            # later time-travel read (and the NEXT erase's file-grain
-            # cover) to full scans
+            # later time-travel read to full scans
             prior_zm = self.zonemap(table)
             prior_bm = self.bloom(table)
             self._overwrite_versioned_unlocked(
@@ -3824,101 +3810,29 @@ class ParquetWarehouse:
                     "holds the subject's rows",
                     stacklevel=2,
                 )
-        elif bucketed:
-            spec = self.bucket_spec(table)
-            # FILE-grain erase (r13 finding: the old path rewrote the
-            # WHOLE table through write_bucketed — at 100 TB one subject
-            # erasure paid the full table). Cover discovery, cheapest
-            # first: bloom manifest (file grain, zero data I/O) →
-            # computable bucket-id cover when the subject key IS the
-            # bucket key (bucket grain, zero data I/O) → exact
-            # key-column semi-join scan (file grain, one columnar
-            # pass). Only the cover rewrites — through the
-            # bucket-preserving staged writer, so layout and catalog
-            # survive — and every other file hard-links through with
-            # its inode intact.
-            subject_keys = [r["__erase_key"] for r in subj.collect()]
-            hit = None
-            bloom_split = self.bloom_hit_split(
-                spark, table, key_col, subject_keys
-            )
-            if bloom_split is not None:
-                hit = bloom_split[0]
-            if hit is None and spec["bucket_by"] == [key_col]:
-                # hash is type-sensitive: probe with the TABLE's column
-                # type, exactly what the bucketed writer hashed
-                key_dt = current.schema[key_col].dataType
-                bids = {
-                    r["__b"]
-                    for r in subj.select(
-                        F.pmod(
-                            F.hash(F.col("__erase_key").cast(key_dt)),
-                            F.lit(spec["n_buckets"]),
-                        ).alias("__b")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                hit = sorted(
-                    n
-                    for n in os.listdir(self.path(table))
-                    if n.endswith(".parquet")
-                    and self._bucket_id_of(n) in bids
-                )
-            if hit is None:
-                hit = self._subject_file_cover(current, table, key_col, subj)
-            self._bloom_cow_erase(
-                spark, table, key_col, subj, hit, bucket_spec=spec
-            )
         else:
-            # Plain table: zone-pruned copy-on-write when the map covers
-            # the subject key — the request set is small, so its EXACT
-            # file cover computes driver-side from the map (a key hits a
-            # file iff the file's band contains it): only hit files get
-            # the anti-join rewrite, the rest hard-link through, and the
-            # map stays exact. At 100 TB an erasure request touches a
-            # handful of clustered files, not the table.
-            zm = self.zonemap(table)
-            pruned_cover = None
-            # one driver-bounded collect serves both cover attempts
-            subject_keys = [r["__erase_key"] for r in subj.collect()]
-            if (
-                zm is not None
-                and key_col in zm["stat_cols"]
-                # flat layout only: replace_files refuses partition
-                # subdirectories (undeclared-partition_by edge)
-                and not any("/" in rel for rel in zm["files"])
-            ):
-                keys = [self._zonemap_stat(k) for k in subject_keys]
-                hit, missed = [], []
-                for rel, stats in zm["files"].items():
-                    mn, mx = stats[key_col]
-                    contains = mn is not None and any(
-                        mn <= k <= mx for k in keys
-                    )
-                    (hit if contains else missed).append(rel)
-                if missed:  # pruning pays off (possibly hit == [])
-                    pruned_cover = (hit, missed)
-            if pruned_cover is None:
-                # The zone map only bites when the layout clusters the
-                # subject key; erasure subjects are usually RANDOM keys
-                # in a time-clustered table. The bloom manifest covers
-                # exactly that: no false negatives, so a file the
-                # filters rule out provably holds no subject row and may
-                # be skipped — false positives only widen the rewrite.
-                bloom_split = self.bloom_hit_split(
-                    spark, table, key_col, subject_keys
-                )
-                if bloom_split is not None and bloom_split[1]:
-                    pruned_cover = bloom_split
-            if pruned_cover is not None:
-                self._bloom_cow_erase(
-                    spark, table, key_col, subj, pruned_cover[0]
-                )
+            rows_before = self.read(spark, table).count()
+            # the subject keys take the column's exact type (the bucket
+            # hash and the Bloom hash are type-sensitive); a subject the
+            # type cannot hold exactly matches no row — Spark's coerced
+            # equality decides, as a join on the raw value would
+            dt = self.schema(table)[key_col].dataType
+            key = F.col("__erase_key")
+            if subj.schema["__erase_key"].dataType != dt:
+                subj = subj.filter(key.try_cast(dt) == key)
+            keys = subj.select(key.try_cast(dt).alias(key_col)).distinct()
+            # one driver-bounded collect: a small subject set becomes a
+            # local relation the cover and the anti-join reuse
+            rows = keys.limit(DELETE_BLOOM_PROBE_CAP + 1).collect()
+            if len(rows) <= DELETE_BLOOM_PROBE_CAP:
+                keys, n_keys = local_frame(spark, rows, keys.schema), len(rows)
             else:
-                # overwrite() already stages to a temp dir, so reading
-                # the old files while writing the new ones is safe
-                self.overwrite(survivors, table)
+                n_keys = keys.count()
+            hit, _res = self._rewrite_key_cover(
+                spark, table, [key_col], keys, n_keys, partition_by
+            )
+            if partition_by:
+                touched_n = len({os.path.dirname(rel) for rel in hit})
         after = (
             self.read_version(spark, table)
             if versioned
@@ -3932,57 +3846,6 @@ class ParquetWarehouse:
             "touched_partitions": touched_n,
             "purged_versions": purged,
         }
-
-    def _subject_file_cover(
-        self, current: DataFrame, table: str, key_col: str, subj: DataFrame
-    ) -> list[str]:
-        """The exact files of ``table`` holding a subject row, as rel
-        paths: one broadcast semi-join scan that reads only the key
-        column and ``_metadata.file_path``."""
-        fps = (
-            current.select(
-                key_col, F.col("_metadata.file_path").alias("__fp")
-            )
-            .join(
-                F.broadcast(subj),
-                F.col(key_col) == F.col("__erase_key"),
-                "left_semi",
-            )
-            .select("__fp")
-            .distinct()
-            .collect()
-        )
-        base = self.path(table)
-        return sorted({self.file_rel(r["__fp"], base) for r in fps})
-
-    def _bloom_cow_erase(
-        self,
-        spark: SparkSession,
-        table: str,
-        key_col: str,
-        subj: DataFrame,
-        hit: list[str],
-        partition_by: list[str] | None = None,
-        bucket_spec: dict | None = None,
-    ) -> None:
-        """Shared cover-pruned copy-on-write rewrite for
-        ``erase_subjects``' plain, partitioned, and bucketed branches:
-        anti-join the hit files' rows against the subjects and commit
-        through the (fence-held) ``_replace_files_unlocked`` —
-        bucket-preserving when ``bucket_spec`` rides along. ``hit ==
-        []`` means no file can hold a subject — nothing to do."""
-        if not hit:
-            return
-        sub = self._read_files(spark, table, hit)
-        sub_survivors = sub.join(
-            F.broadcast(subj),
-            sub[key_col] == F.col("__erase_key"),
-            "left_anti",
-        )
-        self._replace_files_unlocked(
-            sub_survivors, table, hit, partition_by,
-            bucket_spec=bucket_spec,
-        )
 
     def _read_files(
         self,
@@ -4412,21 +4275,14 @@ class ParquetWarehouse:
         return commit
 
     def has_committed_data(self, table: str) -> bool:
-        """True when the table exists on disk as a PLAIN (unversioned)
-        layout with at least one committed parquet file — the
-        precondition for joining a linked group snapshot. A versioned
-        table returns False (group it via ``commit_group``)."""
-        root = self.path(table)
-        if not os.path.isdir(root) or os.path.isfile(
-            self._version_pointer(table)
-        ):
-            return False
-        for _dirpath, dirs, files in os.walk(root):
-            # hidden dirs (_deletes sidecar) hold no committed data
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        """True when the table holds a committed PLAIN (unversioned)
+        state — its ``_schema.json``, which every commit writes, an
+        emptied state's included — the precondition for joining a
+        linked group snapshot. A versioned table returns False (group
+        it via ``commit_group``)."""
+        return os.path.isfile(
+            os.path.join(self.path(table), SCHEMA_FILE)
+        ) and not os.path.isfile(self._version_pointer(table))
 
     def group_members(self, group: str) -> list[str]:
         """Member tables of the group's current commit ([] if the group
@@ -4510,7 +4366,7 @@ class ParquetWarehouse:
                 dm = self.pending_deletes(t)
                 src = self.path(t)
                 dst = os.path.join(snap, t)
-                n_linked = 0
+                os.makedirs(dst, exist_ok=True)
                 for dirpath, dirs, files in os.walk(src):
                     # hidden dirs are sidecars, never snapshot data
                     dirs[:] = [
@@ -4525,11 +4381,6 @@ class ParquetWarehouse:
                         os.link(
                             os.path.join(dirpath, fn), os.path.join(d, fn)
                         )
-                        n_linked += 1
-                if n_linked == 0:
-                    raise FileNotFoundError(
-                        f"member {t!r} has no committed parquet files"
-                    )
                 self._write_json_atomic(
                     os.path.join(dst, SCHEMA_FILE), self.schema(t).jsonValue()
                 )

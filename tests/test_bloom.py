@@ -241,8 +241,9 @@ def test_delete_only_replacement_keeps_manifests_consistent(spark, tmp_path):
     for an empty frame — verified live) must NOT wedge the manifests: a
     row-based recompute can never describe a row-less file, so linking
     it would make bloom_hit_split refuse as 'stale' forever, including
-    the NEXT erase_subjects. The 0-row file is skipped instead, unless
-    the table would otherwise end up file-less (schema must survive)."""
+    the NEXT erase_subjects. The 0-row file is skipped instead, also
+    when the table ends up file-less (``_schema.json`` keeps its
+    schema)."""
     wh = _mk(spark, tmp_path, n=200, files=4)
     # subjects = every pk of the bloom-hit files for two probe keys
     hit, miss = wh.bloom_hit_split(spark, "t", "pk", [3, 77])
@@ -262,15 +263,17 @@ def test_delete_only_replacement_keeps_manifests_consistent(spark, tmp_path):
     assert set(bm["files"]) == set(miss)
     assert wh.read_bloom_keys(spark, "t", "pk", victims[:5]).count() == 0
 
-    # fully-emptied table via direct replace_files: ONE 0-row file is
-    # kept for schema, with synthesized never-hit manifest entries
+    # fully-emptied table via direct replace_files: an empty committed
+    # state — no data file, an empty manifest, and the schema survives
     wh2 = _mk(spark, tmp_path / "w2", n=50, files=2)
+    schema = wh2.schema("t")
     all_files = sorted(bm2_files := wh2.bloom("t")["files"])
     empty = wh2.read(spark, "t").limit(0)
     wh2.replace_files(empty, "t", all_files)
-    assert wh2.read(spark, "t").count() == 0  # schema survives
-    hit2, miss2 = wh2.bloom_hit_split(spark, "t", "pk", [1, 2, 3])
-    assert hit2 == [] and len(miss2) == 1
+    assert _parquet_inodes(wh2.path("t")) == {}
+    back = wh2.read(spark, "t")
+    assert back.schema == schema and back.count() == 0
+    assert wh2.bloom_hit_split(spark, "t", "pk", [1, 2, 3]) == ([], [])
     assert bm2_files  # original manifest had entries to replace
 
 

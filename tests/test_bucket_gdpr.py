@@ -23,7 +23,8 @@ Pins:
 - erase_subjects rewrites at FILE grain (untouched bucket files keep
   their inodes) instead of the whole-table write_bucketed rewrite;
 - public replace_files auto-loads the spec (bucket-preserving CoW);
-- a replacement that would EMPTY a bucketed table refuses loudly.
+- a replacement or overwrite that EMPTIES a bucketed table commits an
+  empty state that keeps its schema and bucket spec.
 """
 
 from __future__ import annotations
@@ -238,16 +239,22 @@ def test_public_replace_files_is_bucket_preserving(spark, tmp_path):
     assert wh.read_bucketed(spark, "b").count() < 4000
 
 
-def test_emptying_a_bucketed_table_refuses(spark, tmp_path):
+def test_emptying_a_bucketed_table_commits_an_empty_state(spark, tmp_path):
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     _bucketed(spark, wh, "b", n=50)
+    schema = wh.schema("b")
     wh.delete_keys(spark, "b", "pk", list(range(50)))
-    with pytest.raises(ValueError, match="empties bucketed"):
-        wh.materialize_deletes(spark, "b")
-    # the refusal is pre-swap: the pending set stays authoritative and
-    # reads stay masked-empty
-    assert wh.pending_deletes("b") is not None
-    assert wh.read(spark, "b").count() == 0
+    res = wh.materialize_deletes(spark, "b")
+    assert res["keys_applied"] == 50 and res["files_new"] == 0
+    # the emptied state committed: no bucket file, no pending set, and
+    # it reads back with its schema and bucket spec
+    assert _data_inodes(wh, "b") == {}
+    assert wh.pending_deletes("b") is None
+    assert wh.bucket_spec("b") == {
+        "bucket_by": ["pk"], "n_buckets": N_BUCKETS, "sort_by": ["pk"],
+    }
+    for df in (wh.read(spark, "b"), wh.read_bucketed(spark, "b")):
+        assert df.schema == schema and df.count() == 0
 
 
 def test_composite_bucket_key_cover(spark, tmp_path):
@@ -519,9 +526,14 @@ def test_overwrite_keeps_bucket_layout(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     with pytest.raises(ValueError, match="layout contract is the"):
         wh.overwrite(_rows(spark, 10), "b", cluster_by=["pk"])
-    with pytest.raises(ValueError, match="empty bucketed"):
-        wh.overwrite(_rows(spark, 10).filter(F.lit(False)), "b")
     assert wh.read_bucketed(spark, "b").count() == 400, "refusal mutated state"
+    # an empty full replace commits an empty state that keeps the layout
+    wh.overwrite(_rows(spark, 10).filter(F.lit(False)), "b")
+    assert wh.bucket_spec("b") == {
+        "bucket_by": ["pk"], "n_buckets": N_BUCKETS, "sort_by": ["pk"],
+    }
+    back = wh.read_bucketed(spark, "b")
+    assert back.schema == wh.schema("b") and back.count() == 0
 
 
 def test_declared_bucket_layout_created_by_full_load(spark, tmp_path):
