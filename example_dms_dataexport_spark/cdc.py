@@ -33,7 +33,7 @@ from .merge import apply_changes
 from .metadata import MetadataStore, source_ordered
 from .sources.csv_stage import cdc_schema
 from .sources.stage import read_stage, stage_extension
-from .sources.warehouse import BUCKET_SPEC_FILE, ParquetWarehouse
+from .sources.warehouse import KeySet, ParquetWarehouse
 
 # ref :301 — CDC files start with '2' (2YYYYMMDD-nnnnnnnnn.<ext>); the
 # extension follows the table's metadata file_format (ref :26).
@@ -206,34 +206,41 @@ def merge_and_write(
 
     The reference runs one MERGE and leaves the choice of what to
     rewrite to Snowflake's micro-partition pruning (ref :369-408). Here
-    a chain of narrowing stages picks the candidate target FILES, the
+    the warehouse's one key cover picks the candidate target FILES, the
     merge joins only those, and one ``replace_files`` commit swaps in
-    the rewritten files while every other file hard-links through:
+    the rewritten files while every other file hard-links through.
 
-    1. touched partitions (``partition_by``): the batch's distinct
-       partition tuples. Partition columns must be stable per PK (a
+    The batch's keys come from ONE driver-bounded step
+    (``ParquetWarehouse._key_set`` over the distinct (pks,
+    ``partition_by``) tuples): it is the empty-batch probe, its tuples
+    name the touched partitions, and their local relation feeds the
+    cover, the exact scan and the same-key delete fold. Then:
+
+    1. manifest cover (``ParquetWarehouse._key_cover``: the zone-map
+       point cover, the Bloom and the bucket-id covers, intersected) —
+       ``_zone_scoped_merge`` for flat and bucketed targets,
+       ``_hybrid_scoped_merge`` restricted to the files of the touched
+       partitions. Partition columns must be stable per PK (a
        pk-derived bucket or an immutable date), so a matching target
        row can only live in a touched partition;
-    2. zone band: the batch's PK min/max plus width-bucket sub-ranges
-       (``_batch_scope``) against the table's zone map —
-       ``_zone_scoped_merge`` for flat targets, ``_hybrid_scoped_merge``
-       inside the touched partitions;
-    3. pk scan (``_scan_scoped_merge``): one semi-join of the target's
-       pk columns, restricted to the touched partitions, against the
-       batch's distinct keys finds the exact files holding a batch key
-       through ``_metadata.file_path`` — the fallback for targets
+    2. pk scan (``_scan_scoped_merge``): when no manifest narrows, one
+       semi-join of the target's pk columns, restricted to the touched
+       partitions, against the batch's keys finds the exact files
+       holding a batch key through ``_metadata.file_path``
+       (``ParquetWarehouse._key_scan``) — the stage for targets
        unclustered on their key and for partition values whose hive
-       directory names the zone stage cannot render.
+       directory names the cover cannot render.
 
-    Each stage returns the candidate files, or None when it cannot
-    narrow; a stage runs only when the earlier ones narrowed nothing.
-    Correctness is unconditional: every stage keeps every file that
-    could hold a row matching a change (NULL-PK rows never
-    equality-match), so a carried file holds only rows the full-outer
-    merge would pass through unchanged, and inserts land in new files.
-    Emptied partitions simply have no directory in the assembled state.
+    Versioned targets and on-disk layouts that do not match
+    ``partition_by`` take neither stage. Correctness is unconditional:
+    every stage keeps every file that could hold a row matching a
+    change (NULL-PK rows never equality-match), so a carried file holds
+    only rows the full-outer merge would pass through unchanged, and
+    inserts land in new files. Emptied partitions simply have no
+    directory in the assembled state.
 
-    When no stage narrows, the whole table rewrites through
+    When no stage narrows (the cover keeps every committed file, a
+    table with none included), the whole table rewrites through
     ``overwrite`` with the declared ``layout`` (``TableMeta.layout()``):
     the only terminal that re-applies the clustering / zone-map options,
     so an unprunable or reloaded table lands read-optimized. A bucketed
@@ -254,8 +261,8 @@ def merge_and_write(
     # is rewritten to pending ⊖ batch-keys, so a key the batch
     # re-inserts stops being masked — sound because every stage's
     # candidate set provably covers ALL rows holding a batch pk
-    # (partition cols are stable per pk; a zone band holding a batch pk
-    # overlaps the batch's range; the scan discovery is an exact pk
+    # (partition cols are stable per pk; every key cover keeps each file
+    # that may hold a batch key; the scan discovery is an exact pk
     # semi-join), so no masked row whose key leaves the sidecar
     # survives unrewritten.
     #
@@ -278,6 +285,7 @@ def merge_and_write(
     # materializes the physical bytes on schedule.
     fold_minus = None
     carry_intact = False
+    same_key_fold = False
     dm = warehouse.pending_deletes(target_table)
     if dm is not None:
         kcols = warehouse._delete_key_cols(dm)
@@ -310,44 +318,48 @@ def merge_and_write(
             # plane until the deletion is materialized, same asymmetry
             # as the carry-intact fold.
         else:
-            fold_minus = changes.select(*kcols).distinct()
+            same_key_fold = True  # minus the batch's keys, found below
         # defensive re-mask: incremental_load's target comes from
         # warehouse.read (already masked); a direct caller's may not be.
         # The anti-join is idempotent and the pending set is bounded.
         target = warehouse._apply_pending_deletes(
             changes.sparkSession, target, target_table
         )
-    # An empty batch applies nothing: short-circuit with NO commit at
-    # all — a commit would otherwise churn a full directory of hard
+    # The batch's distinct (pk, partition) tuples, in one driver-bounded
+    # step. An empty batch applies nothing: short-circuit with NO commit
+    # at all — a commit would otherwise churn a full directory of hard
     # links (or a whole-table rewrite) for a no-op. full_rewrite is
     # exempt: an evolution batch may be empty yet must still rewrite
-    # every file to the evolved layout. On partitioned targets the
-    # touched-partition collect doubles as the probe (zero distinct
-    # tuples <=> zero rows), saving one evaluation of the change-batch
-    # subtree per merge. Then the narrowing chain: a stage runs only
-    # when the earlier ones narrowed nothing.
+    # every file to the evolved layout.
     cand = None
-    if partition_by and not full_rewrite:
-        touched = [
-            tuple(r[c] for c in partition_by)
-            for r in changes.select(*partition_by).distinct().collect()
-        ]
-        if not touched:
-            return 0
-        cand = _hybrid_scoped_merge(
-            warehouse, target_table, changes, pks, partition_by, touched
+    if not full_rewrite:
+        keys = ParquetWarehouse._key_set(
+            changes.select(*dict.fromkeys([*pks, *(partition_by or [])]))
         )
-        if cand is None:
-            cand = _scan_scoped_merge(
-                warehouse, target_table, changes, pks, partition_by, touched
-            )
-    elif not full_rewrite:
-        if changes.isEmpty():
+        if not keys.n:
             return 0
-        cand = _zone_scoped_merge(warehouse, target_table, changes, pks)
-        if cand is None:
-            cand = _scan_scoped_merge(warehouse, target_table, changes, pks)
-
+        if same_key_fold:
+            fold_minus = keys.frame.select(*pks)
+        rels = ParquetWarehouse._walk_parquet_rels(warehouse.path(target_table))
+        if not os.path.isfile(warehouse._version_pointer(target_table)) and all(
+            _in_layout(rel, partition_by) for rel in rels
+        ):
+            # the touched partitions; unknown above the key cap
+            touched = None
+            if partition_by and keys.rows is not None:
+                touched = {tuple(r[c] for c in partition_by) for r in keys.rows}
+            if partition_by:
+                cand = _hybrid_scoped_merge(
+                    warehouse, target_table, pks, partition_by, keys, rels,
+                    touched,
+                )
+            else:
+                cand = _zone_scoped_merge(warehouse, target_table, pks, keys)
+            if cand is None:
+                cand = _scan_scoped_merge(
+                    warehouse, target_table, pks, keys, rels, partition_by,
+                    touched,
+                )
     if cand is None and (
         full_rewrite or warehouse.bucket_spec(target_table) is None
     ):
@@ -376,7 +388,7 @@ def merge_and_write(
         return n
     spark = changes.sparkSession
     if cand is None:  # bucketed and unnarrowed: every file rewrites
-        cand = ParquetWarehouse._walk_parquet_rels(warehouse.path(target_table))
+        cand = rels
         sub_target = target
     elif cand:
         # the candidate files with the committed schema: partition column
@@ -401,12 +413,6 @@ def merge_and_write(
         carry_deletes_minus=fold_minus,
     )
     return res["rows_written"]
-
-
-def _is_numeric(dt) -> bool:
-    from pyspark.sql.types import NumericType
-
-    return isinstance(dt, NumericType)
 
 
 def _is_widening(src, dst) -> bool:
@@ -456,50 +462,6 @@ def _is_widening(src, dst) -> bool:
 _HIVE_ESCAPED_CHARS = set('"#%\'*/:=?\\{[]^ \t\n\r')
 
 
-def _batch_scope(changes, scope_cols: list[str]):
-    """The change batch's zone scope: per-column [min, max] ``ranges``
-    plus, for a numeric leading key, <= 64 width-bucket sub-ranges
-    (``subs``). One global [min, max] over-covers SCATTERED batches — a
-    batch touching both ends of the keyspace spans every band — so the
-    leading key is width-bucketed with one more batch-sized agg and
-    pruning tests the UNION of non-empty buckets: empty buckets leave
-    the middle of the keyspace disjoint, and any key is inside its own
-    bucket's [min, max], so every file that could hold a matching row
-    still overlaps some sub-range. Returns None for an empty or
-    all-NULL-key batch; ``subs`` is None for non-numeric leads."""
-    bounds = changes.agg(
-        *[F.min(c).alias(f"__lo_{c}") for c in scope_cols],
-        *[F.max(c).alias(f"__hi_{c}") for c in scope_cols],
-    ).first()
-    ranges = {
-        c: (bounds[f"__lo_{c}"], bounds[f"__hi_{c}"]) for c in scope_cols
-    }
-    if any(lo is None or hi is None for lo, hi in ranges.values()):
-        return None
-    subs = None
-    lead = scope_cols[0]
-    if _is_numeric(changes.schema[lead].dataType):
-        k = 64
-        lo, hi = ranges[lead]
-        if hi > lo:
-            bucket = F.least(
-                F.lit(k - 1),
-                F.floor(
-                    (F.col(lead) - F.lit(lo)) * k / (F.lit(hi) - F.lit(lo))
-                ),
-            )
-        else:
-            bucket = F.lit(0)
-        subs = [
-            (r["__l"], r["__h"])
-            for r in changes.filter(F.col(lead).isNotNull())
-            .groupBy(bucket.alias("__b"))
-            .agg(F.min(lead).alias("__l"), F.max(lead).alias("__h"))
-            .collect()
-        ]
-    return ranges, subs
-
-
 def _in_layout(rel: str, partition_by: list[str] | None) -> bool:
     """True when data file ``rel`` sits under exactly the hive dirs
     ``partition_by`` declares (directly in the table dir when flat). A
@@ -513,7 +475,7 @@ def _in_layout(rel: str, partition_by: list[str] | None) -> bool:
     )
 
 
-def _touched_predicate(schema, partition_by: list[str], touched: list[tuple]):
+def _touched_predicate(schema, partition_by: list[str], touched: set[tuple]):
     """Filter selecting the ``touched`` partition tuples, typed against
     ``schema``. One struct-IN predicate, not an OR-chain of equality
     conjunctions: thousands of touched partitions would otherwise build
@@ -548,61 +510,41 @@ def _touched_predicate(schema, partition_by: list[str], touched: list[tuple]):
     return pred
 
 
-def _zone_split(zm: dict, files: dict, changes, pks: list[str]):
-    """Split zone-map ``files`` into (overlapping, disjoint) against the
-    batch's PK band (``_batch_scope``); None when the map covers no
-    primary key or the batch has no non-NULL key to scope by."""
-    scope_cols = [c for c in pks if c in zm["stat_cols"]]
-    if not scope_cols:
-        return None
-    scope = _batch_scope(changes, scope_cols)
-    if scope is None:
-        return None
-    ranges, subs = scope
-    lead = scope_cols[0]
-    return ParquetWarehouse._split_by_subranges(
-        files,
-        lead,
-        subs if subs is not None else [ranges[lead]],
-        {c: ranges[c] for c in scope_cols[1:]},
-    )
+# The narrowing stages below are thin calls of the warehouse's key
+# cover (``_key_cover``) and exact scan (``_key_scan``); they stay
+# separate functions because the benchmark's tracer
+# (perfbench/layers.py) records each stage by its name.
 
 
 def _zone_scoped_merge(
     warehouse: ParquetWarehouse,
     target_table: str,
-    changes,
     pks: list[str],
+    keys: KeySet,
 ) -> list[str] | None:
-    """ZONE stage for flat targets: the files whose PK band overlaps the
-    batch's. None when the table has no covering map, is versioned or
-    hive-partitioned on disk (merged without ``partition_by``), or no
-    file falls outside the band."""
-    zm = warehouse.zonemap(target_table)
-    if zm is None or os.path.isfile(warehouse._version_pointer(target_table)):
-        return None
-    if not all(_in_layout(rel, None) for rel in zm["files"]):
-        return None
-    split = _zone_split(zm, zm["files"], changes, pks)
-    if split is None or not split[1]:
-        return None
-    return split[0]
+    """MANIFEST stage for flat and bucketed targets: the files the key
+    cover (``ParquetWarehouse._key_cover`` — zone map, Bloom manifest,
+    bucket ids) keeps for the batch's keys; None when no cover applies
+    or it keeps every file."""
+    return warehouse._key_cover(target_table, pks, keys)
 
 
 def _hybrid_scoped_merge(
     warehouse: ParquetWarehouse,
     target_table: str,
-    changes,
     pks: list[str],
     partition_by: list[str],
-    touched: list[tuple],
+    keys: KeySet,
+    rels: list[str],
+    touched: set[tuple] | None,
 ) -> list[str] | None:
-    """Partition+ZONE stage for hive-partitioned targets: the zone map
-    picks the files inside the ``touched`` partitions whose PK band
-    overlaps the batch, so a 10-row change to a 100 GB partition
-    rewrites only its overlapping files, and every untouched partition
-    carries whole (Snowflake's micro-partition pruning composes with
-    its partitioning the same way).
+    """MANIFEST stage for hive-partitioned targets: the key cover
+    restricted to the files of the ``touched`` partitions, so a 10-row
+    change to a 100 GB partition rewrites only its covered files, and
+    every untouched partition carries whole (Snowflake's
+    micro-partition pruning composes with its partitioning the same
+    way). Above the key cap the partitions are unknown and the cover
+    runs over every file.
 
     The touched partitions are addressed by their hive dir names, built
     here with Python ``str(v)``. Spark hive-ESCAPES dir names for many
@@ -611,119 +553,71 @@ def _hybrid_scoped_merge(
     mismatch would silently exclude the partition's files and write the
     change rows as DUPLICATES next to the old ones. So only integer
     values and provably escape-free strings take this stage; anything
-    else — and a touched dir that exists yet matches no map entry —
-    declines to the pk-scan stage, which reads file paths from Spark
-    and renders nothing. None also when the table has no covering map,
-    its on-disk layout does not match ``partition_by``, or pruning
-    would not drop any file."""
-    zm = warehouse.zonemap(target_table)
-    if zm is None:
-        return None
-    if not all(_in_layout(rel, partition_by) for rel in zm["files"]):
-        return None
-
-    def _renderable(v) -> bool:
-        if v is None:
-            return True  # the exact __HIVE_DEFAULT_PARTITION__ sentinel
-        if isinstance(v, bool):
-            return False  # Python 'True' vs Spark 'true'
-        if isinstance(v, int):
-            return True
-        if isinstance(v, str):
-            return v != "" and not any(
-                ch in _HIVE_ESCAPED_CHARS or ord(ch) < 32 or ord(ch) == 127
-                for ch in v
+    else declines to the pk-scan stage, which reads file paths from
+    Spark and renders nothing. None also when no cover applies or it
+    keeps every file."""
+    within = None
+    if touched is not None:
+        if not all(_renderable(v) for vals in touched for v in vals):
+            return None
+        prefixes = {
+            "/".join(
+                f"{c}=__HIVE_DEFAULT_PARTITION__" if v is None else f"{c}={v}"
+                for c, v in zip(partition_by, vals)
             )
-        return False  # timestamps/dates/floats/decimals: formats differ
+            for vals in touched
+        }
+        within = [rel for rel in rels if os.path.dirname(rel) in prefixes]
+    return warehouse._key_cover(target_table, pks, keys, within)
 
-    if not all(_renderable(v) for vals in touched for v in vals):
-        return None
-    prefixes = {
-        "/".join(
-            f"{c}=__HIVE_DEFAULT_PARTITION__" if v is None else f"{c}={v}"
-            for c, v in zip(partition_by, vals)
+
+def _renderable(v) -> bool:
+    """True when Python ``str(v)`` is the hive dir name Spark writes for
+    partition value ``v``."""
+    if v is None:
+        return True  # the exact __HIVE_DEFAULT_PARTITION__ sentinel
+    if isinstance(v, bool):
+        return False  # Python 'True' vs Spark 'true'
+    if isinstance(v, int):
+        return True
+    if isinstance(v, str):
+        return v != "" and not any(
+            ch in _HIVE_ESCAPED_CHARS or ord(ch) < 32 or ord(ch) == 127
+            for ch in v
         )
-        for vals in touched
-    }
-    cand = {
-        rel: st
-        for rel, st in zm["files"].items()
-        if os.path.dirname(rel) in prefixes
-    }
-    matched = {os.path.dirname(rel) for rel in cand}
-    base = warehouse.path(target_table)
-    if any(os.path.isdir(os.path.join(base, p)) for p in prefixes - matched):
-        return None
-    split = _zone_split(zm, cand, changes, pks)
-    if split is None:
-        return None
-    overlap, disjoint = split
-    if not disjoint and len(cand) == len(zm["files"]):
-        return None  # nothing prunes
-    return overlap
+    return False  # timestamps/dates/floats/decimals: formats differ
 
 
 def _scan_scoped_merge(
     warehouse: ParquetWarehouse,
     target_table: str,
-    changes,
     pks: list[str],
+    keys: KeySet,
+    rels: list[str],
     partition_by: list[str] | None = None,
-    touched: list[tuple] | None = None,
+    touched: set[tuple] | None = None,
 ) -> list[str] | None:
-    """PK-SCAN stage: the EXACT files holding a batch key, from one
-    semi-join of the target's primary-key column(s) — projected down to
-    (pks, ``_metadata.file_path``), so the scan reads the pk column,
-    not the table — against the batch's distinct keys
-    (``ParquetWarehouse._key_scan``, the exact scan the warehouse's
-    keyed rewrites share); on partitioned targets the scan is first
-    pruned to the ``touched`` partitions.
+    """PK-SCAN stage: the EXACT files holding a batch key, from the
+    warehouse's exact scan (``ParquetWarehouse._key_scan``: one
+    semi-join of the target's pk column(s) and ``_metadata.file_path``
+    against the batch's keys), pruned first to the ``touched``
+    partitions on partitioned targets.
 
-    This is the layout-independent rewrite-amplification fix (the same
-    touched-file discovery join Delta's MERGE runs): the zone map only
-    prunes when the write layout CLUSTERS the key, but a CDC target
-    unclustered on its pk — the common retrofitted-table case —
-    otherwise pays a FULL-TABLE rewrite per batch. Cost: one pk-column
-    scan (columnar, a few % of table bytes) + rewrite I/O proportional
-    to the touched files. The batch's distinct keys broadcast (CDC
-    batches are bounded by design — maxFilesPerTrigger / the landing
-    watermark window). File paths come from the scan itself, so no
-    partition value is ever rendered to a dir name.
-
-    Exactness: the semi-join reads the committed files themselves, so
-    the candidate set has no false positives OR negatives — a file not
-    in it provably holds no matching pk (NULL pks never equality-match;
-    partition columns are stable per pk). None for versioned/bucketed
-    tables, on-disk layouts that do not match ``partition_by``,
-    single-file tables, and batches that touch every file."""
-    base = warehouse.path(target_table)
-    if os.path.isfile(warehouse._version_pointer(target_table)):
-        return None
-    if os.path.isfile(os.path.join(base, BUCKET_SPEC_FILE)):
-        return None
-    all_rels = ParquetWarehouse._walk_parquet_rels(base)
-    if len(all_rels) <= 1:
+    The layout-independent rewrite-amplification fix (the touched-file
+    discovery join Delta's MERGE runs): a CDC target unclustered on its
+    pk with no Bloom manifest — the common retrofitted-table case —
+    would otherwise pay a FULL-TABLE rewrite per batch; this costs one
+    pk-column scan plus rewrite I/O proportional to the touched files.
+    File paths come from the scan itself, so no partition value is ever
+    rendered to a dir name. None for single-file tables and batches
+    that touch every file."""
+    if len(rels) <= 1:
         return None  # nothing to prune against
-    if not all(_in_layout(rel, partition_by) for rel in all_rels):
-        return None
-    spark = changes.sparkSession
+    spark = keys.frame.sparkSession
     scan = warehouse._read_files(spark, target_table)
-    if partition_by:
-        scan = scan.filter(
-            _touched_predicate(scan.schema, partition_by, touched)
-        )
-    # persisted across the count AND the semi-join below — otherwise
-    # every scan-scoped batch pays the key-dedup shuffle twice; the
-    # count decides the broadcast (a catch-up/backfill batch can carry
-    # millions of distinct pks)
-    keys = changes.select(*pks).distinct().persist()
-    try:
-        n_keys = keys.count()
-        if n_keys == 0:
-            return None
-        overlap = ParquetWarehouse._key_scan(scan, base, pks, keys, n_keys)
-    finally:
-        keys.unpersist()
-    if len(overlap) == len(all_rels):
-        return None  # every file holds a matching key: nothing prunes
-    return overlap
+    if partition_by and touched is not None:
+        scan = scan.filter(_touched_predicate(scan.schema, partition_by, touched))
+    hit = ParquetWarehouse._key_scan(
+        scan, warehouse.path(target_table), pks, keys.frame, keys.n
+    )
+    return hit if len(hit) < len(rels) else None

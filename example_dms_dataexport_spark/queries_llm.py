@@ -230,14 +230,6 @@ _SIG_CTES = _sig_ctes("documents")
 # value directly (not just through the band/verify funnel).
 
 
-def q23_bench_signatures(spark, sf_dir):
-    """Bench/test body: the MinHash signature relation ALONE (the pre-r19
-    q23 face, kept callable after the fold so plan tests and any local
-    timing keep a stable body)."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_signatures(docs)
-
-
 def _band_key_sql(b: int) -> str:
     r = TH.NUM_HASHES // TH.LSH_BANDS
     return " || '-' || ".join(
@@ -350,13 +342,6 @@ _SIMHASH_CTES = f"""
 # one driver row pins every sketch value AND the banded pair funnel.
 
 
-def q25_bench_simhash(spark, sf_dir):
-    """Bench/test body: the SimHash sketch relation ALONE (the pre-r19
-    q25 face, kept callable after the fold)."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash(docs)
-
-
 _SIMBANDS_SQL = "\nUNION ALL\n".join(
     f"SELECT doc_id, simhash, {i} AS band,"
     f" (simhash // {1 << (8 * i)}) % 256 AS key FROM sim"
@@ -376,13 +361,6 @@ _Q26_ORACLE = f"""
     SELECT doc_id AS id_a, CAST(-1 AS BIGINT) AS id_b, simhash AS hamming
     FROM sim
 """
-
-
-def q26_bench_pairs(spark, sf_dir):
-    """Bench/test body: the banded SimHash pair pipeline ALONE (the
-    pre-r19 q26 plan, pre-fold)."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash_pairs(dedup.simhash(docs), max_hamming=3)
 
 
 @query("q26_simhash_pairs", _Q26_ORACLE)
@@ -1167,15 +1145,6 @@ _Q46_ORACLE = f"""
 # parameterizations (64/16 with text, 64/0 feeding the packer).
 
 
-def q46_bench_chunks(spark, sf_dir):
-    """Bench/test body: the overlap-chunking generator ALONE (the pre-r19
-    q46 face, kept callable after the fold)."""
-    docs = _t(spark, sf_dir, "documents")
-    return text_analysis.chunk_tokens(
-        docs, chunk_size=_CHUNK_SIZE, overlap=_CHUNK_OVERLAP
-    )
-
-
 _PACK_BUDGET, _PACK_SHARDS = 256, 8
 
 # pack-section value encoding: shard (<8) . pack_id . pack_pos (<256)
@@ -1253,19 +1222,6 @@ _Q50_ORACLE = f"""
            CAST({_PACK_V} AS BIGINT) AS v
     FROM ({_Q50_PACKED_ORACLE})
 """
-
-
-def q50_bench_pack(spark, sf_dir):
-    """Bench body: the sharded sequence-packing pipeline ALONE (the
-    pre-r19 q50 plan, kept under its historical key after the q46
-    fold widened the registered face)."""
-    docs = _t(spark, sf_dir, "documents")
-    chunks = text_analysis.chunk_tokens(docs, chunk_size=64, overlap=0).drop(
-        "chunk_text"
-    )
-    return text_analysis.pack_chunks(
-        chunks, budget=_PACK_BUDGET, n_shards=_PACK_SHARDS
-    )
 
 
 @query("q50_pack_chunks", _Q50_ORACLE)
@@ -3171,41 +3127,6 @@ _Q132_ORACLE = """
 # interleaved-MCU color path.
 
 
-def q132_bench_jpeg(spark, sf_dir):
-    """REAL entropy-coded DCT decode, no external library — the last
-    rung of the q102 (WAV) -> q108 (PNM) -> q122 (PNG) ladder:
-    documents -> conformant baseline sequential JPEGs (one 8x8 block
-    per text byte: constant level clamp(byte, 16, 239) plus a
-    horizontal-frequency-4 stripe of amplitude byte % 3, unit quant
-    table) -> stdlib marker parse, canonical-Huffman entropy decode
-    with FF00 unstuffing, DC-delta + AC run-length reconstruction,
-    dequant, zig-zag descan, and per-block float IDCT through
-    Arrow-batched mapInPandas. The block structure makes every DCT
-    coefficient integer-exact, so the decoded pixels are EXACT despite
-    JPEG's lossy pipeline and every statistic restates from the text
-    rule (operators/multimodal.py module contract): ``pix_sum`` is the
-    stripe-free level sum (the stripe nets to zero per row),
-    ``ac_nonzero``/``ac_abs_sum`` count what the ENTROPY DECODER
-    actually reconstructed — a hash match proves the Huffman run/size
-    path ran, not just the DC chain. Pillow remains the gate for
-    progressive/color/subsampled variants."""
-    docs = _t(spark, sf_dir, "documents")
-    dec = multimodal.decode_jpeg(multimodal.jpeg_from_documents(docs))
-    return dec.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_blocks",
-        "pix_sum",
-        "ac_nonzero",
-        "ac_abs_sum",
-        (
-            F.col("pix_sum").cast("double")
-            / (F.col("width").cast("long") * F.col("height"))
-        ).alias("mean_intensity"),
-    )
-
-
 _Q134_ORACLE = """
     WITH geo AS (
         SELECT doc_id, text,
@@ -3297,36 +3218,6 @@ _Q134_MERGED_ORACLE = f"""
                / (bw * bh * 64 * 3) AS color_mean
     FROM stats
 """
-
-
-def q134_bench_color(spark, sf_dir):
-    """Bench/test body: the COLOR rung of the baseline-JPEG decode (q132's 3-component
-    4:4:4 variant): interleaved MCUs — one block per component per MCU,
-    three independent DC predictor chains — through the same stdlib
-    canonical-Huffman + IDCT pipeline. The fixture's luma plane is
-    q132's structured image and both chroma planes are constant 128
-    (level-shifted zero blocks: DC exactly 0, every AC 0), so the whole
-    color container stays integer-exact: pix_sum gains exactly
-    2*128 per pixel, ac accounting is luma-only, and n_blocks counts
-    the per-component blocks the entropy decoder walked (3x the MCU
-    count — a hash mismatch here means the interleave order broke).
-    Subsampled (4:2:0) and YCbCr->RGB conversion remain the Pillow
-    gate; the decoder emits raw component values by design."""
-    docs = _t(spark, sf_dir, "documents")
-    dec = multimodal.decode_jpeg(multimodal.jpeg_color_from_documents(docs))
-    return dec.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_blocks",
-        "pix_sum",
-        "ac_nonzero",
-        "ac_abs_sum",
-        (
-            F.col("pix_sum").cast("double")
-            / (F.col("width").cast("long") * F.col("height") * 3)
-        ).alias("mean_intensity"),
-    )
 
 
 @query("q134_jpeg_color_decode", _Q134_MERGED_ORACLE)

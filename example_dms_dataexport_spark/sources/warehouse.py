@@ -29,13 +29,16 @@ flat/hive), one footer read for row counts, one zone-map and Bloom
 computation for the staged files — the reference's single COPY INTO /
 MERGE landing step (ref :238-243, :369-408).
 
-Every keyed rewrite finds its files through ONE key cover
-(``_key_cover``): the zone-map, Bloom and bucket-id covers intersected
-where they apply, else one exact key-column scan (``_key_scan``, which
-the scan-scoped CDC merge shares) — the engine's own stand-in for the
-micro-partition pruning the reference's DELETE/MERGE leans on (ref
-:369-408). ``erase_subjects`` (non-versioned) and
-``materialize_deletes`` run the same rewrite over it
+Every keyed rewrite and every CDC merge finds its files the same way —
+the engine's own stand-in for the micro-partition pruning the
+reference's DELETE/MERGE leans on (ref :369-408): one driver-bounded
+step gathers the keys (``_key_set``), the manifest half of the key
+cover (``_key_cover``) intersects the zone-map, Bloom and bucket-id
+covers where they apply, and else one exact key-column scan
+(``_key_scan``) finds the files. Every zone-map prune — range reads,
+key covers, CDC merges — runs through one sorted-interval cover
+(``_interval_cover``). ``erase_subjects`` (non-versioned) and
+``materialize_deletes`` run the same rewrite over the cover
 (``_rewrite_key_cover``). Every commit may leave a table empty: the
 committed ``_schema.json`` still types its reads.
 
@@ -53,6 +56,7 @@ hard-part b); every JSON sidecar or pointer lands through
 
 from __future__ import annotations
 
+import bisect
 import contextlib
 import functools
 import json
@@ -64,6 +68,7 @@ import socket
 import time
 import uuid
 import warnings
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,9 +122,10 @@ DELETES_FILE = "_deletes.json"
 # rewrite anti-join and the exact key scan (``_key_scan``, shared with
 # the scan-scoped CDC merge).
 DELETE_BROADCAST_KEY_CAP = 2_000_000
-# Above this many keys a key cover (``_key_cover``) probes no manifest
-# (the probe collects the keys to the driver) and takes the distributed
-# exact key scan instead.
+# Above this many keys a key set (``_key_set``) stays distributed: it is
+# counted and bounded, not collected, so the key cover (``_key_cover``)
+# prunes only by the zone map's cover of the keys' [min, max], and
+# otherwise the exact key scan runs.
 DELETE_BLOOM_PROBE_CAP = 100_000
 
 # Writer fence for overwrite_versioned (single-writer enforcement).
@@ -135,6 +141,19 @@ class ConcurrentWriteError(RuntimeError):
     writer (the fence has no lease/expiry — this warehouse has no
     heartbeat channel) must be removed manually after confirming the
     holder is gone."""
+
+
+class KeySet(NamedTuple):
+    """A distinct key-tuple set as ``ParquetWarehouse._key_set`` found
+    it: ``frame`` holds the tuples (a local relation of ``rows`` up to
+    ``DELETE_BLOOM_PROBE_CAP``, else the distinct frame itself), ``n``
+    counts them, and ``bounds`` holds each column's [min, max] when the
+    set was too large to collect."""
+
+    frame: DataFrame
+    n: int
+    rows: list | None
+    bounds: dict | None
 
 
 class ParquetWarehouse:
@@ -423,8 +442,9 @@ class ParquetWarehouse:
         type-sensitive) — a silent probe FALSE NEGATIVE that would let
         an erase skip files that DO hold the subject.
 
-        The manifest passes re-read the stage with the frame's read
-        schema (``_frame_schema``). A stage holding no rows runs none:
+        The manifest passes re-read the staged files (by name, not the
+        hidden staging dir) with the frame's read schema
+        (``_frame_schema``). A stage holding no rows runs none:
         its manifests are the exact ones they would find — no zone
         entry, a zero bitmap per staged file."""
         parts = list(dict.fromkeys(
@@ -457,25 +477,21 @@ class ParquetWarehouse:
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(tmp)
-        import pyarrow.parquet as pq
-
-        rows = {
-            rel: pq.read_metadata(os.path.join(tmp, rel)).num_rows
-            for rel in sorted(self._walk_parquet_rels(tmp))
-        }
+        rows = self._footer_rows(tmp, sorted(self._walk_parquet_rels(tmp)))
         n = sum(rows.values())
         spark = df.sparkSession
         schema = self._frame_schema(df, partition_by)
         zm = bm = None
         if stat_cols:
             zm = (
-                self._compute_zonemap(spark, tmp, stat_cols, schema) if n
-                else {"stat_cols": list(stat_cols), "files": {}}
+                self._compute_zonemap(spark, tmp, stat_cols, schema, list(rows))
+                if n else {"stat_cols": list(stat_cols), "files": {}}
             )
         if bloom is not None and n:
             bm = self._bloom_pass(
                 spark, tmp, bloom["cols"], n, schema=schema,
                 bits_per_key=bloom["bits_per_key"], k=bloom["k"],
+                paths=[os.path.join(tmp, rel) for rel in rows],
             )
         elif bloom is not None:
             bm = {
@@ -489,6 +505,17 @@ class ParquetWarehouse:
                 },
             }
         return rows, zm, bm
+
+    @staticmethod
+    def _footer_rows(base: str, rels: list[str]) -> dict[str, int]:
+        """Each parquet file's row count, from its footer — no Spark
+        job, no data read."""
+        import pyarrow.parquet as pq
+
+        return {
+            rel: pq.read_metadata(os.path.join(base, rel)).num_rows
+            for rel in rels
+        }
 
     @staticmethod
     def _write_json_atomic(path: str, obj) -> None:
@@ -672,14 +699,16 @@ class ParquetWarehouse:
         data_dir: str,
         stat_cols: list[str],
         schema: StructType,
+        rels: list[str] | None = None,
     ) -> dict:
-        """One distributed pass over ``data_dir`` (read with ``schema``):
-        per parquet file, row count plus min/max of every stat column,
-        keyed by path RELATIVE to ``data_dir`` (stable across the atomic
-        tmp→final rename). The result is file-count sized — at 100 TB /
-        ~1 GB files that is ~10^5 entries, megabytes of driver memory,
-        not a data scan at query time."""
-        df = ParquetWarehouse._read_dir(spark, data_dir, schema)
+        """One distributed pass over ``data_dir`` (or its files
+        ``rels``), read with ``schema``: per parquet file, row count
+        plus min/max of every stat column, keyed by path RELATIVE to
+        ``data_dir`` (stable across the atomic tmp→final rename). The
+        result is file-count sized — at 100 TB / ~1 GB files that is
+        ~10^5 entries, megabytes of driver memory, not a data scan at
+        query time."""
+        df = ParquetWarehouse._read_dir(spark, data_dir, schema, rels)
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in stat_cols:
             aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
@@ -707,64 +736,64 @@ class ParquetWarehouse:
         return {"stat_cols": list(stat_cols), "files": files}
 
     @classmethod
-    def _split_by_ranges(
-        cls, zm: dict, ranges: dict
+    def _interval_cover(
+        cls, files: dict, intervals: dict[str, list[tuple]]
     ) -> tuple[list[str], list[str]]:
-        """Partition a zone map's files into (overlapping, disjoint) for
-        conjunctive per-column ranges — ``_split_by_subranges`` with the
-        first column's range as its one sub-range and the others as
-        extra ranges. No ranges: every file overlaps."""
-        if not ranges:
-            return list(zm["files"]), []
-        (col, bounds), *rest = ranges.items()
-        return cls._split_by_subranges(zm["files"], col, [bounds], dict(rest))
+        """Split a zone-map file dict (a table's map, or a subset of it)
+        into (overlapping, disjoint): a file overlaps iff, for EVERY
+        column of ``intervals``, its [min, max] band meets one of that
+        column's closed intervals — the one zone-map prune of range
+        reads, key covers and CDC merges. A ``None`` interval end is
+        unbounded, and so is a NaN end of an interval or a band (Spark
+        sorts NaN above every value, and a NaN point keeps every band),
+        so NaN only widens the cover. Files with an all-NULL band are
+        disjoint (a range or point never matches NULL); an interval with
+        ``lo > hi`` holds nothing.
 
-    @classmethod
-    def _split_by_subranges(
-        cls,
-        files: dict,
-        col: str,
-        subranges: list[tuple],
-        extra_ranges: dict | None = None,
-    ) -> tuple[list[str], list[str]]:
-        """Split a zone-map file dict (possibly a SUBSET of a table's
-        map — the CDC merge's partition+zone stage restricts it to the
-        touched partitions' files first) into (overlapping, disjoint):
-        a file overlaps iff its ``col`` band intersects ANY of the
-        ``subranges`` AND every ``extra_ranges`` column overlaps its
-        (single) range. Testing a UNION of sub-ranges is what makes a
-        SCATTERED change batch prune — a batch touching the two ends of
-        the keyspace has a global [min, max] that covers every file, but
-        its per-bucket sub-ranges leave the whole middle disjoint.
-        Files with an all-NULL band land on the disjoint side."""
-        subs = [
-            (cls._zonemap_stat(lo), cls._zonemap_stat(hi))
-            for lo, hi in subranges
-        ]
-        norm_extra = {
-            c: (cls._zonemap_stat(b[0]), cls._zonemap_stat(b[1]))
-            for c, b in (extra_ranges or {}).items()
-        }
+        Each column's intervals sort and merge once, then every band
+        bisects into them: O((files + intervals) · log intervals), not
+        files × intervals."""
+
+        def bound(v):
+            v = cls._zonemap_stat(v)
+            return None if v is None or v != v else v  # NaN: unbounded
+
+        merged: dict[str, tuple[list, list, int]] = {}
+        for c, ivs in intervals.items():
+            los: list = []
+            his: list = []
+            for lo, hi in sorted(
+                (
+                    (lo, hi)
+                    for lo, hi in ((bound(a), bound(b)) for a, b in ivs)
+                    if lo is None or hi is None or lo <= hi
+                ),
+                key=lambda iv: (False, 0) if iv[0] is None else (True, iv[0]),
+            ):
+                if his and (his[-1] is None or lo is None or lo <= his[-1]):
+                    if hi is None or (his[-1] is not None and hi > his[-1]):
+                        his[-1] = hi
+                else:
+                    los.append(lo)
+                    his.append(hi)
+            # only the last merged interval can be unbounded above
+            fin = len(his) - 1 if his and his[-1] is None else len(his)
+            merged[c] = (los, his, fin)
+
+        def meets(band, los, his, fin) -> bool:
+            if band[0] is None:
+                return False  # all-NULL band
+            mn, mx = bound(band[0]), bound(band[1])
+            # the first interval ending at or after the band's start
+            i = 0 if mn is None else bisect.bisect_left(his, mn, 0, fin)
+            return i < len(his) and (
+                los[i] is None or mx is None or los[i] <= mx
+            )
+
         overlapping: list[str] = []
         disjoint: list[str] = []
         for rel, stats in files.items():
-            mn, mx = stats[col]
-            ok = mn is not None and any(
-                not (
-                    (nhi is not None and mn > nhi)
-                    or (nlo is not None and mx < nlo)
-                )
-                for nlo, nhi in subs
-            )
-            if ok:
-                for c, (nlo, nhi) in norm_extra.items():
-                    cmn, cmx = stats[c]
-                    if cmn is None or (
-                        (nhi is not None and cmn > nhi)
-                        or (nlo is not None and cmx < nlo)
-                    ):
-                        ok = False
-                        break
+            ok = all(meets(stats[c], *merged[c]) for c in merged)
             (overlapping if ok else disjoint).append(rel)
         return overlapping, disjoint
 
@@ -781,7 +810,9 @@ class ParquetWarehouse:
         zm = self.zonemap(table)
         if zm is None or any(c not in zm["stat_cols"] for c in ranges):
             return None
-        return self._split_by_ranges(zm, ranges)
+        return self._interval_cover(
+            zm["files"], {c: [b] for c, b in ranges.items()}
+        )
 
     def replace_files(
         self,
@@ -1669,11 +1700,7 @@ class ParquetWarehouse:
                 missing = sorted(current - have)
                 if missing:
                     abs_paths = [os.path.join(final, r) for r in missing]
-                    import pyarrow.parquet as _pq
-
-                    nrows = sum(
-                        _pq.read_metadata(p).num_rows for p in abs_paths
-                    )
+                    nrows = sum(self._footer_rows(final, missing).values())
                     add = self._bloom_pass(
                         spark, final, bm["cols"], nrows, schema=schema,
                         bits_per_key=bm["bits_per_key"], k=bm["k"],
@@ -2024,10 +2051,8 @@ class ParquetWarehouse:
                 if lo is None:
                     continue  # all-NULL band for this column
                 cur = cols[c]
-                if cur["min"] is None or lo < cur["min"]:
-                    cur["min"] = lo
-                if cur["max"] is None or hi > cur["max"]:
-                    cur["max"] = hi
+                cur["min"] = lo if cur["min"] is None else min(cur["min"], lo)
+                cur["max"] = hi if cur["max"] is None else max(cur["max"], hi)
         return {"rows": rows, "files": len(zm["files"]), "cols": cols}
 
     def read_zoned(
@@ -2083,7 +2108,9 @@ class ParquetWarehouse:
             )
         df = self._read_dir(
             spark, base, self.schema(table, version),
-            self._split_by_ranges(zm, ranges)[0],
+            self._interval_cover(
+                zm["files"], {c: [b] for c, b in ranges.items()}
+            )[0],
         )
         for c, (clo, chi) in ranges.items():
             if clo is not None:
@@ -2190,8 +2217,11 @@ class ParquetWarehouse:
                 for c in ParquetWarehouse._delete_key_cols(dm)
             ]
         )
-        return spark.read.schema(schema).parquet(
-            os.path.join(base, dm.get("dir", DELETES_DIR))
+        # the files by name: Spark ignores (with a warning) a root path
+        # whose own name starts with "_"
+        d = os.path.join(base, dm.get("dir", DELETES_DIR))
+        return ParquetWarehouse._read_dir(
+            spark, d, schema, ParquetWarehouse._walk_parquet_rels(d)
         )
 
     def _refuse_pending_deletes(self, table: str, op: str) -> None:
@@ -2291,19 +2321,22 @@ class ParquetWarehouse:
         """The files of the buckets ``keys`` hash into, as sorted names:
         a row's bucket is ``pmod(hash(bucket_by), n_buckets)``, a pure
         function of its bucket columns, matched against the ``_NNNNN``
-        file-name suffixes — zero data I/O. ``keys`` must carry the
-        ``bucket_by`` columns with the table's exact types (Murmur3 is
-        type-sensitive); the hash takes them in the spec's order."""
+        file-name suffixes — zero data I/O. The keys take the table's
+        exact column types first (Murmur3 is type-sensitive; a key the
+        type cannot hold matches no row and at most adds a bucket), and
+        tuples with a NULL bucket column match no row; the hash takes the
+        columns in the spec's order. Over a local relation the hash
+        projects driver-side, starting no job."""
+        tsch = self.schema(table)
+        cols = spec["bucket_by"]
         bids = {
             r["__b"]
-            for r in keys.select(
+            for r in keys.dropna(subset=cols).select(
                 F.pmod(
-                    F.hash(*[F.col(c) for c in spec["bucket_by"]]),
+                    F.hash(*[F.col(c).try_cast(tsch[c].dataType) for c in cols]),
                     F.lit(spec["n_buckets"]),
                 ).alias("__b")
-            )
-            .distinct()
-            .collect()
+            ).collect()
         }
         return sorted(
             n
@@ -2311,45 +2344,76 @@ class ParquetWarehouse:
             if n.endswith(".parquet") and self._bucket_id_of(n) in bids
         )
 
+    @staticmethod
+    def _key_set(keys: DataFrame) -> KeySet:
+        """The distinct tuples of ``keys`` from one driver-bounded step,
+        the input of every key discovery (keyed rewrites and the CDC
+        merge): up to ``DELETE_BLOOM_PROBE_CAP`` tuples collect and
+        become one local relation, which the covers, the exact scan and
+        the rewrite's joins reuse; above it one aggregation counts the
+        tuples and bounds each column, and the set stays distributed."""
+        keys = keys.distinct()
+        rows = keys.limit(DELETE_BLOOM_PROBE_CAP + 1).collect()
+        if len(rows) <= DELETE_BLOOM_PROBE_CAP:
+            return KeySet(
+                local_frame(keys.sparkSession, rows, keys.schema),
+                len(rows), rows, None,
+            )
+        agg = keys.agg(
+            F.count(F.lit(1)).alias("__n"),
+            *[F.min(c).alias(f"__lo{i}") for i, c in enumerate(keys.columns)],
+            *[F.max(c).alias(f"__hi{i}") for i, c in enumerate(keys.columns)],
+        ).first()
+        return KeySet(keys, agg["__n"], None, {
+            c: (agg[f"__lo{i}"], agg[f"__hi{i}"])
+            for i, c in enumerate(keys.columns)
+        })
+
     def _key_cover(
         self,
-        spark: SparkSession,
         table: str,
         kcols: list[str],
-        keys: DataFrame,
-        n_keys: int,
-    ) -> list[str]:
-        """The files of ``table`` that may hold a key tuple of ``keys``
-        (``n_keys`` distinct tuples of ``kcols``, typed as the table's
-        columns), as sorted rel paths — the discovery step of every
-        keyed rewrite, where the reference leans on Snowflake's
-        micro-partition pruning (ref :369-408).
+        keys: KeySet,
+        within: list[str] | None = None,
+    ) -> list[str] | None:
+        """The manifest half of key discovery: the files of ``table``
+        that may hold a ``kcols`` tuple of ``keys``, as sorted rel
+        paths, from metadata alone — the engine's stand-in for the
+        micro-partition pruning the reference's DELETE/MERGE leans on
+        (ref :369-408). Every cover that applies is intersected, each a
+        superset of the exact file set:
 
-        Up to ``DELETE_BLOOM_PROBE_CAP`` keys, every manifest cover that
-        applies is intersected: the zone map's point cover for each key
-        column it tracks (``_split_by_subranges``, only while the map
-        describes exactly the committed files), the Bloom manifest of a
-        spec over exactly ``kcols`` (``bloom_hit_split``: a per-column
-        filter cannot attest a composite tuple), and the bucket-id cover
-        when ``bucket_by`` is a subset of ``kcols``. Each is a superset
-        of the exact file set, so the intersection is too. When none
-        applies, or it drops no file, one exact key scan (``_key_scan``)
-        finds the files instead."""
+        - the zone map's ``_interval_cover`` on each key column it
+          tracks — of the key points, or of their one [min, max] range
+          above ``DELETE_BLOOM_PROBE_CAP``;
+        - up to the cap, the Bloom manifest of a spec over exactly
+          ``kcols`` (``bloom_hit_split``: a per-column filter cannot
+          attest a composite tuple);
+        - up to the cap, the bucket-id cover when ``bucket_by`` is a
+          subset of ``kcols``;
+        - a key set with no NULL-free tuple, which covers no file.
+
+        A manifest counts only while it lists exactly the committed
+        files. ``within`` restricts the result to those files (the CDC
+        merge's touched partitions). None when no cover applies or the
+        result keeps every committed file: the caller then runs the
+        exact scan (``_key_scan``) or rewrites the table."""
         rels = self._walk_parquet_rels(self.path(table))
-        if not rels:
-            return []
+        pts = ivs = None
+        if keys.rows is not None:
+            pts = [r for r in keys.rows if all(r[c] is not None for c in kcols)]
+            ivs = {c: [(r[c], r[c]) for r in pts] for c in kcols}
+        elif keys.bounds is not None:
+            ivs = {c: [keys.bounds[c]] for c in kcols}
         covers: list[list[str]] = []
-        if n_keys <= DELETE_BLOOM_PROBE_CAP:
-            rows = keys.select(*kcols).collect()
-            zm = self.zonemap(table)
-            if zm is not None and set(zm["files"]) == set(rels):
-                covers += [
-                    self._split_by_subranges(
-                        zm["files"], c, [(r[c], r[c]) for r in rows]
-                    )[0]
-                    for c in kcols
-                    if c in zm["stat_cols"]
-                ]
+        if pts == []:
+            covers.append([])  # no NULL-free tuple: no file holds one
+        zm = self.zonemap(table)
+        if ivs and zm is not None and set(zm["files"]) == set(rels):
+            tracked = {c: v for c, v in ivs.items() if c in zm["stat_cols"]}
+            if tracked:
+                covers.append(self._interval_cover(zm["files"], tracked)[0])
+        if pts:
             bm = self.bloom(table)
             spec = next(
                 (
@@ -2359,54 +2423,55 @@ class ParquetWarehouse:
                 ),
                 None,
             )
-            if spec is not None:
+            if spec is not None and set(bm["files"]) == set(rels):
                 # tuples in the SPEC's column order: the hash is
                 # argument-order sensitive
                 parts = self._bloom_spec_parts(spec)
                 probe = [
                     r[parts[0]] if len(parts) == 1
                     else tuple(r[p] for p in parts)
-                    for r in rows
+                    for r in pts
                 ]
-                covers.append(
-                    self.bloom_hit_split(spark, table, spec, probe)[0]
-                )
+                covers.append(self.bloom_hit_split(
+                    keys.frame.sparkSession, table, spec, probe
+                )[0])
             bspec = self.bucket_spec(table)
             if bspec is not None and set(bspec["bucket_by"]) <= set(kcols):
-                covers.append(self._bucket_cover(table, bspec, keys))
-        if covers:
-            hit = set(rels).intersection(*covers)
-            if len(hit) < len(rels):
-                return sorted(hit)
-        return self._key_scan(
-            self._read_files(spark, table), self.path(table), kcols, keys,
-            n_keys,
-        )
+                covers.append(self._bucket_cover(table, bspec, keys.frame))
+        if not covers:
+            return None
+        hit = set(rels if within is None else within).intersection(*covers)
+        return sorted(hit) if len(hit) < len(rels) else None
 
     def _rewrite_key_cover(
         self,
         spark: SparkSession,
         table: str,
         kcols: list[str],
-        keys: DataFrame,
-        n_keys: int,
+        keys: KeySet,
         partition_by: list[str] | None,
         allow_pending_deletes: bool = False,
     ) -> tuple[list[str], dict | None]:
         """The one keyed copy-on-write rewrite, shared by
         ``erase_subjects`` (non-versioned) and ``materialize_deletes``:
-        the key cover's files read back (``_read_files``), lose every
-        row whose key tuple is in ``keys`` (``_anti_join_keys``) and
-        commit through ``_replace_files_unlocked`` — bucket-preserving
-        on a bucketed table — while every other file carries as a hard
-        link. Returns the rewritten files and the commit's stats; an
-        empty cover writes nothing (``([], None)``). The caller holds
-        the mutation fence."""
-        hit = self._key_cover(spark, table, kcols, keys, n_keys)
+        the files the key cover names (``_key_cover``, else the exact
+        ``_key_scan``) read back (``_read_files``), lose every row whose
+        key tuple is in ``keys`` (``_anti_join_keys``) and commit through
+        ``_replace_files_unlocked`` — bucket-preserving on a bucketed
+        table — while every other file carries as a hard link. Returns
+        the rewritten files and the commit's stats; an empty cover
+        writes nothing (``([], None)``). The caller holds the mutation
+        fence."""
+        hit = self._key_cover(table, kcols, keys)
+        if hit is None:
+            hit = self._key_scan(
+                self._read_files(spark, table), self.path(table), kcols,
+                keys.frame, keys.n,
+            )
         if not hit:
             return hit, None
         survivors = self._anti_join_keys(
-            self._read_files(spark, table, hit), keys, kcols, n_keys
+            self._read_files(spark, table, hit), keys.frame, kcols, keys.n
         )
         return hit, self._replace_files_unlocked(
             survivors, table, hit, partition_by,
@@ -2640,7 +2705,7 @@ class ParquetWarehouse:
             # atomic rename — materialization cannot tear
             _hit, res = self._rewrite_key_cover(
                 spark, table, self._delete_key_cols(dm),
-                self._read_deletes(spark, final, dm), dm["n_keys"],
+                self._key_set(self._read_deletes(spark, final, dm)),
                 partition_by, allow_pending_deletes=True,
             )
             if res is None:
@@ -3717,8 +3782,10 @@ class ParquetWarehouse:
           rewritten files (``None`` without ``partition_by``).
 
         Subject sets of up to ``DELETE_BLOOM_PROBE_CAP`` keys collect to
-        the driver for the manifest covers; larger ones take the exact
-        scan and never leave the cluster.
+        the driver for the manifest covers; larger ones never leave the
+        cluster (``_key_set``). The returned counts come from the
+        committed footers, so the erase reads no file outside the
+        cover.
 
         Every rewrite stages into a temp dir before its swap, so reading
         the files being replaced while writing the new ones is safe.
@@ -3810,8 +3877,13 @@ class ParquetWarehouse:
                     "holds the subject's rows",
                     stacklevel=2,
                 )
+            rows_after = self.read_version(spark, table).count()
         else:
-            rows_before = self.read(spark, table).count()
+            # pending deletes are refused above, so the committed
+            # footers count exactly the rows a read sees
+            base = self.path(table)
+            footers = self._footer_rows(base, self._walk_parquet_rels(base))
+            rows_before = sum(footers.values())
             # the subject keys take the column's exact type (the bucket
             # hash and the Bloom hash are type-sensitive); a subject the
             # type cannot hold exactly matches no row — Spark's coerced
@@ -3820,25 +3892,18 @@ class ParquetWarehouse:
             key = F.col("__erase_key")
             if subj.schema["__erase_key"].dataType != dt:
                 subj = subj.filter(key.try_cast(dt) == key)
-            keys = subj.select(key.try_cast(dt).alias(key_col)).distinct()
-            # one driver-bounded collect: a small subject set becomes a
-            # local relation the cover and the anti-join reuse
-            rows = keys.limit(DELETE_BLOOM_PROBE_CAP + 1).collect()
-            if len(rows) <= DELETE_BLOOM_PROBE_CAP:
-                keys, n_keys = local_frame(spark, rows, keys.schema), len(rows)
-            else:
-                n_keys = keys.count()
-            hit, _res = self._rewrite_key_cover(
-                spark, table, [key_col], keys, n_keys, partition_by
+            hit, res = self._rewrite_key_cover(
+                spark, table, [key_col],
+                self._key_set(subj.select(key.try_cast(dt).alias(key_col))),
+                partition_by,
             )
             if partition_by:
                 touched_n = len({os.path.dirname(rel) for rel in hit})
-        after = (
-            self.read_version(spark, table)
-            if versioned
-            else self.read(spark, table)
-        )
-        rows_after = after.count()
+            # the rewritten files' rows minus their survivors
+            rows_after = rows_before - (
+                sum(footers[rel] for rel in hit)
+                - (res["rows_written"] if res else 0)
+            )
         return {
             "rows_before": rows_before,
             "rows_erased": rows_before - rows_after,

@@ -740,11 +740,12 @@ def test_fold_mismatched_incremental_load_e2e(spark, tmp_path):
 
 
 def test_whole_table_merge_preserves_bucket_layout(spark, tmp_path):
-    """A CDC merge into a BUCKETED target must rewrite through
-    write_bucketed with the persisted spec — a plain overwrite would
-    silently degrade the co-located-join layout to flat parquet (and
-    the merge lazily reads the files write_bucketed clears, so the
-    result must be pinned first)."""
+    """A CDC merge into a BUCKETED target must keep the persisted spec —
+    a plain overwrite would silently degrade the co-located-join layout
+    to flat parquet. It narrows like a bucketed erase: the bucket-id
+    cover names the files of the buckets the batch's keys hash into,
+    only those rewrite through the bucket-preserving writer, and every
+    other bucket file carries."""
     from example_dms_dataexport_spark.sources.warehouse import (
         BUCKET_SPEC_FILE,
     )
@@ -754,6 +755,15 @@ def test_whole_table_merge_preserves_bucket_layout(spark, tmp_path):
         "id AS pk", "id % 5 AS bucket", "concat('v-', id) AS name"
     )
     wh.write_bucketed(base, "bt", bucket_by=["pk"], n_buckets=4)
+    bucket = F.pmod(F.hash("pk"), F.lit(4))
+    hit = {
+        r.b for r in spark.createDataFrame([(7,), (9,), (900,)], "pk long")
+        .select(bucket.alias("b")).collect()
+    }
+    before = {
+        n: os.stat(os.path.join(wh.path("bt"), n)).st_ino
+        for n in os.listdir(wh.path("bt")) if n.endswith(".parquet")
+    }
     ch = _changes(
         spark,
         [("U", 7, 2, "upd", "f1", 1), ("D", 9, 4, "x", "f1", 2),
@@ -763,7 +773,17 @@ def test_whole_table_merge_preserves_bucket_layout(spark, tmp_path):
         wh, "bt", wh.read(spark, "bt").select("pk", "bucket", "name"),
         ch, pks=["pk"], version_cols=VC,
     )
-    assert n == 200  # 200 - 1 delete + 1 insert
+    # the rows written are the hit buckets' rows after the merge
+    final = wh.read(spark, "bt")
+    assert n == final.filter(bucket.isin(sorted(hit))).count() < 200
+    carried = [
+        n_ for n_, ino in before.items()
+        if os.path.exists(os.path.join(wh.path("bt"), n_))
+        and os.stat(os.path.join(wh.path("bt"), n_)).st_ino == ino
+    ]
+    assert carried and all(
+        ParquetWarehouse._bucket_id_of(n_) not in hit for n_ in carried
+    )
     assert wh.bucket_spec("bt") == {
         "bucket_by": ["pk"], "n_buckets": 4, "sort_by": [],
     }

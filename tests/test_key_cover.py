@@ -18,8 +18,12 @@ Pins:
   not flattened;
 - a flat group member emptied by a merge still joins the next linked
   group commit;
-- the bucket-id cover and the exact key scan each have one home in the
-  package (AST scan, no Spark).
+- a non-versioned erase takes its row counts from the committed
+  footers: it never calls ``read`` and returns the counts a read before
+  and after would give, on every layout;
+- the bucket-id cover, the exact key scan and the zone-map interval
+  test each have one home in the package, and the CDC merge neither
+  probes ``isEmpty`` nor width-buckets its batch (AST scan, no Spark).
 """
 
 from __future__ import annotations
@@ -118,6 +122,44 @@ def test_erase_and_materialize_rewrite_alike(spark, tmp_path, layout):
     assert carried[0] == carried[1]
     if layout != "flat":  # 4 keys over 4 files may touch every file
         assert carried[0], f"{layout}: nothing carried"
+
+
+@pytest.mark.parametrize(
+    "layout",
+    ["flat_zone", "flat_bloom", "flat", "hive", "bucketed_key",
+     "bucketed_other"],
+)
+def test_erase_counts_rows_from_footers(spark, tmp_path, monkeypatch, layout):
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    partition_by = _layout(spark, wh, layout)
+    table = wh.read(spark, "t")
+    before = table.count()
+    touched = (
+        table.filter(F.col("pk").isin(KEYS)).select("part").distinct().count()
+        if partition_by else None
+    )
+    reads = []
+    real = ParquetWarehouse.read
+
+    def spy(self, *a, **kw):
+        reads.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(ParquetWarehouse, "read", spy)
+    res = wh.erase_subjects(
+        spark, "t", "pk", _subjects(spark, KEYS), partition_by=partition_by
+    )
+    monkeypatch.undo()
+    assert reads == []
+    after = wh.read(spark, "t").count()
+    assert res == {
+        "rows_before": before,
+        "rows_erased": before - after,
+        "rows_after": after,
+        "touched_partitions": touched,
+        "purged_versions": None,
+    }
+    assert before - after == len(KEYS)
 
 
 def test_erase_outside_zone_map_keeps_map_and_carries(spark, tmp_path):
@@ -249,9 +291,40 @@ def _attr_call(node, name):
     )
 
 
+def _iterates_zone_files(node):
+    """A loop over a zone-map file dict: ``files.items()``/``.values()``
+    or ``<map>["files"].items()``/``.values()``."""
+    it = getattr(node, "iter", None)
+    if not (
+        isinstance(node, (ast.For, ast.comprehension))
+        and isinstance(it, ast.Call)
+        and isinstance(it.func, ast.Attribute)
+        and it.func.attr in ("items", "values")
+    ):
+        return False
+    v = it.func.value
+    return (isinstance(v, ast.Name) and v.id == "files") or (
+        isinstance(v, ast.Subscript)
+        and isinstance(v.slice, ast.Constant)
+        and v.slice.value == "files"
+    )
+
+
+def _orders_values(node):
+    """An ordering comparison between two looked-up values (names or
+    subscripts, not constants or calls)."""
+    return (
+        isinstance(node, ast.Compare)
+        and any(isinstance(op, (ast.Lt, ast.LtE, ast.Gt, ast.GtE))
+                for op in node.ops)
+        and all(isinstance(x, (ast.Name, ast.Subscript))
+                for x in [node.left, *node.comparators])
+    )
+
+
 def test_each_key_discovery_step_has_one_home():
     pkg = pathlib.Path(example_dms_dataexport_spark.__file__).parent
-    bucket_ids, key_scans = [], []
+    bucket_ids, key_scans, zone_tests, cdc_probes = [], [], [], []
     for path in sorted(pkg.rglob("*.py")):
         tree = ast.parse(path.read_text(), str(path))
         for fn in ast.walk(tree):
@@ -279,5 +352,19 @@ def test_each_key_discovery_step_has_one_home():
             )
             if file_path and semi:
                 key_scans.append(where)
+            # a function testing zone-map bands: it loops over a map's
+            # files and orders values (nested helpers count as its own)
+            inner = list(ast.walk(fn))
+            if any(map(_iterates_zone_files, inner)) and any(
+                map(_orders_values, inner)
+            ):
+                zone_tests.append(where)
+            if path.name == "cdc.py" and any(
+                _attr_call(n, "isEmpty") or _attr_call(n, "floor")
+                for n in nodes
+            ):
+                cdc_probes.append(where)
     assert bucket_ids == ["sources/warehouse.py:_bucket_cover"], bucket_ids
     assert key_scans == ["sources/warehouse.py:_key_scan"], key_scans
+    assert zone_tests == ["sources/warehouse.py:_interval_cover"], zone_tests
+    assert cdc_probes == [], cdc_probes

@@ -12,7 +12,11 @@ Pins:
   committed key type);
 - ``replace_files`` refuses column type drift with ``append_files``'
   error, since carried files keep their footer types;
-- a state dir without ``_schema.json`` is refused, not inferred.
+- a state dir without ``_schema.json`` is refused, not inferred;
+- no reader is handed a path whose own name starts with ``.`` or ``_``
+  (Spark ignores such a root path with a warning): the stager's
+  manifest passes read the staged files, and the delete sidecar reads
+  its files, by name.
 """
 
 from __future__ import annotations
@@ -121,3 +125,31 @@ def test_state_without_committed_schema_is_refused(spark, tmp_path):
     os.remove(os.path.join(wh.path("t"), SCHEMA_FILE))
     with pytest.raises(FileNotFoundError, match=SCHEMA_FILE):
         wh.read(spark, "t")
+
+
+def test_no_reader_is_handed_a_hidden_path(spark, tmp_path, monkeypatch):
+    from pyspark.sql.readwriter import DataFrameReader
+
+    wh = _int_like_partitions(spark, tmp_path)  # zone map + Bloom passes
+    seen = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        seen.extend(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    rel = next(r for r in wh.zonemap("t")["files"] if r.startswith("p=abc/"))
+    wh.replace_files(
+        wh._read_files(spark, "t", [rel]), "t", [rel], partition_by=["p"]
+    )
+    wh.append_files(
+        spark, spark.createDataFrame([(4, "abc")], "id long, p string"), "t",
+        partition_by=["p"],
+    )
+    wh.delete_keys(spark, "t", "id", [2])
+    assert sorted(r.id for r in wh.read(spark, "t").collect()) == [1, 3, 4]
+    hidden = [
+        p for p in seen if os.path.basename(p.rstrip("/")).startswith((".", "_"))
+    ]
+    assert seen and not hidden, hidden

@@ -11,6 +11,7 @@ same scoping to Snowflake's micro-partition pruning).
 from __future__ import annotations
 
 import os
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
@@ -208,10 +209,97 @@ def test_zone_scoped_merge_pure_out_of_range_inserts(spark, tmp_path):
     assert wh.read(spark, "t").count() == 805
 
 
+def test_merge_runs_at_most_two_jobs_before_its_commit(
+    spark, tmp_path, monkeypatch
+):
+    """Before a zone-scoped merge commits, the change batch is evaluated
+    once: its distinct keys collect in one driver-bounded step, which
+    is also the empty-batch probe, and the cover runs on the driver."""
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    _write_clustered(spark, wh, "t")
+    assert len(_parquet_inodes(wh.path("t"))) == 8
+    src = str(tmp_path / "batch")
+    _changes_df(
+        spark,
+        [("U", 10, 1, "a", "f", 1), ("U", 1590, 2, "b", "f", 2),
+         ("I", 1597, 3, "c", "f", 3)],
+    ).write.parquet(src)
+    changes = spark.read.parquet(src)  # a file scan, like a CDC stage read
+    sc = spark.sparkContext
+    group = f"merge-jobs-{uuid.uuid4().hex}"
+    at_commit = []
+    real = ParquetWarehouse.replace_files
+
+    def spy(self, *a, **kw):
+        at_commit.append(list(sc.statusTracker().getJobIdsForGroup(group)))
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(ParquetWarehouse, "replace_files", spy)
+    sc.setJobGroup(group, "merge")
+    try:
+        merge_and_write(
+            wh, "t", wh.read(spark, "t"), changes, pks=["pk"], version_cols=VC
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(at_commit) == 1, "the merge did not narrow"
+    assert len(at_commit[0]) <= 2, at_commit
+    assert wh.read(spark, "t").filter("pk = 1590").first().val == 2
+
+
+def test_merge_above_the_key_cap_prunes_by_the_batch_range(
+    spark, tmp_path, monkeypatch
+):
+    """Above ``DELETE_BLOOM_PROBE_CAP`` keys the batch is counted and
+    bounded, not collected: the zone map prunes by the keys' one
+    [min, max] range (flat and hive targets alike), and the merged
+    content still matches the unpruned path."""
+    from example_dms_dataexport_spark.sources import warehouse as wmod
+
+    monkeypatch.setattr(wmod, "DELETE_BLOOM_PROBE_CAP", 2)
+    rows = [("U", 10, 1, "a", "f", 1), ("D", 12, 0, "b", "f", 2),
+            ("I", 15, 3, "c", "f", 3)]
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    _write_clustered(spark, wh, "t")
+    before = _parquet_inodes(wh.path("t"))
+    merge_and_write(
+        wh, "t", wh.read(spark, "t"), _changes_df(spark, rows),
+        pks=["pk"], version_cols=VC,
+    )
+    after = _parquet_inodes(wh.path("t"))
+    assert sum(after.get(r) == ino for r, ino in before.items()) == 7
+    expected = sorted(map(tuple, apply_changes(
+        _target_df(spark), _changes_df(spark, rows), pks=["pk"],
+        version_cols=VC,
+    ).collect()))
+    assert sorted(map(tuple, wh.read(spark, "t").collect())) == expected
+    # hive: the touched partitions are unknown above the cap, so the
+    # range cover runs over every partition's files
+    wh.overwrite(
+        _target_df(spark).withColumn("part", F.col("pk") % 3), "h",
+        partition_by=["part"], cluster_by=["pk"], cluster_partitions=4,
+        stat_cols=["pk"],
+    )
+    ch = spark.createDataFrame(
+        [(op, pk, v, n, pk % 3, f, i) for op, pk, v, n, f, i in rows],
+        "op string, pk long, val long, name string, part long, "
+        "_dms_filename string, _dms_rownum long",
+    )
+    target = wh.read(spark, "h").select("pk", "val", "name", "part")
+    expected = sorted(map(tuple, apply_changes(
+        target, ch, pks=["pk"], version_cols=VC).collect()))
+    merge_and_write(
+        wh, "h", target, ch, pks=["pk"], version_cols=VC,
+        partition_by=["part"],
+    )
+    got = wh.read(spark, "h").select("pk", "val", "name", "part")
+    assert sorted(map(tuple, got.collect())) == expected
+
+
 def test_zone_scoped_merge_fallbacks(spark, tmp_path):
     """No map, or a map over no primary key -> the SCAN-scoped stage
-    takes over (exact touched-file semi-join); all-NULL batch keys fall
-    back safely."""
+    takes over (exact touched-file semi-join); all-NULL batch keys
+    cover no file and land as an insert."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite(_target_df(spark, 50), "nomap")
     changes = _changes_df(spark, [("U", 14, 9, "x", "f", 1)])
@@ -234,8 +322,9 @@ def test_zone_scoped_merge_fallbacks(spark, tmp_path):
     )
     assert wh.read(spark, "wrongcol").filter("pk = 14").first().val == 9
     assert wh.read(spark, "wrongcol").count() == 50
-    # all-NULL keys: zone declines; the scan scope treats the NULL-pk U
-    # as matching nothing (insert), same semantics as the unpruned path
+    # all-NULL keys: no key tuple, so the cover keeps no file and the
+    # NULL-pk U matches nothing (insert), same semantics as the
+    # unpruned path
     _write_clustered(spark, wh, "nullk", n=30)
     null_changes = _changes_df(spark, [("U", None, 1, "x", "f", 1)])
     merge_and_write(
@@ -247,10 +336,10 @@ def test_zone_scoped_merge_fallbacks(spark, tmp_path):
 
 
 def test_zone_scoped_merge_scattered_batch_prunes_middle(spark, tmp_path):
-    """Multi-range scoping: a batch touching BOTH ENDS of the keyspace
-    has a global [min, max] spanning every band, but its width-bucket
-    sub-ranges leave the middle files disjoint — they must carry over
-    untouched, and the merged content still matches the unpruned path."""
+    """Point scoping: a batch touching BOTH ENDS of the keyspace has a
+    global [min, max] spanning every band, but its key points leave the
+    middle files disjoint — they must carry over untouched, and the
+    merged content still matches the unpruned path."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     _write_clustered(spark, wh, "t")  # pks 0..1598 in 8 ~200-wide bands
     changes = _changes_df(
