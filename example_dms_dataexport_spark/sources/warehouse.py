@@ -25,9 +25,12 @@ Here a warehouse is a directory of parquet tables committed five ways:
 
 Full-state, file-replace and append commits all land their new files
 through ONE stager (``_stage_files``): one writer choice (bucketed or
-flat/hive), one footer read for row counts, one zone-map and Bloom
+flat/hive), one footer read for row counts and zone-map bands (a Spark
+pass only where a footer cannot describe a band exactly), one Bloom
 computation for the staged files — the reference's single COPY INTO /
-MERGE landing step (ref :238-243, :369-408).
+MERGE landing step (ref :238-243, :369-408), and, like Snowflake's
+micro-partition metadata, collected from what the write produced
+rather than by a second scan.
 
 Every keyed rewrite and every CDC merge finds its files the same way —
 the engine's own stand-in for the micro-partition pruning the
@@ -58,6 +61,8 @@ from __future__ import annotations
 
 import bisect
 import contextlib
+import datetime
+import decimal
 import functools
 import json
 import math
@@ -72,7 +77,22 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 from ..session import local_frame
 
@@ -156,6 +176,19 @@ class KeySet(NamedTuple):
     bounds: dict | None
 
 
+class Footer(NamedTuple):
+    """One parquet file's footer as ``ParquetWarehouse._footers`` read
+    it: ``n`` is its row count, and ``groups`` maps each asked column
+    the file holds to its row groups' statistics, one
+    ``(rows, nulls, min, max)`` per group — ``None`` for a group that
+    records none, ``nulls`` None when uncounted, ``min``/``max`` None
+    without a min/max, and an INT32/INT64-backed decimal's as its
+    unscaled ints."""
+
+    n: int
+    groups: dict[str, list[tuple | None]]
+
+
 class ParquetWarehouse:
     def __init__(self, root: str):
         self.root = root
@@ -166,6 +199,7 @@ class ParquetWarehouse:
         # instances because every manifest commit lands via os.replace
         # (fresh mtime), and segments are immutable once referenced
         self._sidecar_cache: dict[tuple[str, str], dict] = {}
+        self._roll_back_torn_swaps()
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -442,11 +476,15 @@ class ParquetWarehouse:
         type-sensitive) — a silent probe FALSE NEGATIVE that would let
         an erase skip files that DO hold the subject.
 
-        The manifest passes re-read the staged files (by name, not the
-        hidden staging dir) with the frame's read schema
-        (``_frame_schema``). A stage holding no rows runs none:
-        its manifests are the exact ones they would find — no zone
-        entry, a zero bitmap per staged file."""
+        One footer pass (``_footers``) reads every staged file's row
+        count and its row groups' statistics over ``stat_cols``; the
+        zone map (``_zonemap``) builds from those, re-reading with Spark
+        only the (column, file) pairs no footer describes exactly. The
+        Bloom pass re-reads the staged files (by name, not the hidden
+        staging dir) with the frame's read schema (``_frame_schema``).
+        A stage holding no rows runs no Spark pass: its manifests are
+        the exact ones they would find — no zone entry, a zero bitmap
+        per staged file."""
         parts = list(dict.fromkeys(
             p for s in (bloom or {}).get("cols", ())
             for p in self._bloom_spec_parts(s)
@@ -477,16 +515,16 @@ class ParquetWarehouse:
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(tmp)
-        rows = self._footer_rows(tmp, sorted(self._walk_parquet_rels(tmp)))
+        footers = self._footers(
+            tmp, sorted(self._walk_parquet_rels(tmp)), stat_cols or ()
+        )
+        rows = {rel: f.n for rel, f in footers.items()}
         n = sum(rows.values())
         spark = df.sparkSession
         schema = self._frame_schema(df, partition_by)
         zm = bm = None
         if stat_cols:
-            zm = (
-                self._compute_zonemap(spark, tmp, stat_cols, schema, list(rows))
-                if n else {"stat_cols": list(stat_cols), "files": {}}
-            )
+            zm = self._zonemap(spark, tmp, stat_cols, schema, footers)
         if bloom is not None and n:
             bm = self._bloom_pass(
                 spark, tmp, bloom["cols"], n, schema=schema,
@@ -507,15 +545,50 @@ class ParquetWarehouse:
         return rows, zm, bm
 
     @staticmethod
-    def _footer_rows(base: str, rels: list[str]) -> dict[str, int]:
-        """Each parquet file's row count, from its footer — no Spark
-        job, no data read."""
+    def _footers(
+        base: str, rels: list[str], cols: list[str] | tuple = ()
+    ) -> dict[str, Footer]:
+        """Each parquet file's footer, read once — its row count and its
+        row groups' statistics over the top-level columns ``cols`` (see
+        ``Footer``). No Spark job, no data read."""
         import pyarrow.parquet as pq
 
-        return {
-            rel: pq.read_metadata(os.path.join(base, rel)).num_rows
-            for rel in rels
-        }
+        def group_stats(rows: int, s) -> tuple | None:
+            if s is None:
+                return None
+            lo = hi = None
+            if s.has_min_max:
+                try:
+                    lo, hi = s.min, s.max
+                except NotImplementedError:
+                    # pyarrow cannot box an INT32/INT64-backed decimal
+                    # (ArrowNotImplementedError); its raw ints are the
+                    # unscaled values
+                    lo, hi = s.min_raw, s.max_raw
+                except (ValueError, OverflowError):
+                    return None  # a value Python cannot box
+            return (
+                rows, s.null_count if s.has_null_count else None, lo, hi
+            )
+
+        out: dict[str, Footer] = {}
+        for rel in rels:
+            md = pq.read_metadata(os.path.join(base, rel))
+            where = {
+                name: j for j in range(md.num_columns)
+                if (name := md.schema.column(j).path) in cols
+            }
+            groups: dict[str, list] = {c: [] for c in where}
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                for c, j in where.items():
+                    col = rg.column(j)
+                    groups[c].append(
+                        group_stats(rg.num_rows, col.statistics)
+                        if col.is_stats_set else None
+                    )
+            out[rel] = Footer(md.num_rows, groups)
+        return out
 
     @staticmethod
     def _write_json_atomic(path: str, obj) -> None:
@@ -595,7 +668,10 @@ class ParquetWarehouse:
 
     def _commit_swap(self, tmp: str, final: str, table: str) -> None:
         """Atomically promote ``tmp`` to ``final`` (rename), then drop
-        the displaced previous table directory."""
+        the displaced previous table directory. A crash between the two
+        renames leaves ``final`` missing and the previous state in
+        ``.old-<table>-<hex>``; the next warehouse opened over the root
+        renames it back (``_roll_back_torn_swaps``)."""
         old = None
         if os.path.exists(final):
             old = os.path.join(self.root, f".old-{table}-{uuid.uuid4().hex}")
@@ -603,6 +679,38 @@ class ParquetWarehouse:
         os.replace(tmp, final)
         if old:
             shutil.rmtree(old, ignore_errors=True)
+
+    _TORN_RE = re.compile(r"^\.old-(.+)-[0-9a-f]{32}$")
+
+    def _roll_back_torn_swaps(self) -> None:
+        """Undo every commit swap cut between its two renames
+        (``_commit_swap``): a table whose dir is missing while exactly
+        one ``.old-<table>-<hex>`` holding a committed state (its
+        ``_schema.json``) exists gets that state back, renamed in under
+        the table's write fence. A fence held by a live writer, or more
+        than one displaced state, is left alone — that writer finishes
+        its commit, and a choice between states is manual."""
+        olds: dict[str, list[str]] = {}
+        for name in os.listdir(self.root):
+            m = self._TORN_RE.match(name)
+            if m and os.path.isfile(
+                os.path.join(self.root, name, SCHEMA_FILE)
+            ):
+                olds.setdefault(m.group(1), []).append(name)
+        for table, names in olds.items():
+            if len(names) != 1 or os.path.exists(self.path(table)):
+                continue
+            try:
+                with self._write_fence(
+                    table, lock_path=self._mutation_lock_path(table)
+                ):
+                    if not os.path.exists(self.path(table)):
+                        os.replace(
+                            os.path.join(self.root, names[0]),
+                            self.path(table),
+                        )
+            except (ConcurrentWriteError, FileNotFoundError):
+                pass  # a live writer holds the table, or moved it back
 
     def write_shards(
         self,
@@ -684,55 +792,121 @@ class ParquetWarehouse:
     def _zonemap_stat(v):
         """JSON-normalize a min/max value; datetimes/dates become ISO
         strings (lexicographic order matches chronological order)."""
-        import datetime as _dt
-        import decimal as _dec
-
-        if isinstance(v, (_dt.datetime, _dt.date)):
+        if isinstance(v, (datetime.datetime, datetime.date)):
             return v.isoformat()
-        if isinstance(v, _dec.Decimal):
+        if isinstance(v, decimal.Decimal):
             return float(v)
+        if isinstance(v, float) and v == 0:
+            return 0.0  # -0.0 == 0.0: one band, whichever a pass met first
         return v
 
-    @staticmethod
-    def _compute_zonemap(
+    # Spark types whose footer min/max equals Spark's own min/max, with
+    # the Python type pyarrow boxes it as (another box means another
+    # parquet encoding, and the pair falls back). Collated strings order
+    # by their collation, not by bytes. TimestampType falls back: INT96
+    # carries no statistics, and an INT64 one boxes in UTC where
+    # Spark's collect boxes in local time.
+    _FOOTER_BOX = {
+        LongType(): int, IntegerType(): int, ShortType(): int,
+        ByteType(): int, DoubleType(): float, FloatType(): float,
+        StringType(): str, BinaryType(): bytes, BooleanType(): bool,
+        DateType(): datetime.date, TimestampNTZType(): datetime.datetime,
+    }
+
+    @classmethod
+    def _footer_band(cls, dtype, groups: list | None) -> list | None:
+        """One file's exact [min, max] of one column from its row
+        groups' statistics (``Footer.groups``), as Spark's min/max
+        computes it — ``[None, None]`` when every value is NULL — or
+        None when the footer cannot say exactly: no statistics, a
+        group with values but no min/max (a value over the writer's
+        statistics size limit), an unsupported type or encoding. NaN
+        sorts above every value, as in Spark."""
+        scale = dtype.scale if isinstance(dtype, DecimalType) else None
+        boxes = (
+            (int, decimal.Decimal) if scale is not None
+            else (cls._FOOTER_BOX.get(dtype),)
+        )
+        if groups is None or boxes == (None,):
+            return None
+
+        def key(v):
+            return (v != v, v)  # NaN last
+
+        lo = hi = None
+        for g in groups:
+            if g is None:
+                return None
+            rows, nulls, mn, mx = g
+            if mn is None:
+                if nulls == rows:
+                    continue  # an all-NULL (or empty) group
+                return None
+            if type(mn) not in boxes or type(mx) not in boxes:
+                return None
+            if type(mn) is int and scale is not None:  # unscaled ints
+                mn, mx = (decimal.Decimal(v).scaleb(-scale) for v in (mn, mx))
+            lo = mn if lo is None or key(mn) < key(lo) else lo
+            hi = mx if hi is None or key(mx) > key(hi) else hi
+        return [lo, hi]
+
+    @classmethod
+    def _zonemap(
+        cls,
         spark: SparkSession,
         data_dir: str,
         stat_cols: list[str],
         schema: StructType,
-        rels: list[str] | None = None,
+        footers: dict[str, Footer],
     ) -> dict:
-        """One distributed pass over ``data_dir`` (or its files
-        ``rels``), read with ``schema``: per parquet file, row count
-        plus min/max of every stat column, keyed by path RELATIVE to
-        ``data_dir`` (stable across the atomic tmp→final rename). The
-        result is file-count sized — at 100 TB / ~1 GB files that is
-        ~10^5 entries, megabytes of driver memory, not a data scan at
-        query time."""
-        df = ParquetWarehouse._read_dir(spark, data_dir, schema, rels)
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in stat_cols:
-            aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-        rows = (
-            df.groupBy(F.col("_metadata.file_path").alias("__fp"))
-            .agg(*aggs)
-            .collect()
-        )
-        # Resolve each file URI to a path RELATIVE to the data dir —
-        # ``file_rel`` handles %-escapes and symlinked roots, and a key
-        # that read_zoned cannot resolve fails HERE, loudly.
-        files = {}
-        for r in rows:
-            rel = ParquetWarehouse.file_rel(r["__fp"], data_dir)
-            files[rel] = {
-                "n": r["__n"],
-                **{
-                    c: [
-                        ParquetWarehouse._zonemap_stat(r[f"__min_{c}"]),
-                        ParquetWarehouse._zonemap_stat(r[f"__max_{c}"]),
-                    ]
-                    for c in stat_cols
-                },
+        """The zone map of the files ``footers`` describes (``_footers``
+        over ``stat_cols``): per file with rows, its row count plus the
+        min/max of every stat column, keyed by path RELATIVE to
+        ``data_dir`` (stable across the atomic tmp→final rename). Each
+        band comes from the footer statistics (``_footer_band``); only
+        the (column, file) pairs they cannot describe exactly — INT96
+        timestamps, values over the writer's statistics limit, hive
+        partition columns — take one Spark min/max pass over just those
+        files and columns, read with ``schema``. The result is file-
+        count sized — at 100 TB / ~1 GB files that is ~10^5 entries,
+        megabytes of driver memory, not a data scan at query time."""
+        bands = {
+            rel: {
+                c: cls._footer_band(schema[c].dataType, ft.groups.get(c))
+                for c in stat_cols
             }
+            for rel, ft in footers.items()
+            if ft.n  # a 0-row file holds no band
+        }
+        todo = sorted(rel for rel, b in bands.items() if None in b.values())
+        if todo:
+            cols = [
+                c for c in stat_cols if any(bands[r][c] is None for r in todo)
+            ]
+            aggs = [
+                a for c in cols
+                for a in (F.min(c).alias(f"__min_{c}"),
+                          F.max(c).alias(f"__max_{c}"))
+            ]
+            # ``file_rel`` resolves each file URI (%-escapes, symlinked
+            # roots); a key it cannot resolve fails HERE, loudly
+            for r in (
+                cls._read_dir(spark, data_dir, schema, todo)
+                .groupBy(F.col("_metadata.file_path").alias("__fp"))
+                .agg(*aggs)
+                .collect()
+            ):
+                b = bands[cls.file_rel(r["__fp"], data_dir)]
+                for c in cols:
+                    if b[c] is None:
+                        b[c] = [r[f"__min_{c}"], r[f"__max_{c}"]]
+        files = {
+            rel: {
+                "n": footers[rel].n,
+                **{c: [cls._zonemap_stat(v) for v in b[c]] for c in stat_cols},
+            }
+            for rel, b in bands.items()
+        }
         return {"stat_cols": list(stat_cols), "files": files}
 
     @classmethod
@@ -1108,14 +1282,19 @@ class ParquetWarehouse:
         metadata: if it is ever missing or stale, ``read_zoned`` refuses
         loudly rather than mis-pruning — rebuild with this call (e.g.
         after a crashed append). ``overwrite(..., stat_cols=...)``
-        builds it atomically with the data instead."""
+        builds it atomically with the data instead. Built as the stager
+        builds it: from the committed files' footers (``_footers``),
+        with a Spark pass only over the (column, file) pairs they cannot
+        describe exactly (``_zonemap``)."""
         if os.path.isfile(self._version_pointer(table)):
             raise ValueError(
                 f"{table!r} is versioned — snapshots carry their own "
                 "maps; commit with overwrite_versioned(stat_cols=[...])"
             )
-        zm = self._compute_zonemap(
-            spark, self.path(table), stat_cols, self.schema(table)
+        base = self.path(table)
+        zm = self._zonemap(
+            spark, base, stat_cols, self.schema(table),
+            self._footers(base, self._walk_parquet_rels(base), stat_cols),
         )
         self._commit_inline_sidecar(self.path(table), ZONEMAP_FILE, zm)
         return zm
@@ -1700,7 +1879,9 @@ class ParquetWarehouse:
                 missing = sorted(current - have)
                 if missing:
                     abs_paths = [os.path.join(final, r) for r in missing]
-                    nrows = sum(self._footer_rows(final, missing).values())
+                    nrows = sum(
+                        f.n for f in self._footers(final, missing).values()
+                    )
                     add = self._bloom_pass(
                         spark, final, bm["cols"], nrows, schema=schema,
                         bits_per_key=bm["bits_per_key"], k=bm["k"],
@@ -3122,8 +3303,9 @@ class ParquetWarehouse:
         window of a crash between a commit swap's two renames, where
         the ``.old-*`` dir holds the ONLY copy of the committed data
         (rename does not touch mtime, so TTL alone cannot protect it);
-        such a state needs manual recovery, and vacuum must never
-        convert it into silent data loss. Returns the removed paths
+        opening a warehouse renames such a state back
+        (``_roll_back_torn_swaps``), and vacuum must never convert it
+        into silent data loss. Returns the removed paths
         relative to the warehouse root."""
         import time
 
@@ -3882,7 +4064,11 @@ class ParquetWarehouse:
             # pending deletes are refused above, so the committed
             # footers count exactly the rows a read sees
             base = self.path(table)
-            footers = self._footer_rows(base, self._walk_parquet_rels(base))
+            footers = {
+                rel: f.n for rel, f in self._footers(
+                    base, self._walk_parquet_rels(base)
+                ).items()
+            }
             rows_before = sum(footers.values())
             # the subject keys take the column's exact type (the bucket
             # hash and the Bloom hash are type-sensitive); a subject the

@@ -131,6 +131,43 @@ def test_vacuum_never_removes_torn_swap_remnants(spark, tmp_path):
     _sh.rmtree(tmp, ignore_errors=True)
 
 
+def test_torn_commit_swap_rolls_back_on_open(spark, tmp_path, monkeypatch):
+    """A crash between a commit swap's two renames (raised here at the
+    second ``os.replace``) leaves the table dir missing and its state in
+    ``.old-*``; the next warehouse opened over the root renames it back
+    under the table's write fence, and it reads the old rows, zone map
+    and schema."""
+    from example_dms_dataexport_spark.sources import warehouse
+
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    wh.overwrite(_rows(spark), "t", stat_cols=["pk"])
+    before = wh.read(spark, "t")
+    rows, schema, zm = sorted(before.collect()), before.schema, wh.zonemap("t")
+    real = os.replace
+    renames = []
+
+    def torn(src, dst):
+        renames.append(dst)
+        if dst == wh.path("t"):
+            raise OSError("kill-point: second rename of the commit swap")
+        return real(src, dst)
+
+    monkeypatch.setattr(warehouse.os, "replace", torn)
+    with pytest.raises(OSError, match="kill-point"):
+        wh.overwrite(_rows(spark, n=10), "t", stat_cols=["pk"])
+    monkeypatch.undo()
+    assert os.path.basename(renames[-2]).startswith(".old-t-")
+    assert not os.path.exists(wh.path("t"))
+
+    fresh = ParquetWarehouse(wh.root)
+    got = fresh.read(spark, "t")
+    assert sorted(got.collect()) == rows
+    assert got.schema == schema and fresh.schema("t") == schema
+    assert fresh.zonemap("t") == zm
+    assert not [n for n in os.listdir(wh.root) if n.startswith(".old-")]
+    assert not os.path.exists(fresh._mutation_lock_path("t"))
+
+
 def test_layout_drift_signals_recluster(spark, tmp_path):
     """The metadata-only drift score: ~files on a shuffled layout,
     ~1.0 after recluster — the scheduling signal, zero data I/O."""
@@ -750,8 +787,9 @@ def _stage_fail_setup(spark, wh, writer):
 def test_stage_failure_keeps_previous_state_and_no_temp(
     spark, tmp_path, monkeypatch, writer
 ):
-    """A failure mid-stage (the zone-map pass raising after the data
-    landed in the temp dir) leaves the previous committed state reading
+    """A failure mid-stage (the footer pass, which the zone map and the
+    row counts come from, raising after the data landed in the temp
+    dir) leaves the previous committed state reading
     identically, with the same zone map and Bloom manifest, and removes
     the temp dir — every data commit stages through the one stager
     inside a try/finally, appends into their own
@@ -762,10 +800,11 @@ def test_stage_failure_keeps_previous_state_and_no_temp(
     before = sorted(wh.read(spark, "t").collect())
     manifests = (wh.zonemap("t"), wh.bloom("t"))
 
-    def boom(*a, **kw):
-        raise RuntimeError("kill-point: zone-map pass failed")
+    def boom(base, rels, *a, **kw):
+        assert rels, "the kill point must come after the data landed"
+        raise RuntimeError("kill-point: footer pass failed")
 
-    monkeypatch.setattr(wh, "_compute_zonemap", boom)
+    monkeypatch.setattr(wh, "_footers", boom)
     with pytest.raises(RuntimeError, match="kill-point"):
         restage()
     monkeypatch.undo()

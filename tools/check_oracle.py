@@ -5,7 +5,7 @@ Runs every ``queries()`` entry at a scale factor and compares against
 order-insensitive value comparison (floats rounded to 6 significant
 decimals before comparing).  Usage:
 
-    python tools/check_oracle.py [--exact] [--staged] [sf_dir] [query ...]
+    python tools/check_oracle.py [--exact] [--staged] sf_dir [query ...]
 
 ``--staged`` also includes ``registry.STAGED`` faces (written and
 oracle-verified this round, but held out of the driver window until a
@@ -25,12 +25,14 @@ query and the oracle's final SELECT).
 
 from __future__ import annotations
 
+import argparse
 import decimal
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -107,15 +109,35 @@ def norm_rows(cols, rows, cell=norm_cell):
     )
 
 
-def main():
+def parse_args(argv):
+    """The command line, checked before any Spark session starts:
+    ``--help`` prints the usage, and an unknown flag, a missing
+    ``sf_dir`` or one that is not a directory exit 2."""
+    p = argparse.ArgumentParser(
+        prog="check_oracle.py", description=__doc__.split("\n\n")[0]
+    )
+    p.add_argument(
+        "--exact", action="store_true",
+        help="compare dtype-faithful renderings with no rounding",
+    )
+    p.add_argument(
+        "--staged", action="store_true",
+        help="also check registry.STAGED faces",
+    )
+    p.add_argument("sf_dir", help="scale-factor dir of <table>.parquet files")
+    p.add_argument("query", nargs="*", help="query names (default: all)")
+    args = p.parse_intermixed_args(argv)
+    if not os.path.isdir(args.sf_dir):
+        p.error(f"sf_dir {args.sf_dir!r} is not a directory")
+    return args
+
+
+def main(argv=None):
     global _SAW_DECIMAL
-    argv = sys.argv[1:]
-    exact = "--exact" in argv
-    staged = "--staged" in argv
-    argv = [a for a in argv if a not in ("--exact", "--staged")]
+    args = parse_args(sys.argv[1:] if argv is None else argv)
+    exact, staged, sf_dir = args.exact, args.staged, args.sf_dir
     cell = norm_cell_exact if exact else norm_cell
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
+    only = set(args.query)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     if staged:
@@ -129,7 +151,7 @@ def main():
     if unknown:
         print(
             f"usage error: unknown query name filter(s): {unknown}\n"
-            "usage: check_oracle.py [--exact] [--staged] [sf_dir] "
+            "usage: check_oracle.py [--exact] [--staged] sf_dir "
             "[query ...]\n"
             "  (staged faces need --staged; names must match the "
             "@query/@staged_query registration exactly — "

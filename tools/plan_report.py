@@ -7,14 +7,17 @@ carry pushed filters. The table is a review artifact AND a drift
 reference: `tests/test_plans.py` pins the load-bearing shapes, this file
 shows the whole surface at a glance.
 
-Usage: python tools/plan_report.py [sf_dir]
+Usage: python tools/plan_report.py sf_dir
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from example_dms_dataexport_spark.plans import (  # noqa: E402
     broadcast_hint_count,
@@ -26,8 +29,24 @@ from example_dms_dataexport_spark.registry import load_all  # noqa: E402
 from example_dms_dataexport_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+def parse_args(argv):
+    """The command line, checked before any Spark session starts:
+    ``--help`` prints the usage, and an unknown flag, a missing
+    ``sf_dir`` or one that is not a directory exit 2."""
+    p = argparse.ArgumentParser(
+        prog="plan_report.py", description=__doc__.split("\n\n")[0]
+    )
+    p.add_argument(
+        "sf_dir", help="scale-factor dir the plans are built over (sf0.001)"
+    )
+    args = p.parse_args(argv)
+    if not os.path.isdir(args.sf_dir):
+        p.error(f"sf_dir {args.sf_dir!r} is not a directory")
+    return args
+
+
+def main(argv=None) -> None:
+    sf_dir = parse_args(sys.argv[1:] if argv is None else argv).sf_dir
     spark = get_spark("plan-report", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs, oracles = load_all()
@@ -67,7 +86,7 @@ def main() -> None:
     for r in rows:
         lines.append("| " + " | ".join(str(x) for x in r) + " |")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(out)
     print(f"wrote PLANS.md with {len(rows)} rows")
 
