@@ -231,8 +231,11 @@ def merge_and_write(
        unclustered on their key and for partition values whose hive
        directory names the cover cannot render.
 
-    Versioned targets and on-disk layouts that do not match
-    ``partition_by`` take neither stage. Correctness is unconditional:
+    Versioned targets and tables whose committed hive columns
+    (``ParquetWarehouse._layout``) differ from the declared
+    ``partition_by`` take neither stage: carrying their files while the
+    merge writes the declared layout would duplicate the merged rows
+    next to their old copies. Correctness is unconditional:
     every stage keeps every file that could hold a row matching a
     change (NULL-PK rows never equality-match), so a carried file holds
     only rows the full-outer merge would pass through unchanged, and
@@ -332,6 +335,7 @@ def merge_and_write(
     # exempt: an evolution batch may be empty yet must still rewrite
     # every file to the evolved layout.
     cand = None
+    in_layout = False
     if not full_rewrite:
         keys = ParquetWarehouse._key_set(
             changes.select(*dict.fromkeys([*pks, *(partition_by or [])]))
@@ -341,9 +345,11 @@ def merge_and_write(
         if same_key_fold:
             fold_minus = keys.frame.select(*pks)
         rels = ParquetWarehouse._walk_parquet_rels(warehouse.path(target_table))
-        if not os.path.isfile(warehouse._version_pointer(target_table)) and all(
-            _in_layout(rel, partition_by) for rel in rels
-        ):
+        lay = warehouse._layout(target_table)
+        in_layout = not lay.versioned and lay.partition_by == list(
+            partition_by or []
+        )
+        if in_layout:
             # the touched partitions; unknown above the key cap
             touched = None
             if partition_by and keys.rows is not None:
@@ -360,9 +366,7 @@ def merge_and_write(
                     warehouse, target_table, pks, keys, rels, partition_by,
                     touched,
                 )
-    if cand is None and (
-        full_rewrite or warehouse.bucket_spec(target_table) is None
-    ):
+    if cand is None and (not in_layout or lay.bucket_spec is None):
         merged = apply_changes(
             target, changes, pks=pks, version_cols=version_cols
         ).persist()
@@ -372,16 +376,16 @@ def merge_and_write(
         # EXCEPT under the mismatched-key fold, where the sidecar must
         # survive the commit (carry_deletes_intact) or a crash-replay of
         # the batch would resurrect its masked rows.
-        lay = layout or {}
+        decl = layout or {}
         warehouse.overwrite(
             merged,
             target_table,
             partition_by=partition_by,
-            cluster_by=lay.get("cluster_by"),
-            zorder_by=lay.get("zorder_by"),
-            cluster_partitions=lay.get("cluster_partitions"),
-            stat_cols=lay.get("stat_cols"),
-            bloom_cols=lay.get("bloom_cols"),
+            cluster_by=decl.get("cluster_by"),
+            zorder_by=decl.get("zorder_by"),
+            cluster_partitions=decl.get("cluster_partitions"),
+            stat_cols=decl.get("stat_cols"),
+            bloom_cols=decl.get("bloom_cols"),
             carry_deletes_intact=carry_intact,
         )
         merged.unpersist()
@@ -393,9 +397,9 @@ def merge_and_write(
     elif cand:
         # the candidate files with the committed schema: partition column
         # types never depend on which dirs are read
-        sub_target = warehouse._read_files(spark, target_table, cand).select(
-            *target.columns
-        )
+        sub_target = warehouse._read_dir(
+            spark, warehouse.path(target_table), lay.schema, cand
+        ).select(*target.columns)
         # raw file reads bypass the read mask: drop the pending deletes
         # here or the rewrite would resurrect them
         sub_target = warehouse._apply_pending_deletes(
@@ -409,8 +413,7 @@ def merge_and_write(
     # replace_files stages to a temp dir and swaps atomically, so the
     # lazy merged plan may safely read the files it replaces.
     res = warehouse.replace_files(
-        merged, target_table, cand, partition_by=partition_by,
-        carry_deletes_minus=fold_minus,
+        merged, target_table, cand, carry_deletes_minus=fold_minus
     )
     return res["rows_written"]
 
@@ -460,19 +463,6 @@ def _is_widening(src, dst) -> bool:
 # code): a string value containing any of these renders differently on
 # disk than Python str() would build it.
 _HIVE_ESCAPED_CHARS = set('"#%\'*/:=?\\{[]^ \t\n\r')
-
-
-def _in_layout(rel: str, partition_by: list[str] | None) -> bool:
-    """True when data file ``rel`` sits under exactly the hive dirs
-    ``partition_by`` declares (directly in the table dir when flat). A
-    table laid out otherwise on disk cannot be file-replaced under that
-    declaration: carrying its files while the merge writes the declared
-    layout would duplicate the merged rows next to their old copies."""
-    parts = rel.split("/")[:-1]
-    cols = partition_by or []
-    return len(parts) == len(cols) and all(
-        p.startswith(f"{c}=") for p, c in zip(parts, cols)
-    )
 
 
 def _touched_predicate(schema, partition_by: list[str], touched: set[tuple]):

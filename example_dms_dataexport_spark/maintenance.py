@@ -97,9 +97,10 @@ def run_maintenance(
     action is ``materialize_deletes`` / ``write_zonemap`` /
     ``recluster`` / ``compact`` / ``none`` / ``error``. ``layouts``
     supplies each table's declared layout (``TableMeta.layout()``) so
-    partitioned targets materialize at file grain inside their
-    partitions and dropped zone maps rebuild over the declared
-    stat columns."""
+    dropped zone maps and Bloom manifests rebuild over the declared
+    columns and bucket drift is measured against the declared spec;
+    partitioned targets materialize at file grain inside the partition
+    dirs their committed state records."""
     policy = policy or MaintenancePolicy()
     out: list[dict] = []
     budget = policy.max_actions_per_cycle
@@ -130,7 +131,7 @@ def run_maintenance(
                     "persisted": spec,
                 }
         try:
-            if _try_materialize(spark, warehouse, t, policy, lay, rec):
+            if _try_materialize(spark, warehouse, t, policy, rec):
                 budget -= 1
                 continue
             if _try_rebucket(spark, warehouse, t, policy, lay, rec):
@@ -166,7 +167,7 @@ def run_maintenance(
     return out
 
 
-def _try_materialize(spark, warehouse, t, policy, lay, rec) -> bool:
+def _try_materialize(spark, warehouse, t, policy, rec) -> bool:
     dm = warehouse.pending_deletes(t)
     if dm is None or policy.max_delete_age_s is None:
         return False
@@ -177,9 +178,7 @@ def _try_materialize(spark, warehouse, t, policy, lay, rec) -> bool:
             f"< {policy.max_delete_age_s:.0f}s age bound"
         )
         return False
-    res = warehouse.materialize_deletes(
-        spark, t, partition_by=lay.get("partition_by")
-    )
+    res = warehouse.materialize_deletes(spark, t)
     rec["action"] = "materialize_deletes"
     rec["reason"] = (
         f"{dm['n_keys']} deletes pending {age:.0f}s "

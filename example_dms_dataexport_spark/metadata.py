@@ -117,10 +117,16 @@ class TableMeta:
         Declared once at registration, honored by EVERY load: full_load
         applies it to the initial overwrite, incremental_load derives
         its partition scoping from ``partition_by`` and re-applies the
-        clustering/zone-map options on full rewrites. At 100 TB the
-        layout IS the read-performance contract, so it belongs in the
-        control metadata, not in per-call arguments that each caller
-        must remember to repeat. Unknown keys raise (a typo must not
+        clustering/zone-map options on full rewrites. The table's
+        committed state then records the layout it was written with
+        (``_schema.json``'s ``partition_by``, ``_bucket_spec.json``),
+        and every rewrite and append of it — CDC file replaces,
+        erasure, materialized deletes, compaction, appends — reads the
+        layout from there (``ParquetWarehouse._layout``) instead of
+        taking it as an argument. At 100 TB the layout IS the
+        read-performance contract, so it belongs in the control
+        metadata, not in per-call arguments that each caller must
+        remember to repeat. Unknown keys raise (a typo must not
         silently produce an unlaid-out table)."""
         try:
             cfg = json.loads(self.additional_config or "{}")

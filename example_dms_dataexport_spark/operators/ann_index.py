@@ -228,9 +228,7 @@ def extend_ann_index(
         # it, two concurrent extends adding the same vec_id would both
         # pass and both commit, silently violating the
         # each-id-exactly-once invariant this error message promises.
-        with wh._write_fence(
-            name, lock_path=wh._mutation_lock_path(name)
-        ):
+        with wh._write_fence(name):
             # Append-only dup probe. Bloom-manifest-pruned when the
             # index carries a vec_id manifest and the batch is
             # probe-bounded (r18): only bloom-HIT partition files open.
@@ -295,12 +293,12 @@ def extend_ann_index(
             touched = sorted(stats["lists"])
             if mode == "append":
                 # the generic O(batch) INSERT INTO primitive, run under
-                # THIS fence (its checks: versioned/bucketed/pending-
-                # delete refusals, schema match, zone-map invalidation,
-                # crashed-staging sweep, atomic per-file renames)
-                wh._append_files_unlocked(
-                    spark, new_tbl, name, partition_by=["list_id"]
-                )
+                # THIS fence (its checks: the versioned refusal, the
+                # pending-delete mask, schema match, zone-map
+                # invalidation, crashed-staging sweep, atomic per-file
+                # renames; the list_id dirs come from the index's
+                # recorded layout)
+                wh._append_files_unlocked(spark, new_tbl, name)
             else:
                 # the touched lists' files, listed from their dirs (no
                 # Spark job; integer list ids render exactly); the
@@ -319,7 +317,7 @@ def extend_ann_index(
                     .select(*new_tbl.columns)
                 )
                 wh._replace_files_unlocked(
-                    cur.unionByName(new_tbl), name, replaced, ["list_id"]
+                    cur.unionByName(new_tbl), name, replaced
                 )
         return {"added": stats["n"], "touched_lists": touched}
     finally:

@@ -2950,9 +2950,7 @@ def q123_erasure_execution(spark, sf_dir):
     subjects = (
         ev.select("user_id").filter(F.col("user_id") % 37 == 0).distinct()
     )
-    wh.erase_subjects(
-        spark, "events_gdpr", "user_id", subjects, partition_by=["pbucket"]
-    )
+    wh.erase_subjects(spark, "events_gdpr", "user_id", subjects)
     back = wh.read(spark, "events_gdpr")
     remaining = (
         back.join(F.broadcast(subjects), "user_id", "left_semi")
@@ -4134,7 +4132,6 @@ def q139_bloom_partitioned_erase(spark, sf_dir):
         "ord_p",
         "o_custkey",
         local_frame(spark, [(s,) for s in subjects], "k long"),
-        partition_by=["part"],
     )
     if res["rows_erased"] == 0:
         raise AssertionError("no rows erased: fixture degenerate")

@@ -49,6 +49,12 @@ Every committed state (table dir, ``_vNNNNN`` snapshot, linked group
 member) carries its read schema in ``_schema.json``; every read and
 rewrite takes it from there (``schema``, ``_read_dir``) — the
 reference's declared target columns (ref :307-319) — and none infers it.
+A table's layout is declared once, by the writer that lays it out; the
+file records its hive ``partition_by`` next to ``_bucket_spec.json`` and
+``_version.json``, and every rewrite and append reads the layout from
+those through one helper (``_layout``) instead of taking it as an
+argument. Every writer of a table takes its one mutation fence
+(``_write_fence``).
 
 The read→merge→overwrite cycle on one table would otherwise race with
 itself (Spark reads lazily while the job overwrites the same files), so
@@ -148,7 +154,7 @@ DELETE_BROADCAST_KEY_CAP = 2_000_000
 # otherwise the exact key scan runs.
 DELETE_BLOOM_PROBE_CAP = 100_000
 
-# Writer fence for overwrite_versioned (single-writer enforcement).
+# Suffix of a table's mutation-fence lock (``_mutation_lock_path``).
 LOCK_FILE = "_writer.lock"
 
 
@@ -189,6 +195,20 @@ class Footer(NamedTuple):
     groups: dict[str, list[tuple | None]]
 
 
+class Layout(NamedTuple):
+    """A table's committed layout as ``ParquetWarehouse._layout`` reads
+    it: ``versioned`` when ``_version.json`` exists (then nothing else
+    is read), else the ``_bucket_spec.json`` spec (None when flat or
+    hive), the hive ``partition_by`` columns recorded in
+    ``_schema.json`` ([] when flat or bucketed) and the committed read
+    ``schema`` from the same file."""
+
+    versioned: bool
+    bucket_spec: dict | None
+    partition_by: list[str]
+    schema: StructType | None
+
+
 class ParquetWarehouse:
     def __init__(self, root: str):
         self.root = root
@@ -211,11 +231,13 @@ class ParquetWarehouse:
         """The committed state (a versioned table's current snapshot)
         with its committed schema — building the frame runs no Spark
         job; a committed-empty bucketed state reads as an empty frame —
-        and pending merge-on-read deletes masked."""
-        if os.path.isfile(self._version_pointer(table)):
-            return self.read_version(spark, table)
+        and pending merge-on-read deletes masked (a versioned table has
+        none: ``delete_keys`` refuses it)."""
+        base = self._zoned_base(table, None)
         return self._apply_pending_deletes(
-            spark, self._read_files(spark, table), table
+            spark,
+            self._read_dir(spark, base, self._dir_schema(base, table)),
+            table,
         )
 
     def schema(self, table: str, version: int | None = None) -> StructType:
@@ -225,16 +247,44 @@ class ParquetWarehouse:
         return self._dir_schema(self._zoned_base(table, version), table)
 
     @staticmethod
-    def _dir_schema(base: str, table: str) -> StructType:
-        """The ``_schema.json`` committed in the state dir ``base``."""
+    def _schema_doc(base: str, table: str) -> dict:
+        """The ``_schema.json`` committed in the state dir ``base``, as
+        written (``_write_schema``)."""
         try:
             with open(os.path.join(base, SCHEMA_FILE)) as f:
-                return StructType.fromJson(json.load(f))
+                return json.load(f)
         except FileNotFoundError:
             raise FileNotFoundError(
                 f"{table!r} has no committed schema ({SCHEMA_FILE} in "
                 f"{base!r}) — rewrite it through overwrite"
             ) from None
+
+    @classmethod
+    def _dir_schema(cls, base: str, table: str) -> StructType:
+        """The read schema committed in the state dir ``base``."""
+        return StructType.fromJson(cls._schema_doc(base, table))
+
+    def _layout(self, table: str) -> Layout:
+        """The one answer to "how is ``table`` laid out?" that every
+        mutation asks, read from the state the table committed: its
+        ``_version.json``, ``_bucket_spec.json`` and the hive columns
+        ``_schema.json`` records. A layout is declared once, by the
+        writer that lays the table out (``overwrite(partition_by=)``,
+        ``write_bucketed``, ``overwrite_versioned``); no rewrite or
+        append is told it again. A state whose ``_schema.json`` records
+        no ``partition_by`` is refused."""
+        if os.path.isfile(self._version_pointer(table)):
+            return Layout(True, None, [], None)
+        doc = self._schema_doc(self.path(table), table)
+        if "partition_by" not in doc:
+            raise ValueError(
+                f"{table!r}'s {SCHEMA_FILE} records no partition_by — "
+                "rewrite it through overwrite"
+            )
+        return Layout(
+            False, self.bucket_spec(table), list(doc["partition_by"]),
+            StructType.fromJson(doc),
+        )
 
     @staticmethod
     def _read_dir(
@@ -269,20 +319,26 @@ class ParquetWarehouse:
         )
 
     def _write_schema(self, base: str, df: DataFrame, partition_by=None):
+        """Commit ``df``'s read schema with the hive columns it is laid
+        out by — the layout every later mutation reads (``_layout``)."""
         self._write_json_atomic(
             os.path.join(base, SCHEMA_FILE),
-            self._frame_schema(df, partition_by).jsonValue(),
+            {
+                **self._frame_schema(df, partition_by).jsonValue(),
+                "partition_by": list(partition_by or []),
+            },
         )
 
-    def _refuse_schema_drift(self, table: str, df: DataFrame) -> None:
+    @staticmethod
+    def _refuse_schema_drift(
+        table: str, df: DataFrame, schema: StructType
+    ) -> None:
         """Refuse a frame whose columns or types differ from the committed
-        schema — ``append_files`` and ``replace_files`` keep it, and a
-        drifted file would land, then fail every later scan; schema
+        ``schema`` — ``append_files`` and ``replace_files`` keep it, and
+        a drifted file would land, then fail every later scan; schema
         evolution is a full-state commit. Types compare by simpleString
         (reads report nested fields nullable)."""
-        want = {
-            f.name: f.dataType.simpleString() for f in self.schema(table)
-        }
+        want = {f.name: f.dataType.simpleString() for f in schema}
         got = {f.name: f.dataType.simpleString() for f in df.schema}
         if got.keys() != want.keys():
             raise ValueError(
@@ -357,32 +413,38 @@ class ParquetWarehouse:
         zero-exchange join return WRONG rows, not an error. Hive/
         cluster/zorder layout args conflict with the spec and refuse;
         change the layout itself through ``write_bucketed``.
+
+        ``partition_by`` declares the hive layout: ``_schema.json``
+        records it, and every later rewrite and append of the table
+        reads it from there (``_layout``). Runs under the table's
+        mutation fence, like every writer of the table dir.
         """
-        bspec = self.bucket_spec(table)
-        if bspec is not None and (partition_by or cluster_by or zorder_by):
-            raise ValueError(
-                f"{table!r} is bucketed — its layout contract is the "
-                "persisted bucket spec; drop the layout args, or change "
-                "the layout through write_bucketed"
-            )
-        df = self._apply_layout(df, cluster_by, zorder_by, cluster_partitions)
-        with self._staging(table) as tmp:
-            self._stage_state(
-                df, tmp, partition_by=partition_by, bucket_spec=bspec,
-                meta=meta, stat_cols=stat_cols, bloom_cols=bloom_cols,
-            )
-            if carry_deletes_intact and (dm := self.pending_deletes(table)):
-                ndir = f"{DELETES_DIR}-{uuid.uuid4().hex}"
-                shutil.copytree(self._deletes_dir(table, dm),
-                                os.path.join(tmp, ndir))
-                self._write_json_atomic(
-                    os.path.join(tmp, DELETES_FILE),
-                    self._deletes_manifest(
-                        self._delete_key_cols(dm), dm["n_keys"], ndir,
-                        ts=dm.get("ts"),
-                    ),
+        with self._write_fence(table):
+            bspec = self.bucket_spec(table)
+            if bspec is not None and (partition_by or cluster_by or zorder_by):
+                raise ValueError(
+                    f"{table!r} is bucketed — its layout contract is the "
+                    "persisted bucket spec; drop the layout args, or change "
+                    "the layout through write_bucketed"
                 )
-            self._commit_swap(tmp, self.path(table), table)
+            df = self._apply_layout(df, cluster_by, zorder_by, cluster_partitions)
+            with self._staging(table) as tmp:
+                self._stage_state(
+                    df, tmp, partition_by=partition_by, bucket_spec=bspec,
+                    meta=meta, stat_cols=stat_cols, bloom_cols=bloom_cols,
+                )
+                if carry_deletes_intact and (dm := self.pending_deletes(table)):
+                    ndir = f"{DELETES_DIR}-{uuid.uuid4().hex}"
+                    shutil.copytree(self._deletes_dir(table, dm),
+                                    os.path.join(tmp, ndir))
+                    self._write_json_atomic(
+                        os.path.join(tmp, DELETES_FILE),
+                        self._deletes_manifest(
+                            self._delete_key_cols(dm), dm["n_keys"], ndir,
+                            ts=dm.get("ts"),
+                        ),
+                    )
+                self._commit_swap(tmp, self.path(table), table)
         if bspec is not None:
             self._refresh_bucketed_catalog(df.sparkSession, table)
 
@@ -701,9 +763,7 @@ class ParquetWarehouse:
             if len(names) != 1 or os.path.exists(self.path(table)):
                 continue
             try:
-                with self._write_fence(
-                    table, lock_path=self._mutation_lock_path(table)
-                ):
+                with self._write_fence(table):
                     if not os.path.exists(self.path(table)):
                         os.replace(
                             os.path.join(self.root, names[0]),
@@ -737,10 +797,10 @@ class ParquetWarehouse:
         write parallelism and no task writes an oversized shard.
 
         Stages through the same ``_staging`` dir + atomic swap as
-        ``overwrite`` (a failure leaves no temp behind); the manifest
-        and the read schema (``_schema.json``) are written into the temp
-        dir first, so shards and sidecars commit together.  Returns the
-        manifest dict.
+        ``overwrite``, under the same mutation fence (a failure leaves
+        no temp behind); the manifest and the read schema
+        (``_schema.json``) are written into the temp dir first, so
+        shards and sidecars commit together.  Returns the manifest dict.
         """
         if shuffle_by:
             key = F.xxhash64(*[F.col(c) for c in shuffle_by])
@@ -755,7 +815,7 @@ class ParquetWarehouse:
             )
         import pyarrow.parquet as pq
 
-        with self._staging(table) as tmp:
+        with self._write_fence(table), self._staging(table) as tmp:
             (
                 df.write.mode("overwrite")
                 .option("maxRecordsPerFile", max_records_per_file)
@@ -979,7 +1039,7 @@ class ParquetWarehouse:
         has no zone map covering every range column (callers fall back
         to an unpruned plan). The file-pruning primitive the zone-scoped
         CDC merge composes with ``replace_files``."""
-        if os.path.isfile(self._version_pointer(table)):
+        if self._layout(table).versioned:
             return None  # snapshots rewrite whole states; no file CoW
         zm = self.zonemap(table)
         if zm is None or any(c not in zm["stat_cols"] for c in ranges):
@@ -993,7 +1053,6 @@ class ParquetWarehouse:
         df: DataFrame,
         table: str,
         replaced: list[str],
-        partition_by: list[str] | None = None,
         carry_deletes_minus: DataFrame | None = None,
     ) -> dict:
         """Copy-on-write FILE-level replace: commit a new table state
@@ -1002,15 +1061,17 @@ class ParquetWarehouse:
         no data I/O) plus the files of ``df`` (the rewritten content for
         the replaced region).
 
-        ``partition_by``: hive-partitioned layouts replace at file
-        grain too (the HYBRID merge scope — partition pruning picks the
-        candidate dirs, the zone map picks the files inside them).
-        ``replaced`` then holds partition-qualified relative paths,
-        ``df`` must carry the partition columns, and a partition whose
-        files were all replaced with no surviving rows simply has no
-        directory in the new state — the whole-table assembly+swap
-        removes emptied partitions atomically, in the same rename
-        that commits the data. This is the write-side half of the
+        The table's committed layout (``_layout``) decides how ``df``
+        lands. Hive-partitioned tables replace at file grain too (the
+        HYBRID merge scope — partition pruning picks the candidate
+        dirs, the zone map picks the files inside them): ``replaced``
+        holds partition-qualified relative paths, ``df`` carries the
+        partition columns, and a partition whose files were all
+        replaced with no surviving rows simply has no directory in the
+        new state — the whole-table assembly+swap removes emptied
+        partitions atomically, in the same rename that commits the
+        data. Bucketed tables stage through the bucket-preserving
+        writer. This is the write-side half of the
         zone-map-scoped CDC merge (ref :369-408 — the reference
         delegates the equivalent micro-partition-scoped rewrite to
         Snowflake's engine): rewrite cost is O(|df| + |replaced|), not
@@ -1043,16 +1104,9 @@ class ParquetWarehouse:
         INSIDE it; a second concurrent writer raises
         :class:`ConcurrentWriteError` loudly instead.
         """
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
-            # bucketed layouts replace at file grain too: auto-load the
-            # persisted spec so the rewrite stages through the
-            # bucket-preserving writer and the layout contract survives
+        with self._write_fence(table):
             return self._replace_files_unlocked(
-                df, table, replaced, partition_by,
-                carry_deletes_minus=carry_deletes_minus,
-                bucket_spec=self.bucket_spec(table),
+                df, table, replaced, carry_deletes_minus=carry_deletes_minus
             )
 
     def _replace_files_unlocked(
@@ -1060,25 +1114,24 @@ class ParquetWarehouse:
         df: DataFrame,
         table: str,
         replaced: list[str],
-        partition_by: list[str] | None = None,
         allow_pending_deletes: bool = False,
         carry_deletes_minus: DataFrame | None = None,
-        bucket_spec: dict | None = None,
     ) -> dict:
         """``replace_files`` body; the caller MUST hold the table's
         mutation fence (``erase_subjects`` calls this under its own).
         ``allow_pending_deletes`` is for ``materialize_deletes`` ONLY —
         its swap dropping the ``_deletes`` sidecar IS the point there.
 
-        ``bucket_spec``: BUCKET-preserving file replace (the bucket-
-        grain GDPR path). The replacement rows stage through Spark's
-        own bucketed writer (``_stage_bucketed``) so every staged file
-        carries the correct ``_NNNNN`` bucket-id suffix, and the spec
-        sidecar is carried into the new state. Mixing staged files with
-        carried ones is sound because a row's bucket is a pure function
-        of its key columns — a carried file and a staged file tagged
-        with the same bucket id hold disjoint row sets of that bucket,
-        and Spark's bucketed scan reads multi-file buckets natively.
+        On a bucketed table the replace is BUCKET-preserving (the
+        bucket-grain GDPR path): the replacement rows stage through
+        Spark's own bucketed writer (``_stage_bucketed``) so every
+        staged file carries the correct ``_NNNNN`` bucket-id suffix,
+        and the spec sidecar is carried into the new state. Mixing
+        staged files with carried ones is sound because a row's bucket
+        is a pure function of its key columns — a carried file and a
+        staged file tagged with the same bucket id hold disjoint row
+        sets of that bucket, and Spark's bucketed scan reads multi-file
+        buckets natively.
 
         ``carry_deletes_minus`` is the CDC-merge fold (a DataFrame
         carrying the batch's key tuples): instead of dropping or
@@ -1098,46 +1151,14 @@ class ParquetWarehouse:
         ):
             self._refuse_pending_deletes(table, "replace_files")
         final = self.path(table)
-        if os.path.isfile(self._version_pointer(table)):
+        lay = self._layout(table)
+        if lay.versioned:
             raise ValueError(
                 f"{table!r} is versioned — commit new states with "
                 "overwrite_versioned"
             )
-        if os.path.isfile(os.path.join(final, BUCKET_SPEC_FILE)):
-            if bucket_spec is None:
-                raise ValueError(
-                    f"{table!r} is bucketed — rewrite through "
-                    "write_bucketed/overwrite_bucketed, or pass the "
-                    "bucket_spec for a bucket-preserving file replace"
-                )
-            if partition_by:
-                raise ValueError(
-                    "bucketed tables are not hive-partitioned"
-                )
-        elif bucket_spec is not None:
-            raise ValueError(f"{table!r} carries no bucket spec")
-        self._refuse_schema_drift(table, df)
-        if partition_by:
-            existing = set(self._walk_parquet_rels(final))
-        else:
-            existing = {
-                name
-                for name in os.listdir(final)
-                if name.endswith(".parquet")
-                and os.path.isfile(os.path.join(final, name))
-            }
-            if any(
-                os.path.isdir(os.path.join(final, n))
-                # underscore/dot dirs are hidden sidecars (_deletes),
-                # not hive partitions — same convention as Spark's
-                # file discovery
-                and not n.startswith(("_", "."))
-                for n in os.listdir(final)
-            ):
-                raise ValueError(
-                    f"{table!r} has partition subdirectories — pass "
-                    "partition_by (hybrid file-level replace)"
-                )
+        self._refuse_schema_drift(table, df, lay.schema)
+        existing = set(self._walk_parquet_rels(final))
         replaced_set = set(replaced)
         unknown = sorted(replaced_set - existing)
         if unknown:
@@ -1157,8 +1178,8 @@ class ParquetWarehouse:
             # whole-leaf coverage (caught by the hybrid-merge inode-carry
             # pin)
             staged, new_zm, new_bm = self._stage_files(
-                df, tmp_new, partition_by=partition_by,
-                bucket_spec=bucket_spec,
+                df, tmp_new, partition_by=lay.partition_by,
+                bucket_spec=lay.bucket_spec,
                 stat_cols=zm and zm["stat_cols"], bloom=bm,
             )
             os.makedirs(asm)
@@ -1252,7 +1273,7 @@ class ParquetWarehouse:
                         },
                     })
             self._commit_swap(asm, final, table)
-        if bucket_spec is not None:
+        if lay.bucket_spec is not None:
             self._refresh_bucketed_catalog(spark, table)
         return {
             "rows_written": rows_written,
@@ -1285,18 +1306,28 @@ class ParquetWarehouse:
         builds it atomically with the data instead. Built as the stager
         builds it: from the committed files' footers (``_footers``),
         with a Spark pass only over the (column, file) pairs they cannot
-        describe exactly (``_zonemap``)."""
-        if os.path.isfile(self._version_pointer(table)):
+        describe exactly (``_zonemap``). Runs under the mutation fence,
+        so no commit swaps the file set mid-compute."""
+        with self._write_fence(table):
+            return self._write_zonemap_unlocked(spark, table, stat_cols)
+
+    def _write_zonemap_unlocked(
+        self, spark: SparkSession, table: str, stat_cols: list[str]
+    ) -> dict:
+        """``write_zonemap`` body; the caller MUST hold the table's
+        mutation fence (``compact`` creates a map under its own)."""
+        lay = self._layout(table)
+        if lay.versioned:
             raise ValueError(
                 f"{table!r} is versioned — snapshots carry their own "
                 "maps; commit with overwrite_versioned(stat_cols=[...])"
             )
         base = self.path(table)
         zm = self._zonemap(
-            spark, base, stat_cols, self.schema(table),
+            spark, base, stat_cols, lay.schema,
             self._footers(base, self._walk_parquet_rels(base), stat_cols),
         )
-        self._commit_inline_sidecar(self.path(table), ZONEMAP_FILE, zm)
+        self._commit_inline_sidecar(base, ZONEMAP_FILE, zm)
         return zm
 
     # ------------------------------------------------------------------
@@ -1815,19 +1846,16 @@ class ParquetWarehouse:
         refuses loudly when the manifest doesn't describe the exact
         committed file set. Runs under the mutation fence so the file
         set cannot swap mid-compute."""
-        if os.path.isfile(self._version_pointer(table)):
-            raise ValueError(
-                f"{table!r} is versioned — snapshots are immutable, so "
-                "their filters build at WRITE time: commit with "
-                "overwrite_versioned(bloom_cols=[...]) and every "
-                "snapshot carries its own manifest"
-            )
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
-            bm = self._compute_bloom(
-                spark, self.path(table), cols, self.schema(table)
-            )
+        with self._write_fence(table):
+            lay = self._layout(table)
+            if lay.versioned:
+                raise ValueError(
+                    f"{table!r} is versioned — snapshots are immutable, so "
+                    "their filters build at WRITE time: commit with "
+                    "overwrite_versioned(bloom_cols=[...]) and every "
+                    "snapshot carries its own manifest"
+                )
+            bm = self._compute_bloom(spark, self.path(table), cols, lay.schema)
             self._commit_inline_sidecar(self.path(table), BLOOM_FILE, bm)
         return bm
 
@@ -1853,16 +1881,15 @@ class ParquetWarehouse:
         manifest was built with. Falls back to the full rebuild when no
         manifest exists or ``cols`` doesn't match the manifest's specs.
         Returns the committed manifest."""
-        if os.path.isfile(self._version_pointer(table)):
-            raise ValueError(
-                f"{table!r} is versioned — snapshots carry their own "
-                "immutable manifests; nothing to heal"
-            )
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
+        with self._write_fence(table):
+            lay = self._layout(table)
+            if lay.versioned:
+                raise ValueError(
+                    f"{table!r} is versioned — snapshots carry their own "
+                    "immutable manifests; nothing to heal"
+                )
             final = self.path(table)
-            schema = self.schema(table)
+            schema = lay.schema
             try:
                 bm = self.bloom(table)
             except ValueError:
@@ -2630,7 +2657,6 @@ class ParquetWarehouse:
         table: str,
         kcols: list[str],
         keys: KeySet,
-        partition_by: list[str] | None,
         allow_pending_deletes: bool = False,
     ) -> tuple[list[str], dict | None]:
         """The one keyed copy-on-write rewrite, shared by
@@ -2655,9 +2681,7 @@ class ParquetWarehouse:
             self._read_files(spark, table, hit), keys.frame, kcols, keys.n
         )
         return hit, self._replace_files_unlocked(
-            survivors, table, hit, partition_by,
-            allow_pending_deletes=allow_pending_deletes,
-            bucket_spec=self.bucket_spec(table),
+            survivors, table, hit, allow_pending_deletes=allow_pending_deletes
         )
 
     def delete_keys(
@@ -2716,24 +2740,24 @@ class ParquetWarehouse:
         intact prior dir to read (superseded dirs are swept by
         ``vacuum`` after its TTL, never unlinked here)."""
         final = self.path(table)
-        if os.path.isfile(self._version_pointer(table)):
-            raise ValueError(
-                f"{table!r} is versioned — snapshots are immutable; erase "
-                "through erase_subjects/overwrite_versioned instead"
-            )
         kcols = [key_col] if isinstance(key_col, str) else list(key_col)
         if not kcols or len(set(kcols)) != len(kcols):
             raise ValueError(f"key columns must be non-empty and distinct: {kcols}")
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
+        with self._write_fence(table):
+            lay = self._layout(table)
+            if lay.versioned:
+                raise ValueError(
+                    f"{table!r} is versioned — snapshots are immutable; "
+                    "erase through erase_subjects/overwrite_versioned "
+                    "instead"
+                )
             # both input forms land on the table columns' EXACT types so
             # the read-path equality anti-join never compares across
             # types (a string-vs-long join coerces through DOUBLE and
             # mis-matches keys above 2^53); try_cast turns an
             # unparseable key into NULL — plain cast THROWS under ANSI
             # mid-write — which the NULL refusal below rejects loudly
-            tsch = self.schema(table)
+            tsch = lay.schema
             key_dts = {c: tsch[c].dataType for c in kcols}
             if isinstance(keys, DataFrame):
                 if len(kcols) == 1 and len(keys.columns) == 1:
@@ -2844,12 +2868,7 @@ class ParquetWarehouse:
             # them); the manifest flip above already de-references them
         return manifest
 
-    def materialize_deletes(
-        self,
-        spark: SparkSession,
-        table: str,
-        partition_by: list[str] | None = None,
-    ) -> dict:
+    def materialize_deletes(self, spark: SparkSession, table: str) -> dict:
         """Apply the pending merge-on-read deletes to the data files and
         drop the sidecar — the maintenance half of ``delete_keys``.
 
@@ -2862,24 +2881,17 @@ class ParquetWarehouse:
         table), and every other file carries as a hard link. The commit
         swap drops the sidecar WITH the rewrite — a crash before the
         swap leaves the pending set authoritative, so reads stay
-        correct through every window. ``partition_by`` must name the
-        hive layout for partitioned tables (file-grain rewrite inside
-        partitions, like the hybrid merge scope).
+        correct through every window. A hive-partitioned table rewrites
+        at file grain inside its recorded partition dirs, like the
+        hybrid merge scope.
 
         Returns ``replace_files``' stats dict (plus ``"keys_applied"``);
         a no-op (nothing pending, or no file holds a pending key) only
         drops the sidecar."""
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
+        with self._write_fence(table):
             dm = self.pending_deletes(table)
             if dm is None:
                 return {"keys_applied": 0, "files_replaced": 0}
-            if self.bucket_spec(table) is not None and partition_by:
-                raise ValueError(
-                    "bucketed tables are not hive-partitioned — drop "
-                    "partition_by"
-                )
             final = self.path(table)
             # the swap inside commits the survivors AND drops the
             # _deletes sidecar (not in the carried-sidecar set) in ONE
@@ -2887,7 +2899,7 @@ class ParquetWarehouse:
             _hit, res = self._rewrite_key_cover(
                 spark, table, self._delete_key_cols(dm),
                 self._key_set(self._read_deletes(spark, final, dm)),
-                partition_by, allow_pending_deletes=True,
+                allow_pending_deletes=True,
             )
             if res is None:
                 # no data file holds a pending key: drop the manifest
@@ -2900,15 +2912,11 @@ class ParquetWarehouse:
             return res
 
     def append_files(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str] | None = None,
+        self, spark: SparkSession, df: DataFrame, table: str
     ) -> dict:
         """O(batch) INSERT INTO: stage ``df`` as its own parquet files
-        and atomically RENAME them into the table directory (or its
-        hive partition dirs with ``partition_by``). No existing file is
+        and atomically RENAME them into the table directory (or the hive
+        partition dirs its committed layout records). No existing file is
         opened or replaced — write cost follows the batch, not the
         table, which is the only append shape that survives continuous
         ingest at 100 TB (a per-batch rewrite is O(table)).
@@ -2922,8 +2930,7 @@ class ParquetWarehouse:
         them into the bucket's task and, seeing >1 file per bucket,
         simply re-sorts before a merge join instead of trusting the
         per-file sort — correctness never depends on the file count).
-        ``partition_by`` on a bucketed table refuses (the layouts don't
-        compose here). The cached catalog file listing is refreshed.
+        The cached catalog file listing is refreshed.
 
         Consistency contract: runs under the table's mutation fence;
         refuses versioned tables (appends would bypass snapshot
@@ -2968,36 +2975,23 @@ class ParquetWarehouse:
 
         Returns ``{"files_added", "rows"}``.
         """
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
-            return self._append_files_unlocked(
-                spark, df, table, partition_by
-            )
+        with self._write_fence(table):
+            return self._append_files_unlocked(spark, df, table)
 
     def _append_files_unlocked(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str] | None = None,
+        self, spark: SparkSession, df: DataFrame, table: str
     ) -> dict:
         """``append_files`` body; the caller MUST hold the table's
         mutation fence (the ANN index extend holds one fence across its
         dup check + this append)."""
-        if os.path.isfile(self._version_pointer(table)):
+        lay = self._layout(table)
+        if lay.versioned:
             raise ValueError(
                 f"{table!r} is a versioned table — appends would bypass "
                 "its snapshot commits; write a new version instead"
             )
-        bspec = self.bucket_spec(table)
-        if bspec is not None and partition_by:
-            raise ValueError(
-                f"{table!r} is bucketed — partition_by does not compose "
-                "with the bucket-file layout; append routes through the "
-                "bucketed writer instead"
-            )
-        self._refuse_schema_drift(table, df)
+        bspec = lay.bucket_spec
+        self._refuse_schema_drift(table, df, lay.schema)
         dm = self.pending_deletes(table)
         if dm is not None:
             # r19 fold (defer-mode GDPR × continuous ingest): appends no
@@ -3028,7 +3022,7 @@ class ParquetWarehouse:
             dele = self._read_deletes(spark, self.path(table), dm)
             df = self._anti_join_keys(df, dele, kcols, dm["n_keys"])
         if bspec is None:
-            df = self._cluster_for_partitioned_write(df, partition_by)
+            df = self._cluster_for_partitioned_write(df, lay.partition_by)
         zm = self.zonemap(table)
         try:
             bm = self.bloom(table)
@@ -3057,7 +3051,7 @@ class ParquetWarehouse:
             # (loud fallback), never with a manifest missing committed
             # files (silent mis-prune).
             staged, new_zm, new_bm = self._stage_files(
-                df, staging, partition_by=partition_by, bucket_spec=bspec,
+                df, staging, partition_by=lay.partition_by, bucket_spec=bspec,
                 stat_cols=zm and zm["stat_cols"], bloom=bm,
             )
             # zero-row part files (empty write tasks) carry no data:
@@ -3170,9 +3164,7 @@ class ParquetWarehouse:
         ``replace_files``/erase would be a lost update (the second
         swap discards the first's rows).
         """
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
+        with self._write_fence(table):
             return self._compact_unlocked(
                 spark, table, target_file_bytes, sort_by
             )
@@ -3251,16 +3243,9 @@ class ParquetWarehouse:
                     else df.coalesce(n)
                 )
             frame = functools.reduce(DataFrame.union, leaves)
-        partition_by = [
-            seg.split("=", 1)[0]
-            for seg in os.path.dirname(replaced[0]).split(os.sep)
-            if seg
-        ] or None
-        self._replace_files_unlocked(
-            frame, table, replaced, partition_by, bucket_spec=spec
-        )
+        self._replace_files_unlocked(frame, table, replaced)
         if sort_by is not None and spec is None and self.zonemap(table) is None:
-            self.write_zonemap(spark, table, sort_by)
+            self._write_zonemap_unlocked(spark, table, sort_by)
         return 1 if spec is not None else len(work)
 
     # Staging artifacts all carry a dotted stage kind (.tmp-/.old-/
@@ -3540,25 +3525,20 @@ class ParquetWarehouse:
         Returns ``{"files_before", "files_after", "rows"}``.
         """
         final = self.path(table)
-        if os.path.isfile(self._version_pointer(table)):
-            raise ValueError(
-                f"{table!r} is versioned — write read-optimized snapshots "
-                "with overwrite_versioned(..., cluster_by=...)"
-            )
-        if os.path.isfile(os.path.join(final, BUCKET_SPEC_FILE)):
-            raise ValueError(
-                f"{table!r} is bucketed — hash bucketing IS its "
-                "clustering contract; compact() merges fragmented "
-                "buckets whole-sorted, rebucket() changes the layout"
-            )
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
-            if any(
-                os.path.isdir(os.path.join(final, n))
-                for n in os.listdir(final)
-                if not n.startswith(("_", "."))  # hidden dirs: sidecars
-            ):
+        with self._write_fence(table):
+            lay = self._layout(table)
+            if lay.versioned:
+                raise ValueError(
+                    f"{table!r} is versioned — write read-optimized "
+                    "snapshots with overwrite_versioned(..., cluster_by=...)"
+                )
+            if lay.bucket_spec is not None:
+                raise ValueError(
+                    f"{table!r} is bucketed — hash bucketing IS its "
+                    "clustering contract; compact() merges fragmented "
+                    "buckets whole-sorted, rebucket() changes the layout"
+                )
+            if lay.partition_by:
                 raise ValueError(
                     f"{table!r} is hive-partitioned — recluster works on "
                     "flat tables (partitioned layouts compact per leaf)"
@@ -3646,11 +3626,6 @@ class ParquetWarehouse:
         Returns ``{"files_before", "files_after", "rows"}``.
         """
         final = self.path(table)
-        if os.path.isfile(self._version_pointer(table)):
-            raise ValueError(
-                f"{table!r} is versioned — snapshots are immutable and "
-                "carry no bucket layout"
-            )
         if not bucket_by or not isinstance(n_buckets, int) or n_buckets < 1:
             raise ValueError(
                 "rebucket needs bucket_by and a positive n_buckets"
@@ -3660,14 +3635,14 @@ class ParquetWarehouse:
             "n_buckets": n_buckets,
             "sort_by": list(sort_by or []),
         }
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
-            if any(
-                os.path.isdir(os.path.join(final, n))
-                for n in os.listdir(final)
-                if not n.startswith(("_", "."))  # hidden dirs: sidecars
-            ):
+        with self._write_fence(table):
+            lay = self._layout(table)
+            if lay.versioned:
+                raise ValueError(
+                    f"{table!r} is versioned — snapshots are immutable and "
+                    "carry no bucket layout"
+                )
+            if lay.partition_by:
                 raise ValueError(
                     f"{table!r} is hive-partitioned — a hive layout and "
                     "a bucket layout are mutually exclusive contracts"
@@ -3743,15 +3718,16 @@ class ParquetWarehouse:
         mutation via ``_replace_files_unlocked``'s carry/recompute.
 
         Crash-safe: the new state stages through ``_stage_state`` and
-        promotes via the same atomic swap as ``overwrite`` — the
-        previous committed state stays readable until the flip.
+        promotes via the same atomic swap as ``overwrite``, under the
+        same mutation fence — the previous committed state stays
+        readable until the flip.
         """
         spec = {
             "bucket_by": list(bucket_by),
             "n_buckets": n_buckets,
             "sort_by": list(sort_by or []),
         }
-        with self._staging(table) as tmp:
+        with self._write_fence(table), self._staging(table) as tmp:
             self._stage_state(
                 df, tmp, bucket_spec=spec,
                 stat_cols=stat_cols, bloom_cols=bloom_cols,
@@ -3885,35 +3861,32 @@ class ParquetWarehouse:
         self,
         df: DataFrame,
         table: str,
-        partition_by: list[str],
         touched: list[tuple],
     ) -> dict:
         """Partition-grain ``replace_files``: ``df`` replaces every file
-        under the ``touched`` partition-value tuples' dirs, in the same
-        fenced copy-on-write commit (a touched partition ``df`` leaves
-        empty has no dir in the new state). Dir names render as
+        under the ``touched`` dirs, in the same fenced copy-on-write
+        commit (a touched partition ``df`` leaves empty has no dir in
+        the new state). Each tuple holds one value per hive column the
+        table records (``_layout``), in that order. Dir names render as
         ``col=value`` (NULL as Spark's default-partition sentinel), so
         pass values whose string form is their hive dir name (integers,
         plain strings). ``perfbench/layers.py`` traces commits under
         this name."""
-        dirs = {
-            "/".join(
-                f"{c}=__HIVE_DEFAULT_PARTITION__" if v is None else f"{c}={v}"
-                for c, v in zip(partition_by, vals)
-            )
-            for vals in touched
-        }
-        with self._write_fence(
-            table, lock_path=self._mutation_lock_path(table)
-        ):
+        with self._write_fence(table):
+            parts = self._layout(table).partition_by
+            dirs = {
+                "/".join(
+                    f"{c}=__HIVE_DEFAULT_PARTITION__" if v is None else f"{c}={v}"
+                    for c, v in zip(parts, vals)
+                )
+                for vals in touched
+            }
             replaced = [
                 rel
                 for rel in self._walk_parquet_rels(self.path(table))
                 if os.path.dirname(rel) in dirs
             ]
-            return self._replace_files_unlocked(
-                df, table, replaced, partition_by
-            )
+            return self._replace_files_unlocked(df, table, replaced)
 
     def erase_subjects(
         self,
@@ -3921,7 +3894,6 @@ class ParquetWarehouse:
         table: str,
         key_col: str,
         subjects: DataFrame,
-        partition_by: list[str] | None = None,
         retain: int = 1,
     ) -> dict:
         """EXECUTE a right-to-be-forgotten request against an on-disk
@@ -3938,7 +3910,8 @@ class ParquetWarehouse:
         surfaced as a warning, since ``retain=1`` silently drops ALL
         history by design; ``None`` for non-versioned layouts).
 
-        Two rewrite scopes:
+        Two rewrite scopes, picked by the table's committed layout
+        (``_layout``):
 
         - **versioned** (``_version.json`` present): the survivors
           commit as the next snapshot through ``overwrite_versioned``
@@ -3946,49 +3919,39 @@ class ParquetWarehouse:
           snapshot immediately — erasure is only complete once no
           retained snapshot holds the subject's rows; pass a larger
           ``retain`` only if policy allows the grace window).
-        - **every other layout** (flat, hive-partitioned with
-          ``partition_by``, bucketed): FILE-grain copy-on-write through
-          the rewrite ``materialize_deletes`` runs
-          (``_rewrite_key_cover``). The key cover (``_key_cover``)
-          intersects the zone map, the Bloom manifest and the bucket-id
-          cover where they apply, else one broadcast semi-join scan of
-          the key column finds the exact files; only those anti-join
-          and rewrite through ``replace_files`` (bucket-preserving on a
-          bucketed table; an emptied partition has no dir in the new
-          state), and every other file hard-links through with its
-          inode — and its zone-map and Bloom entries — intact. At
-          100 TB an erasure request touches a handful of files, not
-          the table. A hive-laid-out table erased without
-          ``partition_by`` is refused by ``replace_files``.
+        - **every other layout** (flat, hive-partitioned, bucketed):
+          FILE-grain copy-on-write through the rewrite
+          ``materialize_deletes`` runs (``_rewrite_key_cover``). The key
+          cover (``_key_cover``) intersects the zone map, the Bloom
+          manifest and the bucket-id cover where they apply, else one
+          broadcast semi-join scan of the key column finds the exact
+          files; only those anti-join and rewrite through
+          ``replace_files`` (bucket-preserving on a bucketed table;
+          an emptied partition has no dir in the new state), and every
+          other file hard-links through with its inode — and its
+          zone-map and Bloom entries — intact. At 100 TB an erasure
+          request touches a handful of files, not the table.
           ``touched_partitions`` counts the partition dirs of the
-          rewritten files (``None`` without ``partition_by``).
+          rewritten files (``None`` on a table with no hive columns).
 
         Subject sets of up to ``DELETE_BLOOM_PROBE_CAP`` keys collect to
         the driver for the manifest covers; larger ones never leave the
-        cluster (``_key_set``). The returned counts come from the
-        committed footers, so the erase reads no file outside the
-        cover.
+        cluster (``_key_set``). The returned counts come from parquet
+        footers (the committed files' and, versioned, the staged
+        snapshot's), so the erase counts no row through a scan.
 
         Every rewrite stages into a temp dir before its swap, so reading
         the files being replaced while writing the new ones is safe.
 
         SINGLE WRITER per table, ENFORCED: the whole read→rewrite spans
-        ONE fence acquisition — a versioned erase shares the in-dir
-        ``_writer.lock`` with ``overwrite_versioned`` (a snapshot
-        committed between the erase's read and its republish would be
-        silently PURGED with ``retain=1``); every other layout takes the
-        mutation fence shared with ``replace_files``/``compact``.
+        ONE acquisition of the table's mutation fence, which
+        ``overwrite_versioned``, ``replace_files`` and ``compact`` take
+        too (a snapshot committed between a versioned erase's read and
+        its republish would be silently PURGED with ``retain=1``).
         """
-        fence = (
-            self._write_fence(table)
-            if os.path.isfile(self._version_pointer(table))
-            else self._write_fence(
-                table, lock_path=self._mutation_lock_path(table)
-            )
-        )
-        with fence:
+        with self._write_fence(table):
             return self._erase_subjects_unlocked(
-                spark, table, key_col, subjects, partition_by, retain
+                spark, table, key_col, subjects, retain
             )
 
     def _erase_subjects_unlocked(
@@ -3997,33 +3960,25 @@ class ParquetWarehouse:
         table: str,
         key_col: str,
         subjects: DataFrame,
-        partition_by: list[str] | None,
         retain: int,
     ) -> dict:
-        """``erase_subjects`` body; the caller MUST hold the fence
-        matching the table's layout (see ``erase_subjects``)."""
+        """``erase_subjects`` body; the caller MUST hold the table's
+        mutation fence."""
         self._refuse_pending_deletes(table, "erase_subjects")
         subj = subjects.toDF("__erase_key").filter(
             F.col("__erase_key").isNotNull()
         ).distinct()
-        versioned = os.path.isfile(self._version_pointer(table))
-        bucketed = os.path.isfile(
-            os.path.join(self.path(table), BUCKET_SPEC_FILE)
-        )
-        if versioned and partition_by:
-            raise ValueError(
-                "versioned tables snapshot whole states; erase without "
-                "partition_by"
-            )
-        if bucketed and (versioned or partition_by):
-            raise ValueError(
-                "bucketed tables are neither versioned nor hive-partitioned"
-            )
+        lay = self._layout(table)
         touched_n = None
         purged: list[int] | None = None
-        if versioned:
-            current = self.read_version(spark, table)
-            rows_before = current.count()
+        if lay.versioned:
+            base = self._zoned_base(table, None)
+            rows_before = sum(
+                f.n for f in self._footers(
+                    base, self._walk_parquet_rels(base)
+                ).values()
+            )
+            current = self._read_dir(spark, base, self._dir_schema(base, table))
             survivors = current.join(
                 F.broadcast(subj),
                 current[key_col] == F.col("__erase_key"),
@@ -4037,7 +3992,7 @@ class ParquetWarehouse:
             # later time-travel read to full scans
             prior_zm = self.zonemap(table)
             prior_bm = self.bloom(table)
-            self._overwrite_versioned_unlocked(
+            _v, staged = self._overwrite_versioned_unlocked(
                 survivors,
                 table,
                 retain=retain,
@@ -4059,7 +4014,7 @@ class ParquetWarehouse:
                     "holds the subject's rows",
                     stacklevel=2,
                 )
-            rows_after = self.read_version(spark, table).count()
+            rows_after = sum(staged.values())
         else:
             # pending deletes are refused above, so the committed
             # footers count exactly the rows a read sees
@@ -4074,16 +4029,15 @@ class ParquetWarehouse:
             # hash and the Bloom hash are type-sensitive); a subject the
             # type cannot hold exactly matches no row — Spark's coerced
             # equality decides, as a join on the raw value would
-            dt = self.schema(table)[key_col].dataType
+            dt = lay.schema[key_col].dataType
             key = F.col("__erase_key")
             if subj.schema["__erase_key"].dataType != dt:
                 subj = subj.filter(key.try_cast(dt) == key)
             hit, res = self._rewrite_key_cover(
                 spark, table, [key_col],
                 self._key_set(subj.select(key.try_cast(dt).alias(key_col))),
-                partition_by,
             )
-            if partition_by:
+            if lay.partition_by:
                 touched_n = len({os.path.dirname(rel) for rel in hit})
             # the rewritten files' rows minus their survivors
             rows_after = rows_before - (
@@ -4141,23 +4095,26 @@ class ParquetWarehouse:
         return os.path.join(self.path(table), VERSION_FILE)
 
     def _mutation_lock_path(self, table: str) -> str:
-        """Lock path for fenced mutations that REPLACE the table
-        directory (``replace_files``/``compact``/non-versioned
-        ``erase_subjects``). The lock must live OUTSIDE
-        the table dir: ``_commit_swap`` renames the whole directory
-        away, which would displace an in-dir lock mid-fence — a second
-        writer could then acquire a fresh in-dir lock that the first
-        writer's cleanup would delete (the check-then-remove race
-        ``_break_stale_lock`` documents). Versioned commits keep the
-        in-dir ``_writer.lock`` (snapshot dirs are added, never
-        swapped)."""
+        """The one lock path of the table's mutation fence, taken by
+        every writer of the table: full-state commits (``overwrite``,
+        ``write_shards``, ``write_bucketed``, ``recluster``,
+        ``rebucket``), file-grain commits (``replace_files``,
+        ``append_files``, ``compact``, the keyed rewrites), the
+        manifest rebuilds and versioned commits. The lock must live
+        OUTSIDE the table dir: ``_commit_swap`` renames the whole
+        directory away, which would displace an in-dir lock mid-fence —
+        a second writer could then acquire a fresh in-dir lock that the
+        first writer's cleanup would delete (the check-then-remove race
+        ``_break_stale_lock`` documents)."""
         safe = re.sub(r"[^A-Za-z0-9_]", "_", table)
         return os.path.join(self.root, f".{safe}{LOCK_FILE}")
 
     def _write_fence(self, table: str, lock_path: str | None = None):
         """ENFORCED single-writer fence: an ``O_EXCL``-created lock file
-        in the table directory (or at ``lock_path`` for non-table
-        resources like group pointers). The second concurrent writer
+        at the table's mutation lock path (``_mutation_lock_path``; at
+        ``lock_path`` for non-table resources like group pointers).
+        Code already inside the fence calls the ``_unlocked`` body of a
+        fenced method, never the method itself. The second concurrent writer
         raises :class:`ConcurrentWriteError` instead of silently losing
         a commit in the ``_version.json`` read-modify-write. O_EXCL is
         atomic on POSIX local filesystems and on HDFS-style stores with
@@ -4175,7 +4132,7 @@ class ParquetWarehouse:
         liveness cannot be probed — still fail closed."""
         @contextlib.contextmanager
         def fence():
-            lock = lock_path or os.path.join(self.path(table), LOCK_FILE)
+            lock = lock_path or self._mutation_lock_path(table)
             for attempt in (0, 1):
                 try:
                     fd = os.open(
@@ -4329,14 +4286,13 @@ class ParquetWarehouse:
 
         SINGLE WRITER per table, ENFORCED: the read-modify-write of
         ``_version.json`` is not compare-and-swap, so the whole commit
-        runs inside an ``O_EXCL`` writer fence — a second concurrent
+        runs inside the table's mutation fence — a second concurrent
         writer raises :class:`ConcurrentWriteError` loudly instead of
         computing the same next version and silently losing a commit.
         Concurrent READERS are the supported case — that is what the
         retained immutable snapshots exist for."""
         if retain < 1:
             raise ValueError("retain must be >= 1")
-        os.makedirs(self.path(table), exist_ok=True)
         with self._write_fence(table):
             return self._overwrite_versioned_unlocked(
                 df,
@@ -4348,7 +4304,7 @@ class ParquetWarehouse:
                 zorder_by=zorder_by,
                 stat_cols=stat_cols,
                 bloom_cols=bloom_cols,
-            )
+            )[0]
 
     def _overwrite_versioned_unlocked(
         self,
@@ -4361,13 +4317,14 @@ class ParquetWarehouse:
         zorder_by: list[str] | None = None,
         stat_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
-    ) -> int:
+    ) -> tuple[int, dict[str, int]]:
         """``overwrite_versioned`` body; the caller MUST hold the
         table's ``_write_fence`` (``erase_subjects`` spans its
         read→purge→republish under ONE fence acquisition so a concurrent
         versioned commit cannot land between the erase's snapshot read
         and its republish — that interleaving would be purged unseen
-        with ``retain=1``)."""
+        with ``retain=1``). Returns the new version and each staged
+        file's footer row count (``_stage_state``)."""
         if retain < 1:
             raise ValueError("retain must be >= 1")
         df = self._apply_layout(df, cluster_by, zorder_by, cluster_partitions)
@@ -4381,7 +4338,7 @@ class ParquetWarehouse:
             # ride inside it through the rename, so every immutable
             # snapshot carries its own never-stale zone map and filters
             # and time-travel reads (version diffs, q110) file-prune
-            self._stage_state(
+            rows = self._stage_state(
                 df, tmp, meta=meta, stat_cols=stat_cols, bloom_cols=bloom_cols
             )
             os.replace(tmp, final)
@@ -4406,7 +4363,7 @@ class ParquetWarehouse:
                     os.path.join(self.path(table), name),
                     ignore_errors=True,
                 )
-        return version
+        return version, rows
 
     def read_version(
         self, spark: SparkSession, table: str, version: int | None = None
@@ -4531,9 +4488,10 @@ class ParquetWarehouse:
         emptied state's included — the precondition for joining a
         linked group snapshot. A versioned table returns False (group
         it via ``commit_group``)."""
-        return os.path.isfile(
-            os.path.join(self.path(table), SCHEMA_FILE)
-        ) and not os.path.isfile(self._version_pointer(table))
+        try:
+            return not self._layout(table).versioned
+        except FileNotFoundError:
+            return False
 
     def group_members(self, group: str) -> list[str]:
         """Member tables of the group's current commit ([] if the group
@@ -4602,7 +4560,8 @@ class ParquetWarehouse:
             snap = os.path.join(self._group_snap_root(group), f"c{commit:05d}")
             members: dict[str, dict] = {}
             for t in tables:
-                if os.path.isfile(self._version_pointer(t)):
+                lay = self._layout(t)
+                if lay.versioned:
                     raise ValueError(
                         f"member {t!r} is versioned — its snapshots are "
                         "already immutable; commit it with commit_group"
@@ -4633,7 +4592,7 @@ class ParquetWarehouse:
                             os.path.join(dirpath, fn), os.path.join(d, fn)
                         )
                 self._write_json_atomic(
-                    os.path.join(dst, SCHEMA_FILE), self.schema(t).jsonValue()
+                    os.path.join(dst, SCHEMA_FILE), lay.schema.jsonValue()
                 )
                 if dm is not None:
                     sdir = self._deletes_dir(t, dm)

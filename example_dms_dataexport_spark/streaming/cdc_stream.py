@@ -309,11 +309,7 @@ def start_cdc_stream(
             from ..maintenance import run_maintenance
 
             run_maintenance(
-                spark,
-                warehouse,
-                [target_table],
-                policy=maintenance,
-                layouts={target_table: {"partition_by": partition_by}},
+                spark, warehouse, [target_table], policy=maintenance
             )
 
     stream = read_cdc_stream(
@@ -510,14 +506,7 @@ def start_cdc_group_stream(
                 from ..maintenance import run_maintenance
 
                 run_maintenance(
-                    spark,
-                    warehouse,
-                    member_names,
-                    policy=maintenance,
-                    layouts={
-                        m: {"partition_by": specs[m].get("partition_by")}
-                        for m in member_names
-                    },
+                    spark, warehouse, member_names, policy=maintenance
                 )
         finally:
             batch.unpersist()

@@ -2,8 +2,8 @@
 (subject keys) executed against a warehouse table per micro-batch via
 ``warehouse.erase_subjects`` — the production shape of the GDPR queue:
 requests trickle in, each batch's subjects are deleted from the target
-with partition-scoped rewrites, and the compliance audit (q119/q123) can
-run at any point.
+with file-grain rewrites inside the table's recorded layout, and the
+compliance audit (q119/q123) can run at any point.
 
 Exactly-once note: erasure needs no batch-id guard for CORRECTNESS —
 deleting an already-deleted subject is a natural no-op, so an
@@ -38,14 +38,14 @@ def start_erasure_stream(
     key_col: str,
     checkpoint_dir: str,
     subject_col: str | None = None,
-    partition_by: list[str] | None = None,
     available_now: bool = True,
     mode: str = "rewrite",
 ) -> StreamingQuery:
     """Erase each micro-batch's subjects (column ``subject_col``,
-    default ``key_col``) from ``table``. ``partition_by`` routes the
-    delete through the partition-scoped rewrite exactly like a direct
-    ``erase_subjects`` call.
+    default ``key_col``) from ``table`` through ``erase_subjects``, which
+    reads the layout the table committed: it rewrites at file grain
+    inside the table's hive partition dirs or buckets, or commits a new
+    snapshot of a versioned table.
 
     ``mode="defer"`` records each batch through the merge-on-read
     ``delete_keys`` sidecar instead: per-batch cost drops from a
@@ -61,12 +61,6 @@ def start_erasure_stream(
     the stream."""
     if mode not in ("rewrite", "defer"):
         raise ValueError(f"mode must be 'rewrite' or 'defer', got {mode!r}")
-    if mode == "defer" and partition_by is not None:
-        raise ValueError(
-            "partition_by has no effect in mode='defer' (delete_keys is "
-            "layout-agnostic); pass it to the scheduled "
-            "materialize_deletes instead"
-        )
     subj = subject_col or key_col
     lineage = os.path.realpath(checkpoint_dir)
 
@@ -91,13 +85,7 @@ def start_erasure_stream(
         if mode == "defer":
             warehouse.delete_keys(spark, table, key_col, batch.select(subj))
         else:
-            warehouse.erase_subjects(
-                spark,
-                table,
-                key_col,
-                batch.select(subj),
-                partition_by=partition_by,
-            )
+            warehouse.erase_subjects(spark, table, key_col, batch.select(subj))
         # strictly AFTER the commit: the marker may lag the data (one
         # idempotent re-erase on replay) but never lead it
         warehouse.update_meta(

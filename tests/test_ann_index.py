@@ -211,7 +211,7 @@ def test_gdpr_composes_with_the_index(spark, emb, tmp_path_factory):
     assert (
         wh3.read(spark, "idx").filter(F.col("vec_id") == victim).count() == 0
     )
-    res = wh3.materialize_deletes(spark, "idx", partition_by=["list_id"])
+    res = wh3.materialize_deletes(spark, "idx")
     assert res["keys_applied"] == 1
     tbl = wh3.read(spark, "idx")
     assert tbl.filter(F.col("vec_id") == victim).count() == 0
@@ -533,7 +533,7 @@ def test_append_mode_folds_pending_deletes(spark, emb, tmp_path_factory):
         r["vec_id"] for r in emb.select("vec_id").collect()
     } - {victim}
     assert wh.pending_deletes("idx") is not None  # sidecar intact
-    wh.materialize_deletes(spark, "idx", partition_by=["list_id"])
+    wh.materialize_deletes(spark, "idx")
     got2 = {r["vec_id"] for r in wh.read(spark, "idx").select("vec_id").collect()}
     assert victim not in got2
 

@@ -53,9 +53,7 @@ def test_append_partitioned_lands_in_hive_dirs(spark, wh):
         "bucket", (F.col("o_orderkey") % 4).cast("int")
     )
     wh.overwrite(df.filter("o_orderkey % 2 = 0"), "p", partition_by=["bucket"])
-    wh.append_files(
-        spark, df.filter("o_orderkey % 2 = 1"), "p", partition_by=["bucket"]
-    )
+    wh.append_files(spark, df.filter("o_orderkey % 2 = 1"), "p")
     assert wh.read(spark, "p").count() == df.count()
     root = wh.path("p")
     assert any(d.startswith("bucket=") for d in os.listdir(root))
@@ -148,13 +146,6 @@ def test_append_bucketed_preserves_layout(spark, wh):
     )
     agg = joined.groupBy(o["o_custkey"]).count()
     assert exchange_count(agg) <= 1
-
-
-def test_append_bucketed_refuses_partition_by(spark, wh):
-    df = _orders(spark)
-    wh.write_bucketed(df, "b", ["o_custkey"], 4)
-    with pytest.raises(ValueError, match="partition_by does not compose"):
-        wh.append_files(spark, df.limit(1), "b", partition_by=["o_custkey"])
 
 
 def test_append_refusals(spark, wh):

@@ -381,9 +381,7 @@ def test_partitioned_erase_is_file_grain(spark, tmp_path):
     subjects = spark.createDataFrame([(11,), (3001,)], "k long")
     hit, miss = wh.bloom_hit_split(spark, "t", "pk", [11, 3001])
     assert miss and hit
-    res = wh.erase_subjects(
-        spark, "t", "pk", subjects, partition_by=["part"]
-    )
+    res = wh.erase_subjects(spark, "t", "pk", subjects)
     assert res["rows_erased"] == 2
     after = _inodes_recursive(wh.path("t"))
     for rel in miss:
@@ -429,7 +427,6 @@ def test_partitioned_erase_without_bloom_is_file_grain(spark, tmp_path):
     res = wh.erase_subjects(
         spark, "t", "pk",
         spark.createDataFrame([(k,) for k in sorted(subjects)], "k long"),
-        partition_by=["part"],
     )
     assert res["rows_erased"] == len(subjects) == 102
     assert res["touched_partitions"] == 3

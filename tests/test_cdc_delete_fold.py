@@ -462,7 +462,7 @@ def test_fold_equals_materialize_then_merge(spark, tmp_path, layout):
             ch, pks=["pk"], version_cols=VC, partition_by=pb,
         )
         build("staged", wh)
-        wh.materialize_deletes(spark, "staged", partition_by=pb)
+        wh.materialize_deletes(spark, "staged")
         merge_and_write(
             wh, "staged", wh.read(spark, "staged").select("pk", "bucket", "name"),
             ch, pks=["pk"], version_cols=VC, partition_by=pb,
@@ -671,7 +671,7 @@ def test_mismatched_fold_equals_masked_merge(spark, tmp_path, layout):
             ch, pks=["pk"], version_cols=VC, partition_by=pb,
         )
         build("staged", wh)
-        wh.materialize_deletes(spark, "staged", partition_by=pb)
+        wh.materialize_deletes(spark, "staged")
         merge_and_write(
             wh, "staged",
             wh.read(spark, "staged").select("pk", "bucket", "name"),
@@ -692,7 +692,7 @@ def test_mismatched_fold_equals_masked_merge(spark, tmp_path, layout):
         )
         # materializing the folded twin must change nothing visible
         if wh.pending_deletes("folded") is not None:
-            wh.materialize_deletes(spark, "folded", partition_by=pb)
+            wh.materialize_deletes(spark, "folded")
         phys = {
             (r.pk, r.bucket, r.name)
             for r in spark.read.parquet(wh.path("folded")).collect()

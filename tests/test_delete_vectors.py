@@ -282,7 +282,7 @@ def test_materialize_partitioned(spark, tmp_path):
         return out
 
     before = walk_inodes()
-    res = wh.materialize_deletes(spark, "p", partition_by=["bucket"])
+    res = wh.materialize_deletes(spark, "p")
     assert res["keys_applied"] == 3 and res["files_replaced"] >= 1
     assert wh.pending_deletes("p") is None
     after = walk_inodes()
@@ -307,7 +307,7 @@ def test_materialize_partitioned_keeps_partition_values(spark, tmp_path):
         "t", partition_by=["p"],
     )
     wh.delete_keys(spark, "t", "id", [1])
-    wh.materialize_deletes(spark, "t", partition_by=["p"])
+    wh.materialize_deletes(spark, "t")
     assert sorted(
         n for n in os.listdir(wh.path("t")) if not n.startswith(("_", "."))
     ) == ["p=007", "p=abc"]
@@ -406,18 +406,3 @@ def test_legacy_fixed_sidecar_is_migrated_and_vacuumable(spark, tmp_path):
     assert pks == set(range(2000)) - {3, 4}
 
 
-def test_defer_stream_rejects_partition_by(spark, tmp_path):
-    from example_dms_dataexport_spark.streaming.erasure_stream import (
-        start_erasure_stream,
-    )
-
-    wh = ParquetWarehouse(str(tmp_path / "wh"))
-    src = tmp_path / "req"
-    src.mkdir()
-    stream = spark.readStream.schema("user_id int").parquet(str(src))
-    with pytest.raises(ValueError, match="no effect in mode='defer'"):
-        start_erasure_stream(
-            spark, stream, wh, "t", "user_id",
-            checkpoint_dir=str(tmp_path / "ck"),
-            partition_by=["b"], mode="defer",
-        )

@@ -1,6 +1,6 @@
 """Hybrid partition+file CDC merge: partition pruning picks the dirs,
-the zone map picks the files inside them, replace_files(partition_by=)
-commits copy-on-write.
+the zone map picks the files inside them, replace_files commits
+copy-on-write inside the partition dirs the table records.
 
 This closes the last rewrite-amplification path: the partition-scoped
 merge rewrote each touched partition ENTIRELY (a 10-row change to a

@@ -14,8 +14,8 @@ Pins:
   the files holding a subject and keeps the map;
 - a partitioned erase that a Bloom manifest narrows runs no key scan;
 - a subject set above ``DELETE_BLOOM_PROBE_CAP`` probes no manifest;
-- a hive-laid-out table erased without ``partition_by`` is refused,
-  not flattened;
+- a hive-laid-out table erased with no layout argument rewrites inside
+  its recorded partition dirs, not flattened;
 - a flat group member emptied by a merge still joins the next linked
   group commit;
 - a non-versioned erase takes its row counts from the committed
@@ -73,7 +73,8 @@ def _subjects(spark, keys):
 
 
 def _layout(spark, wh, layout):
-    """Write ``t`` in ``layout``; return the erase's partition_by."""
+    """Write ``t`` in ``layout``; return its hive columns (None when
+    it has none)."""
     df = _rows(spark)
     if layout == "flat_zone":
         wh.overwrite(df, "t", cluster_by=["pk"], cluster_partitions=4,
@@ -100,18 +101,16 @@ def _layout(spark, wh, layout):
 )
 def test_erase_and_materialize_rewrite_alike(spark, tmp_path, layout):
     wh = ParquetWarehouse(str(tmp_path / "wh"))
-    partition_by = _layout(spark, wh, layout)
+    _layout(spark, wh, layout)
     # a hard-linked twin: same file names and inodes, so both routes
     # start from one state and their carried sets compare directly
     shutil.copytree(wh.path("t"), wh.path("u"), copy_function=os.link)
     before = _inodes(wh.path("t"))
     assert _inodes(wh.path("u")) == before
 
-    res = wh.erase_subjects(
-        spark, "t", "pk", _subjects(spark, KEYS), partition_by=partition_by
-    )
+    res = wh.erase_subjects(spark, "t", "pk", _subjects(spark, KEYS))
     wh.delete_keys(spark, "u", "pk", KEYS)
-    wh.materialize_deletes(spark, "u", partition_by=partition_by)
+    wh.materialize_deletes(spark, "u")
 
     assert res["rows_erased"] == len(KEYS)
     assert wh.pending_deletes("u") is None
@@ -146,9 +145,7 @@ def test_erase_counts_rows_from_footers(spark, tmp_path, monkeypatch, layout):
         return real(self, *a, **kw)
 
     monkeypatch.setattr(ParquetWarehouse, "read", spy)
-    res = wh.erase_subjects(
-        spark, "t", "pk", _subjects(spark, KEYS), partition_by=partition_by
-    )
+    res = wh.erase_subjects(spark, "t", "pk", _subjects(spark, KEYS))
     monkeypatch.undo()
     assert reads == []
     after = wh.read(spark, "t").count()
@@ -207,7 +204,7 @@ def test_bloom_narrowed_partitioned_erase_runs_no_key_scan(
     monkeypatch.setattr(cls, "join", spy)
     before = _inodes(wh.path("t"))
     res = wh.erase_subjects(
-        spark, "t", "pk", _subjects(spark, [11, 201]), partition_by=["part"]
+        spark, "t", "pk", _subjects(spark, [11, 201])
     )
     monkeypatch.undo()
     assert "left_semi" not in hows, hows
@@ -235,17 +232,19 @@ def test_subjects_above_probe_cap_take_the_exact_scan(
     assert set(bm["files"]) == set(_inodes(wh.path("t")))
 
 
-def test_hive_table_erased_without_partition_by_refuses(spark, tmp_path):
-    """An erase that must rewrite files of a hive-laid-out table but was
-    not told its layout is refused by replace_files, before any write —
-    it no longer flattens the table through a full overwrite."""
+def test_hive_table_erase_keeps_partition_dirs(spark, tmp_path):
+    """An erase of a hive-laid-out table is told no layout: it reads the
+    hive columns the table recorded, rewrites only the file holding the
+    subject inside its partition dir and never flattens the table."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite(_rows(spark, 60), "t", partition_by=["part"])
     before = _inodes(wh.path("t"))
-    with pytest.raises(ValueError, match="pass partition_by"):
-        wh.erase_subjects(spark, "t", "pk", _subjects(spark, [4]))
-    assert _inodes(wh.path("t")) == before
-    assert wh.read(spark, "t").count() == 60
+    res = wh.erase_subjects(spark, "t", "pk", _subjects(spark, [4]))
+    assert res["rows_erased"] == 1 and res["touched_partitions"] == 1
+    after = _inodes(wh.path("t"))
+    assert all(rel.startswith("part=") and rel.count("/") == 1 for rel in after)
+    assert len(_carried(before, after)) == len(before) - 1
+    assert wh.read(spark, "t").count() == 59
 
 
 def test_group_member_emptied_by_merge_joins_next_commit(spark, tmp_path):

@@ -631,9 +631,7 @@ def test_run_maintenance_rebuilds_dropped_bloom(spark, tmp_path):
     before = inodes()
     touched_dir = "bucket=2"  # pk=7 -> bucket 2
     res = wh.erase_subjects(
-        spark, "t", "pk",
-        spark.createDataFrame([(7,)], "pk long"),
-        partition_by=["bucket"],
+        spark, "t", "pk", spark.createDataFrame([(7,)], "pk long")
     )
     assert res["rows_erased"] == 1 and res["touched_partitions"] == 1
     after = inodes()

@@ -97,8 +97,8 @@ def test_erase_subjects_partitioned_second_writer_raises(spark, tmp_path):
     subjects = spark.createDataFrame([(2,), (22,)], "k long")
     with wh._write_fence("p", lock_path=wh._mutation_lock_path("p")):
         with pytest.raises(ConcurrentWriteError, match="another writer"):
-            wh.erase_subjects(spark, "p", "pk", subjects, partition_by=["val"])
-    res = wh.erase_subjects(spark, "p", "pk", subjects, partition_by=["val"])
+            wh.erase_subjects(spark, "p", "pk", subjects)
+    res = wh.erase_subjects(spark, "p", "pk", subjects)
     assert res["rows_erased"] == 2
     assert wh.read(spark, "p").count() == 38
     assert not os.path.exists(wh._mutation_lock_path("p"))
@@ -186,3 +186,48 @@ def test_fenced_erase_excludes_versioned_commit_mid_erase(spark, tmp_path):
     # the writer's retry now serializes after the erase
     v = wh.overwrite_versioned(_df(spark, 99), "v", retain=5)
     assert wh.read_version(spark, "v", version=v).count() == 99
+
+
+def _committed(wh, table):
+    """The committed state's file inodes and sidecar bytes."""
+    base = wh.path(table)
+    out = {}
+    for dirpath, _dirs, files in os.walk(base):
+        for n in files:
+            p = os.path.join(dirpath, n)
+            rel = os.path.relpath(p, base)
+            if n.endswith(".parquet"):
+                out[rel] = os.stat(p).st_ino
+            else:
+                with open(p, "rb") as f:
+                    out[rel] = f.read()
+    return out
+
+
+@pytest.mark.parametrize(
+    "writer", ["overwrite", "write_zonemap", "write_shards", "write_bucketed"]
+)
+def test_table_writers_take_the_mutation_fence(spark, tmp_path, writer):
+    """Every writer of a table takes its one mutation fence: with the
+    fence held, a full-state commit or a zone-map rebuild raises instead
+    of swapping under a fenced writer (a lost update) or committing a
+    map of files that writer is replacing, and the committed state is
+    left as it was."""
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    _mk_flat(spark, wh, "t")
+    before = _committed(wh, "t")
+    call = {
+        "overwrite": lambda: wh.overwrite(_df(spark, 5), "t"),
+        "write_zonemap": lambda: wh.write_zonemap(spark, "t", ["pk"]),
+        "write_shards": lambda: wh.write_shards(_df(spark, 5), "t"),
+        "write_bucketed": lambda: wh.write_bucketed(
+            _df(spark, 5), "t", ["pk"], 2
+        ),
+    }[writer]
+    with wh._write_fence("t"):
+        with pytest.raises(ConcurrentWriteError, match="another writer"):
+            call()
+    assert _committed(wh, "t") == before
+    assert wh.read(spark, "t").count() == 100
+    call()  # fence released: the writer commits
+    assert not os.path.exists(wh._mutation_lock_path("t"))

@@ -118,7 +118,7 @@ def test_replace_partitions_is_copy_on_write(spark, tmp_path):
     survivors = wh.read(spark, "t").filter(
         "region = 'c' AND id NOT IN (2, 5, 8)"
     )
-    res = wh.replace_partitions(survivors, "t", ["region"], [("c",)])
+    res = wh.replace_partitions(survivors, "t", [("c",)])
     assert res["files_new"] == 0 and res["files_replaced"] >= 1
     assert not os.path.isdir(os.path.join(wh.path("t"), "region=c"))
     after = _snapshot(wh.path("t"))
@@ -142,7 +142,7 @@ def test_partitioned_erase_crash_at_commit_swap(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(ParquetWarehouse, "_commit_swap", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
-        wh.erase_subjects(spark, "t", "id", subjects, partition_by=["region"])
+        wh.erase_subjects(spark, "t", "id", subjects)
     monkeypatch.undo()
 
     assert _snapshot(wh.path("t")) == before
@@ -152,7 +152,7 @@ def test_partitioned_erase_crash_at_commit_swap(spark, tmp_path, monkeypatch):
     assert not [n for n in os.listdir(wh.root) if n.startswith(".tmp-")]
     assert not os.path.exists(wh._mutation_lock_path("t"))
 
-    res = wh.erase_subjects(spark, "t", "id", subjects, partition_by=["region"])
+    res = wh.erase_subjects(spark, "t", "id", subjects)
     assert res["rows_erased"] == 4 and res["touched_partitions"] == 2
     got = {r["id"] for r in wh.read(spark, "t").collect()}
     assert got == {1, 3, 4, 6, 7}

@@ -752,7 +752,7 @@ def test_versioned_writer_fence_blocks_second_writer(spark, tmp_path):
     # fence released: the next commit proceeds and no version was burned
     assert wh.overwrite_versioned(spark.range(4), "t") == 2
     # the fence is also released on failure paths (lock file gone)
-    assert not (tmp_path / "wh" / "t" / "_writer.lock").exists()
+    assert not os.path.exists(wh._mutation_lock_path("t"))
 
 
 def test_versioned_interleaved_writers_lose_nothing(spark, tmp_path):
@@ -902,9 +902,7 @@ def test_erase_subjects_partitioned_scoped_rewrite(spark, tmp_path):
             if f.endswith(".parquet")
         }
     time.sleep(0.05)  # let any illegal rewrite move mtimes
-    stats = wh.erase_subjects(
-        spark, "t", "user_id", subjects, partition_by=["b"]
-    )
+    stats = wh.erase_subjects(spark, "t", "user_id", subjects)
     assert stats == {
         "rows_before": 20,
         "rows_erased": 6,
@@ -948,10 +946,6 @@ def test_erase_subjects_versioned_retention_expiry(spark, tmp_path):
     back = wh.read_version(spark, "t")
     assert back.count() == 7
     assert back.join(subjects, "user_id", "left_semi").count() == 0
-    with pytest.raises(ValueError, match="partition_by"):
-        wh.erase_subjects(
-            spark, "t", "user_id", subjects, partition_by=["val"]
-        )
 
 
 def test_erase_subjects_bucketed_preserves_layout(spark, tmp_path):
@@ -981,10 +975,6 @@ def test_erase_subjects_bucketed_preserves_layout(spark, tmp_path):
     assert exchange_count(joined) == 0
     assert joined.count() == 14
     assert t.join(subjects, "user_id", "left_semi").count() == 0
-    with pytest.raises(ValueError, match="bucketed"):
-        wh.erase_subjects(
-            spark, "t", "user_id", subjects, partition_by=["val"]
-        )
 
 
 def test_erase_subjects_plain_overwrite(spark, tmp_path):
@@ -1409,19 +1399,17 @@ def test_compact_noop_keeps_zonemap(spark, tmp_path):
 
 
 def test_refused_erase_keeps_zonemap(spark, tmp_path):
+    """An erase refused before any write (pending merge-on-read deletes
+    would resurrect) leaves the table, its zone map included, as it
+    was."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     _zm_table(spark, wh)
+    zm = wh.zonemap("zt")
+    wh.delete_keys(spark, "zt", "k", [2])
     subj = spark.createDataFrame([(1,)], ["k"])
-    with pytest.raises(ValueError, match="versioned tables snapshot"):
-        # zt is not versioned — force the versioned+partition_by guard
-        # via a bucketed-style misuse instead: partition_by on a plain
-        # table is fine, so use the versioned guard by faking a pointer
-        open(
-            os.path.join(wh.path("zt"), "_version.json"), "w"
-        ).write('{"current": 1, "versions": {"1": {"dir": "_v00001"}}}')
-        wh.erase_subjects(spark, "zt", "k", subj, partition_by=["grp"])
-    os.remove(os.path.join(wh.path("zt"), "_version.json"))
-    assert wh.zonemap("zt") is not None  # refused call left the map
+    with pytest.raises(ValueError, match="pending merge-on-read deletes"):
+        wh.erase_subjects(spark, "zt", "k", subj)
+    assert wh.zonemap("zt") == zm  # refused call left the map
 
 
 def test_layout_rejects_non_object_config():
@@ -1513,7 +1501,7 @@ def test_stale_writer_lock_broken_when_holder_dead(spark, tmp_path):
 
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite_versioned(spark.range(3), "t")
-    lock = os.path.join(wh.path("t"), "_writer.lock")
+    lock = wh._mutation_lock_path("t")
 
     p = subprocess.Popen(["true"])
     p.wait()
@@ -1815,7 +1803,7 @@ def test_stale_lock_break_token_protocol(spark, tmp_path):
 
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     wh.overwrite_versioned(spark.range(3), "t")
-    lock = os.path.join(wh.path("t"), "_writer.lock")
+    lock = wh._mutation_lock_path("t")
     p = subprocess.Popen(["true"])
     p.wait()
     dead = f"pid={p.pid} host={socket.gethostname()}"

@@ -958,7 +958,7 @@ def test_erasure_stream_executes_requests_and_replays_idempotently(
         )
         q = start_erasure_stream(
             spark, stream, wh, "t", "user_id",
-            checkpoint_dir=ckpt, partition_by=["b"],
+            checkpoint_dir=ckpt,
         )
         q.awaitTermination(120)
         q.stop()
@@ -1027,7 +1027,7 @@ def test_erasure_stream_replayed_window_skips_with_zero_data_io(
         )
         q = start_erasure_stream(
             spark, stream, wh, "t", "user_id",
-            checkpoint_dir=ckpt, partition_by=["b"],
+            checkpoint_dir=ckpt,
         )
         q.awaitTermination(120)
         q.stop()

@@ -140,12 +140,9 @@ def test_no_reader_is_handed_a_hidden_path(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
     rel = next(r for r in wh.zonemap("t")["files"] if r.startswith("p=abc/"))
-    wh.replace_files(
-        wh._read_files(spark, "t", [rel]), "t", [rel], partition_by=["p"]
-    )
+    wh.replace_files(wh._read_files(spark, "t", [rel]), "t", [rel])
     wh.append_files(
-        spark, spark.createDataFrame([(4, "abc")], "id long, p string"), "t",
-        partition_by=["p"],
+        spark, spark.createDataFrame([(4, "abc")], "id long, p string"), "t"
     )
     wh.delete_keys(spark, "t", "id", [2])
     assert sorted(r.id for r in wh.read(spark, "t").collect()) == [1, 3, 4]

@@ -112,9 +112,16 @@ def test_replace_files_guards(spark, tmp_path):
     wh.overwrite_versioned(df, "vt")
     with pytest.raises(ValueError, match="versioned"):
         wh.replace_files(df, "vt", [])
+    # a hive table is told no layout: the rewrite lands in the partition
+    # dir the table recorded
     wh.overwrite(df, "pt", partition_by=["val"])
-    with pytest.raises(ValueError, match="partition subdirectories"):
-        wh.replace_files(df, "pt", [])
+    rel = sorted(wh._walk_parquet_rels(wh.path("pt")))[0]
+    res = wh.replace_files(wh._read_files(spark, "pt", [rel]), "pt", [rel])
+    assert (res["files_replaced"], res["files_new"]) == (1, 1)
+    rels = wh._walk_parquet_rels(wh.path("pt"))
+    assert os.path.dirname(rel) in {os.path.dirname(r) for r in rels}
+    assert all(r.startswith("val=") and r.count("/") == 1 for r in rels)
+    assert wh.read(spark, "pt").count() == 10
     # replacement data missing a (stat) column fails loudly — it no
     # longer matches the committed schema — and the table stays intact
     with pytest.raises(ValueError, match="schema mismatch"):
